@@ -428,3 +428,49 @@ def test_security_master_export_stamps_and_fast_path(spark, tmp_path):
 
     with _pytest.raises(RuntimeError):
         load_security_master(spark, lake, target_date="2025-01-01")
+
+
+def test_both_failing_derived_writes_surface_both_errors(spark, tmp_path, monkeypatch):
+    """The ttm and metrics writes run concurrently; when BOTH fail, the
+    raised error carries the second one too instead of dropping it."""
+    import traceback
+
+    from us_equity_datalake_spark.equity import daily_job
+
+    lk = LakePaths(str(tmp_path / "lk"))
+
+    def failing_write(df, path, **kw):
+        raise RuntimeError(f"write failed: {path}")
+
+    monkeypatch.setattr(daily_job, "write_partitioned", failing_write)
+    day1, _ = _fund_days(spark)
+    with pytest.raises(RuntimeError) as ei:
+        daily_job.update_fundamentals(spark, lk, day1, incremental=False)
+    shown = "".join(traceback.format_exception(ei.value))
+    assert f"write failed: {lk.ttm}" in shown
+    assert f"write failed: {lk.metrics}" in shown
+
+
+def test_readback_count_raises_on_corrupt_file(spark, tmp_path, monkeypatch):
+    """The report-only readback count treats only the no-schema case (a
+    zero-row partitioned write) as 0 rows; a corrupt file under the
+    readback path raises instead of reporting a plausible 0."""
+    import os
+
+    from us_equity_datalake_spark.equity import daily_job
+
+    lk = LakePaths(str(tmp_path / "lk"))
+    real_write = daily_job.write_partitioned
+
+    def write_then_corrupt(df, path, **kw):
+        real_write(df, path, **kw)
+        if path == lk.metrics:
+            bad = os.path.join(path, "sym_bucket=0")
+            os.makedirs(bad, exist_ok=True)
+            with open(os.path.join(bad, "part-corrupt.parquet"), "wb") as f:
+                f.write(b"not a parquet file" * 8)
+
+    monkeypatch.setattr(daily_job, "write_partitioned", write_then_corrupt)
+    day1, _ = _fund_days(spark)
+    with pytest.raises(Exception, match="part-corrupt.parquet"):
+        daily_job.update_fundamentals(spark, lk, day1, incremental=False)

@@ -3161,3 +3161,192 @@ def test_latest_version_pointer_is_hint_not_truth(spark, tmp_path):
     snapshots.commit(spark.range(100, 102), path)
     assert _json.load(open(ptr))["version"] == 4
     assert snapshots.latest_version(path) == 4
+
+
+# ---------------------------------------------------------------------------
+# Planning a manifest-pinned read starts no Spark job
+# ---------------------------------------------------------------------------
+
+_PLAN_FILES = 48  # above Spark's default parallel-listing threshold of 32
+
+
+def _jobs_started(spark, build) -> int:
+    """Spark jobs started while ``build()`` returns a frame (no action)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "read planning")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def _plan_table(spark, path):
+    df = spark.range(0, _PLAN_FILES * 10).select(
+        F.col("id"),
+        (F.col("id") % 7).alias("grp"),
+        F.concat(F.lit("s"), (F.col("id") % 50).cast("string")).alias("sym"),
+    )
+    snapshots.commit(
+        df.repartitionByRange(_PLAN_FILES, "id"), path,
+        stats_cols=["id"], bloom_cols=["sym"],
+    )
+    assert len(snapshots.read_manifest(path, 1)["files"]) == _PLAN_FILES
+
+
+def test_manifest_reads_plan_without_spark_jobs(spark, tmp_path):
+    """Neither the file listing (48 paths > the parallel-listing threshold
+    Spark ships with) nor the schema (read from one footer on the driver)
+    costs a job: the first job of a snapshot read is the caller's action —
+    with and without deletion vectors on the scanned files."""
+    import time
+
+    path = str(tmp_path / "t")
+    _plan_table(spark, path)
+    readers = {
+        "read_version": lambda: snapshots.read_version(spark, path),
+        "read_version_where": lambda: snapshots.read_version_where(
+            spark, path, [{"col": "id", "op": "between", "lo": 0, "hi": 400},
+                          {"col": "sym", "op": "eq", "value": "s3"}]),
+        "read_version_point": lambda: snapshots.read_version_point(
+            spark, path, "sym", "s3"),
+        "read_version_pruned": lambda: snapshots.read_version_pruned(
+            spark, path, "id", lo=0, hi=400),
+        "read_version_asof": lambda: snapshots.read_version_asof(
+            spark, path, time.time()),
+    }
+    for with_dv in (False, True):
+        if with_dv:
+            snapshots.delete_where_dv(spark, path, F.col("grp") == 3)
+            assert snapshots.read_manifest(path, 2)["dv"]
+        jobs = {name: _jobs_started(spark, build) for name, build in readers.items()}
+        assert jobs == {name: 0 for name in readers}, (with_dv, jobs)
+    # the frames are live: the action is where the work happens
+    assert snapshots.read_version(spark, path).count() == _PLAN_FILES * 10 - sum(
+        1 for i in range(_PLAN_FILES * 10) if i % 7 == 3
+    )
+
+
+def _same_read(monkeypatch, read):
+    """``read()`` with the footer schema equals ``read()`` with Spark's own
+    inference (the helper forced onto its fallback): schema and rows."""
+    fast = read()
+    with monkeypatch.context() as mp:
+        mp.setattr(snapshots, "_footer_spark_schema", lambda files: None)
+        inferred = read()
+    assert fast.schema == inferred.schema
+    assert _rows(fast) == _rows(inferred)
+    return fast
+
+
+def _same_raw(spark, path):
+    """The raw helper equals a plain spark.read.parquet of the same files."""
+    files = snapshots.read_manifest(path, snapshots.latest_version(path))["files"]
+    assert snapshots._footer_spark_schema(files) is not None  # Spark-written
+    got = snapshots._read_parquet_files(spark, files)
+    plain = spark.read.parquet(*files)
+    assert got.schema == plain.schema
+    assert _rows(got) == _rows(plain)
+
+
+def test_footer_schema_read_matches_inference_additive_evolution(
+    spark, tmp_path, monkeypatch
+):
+    """The oldest files lack the added column, and they sort first — so
+    Spark's sampled footer (and the footer the helper reads) is theirs."""
+    path = str(tmp_path / "t")
+    snapshots.commit(spark.range(0, 40).select("id").repartition(4), path)
+    snapshots.commit(
+        spark.range(40, 60).select("id", F.lit("x").alias("tag")), path
+    )
+    _same_raw(spark, path)
+    got = _same_read(monkeypatch, lambda: snapshots.read_version(spark, path))
+    assert got.columns == ["id"]
+    merged = snapshots.read_version_merged(spark, path)
+    assert merged.columns == ["id", "tag"] and merged.count() == 60
+
+
+def test_footer_schema_read_matches_inference_rename_and_drop(
+    spark, tmp_path, monkeypatch
+):
+    path = str(tmp_path / "t")
+    snapshots.commit(
+        spark.range(0, 40).selectExpr("id", "CAST(id * 2 AS DOUBLE) AS v",
+                                      "id % 3 AS g").repartition(4), path,
+    )
+    snapshots.rename_column(path, "v", "val")
+    snapshots.drop_column(path, "g")
+    _same_raw(spark, path)
+    got = _same_read(monkeypatch, lambda: snapshots.read_version(spark, path))
+    assert got.columns == ["id", "val"]
+    # the pre-rename version still reads its own logical names
+    old = _same_read(monkeypatch, lambda: snapshots.read_version(spark, path, 1))
+    assert old.columns == ["id", "v", "g"]
+
+
+def test_footer_schema_read_matches_inference_row_tracked(
+    spark, tmp_path, monkeypatch
+):
+    """Row ids: position-derived files and files carrying the physical
+    ``_row_id`` column (written by an id-preserving OPTIMIZE) in one read."""
+    path = str(tmp_path / "t")
+    snapshots.commit(spark.range(0, 40).repartition(4), path)
+    snapshots.enable_row_tracking(path)
+    snapshots.optimize(spark, path, target_files=2)
+    snapshots.commit(spark.range(40, 50), path)
+    m = snapshots.read_manifest(path, snapshots.latest_version(path))
+    assert m.get("row_id_materialized") and m.get("base_row_ids")
+    got = _same_read(
+        monkeypatch, lambda: snapshots.read_version_row_ids(spark, path)
+    )
+    assert got.count() == 50 and "_row_id" in got.columns
+    _same_read(monkeypatch, lambda: snapshots.read_version(spark, path))
+
+
+def test_footer_schema_read_matches_inference_with_dvs(
+    spark, tmp_path, monkeypatch
+):
+    path = str(tmp_path / "t")
+    _plan_table(spark, path)
+    snapshots.delete_where_dv(spark, path, F.col("grp") == 3)
+    _same_raw(spark, path)
+    got = _same_read(monkeypatch, lambda: snapshots.read_version(spark, path))
+    assert got.where(F.col("grp") == 3).count() == 0
+    _same_read(
+        monkeypatch,
+        lambda: snapshots.read_version_where(
+            spark, path, [{"col": "id", "op": "between", "lo": 0, "hi": 100}]
+        )[0],
+    )
+
+
+def test_footer_without_spark_schema_falls_back_to_inference(spark, tmp_path):
+    """A file no Spark writer produced carries no Spark row metadata: the
+    helper lets Spark infer, and the read equals a plain read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path / "arrow"
+    d.mkdir()
+    files = []
+    for i in range(3):
+        f = str(d / f"part-{i}.parquet")
+        pq.write_table(
+            pa.table({"id": pa.array([i * 10 + j for j in range(10)], pa.int64()),
+                      "name": [f"n{i}{j}" for j in range(10)]}),
+            f,
+        )
+        files.append(f)
+    assert snapshots._footer_spark_schema(files) is None
+    got = snapshots._read_parquet_files(spark, files)
+    plain = spark.read.parquet(*files)
+    assert got.schema == plain.schema
+    assert _rows(got) == _rows(plain)

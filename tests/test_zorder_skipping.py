@@ -79,20 +79,33 @@ def layouts(spark, tmp_path_factory):
 def _layout_diag(path: str) -> str:
     """Per-file (rows, x/y min-max) from the footers — enough to tell a
     degenerate WRITE (bad range boundaries / fragmented files) from a
-    non-pruning READ when the bound assert trips in a long suite session."""
+    non-pruning READ when the bound assert trips in a long suite session.
+    Columns are found by name, a row group without statistics prints
+    ``no stats``, and any other failure is reported inline: the diagnostic
+    only decorates the assertion message, it must never replace it."""
+
+    def span(md, col):
+        names = [md.schema.column(i).name for i in range(md.num_columns)]
+        if col not in names:
+            return "missing"
+        i = names.index(col)
+        st = [md.row_group(g).column(i).statistics for g in range(md.num_row_groups)]
+        if any(s is None or not s.has_min_max for s in st):
+            return "no stats"
+        return f"[{min(s.min for s in st)},{max(s.max for s in st)}]"
+
     lines = []
-    for f in sorted(os.listdir(path)):
-        if not f.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, f)).metadata
-        rows = md.num_rows
-        sx = [md.row_group(i).column(0).statistics for i in range(md.num_row_groups)]
-        sy = [md.row_group(i).column(1).statistics for i in range(md.num_row_groups)]
-        lines.append(
-            f"{f}: rows={rows} rgs={md.num_row_groups} "
-            f"x=[{min(s.min for s in sx)},{max(s.max for s in sx)}] "
-            f"y=[{min(s.min for s in sy)},{max(s.max for s in sy)}]"
-        )
+    try:
+        for f in sorted(os.listdir(path)):
+            if not f.endswith(".parquet"):
+                continue
+            md = pq.ParquetFile(os.path.join(path, f)).metadata
+            lines.append(
+                f"{f}: rows={md.num_rows} rgs={md.num_row_groups} "
+                f"x={span(md, 'x')} y={span(md, 'y')}"
+            )
+    except Exception as e:  # noqa: BLE001 - see docstring
+        lines.append(f"layout diagnostic failed: {e!r}")
     return "\n".join(lines)
 
 
@@ -124,3 +137,16 @@ def test_file_footer_stats_give_file_level_skipping(layouts):
     # it to a few z-range files — the file-level skip a min/max index buys
     assert hit_r == N_FILES
     assert hit_z <= max(2, N_FILES // 8)
+
+
+def test_layout_diag_survives_missing_stats_and_columns(tmp_path):
+    """The diagnostic decorates a failing assert, so it must report a file
+    without statistics (or without an x/y column) instead of raising."""
+    import pyarrow as pa
+
+    pq.write_table(pa.table({"y": [1, 2], "x": [3, 4]}),
+                   str(tmp_path / "a.parquet"), write_statistics=False)
+    pq.write_table(pa.table({"z": [5]}), str(tmp_path / "b.parquet"))
+    diag = _layout_diag(str(tmp_path))
+    assert "a.parquet: rows=2 rgs=1 x=no stats y=no stats" in diag
+    assert "b.parquet: rows=1 rgs=1 x=missing y=missing" in diag

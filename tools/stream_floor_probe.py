@@ -22,6 +22,7 @@ import time
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+_UNSET = object()  # a conf that was not set before a config's run
 
 CONFIGS = {
     # engine defaults (what the sinks run today)
@@ -91,12 +92,11 @@ def main() -> None:
 
     results = {}
     for name, confs in CONFIGS.items():
-        olds = {}
+        # spark.conf.get resolves an unset conf to its default, and setting
+        # that back would pin it; getAll holds only the confs actually set
+        was_set = spark.conf.getAll
+        olds = {k: was_set.get(k, _UNSET) for k in confs}
         for k, v in confs.items():
-            try:
-                olds[k] = spark.conf.get(k)
-            except Exception:
-                olds[k] = None
             spark.conf.set(k, v)
         best = None
         try:
@@ -105,7 +105,7 @@ def main() -> None:
                 best = dt if best is None else min(best, dt)
         finally:
             for k, v in olds.items():
-                if v is None:
+                if v is _UNSET:
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)

@@ -308,8 +308,16 @@ def update_fundamentals(
         with ThreadPoolExecutor(max_workers=2) as pool:
             futs = [pool.submit(_land, ttm, lake.ttm),
                     pool.submit(_land, metrics, lake.metrics)]
-        for f in futs:
-            f.result()
+        errs = [e for e in (f.exception() for f in futs) if e is not None]
+        if len(errs) > 1:
+            # both writes failed: keep the second on the first — as its cause
+            # when it has none, else as a note — so neither error is dropped
+            if errs[0].__cause__ is None:
+                errs[0].__cause__ = errs[1]
+            else:
+                errs[0].add_note(f"the concurrent write also failed: {errs[1]!r}")
+        if errs:
+            raise errs[0]
 
     if do_incremental:
         with _partition_overwrite_dynamic(spark):
@@ -318,10 +326,16 @@ def update_fundamentals(
         _land_both()
     def _count(path: str) -> int:
         # a zero-row partitioned write leaves no schema-bearing files, so the
-        # readback cannot infer a schema — that is simply 0 rows
+        # readback cannot infer a schema — that is simply 0 rows.  Any other
+        # read error (a corrupt or missing file) re-raises: a report must
+        # not turn a broken table into a plausible row count.
+        from pyspark.errors import AnalysisException
+
         try:
             return spark.read.parquet(path).count()
-        except Exception:
+        except AnalysisException as e:
+            if "UNABLE_TO_INFER_SCHEMA" not in str(e):
+                raise
             return 0
 
     return {

@@ -1,8 +1,12 @@
 """SparkSession factory tuned for the local[32] test harness while keeping
 settings that carry to a real cluster (AQE, adaptive skew join, Arrow).
 
-Scale notes: everything here except master/driver-memory is what we would set
-on a 1000-executor cluster too.  ``spark.sql.shuffle.partitions`` is sized for
+Scale notes: three settings here are local-master choices — master,
+driver memory and the parallel-listing threshold (a listing job's tasks run
+in the driver's own JVM under ``local[N]``, so it only adds scheduling; on a
+cluster over an object store, fanning out the file stats pays, so drop it
+back to Spark's default there).  Everything else is what we would set on a
+1000-executor cluster too.  ``spark.sql.shuffle.partitions`` is sized for
 local runs; on a cluster AQE coalescing makes the initial number mostly
 irrelevant as long as it is an upper bound.
 """
@@ -34,6 +38,13 @@ _DEFAULTS = {
     # whose only effect is enriching AnalysisException messages with user
     # line numbers.  Off on any perf-sensitive deployment (guide §5).
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Above this many paths a read lists its files in a distributed job, one
+    # task per path.  Snapshot reads hand Spark the manifest's exact file
+    # list (64 files on a benchmark table), and get_spark only builds a
+    # local[N] master, so those tasks would run in this same JVM: the job
+    # added 0.3-0.4 s of scheduling per 64-file read on a 4-core VM, to stat
+    # files the manifest already names.  Listing stays on the driver here.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1000000",
 }
 
 

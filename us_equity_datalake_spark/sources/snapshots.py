@@ -230,6 +230,65 @@ def _file_stats(files: list[str], cols: list[str]) -> dict:
     return out
 
 
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_spark_schema(files: "list[str]"):
+    """The Spark schema Spark's own inference would pick for ``files``, read
+    on the driver — or None when it cannot be read that way.
+
+    With ``mergeSchema`` off, Spark sorts the files by path and takes the
+    schema from the first one's footer (``ParquetUtils.inferSchema``),
+    preferring the Spark schema JSON a Spark writer stores there under
+    ``org.apache.spark.sql.parquet.row.metadata``.  This reads that same
+    key from that same file with pyarrow.  None (the caller lets Spark
+    infer) when a path is a URI, the footer cannot be opened, the key
+    is absent (a file no Spark writer produced), or the JSON does not parse
+    in Python (e.g. a JVM-only user-defined type)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    if any("://" in f for f in files):  # manifests hold plain local paths
+        return None
+    first = min(os.path.abspath(f) for f in files)
+    try:
+        kv = pq.read_metadata(first).metadata or {}
+    except (OSError, pa.ArrowException):
+        return None
+    raw = kv.get(_SPARK_ROW_METADATA)
+    if raw is None:
+        return None
+    try:
+        return StructType.fromJson(json.loads(raw))
+    except (ValueError, KeyError, ImportError):
+        return None
+
+
+def _read_parquet_files(
+    spark: SparkSession, files: "list[str]", *, merge_schema: bool = False
+) -> DataFrame:
+    """The raw read of a manifest-named file list, planned with no Spark job.
+
+    ``spark.read.parquet(*files)`` alone starts two jobs before any action:
+    a parallel-listing job when there are more paths than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (raised in
+    ``session._DEFAULTS``, so the listing stays on the driver), and a
+    one-task schema-inference job that opens one footer.  The second is
+    avoided by reading that footer's Spark schema on the driver
+    (:func:`_footer_spark_schema`) and passing it as the read schema — the
+    same schema from the same file, so the frame is identical.  A file
+    without that footer key falls back to Spark's inference.
+
+    ``merge_schema=True`` keeps Spark's inference: merging must open EVERY
+    footer, and the union of schemas across files is Spark's to compute."""
+    if merge_schema:
+        return spark.read.option("mergeSchema", "true").parquet(*files)
+    schema = _footer_spark_schema(files)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*files)
+
+
 _BLOOM_BITS_PER_KEY = 16  # per-file filter sizing (the production constant)
 _BLOOM_K = 5
 _BLOOM_SEED = 211
@@ -276,7 +335,7 @@ def _write_file_blooms(spark: SparkSession, files: list[str], cols: list[str]) -
     # (_bloom_might_contain) already replicates, so the sidecar BYTES are
     # bit-identical.  Guide §1.2/§2.3: fewer passes, fewer shuffled/collected
     # bytes, same artifact.
-    df = spark.read.parquet(*files).withColumn("__file", F.input_file_name())
+    df = _read_parquet_files(spark, files).withColumn("__file", F.input_file_name())
     stacked = df.select(
         "__file",
         F.explode(
@@ -595,10 +654,13 @@ def _scan_files(
     with_lineage: bool = False,
     keep_row_id: bool = False,
 ) -> DataFrame:
-    """The ONE reader every version-pinned scan routes through: plain
-    ``spark.read.parquet`` when the manifest carries no deletion vectors
-    (the common case — zero overhead), else a two-branch plan that
-    anti-joins the DV'd files' rows against their (file, position) pairs.
+    """The ONE reader every version-pinned scan routes through: a single
+    raw read of the file list (:func:`_read_parquet_files` — planned on the
+    driver with no Spark job) when the manifest carries no deletion vectors
+    (the common case), else a two-branch plan that anti-joins the DV'd
+    files' rows against their (file, position) pairs.  Without
+    ``merge_schema`` either plan is built without starting a Spark job: the
+    first job is the caller's action.
 
     The DV side is manifest-sized (positions of DELETED rows only) and
     broadcast — the same shape Delta's scan takes when it pushes DVs to
@@ -614,11 +676,16 @@ def _scan_files(
     from pyspark.sql import functions as F
 
     dv = {f: e for f, e in (manifest.get("dv") or {}).items() if f in set(files)}
-    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
     cmap = manifest.get("column_map") or {}
 
+    def _read(file_list):
+        return _drop_dead_cols(
+            _read_parquet_files(spark, file_list, merge_schema=merge_schema),
+            manifest,
+        )
+
     if not dv:
-        base = _drop_dead_cols(reader.parquet(*files), manifest)
+        base = _read(files)
         if not keep_row_id:
             base = _strip_row_id(base)
         if not with_lineage:
@@ -639,7 +706,7 @@ def _scan_files(
         # per-leaf _row_id strip: the two branches could otherwise disagree
         # on the hidden column's presence (mixed materialized/fresh files)
         # and fail the union
-        scan = _drop_dead_cols(reader.parquet(*file_list), manifest)
+        scan = _read(file_list)
         if not keep_row_id:
             scan = _strip_row_id(scan)
         return _lineage_cols(scan)
@@ -3419,7 +3486,9 @@ def _transition_feed(
         # column map — a raw read would fail (or, after a swap-rename,
         # silently mis-bind) on any column-mapped table.
         pre = _apply_col_map(
-            _lineage_cols(_drop_dead_cols(spark.read.parquet(*sorted(delta)), m1)),
+            _lineage_cols(
+                _drop_dead_cols(_read_parquet_files(spark, sorted(delta)), m1)
+            ),
             m1.get("column_map") or {},
         ).join(pos, ["__file", "__pos"], "left_semi")
         parts.append(
@@ -3501,8 +3570,9 @@ def _raw_ids_with_lineage(
         return _apply_col_map(
             _lineage_cols(
                 _drop_dead_cols(
-                    spark.read.option("mergeSchema", "true")
-                    .parquet(*sorted(file_list)),
+                    _read_parquet_files(
+                        spark, sorted(file_list), merge_schema=True
+                    ),
                     manifest,
                 )
             ),
@@ -3719,12 +3789,16 @@ def optimize(
     target_files: int = 1,
     zorder_by: "list[str] | None" = None,
 ) -> dict:
-    """OPTIMIZE: rewrite the latest version's data into ``target_files``
-    files — optionally z-order-clustered (operators.zorder) so multi-
-    dimension predicates prune — as a NEW commit.  Content is identical by
-    construction; the old layout stays time-travelable (compaction never
-    breaks a pinned reader), and vacuum() reclaims it when the horizon
-    passes.  Returns {"version", "files_before", "files_after"}."""
+    """OPTIMIZE: rewrite the latest version's data into AT MOST
+    ``target_files`` files — optionally z-order-clustered (operators.zorder)
+    so multi-dimension predicates prune — as a NEW commit.  Without
+    ``zorder_by`` the rewrite is a ``coalesce(target_files)``, which only
+    merges the scan's partitions: it never raises the file count, so a
+    table read as 4 partitions lands as 4 files even at ``target_files=64``.
+    Content is identical by construction; the old layout stays
+    time-travelable (compaction never breaks a pinned reader), and vacuum()
+    reclaims it when the horizon passes.  Returns {"version",
+    "files_before", "files_after"}."""
     from us_equity_datalake_spark.operators import zorder as _z
 
     m_cur = read_manifest(path, latest_version(path))
