@@ -474,3 +474,27 @@ def test_readback_count_raises_on_corrupt_file(spark, tmp_path, monkeypatch):
     day1, _ = _fund_days(spark)
     with pytest.raises(Exception, match="part-corrupt.parquet"):
         daily_job.update_fundamentals(spark, lk, day1, incremental=False)
+
+
+def test_concurrent_derived_writes_inherit_job_tags(spark, tmp_path, monkeypatch):
+    """The ttm and metrics writes run on pool threads; a job tag the caller
+    set on the session is visible inside both, so their jobs stay
+    attributable and cancellable by tag."""
+    from us_equity_datalake_spark.equity import daily_job
+
+    lk = LakePaths(str(tmp_path / "lk"))
+    real_write = daily_job.write_partitioned
+    seen = {}
+
+    def recording_write(df, path, **kw):
+        seen[path] = set(spark.getTags())
+        real_write(df, path, **kw)
+
+    monkeypatch.setattr(daily_job, "write_partitioned", recording_write)
+    day1, _ = _fund_days(spark)
+    spark.addTag("quantlake-daily")
+    try:
+        daily_job.update_fundamentals(spark, lk, day1, incremental=False)
+    finally:
+        spark.removeTag("quantlake-daily")
+    assert seen == {lk.ttm: {"quantlake-daily"}, lk.metrics: {"quantlake-daily"}}

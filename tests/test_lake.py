@@ -120,6 +120,36 @@ def test_consolidate_year_moves_hot_to_history_with_safeguard(spark, tmp_path):
     assert spark.read.parquet(hist).filter("year = 2024").count() == 3  # idempotent, no dupes
 
 
+def test_consolidate_year_unreadable_history_raises_and_keeps_years(spark, tmp_path):
+    """A history dataset that exists but cannot be read (corrupt footers) is
+    not "no history": consolidation raises instead of taking the
+    first-landing branch, whose whole-path overwrite would delete every
+    other year."""
+    import os
+
+    from us_equity_datalake_spark.sources.lake import consolidate_year
+
+    hot, hist = str(tmp_path / "hot"), str(tmp_path / "history")
+    write_partitioned(
+        _ticks(spark, 2019, n=3).unionByName(_ticks(spark, 2020, n=3)),
+        hist, partition_by=["year"],
+    )
+    write_partitioned(_ticks(spark, 2021, n=3), hot, partition_by=["year"])
+    data_files = sorted(glob.glob(os.path.join(hist, "year=*", "*.parquet")))
+    assert {os.path.basename(os.path.dirname(f)) for f in data_files} == {
+        "year=2019", "year=2020"}
+    for f in data_files:
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file" * 8)
+
+    with pytest.raises(Exception) as ei:
+        consolidate_year(spark, hot, hist, year=2021)
+    assert "UNABLE_TO_INFER_SCHEMA" not in str(ei.value)
+    assert sorted(glob.glob(os.path.join(hist, "year=*", "*.parquet"))) == data_files
+    assert not os.path.exists(os.path.join(hist, "year=2021"))
+    assert os.path.exists(os.path.join(hot, "year=2021"))  # hot slice kept
+
+
 def test_read_hot_cold_router_after_consolidation(spark, tmp_path):
     """After consolidation, the hot+history union serves the full range and a
     year predicate prunes to one side's partitions."""

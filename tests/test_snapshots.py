@@ -590,15 +590,17 @@ def test_box_prune_after_zorder_optimize(spark, tmp_path):
     )
     snapshots.commit(df.repartition(8), path, stats_cols=["x", "y"])
     # random layout: every file spans both full ranges -> nothing prunable
-    _, info_rand = snapshots.read_version_pruned_box(
-        spark, path, {"x": (0, 7), "y": (0, 7)}
-    )
+    _, info_rand = snapshots.read_version_where(spark, path, [
+        {"col": "x", "op": "range", "lo": 0, "hi": 7},
+        {"col": "y", "op": "range", "lo": 0, "hi": 7},
+    ])
     assert info_rand["files_scanned"] == info_rand["files_total"]
 
     snapshots.optimize(spark, path, target_files=16, zorder_by=["x", "y"])
-    got, info_z = snapshots.read_version_pruned_box(
-        spark, path, {"x": (0, 7), "y": (0, 7)}
-    )
+    got, info_z = snapshots.read_version_where(spark, path, [
+        {"col": "x", "op": "range", "lo": 0, "hi": 7},
+        {"col": "y", "op": "range", "lo": 0, "hi": 7},
+    ])
     assert info_z["files_scanned"] < info_z["files_total"]
     # pruning is a file-list cut, never a row filter: content stays exact
     want = df.where((F.col("x") <= 7) & (F.col("y") <= 7))
@@ -2993,12 +2995,13 @@ def test_change_feed_row_ids_across_prior_evolution(spark, tmp_path):
     assert rows == [("delete", 2, None), ("delete", 101, "late")]
 
 
-def test_read_version_where_composes_all_cuts(spark, tmp_path):
+def test_read_version_where_composes_all_cuts(spark, tmp_path, capsys, monkeypatch):
     """The unified planner intersects range + null-count + bloom cuts in
     one pass, attributes each dropped file to the first rejecting atom,
-    applies the implied NOT-NULL cut inside range/eq atoms, keeps files
-    conservatively when stats are missing, and resolves logical names
-    through the column map."""
+    applies the implied NOT-NULL cut inside between/eq atoms (not the bare
+    range atom), keeps files conservatively when stats are missing,
+    resolves logical names through the column map, and is reachable from
+    the CLI's where verb."""
     import pytest
 
     path = str(tmp_path / "t")
@@ -3034,6 +3037,15 @@ def test_read_version_where_composes_all_cuts(spark, tmp_path):
         {"col": "note", "op": "between", "lo": "a", "hi": "z"},
     ])
     assert i3["files_scanned"] == 2
+    # the bare range atom has no implied NOT NULL: the all-null file stays
+    _, i3r = snapshots.read_version_where(spark, path, [
+        {"col": "note", "op": "range", "lo": "a", "hi": "z"},
+    ])
+    assert i3r["files_scanned"] == 3
+    _, i3c = snapshots.read_version_where(spark, path, [
+        {"col": "note", "op": "range", "lo": "y"},
+    ])
+    assert i3c["files_scanned"] == 1 and i3c["cut_by"] == {"range:note": 2}
     # is_null keeps only files that can hold a null
     _, i4 = snapshots.read_version_where(spark, path, [
         {"col": "note", "op": "is_null"},
@@ -3052,13 +3064,28 @@ def test_read_version_where_composes_all_cuts(spark, tmp_path):
         {"col": "key", "op": "between", "lo": 0, "hi": 9},
     ])
     assert i6["files_scanned"] == 1
+    # the CLI's where verb takes the same atoms, range included
+    import json
+
+    import us_equity_datalake_spark.cli as cli
+
+    monkeypatch.setattr(
+        "us_equity_datalake_spark.session.get_spark", lambda name: spark
+    )
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    capsys.readouterr()
+    assert cli.main(["table", "where", "--path", path,
+                     "--atoms", '[{"col":"note","op":"range","lo":"y"}]']) == 0
+    out = json.loads(capsys.readouterr().out.splitlines()[0])
+    assert (out["files_scanned"], out["cut_by"]) == (1, {"range:note": 2})
 
 
 def test_null_count_stats_and_pruning(spark, tmp_path):
     """NULL-COUNT skipping (Delta nullCount): stats entries widen to
     [min, max, null_count, file_rows]; an all-null file records
     [None, None, n, n] (it has NO min/max, so range pruning must keep it);
-    read_version_null_pruned cuts the file list exactly and never a row."""
+    read_version_where's is_null/not_null atoms cut the file list exactly
+    and never a row."""
     path = str(tmp_path / "t")
     null_s = F.lit(None).cast("string")
     all_null = spark.range(0, 100).select("id", null_s.alias("tag"))
@@ -3082,10 +3109,10 @@ def test_null_count_stats_and_pruning(spark, tmp_path):
     assert s_nonull[2:] == [0, 100] and s_nonull[0] is not None
     assert s_mixed[2:] == [20, 100]
 
-    df, info = snapshots.read_version_null_pruned(spark, path, "tag", want_null=True)
+    df, info = snapshots.read_version_where(spark, path, [{"col": "tag", "op": "is_null"}])
     assert (info["files_total"], info["files_scanned"]) == (3, 2)
     assert df.where(F.col("tag").isNull()).count() == 120
-    df, info = snapshots.read_version_null_pruned(spark, path, "tag", want_null=False)
+    df, info = snapshots.read_version_where(spark, path, [{"col": "tag", "op": "not_null"}])
     assert (info["files_total"], info["files_scanned"]) == (3, 2)
     assert df.where(F.col("tag").isNotNull()).count() == 180
     # range pruning: the all-null file has no range, conservatively kept
@@ -3104,7 +3131,7 @@ def test_null_pruning_conservative_without_stats(spark, tmp_path):
     WITHOUT stats_cols maintains the null index for its new file."""
     path = str(tmp_path / "t")
     snapshots.commit(spark.range(0, 50).coalesce(1), path)  # no stats at all
-    _, info = snapshots.read_version_null_pruned(spark, path, "id", want_null=True)
+    _, info = snapshots.read_version_where(spark, path, [{"col": "id", "op": "is_null"}])
     assert (info["files_total"], info["files_scanned"]) == (1, 1)
 
     path2 = str(tmp_path / "t2")
@@ -3121,10 +3148,10 @@ def test_null_pruning_conservative_without_stats(spark, tmp_path):
         .coalesce(1),
         path2,
     )
-    df, info = snapshots.read_version_null_pruned(spark, path2, "tag", want_null=True)
+    df, info = snapshots.read_version_where(spark, path2, [{"col": "tag", "op": "is_null"}])
     assert (info["files_total"], info["files_scanned"]) == (2, 1)
     assert df.where(F.col("tag").isNull()).count() == 50
-    df, info = snapshots.read_version_null_pruned(spark, path2, "tag", want_null=False)
+    df, info = snapshots.read_version_where(spark, path2, [{"col": "tag", "op": "not_null"}])
     assert (info["files_total"], info["files_scanned"]) == (2, 1)
     assert df.where(F.col("tag").isNotNull()).count() == 40
 

@@ -49,7 +49,7 @@ def main() -> None:
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("profile")
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", sess._driver_memory())
         .config("spark.eventLog.enabled", "true")
         .config("spark.eventLog.dir", evdir)
         .config("spark.eventLog.compress", "false")

@@ -170,7 +170,9 @@ def _build_parser() -> argparse.ArgumentParser:
     )
     twh.add_argument("--path", required=True)
     twh.add_argument("--atoms", required=True,
-                     help='JSON list, e.g. \'[{"col":"v","op":"between",'
+                     help="JSON list of atoms, op one of range (min/max only), "
+                          "between (range + not null), eq, is_null, not_null; "
+                          'e.g. \'[{"col":"v","op":"between",'
                           '"lo":1,"hi":9},{"col":"k","op":"not_null"}]\'')
     twh.add_argument("--count", action="store_true",
                      help="also run the pruned scan and print its row count")

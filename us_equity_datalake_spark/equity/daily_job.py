@@ -294,11 +294,12 @@ def update_fundamentals(
 
     from us_equity_datalake_spark.sources.lake import _partition_overwrite_dynamic
 
-    @inheritable_thread_target
+    @inheritable_thread_target(spark)
     def _land(df, path):
-        # inheritable_thread_target: the worker thread inherits the caller's
-        # JVM-thread-local properties (job description/group), so these jobs
-        # stay attributable in the UI/event log
+        # inheritable_thread_target(spark): the worker thread inherits the
+        # caller's JVM-thread-local properties (job description/group) and
+        # the session's job tags, so these jobs stay attributable (and
+        # cancellable by tag)
         write_partitioned(df, path, partition_by=["sym_bucket"])
 
     def _land_both():

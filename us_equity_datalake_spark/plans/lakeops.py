@@ -3422,11 +3422,12 @@ def lake_cdf_merge_lineage_q(spark, sf_dir):
     "widened from [min,max] to [min,max,null_count,file_rows] in one "
     "footer pass, snapshots._file_stats).  Three one-file commits with "
     "controlled null placement — an ALL-NULL note file, a no-null file, a "
-    "mixed file — then read_version_null_pruned cuts the file list from "
-    "the KB manifest: IS NULL opens 2/3 (skips the no-null file), IS NOT "
-    "NULL opens 2/3 (skips the all-null file), while min/max range "
-    "pruning must conservatively KEEP the all-null file (it records no "
-    "range at all — before null counts it was invisible to every skip).  "
+    "mixed file — then read_version_where's is_null/not_null atoms cut "
+    "the file list from the KB manifest: IS NULL opens 2/3 (skips the "
+    "no-null file), IS NOT NULL opens 2/3 (skips the all-null file), "
+    "while min/max range pruning must conservatively KEEP the all-null "
+    "file (it records no range at all — before null counts it was "
+    "invisible to every skip).  "
     "A fourth commit WITHOUT stats_cols proves the index is maintained "
     "automatically (Delta table-property discipline): IS NULL still opens "
     "exactly 2/4.  files_total/files_scanned are graded as exact values "
@@ -3476,8 +3477,8 @@ def lake_null_skipping_q(spark, sf_dir):
             )
         )
 
-    nul, i1 = snapshots.read_version_null_pruned(spark, root, "note", want_null=True)
-    nn, i2 = snapshots.read_version_null_pruned(spark, root, "note", want_null=False)
+    nul, i1 = snapshots.read_version_where(spark, root, [{"col": "note", "op": "is_null"}])
+    nn, i2 = snapshots.read_version_where(spark, root, [{"col": "note", "op": "not_null"}])
     # range pruning on the same column: both real-note files' max (Clerk#…)
     # sits below 'D', so they prune — but the all-null file has NO recorded
     # range and must be conservatively kept (files_scanned exactly 1).
@@ -3493,7 +3494,7 @@ def lake_null_skipping_q(spark, sf_dir):
         .select("o_orderkey", "o_totalprice", "note")
     )
     snapshots.commit(appendix.coalesce(1), root)
-    nul2, i4 = snapshots.read_version_null_pruned(spark, root, "note", want_null=True)
+    nul2, i4 = snapshots.read_version_where(spark, root, [{"col": "note", "op": "is_null"}])
     return (
         arm("is_null", nul, i1, F.col("note").isNull())
         .unionByName(arm("not_null", nn, i2, F.col("note").isNotNull()))
@@ -3601,7 +3602,7 @@ def lake_skipping_matrix_q(spark, sf_dir):
         )
 
     rng, i1 = snapshots.read_version_pruned(spark, root, "kb", lo=300, hi=600)
-    nn, i2 = snapshots.read_version_null_pruned(spark, root, "note", want_null=False)
+    nn, i2 = snapshots.read_version_where(spark, root, [{"col": "note", "op": "not_null"}])
     blm, i3 = snapshots.read_version_point(spark, root, "tag", "f3_2")
     c1, i4 = snapshots.read_version_where(spark, root, [
         {"col": "kb", "op": "between", "lo": 300, "hi": 600},

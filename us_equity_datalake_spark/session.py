@@ -86,6 +86,26 @@ def _install_jvm_function_cache() -> None:
     _fb._get_jvm_function = cached
 
 
+_DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def _driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else half of
+    the machine's RAM (``MemTotal``), capped at 48g.  Under ``local[N]`` the
+    driver JVM also runs every task, and a heap allowed to outgrow the RAM
+    gets the process killed by the OS instead of failing with an
+    OutOfMemoryError.  Without a readable meminfo the cap is used."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as fh:
+            kb = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return f"{_DRIVER_MEM_CAP_MB}m"
+    return f"{min(kb // 2048, _DRIVER_MEM_CAP_MB)}m"
+
+
 def get_spark(app_name: str = "quantlake-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -101,7 +121,7 @@ def get_spark(app_name: str = "quantlake-spark", *, shuffle_partitions: int | No
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)

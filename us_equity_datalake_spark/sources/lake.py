@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from us_equity_datalake_spark.operators._cache import materialize_once
 
@@ -173,12 +174,20 @@ def read_table_metadata(path: str) -> dict | None:
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` holds a parquet dataset.  Only "nothing to read" (no
+    schema-bearing file: UNABLE_TO_INFER_SCHEMA) counts as absent.  Any
+    other read error (a corrupt footer) re-raises: callers take the absent
+    branch to write with a whole-path overwrite or a full append, which on a
+    table that exists but cannot be read deletes every other partition or
+    re-appends every key."""
     if not os.path.exists(path):
         return False
     try:
         spark.read.parquet(path).schema
         return True
-    except Exception:
+    except AnalysisException as e:
+        if "UNABLE_TO_INFER_SCHEMA" not in str(e):
+            raise
         return False
 
 

@@ -2177,33 +2177,13 @@ def read_version_pruned(
     hi=None,
     version: int | None = None,
 ) -> "tuple[DataFrame, dict]":
-    """MANIFEST-LEVEL file skipping: hand Spark only the files whose
-    recorded [min, max] for ``col`` overlaps [lo, hi] (either bound may be
-    None = unbounded).  This is Iceberg's scan-planning layer ABOVE
-    parquet's own footer pruning: at object-store scale the win is never
-    opening (or listing) the non-overlapping files at all — the decision is
-    made from the KB-sized manifest on the driver.
-
-    Pruning is a FILE-LIST cut, not a row filter: the caller still applies
-    the row predicate (and should — a kept file can contain non-matching
-    rows).  Files with no recorded stats for ``col`` are conservatively
-    KEPT.  Returns (frame, {"files_total", "files_scanned"})."""
-    v = latest_version(path) if version is None else version
-    m = read_manifest(path, v)
-    stats = m.get("stats", {})
-    col = _physical_col(m, col)  # the stats index is keyed physically
-    kept = []
-    for f in m["files"]:
-        s = stats.get(f, {}).get(col)
-        if s is not None and s[0] is not None:  # [mn,mx,nulls,rows]; None mn = all-null file, range can't prune
-            mn, mx = s[0], s[1]
-            if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                continue
-        kept.append(f)
-    info = {"files_total": len(m["files"]), "files_scanned": len(kept)}
-    if not kept:
-        return read_version(spark, path, v).limit(0), info
-    return _scan_files(spark, kept, m), info
+    """MANIFEST-LEVEL min/max file skipping on one column: keep the files
+    whose recorded [min, max] for ``col`` overlaps [lo, hi] (either bound may
+    be None = unbounded).  All-null files record no range and are KEPT.
+    :func:`read_version_where` with one ``range`` atom."""
+    return read_version_where(
+        spark, path, [{"col": col, "op": "range", "lo": lo, "hi": hi}], version=version
+    )
 
 
 def read_version_point(
@@ -2214,105 +2194,14 @@ def read_version_point(
     *,
     version: int | None = None,
 ) -> "tuple[DataFrame, dict]":
-    """POINT-LOOKUP file pruning via the manifest's per-file bloom filters:
-    keep only files whose filter MIGHT contain ``value`` (zero false
-    negatives by construction; false positives keep an extra file, never
-    lose a row).  This is the pruning layer for equality predicates on
-    NON-CLUSTERED columns — min/max stats cannot cut anything when every
-    file spans the full value range, but a 16-bits/key bloom almost always
-    can.  Files without a recorded filter for ``col`` are conservatively
-    kept.  The caller still applies the row predicate.  Returns
-    (frame, {"files_total", "files_scanned"})."""
-    v = latest_version(path) if version is None else version
-    m = read_manifest(path, v)
-    col = _physical_col(m, col)  # bloom sidecars are keyed physically
-    kept = [f for f in m["files"] if _bloom_might_contain(f, col, value)]
-    info = {"files_total": len(m["files"]), "files_scanned": len(kept)}
-    if not kept:
-        return read_version(spark, path, v).limit(0), info
-    return _scan_files(spark, kept, m), info
-
-
-def read_version_pruned_box(
-    spark: SparkSession,
-    path: str,
-    ranges: "dict[str, tuple]",
-    *,
-    version: int | None = None,
-) -> "tuple[DataFrame, dict]":
-    """Multi-column manifest pruning: keep files whose recorded [min, max]
-    overlaps EVERY column's (lo, hi) range (either bound may be None).
-    With a z-order OPTIMIZE'd layout this is the manifest-level analog of
-    the footer-stats skip proof: a 2-D box touches only the files whose
-    z-curve segment crosses it, and the decision is made from the KB
-    manifest without opening a single file.  Missing stats for a column
-    keep the file (conservative).  Returns (frame, counts) like
-    :func:`read_version_pruned`."""
-    v = latest_version(path) if version is None else version
-    m = read_manifest(path, v)
-    stats = m.get("stats", {})
-    ranges = {_physical_col(m, c): b for c, b in ranges.items()}
-    kept = []
-    for f in m["files"]:
-        fstats = stats.get(f, {})
-        drop = False
-        for col, (lo, hi) in ranges.items():
-            s = fstats.get(col)
-            if s is None or s[0] is None:
-                continue
-            mn, mx = s[0], s[1]
-            if (hi is not None and mn > hi) or (lo is not None and mx < lo):
-                drop = True
-                break
-        if not drop:
-            kept.append(f)
-    info = {"files_total": len(m["files"]), "files_scanned": len(kept)}
-    if not kept:
-        return read_version(spark, path, v).limit(0), info
-    return _scan_files(spark, kept, m), info
-
-
-def read_version_null_pruned(
-    spark: SparkSession,
-    path: str,
-    col: str,
-    *,
-    want_null: bool,
-    version: int | None = None,
-) -> "tuple[DataFrame, dict]":
-    """NULL-COUNT file skipping (the Delta ``nullCount`` stats rule): hand
-    Spark only the files that can contain a row matching ``col IS NULL``
-    (``want_null=True``: recorded null_count > 0) or ``col IS NOT NULL``
-    (``want_null=False``: null_count < file rows).  min/max ranges cannot
-    make either cut — an all-null file records NO min/max at all, so before
-    null counts it was conservatively scanned by every point/range read —
-    and at object-store scale the win is the same as range pruning: the
-    non-matching files are never listed, opened, or fetched, decided from
-    the KB-sized manifest on the driver.
-
-    Like :func:`read_version_pruned` this is a FILE-LIST cut, not a row
-    filter — the caller still applies the predicate.  Files without a
-    recorded null count for ``col`` (no stats, pre-widening 2-element
-    stats, or a footer that omitted null_count) are conservatively KEPT.
-    Returns (frame, {"files_total", "files_scanned"})."""
-    v = latest_version(path) if version is None else version
-    m = read_manifest(path, v)
-    stats = m.get("stats", {})
-    col = _physical_col(m, col)  # the stats index is keyed physically
-    kept = []
-    for f in m["files"]:
-        s = stats.get(f, {}).get(col)
-        if s is not None and len(s) >= 4 and s[2] is not None:
-            nulls, rows = s[2], s[3]
-            if want_null and nulls == 0:
-                continue
-            if not want_null and rows is not None and nulls >= rows:
-                continue
-        kept.append(f)
-    info = {"files_total": len(m["files"]), "files_scanned": len(kept)}
-    if not kept:
-        return read_version(spark, path, v).limit(0), info
-    return _scan_files(spark, kept, m), info
+    """POINT-LOOKUP file skipping: keep the files whose bloom filter for
+    ``col`` MIGHT contain ``value`` (zero false negatives) — the cut that
+    works on NON-CLUSTERED columns, where every file spans the full value
+    range.  :func:`read_version_where` with one ``eq`` atom, so a recorded
+    range that misses ``value``, or an all-null file, cuts too."""
+    return read_version_where(
+        spark, path, [{"col": col, "op": "eq", "value": value}], version=version
+    )
 
 
 def read_version_where(
@@ -2322,25 +2211,27 @@ def read_version_where(
     *,
     version: int | None = None,
 ) -> "tuple[DataFrame, dict]":
-    """UNIFIED data-skipping planner (r12): compose EVERY manifest-level
-    cut — min/max range, null-count, per-file bloom — conjunctively over
-    one predicate before any file opens.  The three standalone readers
-    (:func:`read_version_pruned`, :func:`read_version_null_pruned`,
-    :func:`read_version_point`) each apply ONE cut; a compound predicate
-    like ``v BETWEEN a AND b AND k = x AND note IS NOT NULL`` deserves the
-    intersection, decided in one driver pass over the KB-sized manifest.
+    """The data-skipping planner: compose EVERY manifest-level cut — min/max
+    range, null-count, per-file bloom — conjunctively over one predicate
+    before any file opens, decided in one driver pass over the KB-sized
+    manifest.  At object-store scale the win is never listing, opening or
+    fetching the skipped files.  :func:`read_version_pruned` (one ``range``
+    atom) and :func:`read_version_point` (one ``eq`` atom) wrap it.
 
     ``atoms`` is a conjunction (AND) of predicate atoms:
 
-    - ``{"col", "op": "between", "lo", "hi"}`` — range cut from recorded
-      [min, max]; either bound may be absent/None.  SQL range semantics
-      imply NOT NULL, so the atom also drops files whose every row is
-      null in ``col`` (the null-count cut range stats alone cannot make).
+    - ``{"col", "op": "range", "lo", "hi"}`` — the bare range cut from
+      recorded [min, max]; either bound may be absent/None.  An all-null
+      file records no range, so it is KEPT.
+    - ``{"col", "op": "between", "lo", "hi"}`` — the range cut plus the
+      NOT-NULL that SQL range semantics imply: it also drops files whose
+      every row is null in ``col`` (the cut range stats alone cannot make).
     - ``{"col", "op": "eq", "value"}`` — range cut at lo=hi=value, PLUS
       the bloom-sidecar probe when the column is bloom-indexed, PLUS the
       all-null cut.
-    - ``{"col", "op": "is_null"}`` / ``{"col", "op": "not_null"}`` —
-      the null-count cuts of :func:`read_version_null_pruned`.
+    - ``{"col", "op": "is_null"}`` / ``{"col", "op": "not_null"}`` — the
+      null-count cuts (Delta ``nullCount``): drop files with a recorded
+      null_count of 0 / equal to the file's rows.
 
     Missing stats/filters keep the file (conservative, per cut).  Pruning
     is a FILE-LIST cut, not a row filter — the caller still applies the
@@ -2355,8 +2246,8 @@ def read_version_where(
     norm = []
     for a in atoms:
         a = dict(a)
-        a["col"] = _physical_col(m, a["col"])
-        if a.get("op") not in ("between", "eq", "is_null", "not_null"):
+        a["col"] = _physical_col(m, a["col"])  # stats and blooms are keyed physically
+        if a.get("op") not in ("range", "between", "eq", "is_null", "not_null"):
             raise ValueError(f"read_version_where: unknown atom op {a.get('op')!r}")
         norm.append(a)
 
@@ -2365,14 +2256,14 @@ def read_version_where(
                 and s[3] is not None and s[2] >= s[3])
 
     def rejects(a: dict, f: str) -> bool:
-        s = stats.get(f, {}).get(a["col"])
+        s = stats.get(f, {}).get(a["col"])  # [min, max, null_count, rows]
         op = a["op"]
         if op == "is_null":
             return s is not None and len(s) >= 4 and s[2] == 0
         if op == "not_null":
             return _all_null(s)
         # between / eq imply NOT NULL: an all-null file can't match
-        if _all_null(s):
+        if op != "range" and _all_null(s):
             return True
         lo = a.get("value") if op == "eq" else a.get("lo")
         hi = a.get("value") if op == "eq" else a.get("hi")
