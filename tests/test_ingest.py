@@ -279,3 +279,25 @@ def test_figi_map_df_drops_unmapped(spark):
     df = figi_map_df(spark, {"FB": "BBG000MM2P62", "GONE": None})
     rows = df.collect()
     assert [(r.symbol, r.figi) for r in rows] == [("FB", "BBG000MM2P62")]
+
+
+def test_fetch_openfigi_mapping_raises_on_a_response_bug():
+    """Only request failures degrade a batch to unmapped: a malformed
+    response (here a KeyError inside ``post``) is a bug, raised at once
+    without retries instead of mapping the whole batch to None."""
+    calls = {"n": 0}
+
+    def malformed(payload):
+        calls["n"] += 1
+        return {"items": []}["data"]
+
+    bucket = _instant_bucket(rate=1e9)
+    with pytest.raises(KeyError, match="data"):
+        fetch_openfigi_mapping(["AA", "BB"], malformed, limiter=bucket, sleep=lambda s: None)
+    assert calls["n"] == 1
+
+    def refused(payload):
+        raise ConnectionRefusedError("openfigi unreachable")
+
+    out = fetch_openfigi_mapping(["CC"], refused, limiter=bucket, sleep=lambda s: None)
+    assert out == {"CC": None}

@@ -45,3 +45,30 @@ def test_fallback_on_arrow_rejected_types(spark):
     ddl = "s struct<x:long,y:string>"
     assert local_frame(spark, rows, ddl).collect() == \
         spark.createDataFrame(rows, ddl).collect()
+
+
+class _ArrowPathFails:
+    """A session whose Arrow/pandas ``createDataFrame`` raises ``exc``; the
+    legacy row-list path is the real session's."""
+
+    def __init__(self, spark, exc):
+        self.spark, self.exc = spark, exc
+
+    def createDataFrame(self, data, schema=None):
+        import pandas as pd
+
+        if isinstance(data, pd.DataFrame):
+            raise self.exc
+        return self.spark.createDataFrame(data, schema=schema)
+
+
+def test_fallback_only_for_conversion_errors(spark):
+    """A value the converters reject takes the legacy path; any other error
+    (a lost JVM gateway, say) raises instead of being retried as rows."""
+    import pytest
+
+    rows, ddl = [("x", 1)], "a string, b long"
+    got = local_frame(_ArrowPathFails(spark, TypeError("unsupported cell")), rows, ddl)
+    assert got.collect() == [Row(a="x", b=1)]
+    with pytest.raises(RuntimeError, match="gateway"):
+        local_frame(_ArrowPathFails(spark, RuntimeError("gateway lost")), rows, ddl)

@@ -3377,3 +3377,180 @@ def test_footer_without_spark_schema_falls_back_to_inference(spark, tmp_path):
     plain = spark.read.parquet(*files)
     assert got.schema == plain.schema
     assert _rows(got) == _rows(plain)
+
+
+# ---------------------------------------------------------------------------
+# Bloom sidecars are built on the driver
+# ---------------------------------------------------------------------------
+
+
+def _spark_reference_blooms(spark, files, cols):
+    """The bloom filters of ``files`` computed with Spark SQL: md5 of each
+    value's string cast (first 8 hex digits), the distinct count sizing the
+    width, and the K-hash bit loop of the index layout.  {file: {col: entry}}."""
+    import base64
+
+    import numpy as np
+
+    from us_equity_datalake_spark.functions.hashing import (
+        MERSENNE_P, md5_long32, perm_coefficients,
+    )
+
+    raw = snapshots._lineage_cols(spark.read.parquet(*files))
+    coeffs = perm_coefficients(snapshots._BLOOM_K, snapshots._BLOOM_SEED)
+    out: dict = {}
+    for c in cols:
+        v = F.col(c).cast("string")
+        per_file = (
+            raw.where(v.isNotNull()).groupBy("__file")
+            .agg(F.countDistinct(v).alias("nd"), F.collect_set(md5_long32(v)).alias("hs"))
+            .collect()
+        )
+        for r in per_file:
+            m = snapshots._bloom_m_for(r["nd"])
+            h = np.asarray(r["hs"], dtype=np.int64)
+            buf = np.zeros(m // 8, dtype=np.uint8)
+            for a, b in coeffs:
+                p = (h * a + b) % MERSENNE_P % m
+                np.bitwise_or.at(buf, p >> 3, (1 << (p & 7)).astype(np.uint8))
+            out.setdefault(r["__file"], {})[c] = {
+                "m": m, "bitmap": base64.b64encode(buf.tobytes()).decode(),
+            }
+    return out
+
+
+def test_driver_bloom_sidecars_match_spark_reference(spark, tmp_path):
+    """Every sidecar equals the filter Spark SQL computes from the same
+    file — string, long, int, short and byte columns, a null-bearing
+    column — while an all-null column gets no filter and the zero-row
+    schema-anchor file gets no sidecar."""
+    import json
+
+    path = str(tmp_path / "t")
+    cols = ["s", "l", "i", "sh", "by", "nb", "an"]
+    df = spark.range(0, 3000).select(
+        F.concat(F.lit("sym"), (F.col("id") % 97).cast("string")).alias("s"),
+        ((F.col("id") * 2654435761) % F.lit(1 << 40)).alias("l"),
+        ((F.col("id") % 1000) - 500).cast("int").alias("i"),
+        (F.col("id") % 300).cast("short").alias("sh"),
+        ((F.col("id") % 200) - 100).cast("byte").alias("by"),
+        F.when(F.col("id") % 3 == 0, F.lit(None)).otherwise(F.col("id") % 11).alias("nb"),
+        F.lit(None).cast("string").alias("an"),
+    )
+    snapshots.commit(df.repartitionByRange(4, "l"), path, bloom_cols=cols)
+    snapshots.commit(df.where(F.lit(False)), path)  # maintained index, no rows
+    m2 = snapshots.read_manifest(path, 2)
+    assert m2["bloom_cols"] == sorted(cols)
+    anchor = [f for f in m2["files"] if m2["rows"][f] == 0]
+    assert len(anchor) == 1 and len(m2["files"]) == 5
+
+    expected = _spark_reference_blooms(spark, m2["files"], cols)
+    got = {}
+    for f in m2["files"]:
+        sc = snapshots._bloom_sidecar(f)
+        if os.path.exists(sc):
+            with open(sc) as fh:
+                got[f] = json.load(fh)
+    assert got == expected
+    assert anchor[0] not in got and len(got) == 4
+    assert all(set(d) == set(cols) - {"an"} for d in got.values())
+    # the probe agrees with the builder on every kind of key
+    for c, v in (("s", "sym5"), ("l", (7 * 2654435761) % (1 << 40)),
+                 ("i", -493), ("sh", 7), ("by", -93), ("nb", 7)):
+        rows, info = snapshots.read_version_point(spark, path, c, v)
+        assert rows.where(F.col(c) == v).count() >= 1 and info["files_scanned"] >= 1
+
+
+def test_bloom_commit_starts_no_extra_spark_job(spark, tmp_path):
+    """Building the index costs no Spark job: a commit with ``bloom_cols``
+    runs exactly the jobs of the same commit without, and so does a later
+    append that maintains the index."""
+    df = spark.range(0, 400).select(
+        "id", F.concat(F.lit("s"), (F.col("id") % 13).cast("string")).alias("sym")
+    ).repartition(4)
+    snapshots.commit(df, str(tmp_path / "warm"), bloom_cols=["sym"])
+    plain, bloom = str(tmp_path / "plain"), str(tmp_path / "bloom")
+    for first in (True, False):
+        n_plain = _jobs_started(spark, lambda: snapshots.commit(df, plain))
+        n_bloom = _jobs_started(
+            spark,
+            lambda: snapshots.commit(df, bloom, bloom_cols=["sym"] if first else None),
+        )
+        assert n_plain >= 1 and n_bloom == n_plain, (first, n_plain, n_bloom)
+    m = snapshots.read_manifest(bloom, 2)
+    assert m["bloom_cols"] == ["sym"]
+    assert all(os.path.exists(snapshots._bloom_sidecar(f)) for f in m["files"])
+
+
+def test_bloom_cols_reject_types_whose_string_form_differs(spark, tmp_path):
+    """A double or boolean bloom column would be probed with keys that
+    differ from the indexed ones (``1e10`` is ``1.0E10`` as SQL text,
+    ``True`` is ``true``), and the lookup would drop its matching row.
+    ``commit`` refuses such a column — and a name the frame lacks —
+    before any file lands; the builder refuses it as a backstop."""
+    import pytest
+
+    df = spark.createDataFrame(
+        [(1, 1e10, True), (2, 1e-5, False), (3, 2.5, None)],
+        "id long, x double, b boolean",
+    )
+    path = str(tmp_path / "t")
+    for cols in (["x"], ["b"], ["id", "x"], ["missing"]):
+        with pytest.raises(snapshots.SchemaEnforcementError, match="bloom_cols"):
+            snapshots.commit(df, path, bloom_cols=cols)
+        assert not os.path.exists(path)
+
+    snapshots.commit(df.coalesce(1), path, bloom_cols=["id"])
+    files = snapshots.read_manifest(path, 1)["files"]
+    for c in ("x", "b"):
+        with pytest.raises(TypeError, match=repr(c)):
+            snapshots._write_file_blooms(files, [c])
+    got, info = snapshots.read_version_point(spark, path, "id", 2)
+    assert info["files_scanned"] == 1
+    assert got.where(F.col("id") == 2).count() == 1
+    # a maintained index column retyped by an overwrite is refused too
+    retyped = df.withColumn("id", F.col("id").cast("double"))
+    with pytest.raises(snapshots.SchemaEnforcementError, match="'id': 'double'"):
+        snapshots.commit(retyped, path, mode="overwrite")
+    assert snapshots.latest_version(path) == 1
+    assert not os.path.exists(os.path.join(path, "commit_v000002"))
+
+
+def test_merge_evolve_report_surfaces_unexpected_merge_errors(spark, tmp_path, monkeypatch):
+    """``lake_merge_evolve_report`` expects its no-flag merge to fail Spark's
+    union width check.  Any other error — even one whose text says UNION —
+    is a real failure and surfaces, and a no-flag merge that lands fails
+    the report."""
+    import datetime
+
+    import pytest
+
+    from us_equity_datalake_spark import schemas
+    from us_equity_datalake_spark.plans import REGISTRY
+
+    sf = str(tmp_path / "sf")
+    rows = [(k, k % 5, "O", float(k), datetime.datetime(1995, 1, 1), "1-URGENT")
+            for k in range(1, 60)]
+    spark.createDataFrame(rows, schemas.TPCH["orders"]).coalesce(1).write.parquet(
+        os.path.join(sf, "orders.parquet")
+    )
+    report = REGISTRY["lake_merge_evolve_report"].fn
+    assert report(spark, sf).count() == 2  # the real rejection is expected
+
+    real = snapshots.merge_upsert
+
+    def failing(spark, root, delta, *, key, allow_schema_evolution=False):
+        if not allow_schema_evolution:
+            raise ValueError("UNION of the delta failed: disk quota exceeded")
+        return real(spark, root, delta, key=key, allow_schema_evolution=True)
+
+    monkeypatch.setattr(snapshots, "merge_upsert", failing)
+    with pytest.raises(ValueError, match="disk quota"):
+        report(spark, sf)
+
+    def permissive(spark, root, delta, *, key, allow_schema_evolution=False):
+        return real(spark, root, delta, key=key, allow_schema_evolution=True)
+
+    monkeypatch.setattr(snapshots, "merge_upsert", permissive)
+    with pytest.raises(AssertionError, match="without the flag"):
+        report(spark, sf)

@@ -91,9 +91,9 @@ WRITE_PATH = {
     "watermark resume is the graded behavior); the oracle reads the plain table once",
     "lake_log_replay_agg": "four commits incl. a merge and a delete + the per-transition "
     "dispatched feeds + the replayed-vs-direct identity aggregation",
-    "lake_bloom_point_lookup_report": "clustered commit + a distributed bloom-index build pass "
-    "(countDistinct + positions per file) + the pruned point read; the oracle filters the cached "
-    "base table",
+    "lake_bloom_point_lookup_report": "clustered commit + a driver-side bloom-index build "
+    "(pyarrow distinct keys + positions per file, no Spark job) + the pruned point read; the "
+    "oracle filters the cached base table",
     "lake_metadata_count_report": "three commits incl. a file-pruned delete; the graded counts "
     "are manifest sums (zero jobs) but the commits are real writes",
     "lake_quarantine_report": "two expectation-split commits + two table reads; the oracle "

@@ -1097,8 +1097,9 @@ def lake_manifest_prune_q(spark, sf_dir):
     "the table is clustered by o_orderkey, so a min/max range can never "
     "prune an equality on o_custkey — every file spans the full custkey "
     "range.  commit(bloom_cols=['o_custkey']) builds one 16-bits/key "
-    "filter per file in a distributed pass (the sizing constant the bloom "
-    "scale curve measured); read_version_point keeps only the files whose "
+    "filter per file on the driver, from the new files' o_custkey column "
+    "alone with no Spark job (the sizing constant the bloom scale curve "
+    "measured); read_version_point keeps only the files whose "
     "filter MIGHT contain the probe key (zero false negatives, so the "
     "content columns must hash against the oracle's direct filter of the "
     "base table; false positives cost an extra file, never a row).  The "
@@ -2739,6 +2740,8 @@ def lake_row_tracking_q(spark, sf_dir):
     "rewrite's file count.",
 )
 def lake_merge_evolve_q(spark, sf_dir):
+    from pyspark.errors import AnalysisException
+
     from us_equity_datalake_spark.sources import snapshots
 
     root = os.path.join(
@@ -2757,10 +2760,11 @@ def lake_merge_evolve_q(spark, sf_dir):
     )
     try:
         snapshots.merge_upsert(spark, root, delta, key="o_orderkey")
-        raise AssertionError("schema-widening merge landed without the flag")
-    except Exception as e:  # noqa: BLE001 — Spark raises AnalysisException here
+    except AnalysisException as e:  # the unionByName width check
         if "allowMissingColumns" not in str(e) and "UNION" not in str(e).upper():
             raise
+    else:
+        raise AssertionError("schema-widening merge landed without the flag")
     st = snapshots.merge_upsert(
         spark, root, delta, key="o_orderkey", allow_schema_evolution=True
     )

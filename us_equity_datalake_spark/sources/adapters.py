@@ -153,6 +153,11 @@ OPENFIGI_BATCH_SIZE = 100  # with API key
 OPENFIGI_BATCH_SIZE_NO_KEY = 10
 OPENFIGI_RATE_WITH_KEY = 25 / 6.0  # 25 req / 6 s
 OPENFIGI_RATE_NO_KEY = 25 / 60.0  # 25 req / min
+# the failures of a request, retried and then degraded to unmapped: OSError
+# covers connection, timeout and the requests/urllib HTTP errors; RuntimeError
+# is what an injected ``post`` raises for an HTTP error status.  Anything else
+# (a KeyError from a malformed response, a TypeError) is a bug and raises.
+OPENFIGI_REQUEST_ERRORS = (OSError, RuntimeError)
 
 
 def openfigi_batch_payloads(
@@ -209,8 +214,10 @@ def fetch_openfigi_mapping(
             return post(payload)
 
         try:
-            items = retry_with_backoff(call, retries=retries, sleep=sleep)
-        except Exception:
+            items = retry_with_backoff(
+                call, retries=retries, retriable=OPENFIGI_REQUEST_ERRORS, sleep=sleep
+            )
+        except OPENFIGI_REQUEST_ERRORS:
             results.update({t: None for t in batch})
             continue
         results.update(parse_openfigi_batch(batch, items))

@@ -93,8 +93,9 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     )
     try:
         return spark.createDataFrame(pdf, schema=schema)
-    except Exception:
-        # nested/exotic types the Arrow converter rejects: legacy pickled path
+    except (TypeError, ValueError, NotImplementedError):
+        # values the Arrow and pandas converters reject (Arrow's and
+        # PySpark's type/value errors derive from these): legacy pickled path
         return spark.createDataFrame(rows, schema=schema)
 
 

@@ -26,29 +26,19 @@ manifest read, not a recursive directory walk, and normal parquet pruning
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
 import socket
 import time
 import uuid
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import IntegralType, StringType
 
 _SNAP_DIR = "_snapshots"
 _HOSTNAME = socket.gethostname()
-
-
-def _local_path(uri: str) -> str:
-    """Decode an ``input_file_name()`` value to the plain local path stored
-    in manifests.  Spark returns URL-encoded file URIs (a space arrives as
-    ``%20``), so stripping only the ``file://`` prefix would miss every
-    touched file whose path contains a URI-escaped character — old rows
-    would silently stay referenced next to their rewrite."""
-    if "://" in uri:
-        return unquote(urlparse(uri).path)
-    return uri
 
 
 def _snap_path(path: str, version: int) -> str:
@@ -308,70 +298,55 @@ def _bloom_sidecar(data_file: str) -> str:
     return data_file + ".bloom.json"
 
 
-def _write_file_blooms(spark: SparkSession, files: list[str], cols: list[str]) -> None:
-    """Per-(file, column) bloom filters, built in ONE distributed pass per
-    column over the commit's files (executor-side md5 universal hashing —
-    the same family as the decontamination filter) and written as a
-    base64-packed-bitmap SIDECAR next to each data file — Delta's
-    bloom-index layout: the tiny JSON log stays KB-sized, the index rides
-    with the immutable file it describes (carried-over files keep their
-    sidecars for free, vacuum reclaims them with the data).  Each file's
-    width is sized from ITS distinct count at 16 bits/key."""
+def _bloom_hash(value) -> int:
+    """A bloom key's base hash: md5 of ``str(value)``, first 8 hex digits —
+    the one hash the builder sets and the probe tests.  Only for string and
+    integral (byte to long) values does ``str`` equal SQL's cast and print a
+    lookup value like the stored one: a double ``1e10`` casts to ``1.0E10``
+    and ``1`` misses ``1.0``; a boolean ``True`` casts to ``true``."""
+    return int(hashlib.md5(str(value).encode()).hexdigest()[:8], 16)
+
+
+def _write_file_blooms(files: list[str], cols: list[str]) -> None:
+    """Per-(file, column) bloom filters, built on the driver from each new
+    file's bloom columns (no Spark job) and written as a base64-bitmap
+    SIDECAR next to it — Delta's bloom-index layout: the JSON log stays
+    KB-sized, carried-over files keep their sidecars for free, vacuum
+    reclaims them with the data.  Width: 16 bits per distinct non-null key
+    of the file.  A column with no non-null value (or absent) gets no
+    filter; a file with no filter (the zero-row anchor) gets no sidecar.
+    A column neither string nor integral raises ``TypeError``."""
     import base64
 
     import numpy as np
-    from pyspark.sql import functions as F
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-    from us_equity_datalake_spark.functions.hashing import (
-        MERSENNE_P, md5_long32, perm_coefficients,
-    )
+    from us_equity_datalake_spark.functions.hashing import MERSENNE_P, perm_coefficients
 
-    # ONE distributed pass for ALL columns (was 2 jobs PER column: a distinct
-    # count, then a K-positions-per-key collect).  Per (file, column) we pull
-    # the exact distinct VALUE count (sizes m, identical to before) and the
-    # distinct 32-bit key hashes (1 per key, vs K=5 positions per key before
-    # — 5x fewer rows to the driver); the K probe positions are then derived
-    # driver-side with the same (a*h+b) % P % m family the driver-side probe
-    # (_bloom_might_contain) already replicates, so the sidecar BYTES are
-    # bit-identical.  Guide §1.2/§2.3: fewer passes, fewer shuffled/collected
-    # bytes, same artifact.
-    df = _read_parquet_files(spark, files).withColumn("__file", F.input_file_name())
-    stacked = df.select(
-        "__file",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(c).alias("c"), F.col(c).cast("string").alias("v")
-                )
-                for c in cols
-            ])
-        ).alias("p"),
-    ).where(F.col("p.v").isNotNull())
-    agg_rows = (
-        stacked.groupBy("__file", F.col("p.c").alias("c"))
-        .agg(
-            F.countDistinct("p.v").alias("nd"),
-            F.collect_set(md5_long32(F.col("p.v"))).alias("hs"),
-        )
-        .collect()
-    )
     coeffs = perm_coefficients(_BLOOM_K, _BLOOM_SEED)
-    per_file: dict[str, dict] = {}
-    for r in agg_rows:
-        f = _local_path(r["__file"])
-        m = _bloom_m_for(r["nd"])
-        harr = np.asarray(r["hs"], dtype=np.int64)
-        buf = np.zeros(m // 8, dtype=np.uint8)
-        for a, b in coeffs:
-            p = (harr * a + b) % MERSENNE_P % m
-            np.bitwise_or.at(buf, p >> 3, (1 << (p & 7)).astype(np.uint8))
-        per_file.setdefault(f, {})[r["c"]] = {
-            "m": m,
-            "bitmap": base64.b64encode(buf.tobytes()).decode(),
-        }
-    for f, d in per_file.items():
-        with open(_bloom_sidecar(f), "w") as fh:
-            json.dump(d, fh)
+    for f in files:
+        pf = pq.ParquetFile(f)
+        table = pf.read(columns=[c for c in cols if c in pf.schema_arrow.names])
+        filters = {}
+        for c in table.column_names:
+            t = table.schema.field(c).type
+            if not (pa.types.is_string(t) or pa.types.is_integer(t)):
+                raise TypeError(f"bloom column {c!r} of {f} is {t}, not string or integral")
+            keys = pc.unique(table.column(c)).drop_null().to_pylist()
+            if not keys:
+                continue
+            m = _bloom_m_for(len(keys))
+            h = np.array([_bloom_hash(v) for v in keys], dtype=np.int64)
+            buf = np.zeros(m // 8, dtype=np.uint8)
+            for a, b in coeffs:
+                p = (h * a + b) % MERSENNE_P % m
+                np.bitwise_or.at(buf, p >> 3, (1 << (p & 7)).astype(np.uint8))
+            filters[c] = {"m": m, "bitmap": base64.b64encode(buf.tobytes()).decode()}
+        if filters:
+            with open(_bloom_sidecar(f), "w") as fh:
+                json.dump(filters, fh)
 
 
 # ---------------------------------------------------------------------------
@@ -719,11 +694,10 @@ def _scan_files(
 
 
 def _bloom_might_contain(data_file: str, col: str, value) -> bool:
-    """Probe a data file's bloom sidecar for ``value`` (driver-side twin of
-    the executor hash: md5 first-8-hex -> universal hash family).  True —
-    conservative — when the file has no sidecar or no filter for ``col``."""
+    """Probe a data file's bloom sidecar for ``value`` (the builder's
+    :func:`_bloom_hash` through the same hash family).  True — conservative
+    — when the file has no sidecar or no filter for ``col``."""
     import base64
-    import hashlib
 
     from us_equity_datalake_spark.functions.hashing import MERSENNE_P, perm_coefficients
 
@@ -736,7 +710,7 @@ def _bloom_might_contain(data_file: str, col: str, value) -> bool:
         return True
     m = b["m"]
     buf = base64.b64decode(b["bitmap"])
-    h = int(hashlib.md5(str(value).encode()).hexdigest()[:8], 16)
+    h = _bloom_hash(value)
     for a, bb in perm_coefficients(_BLOOM_K, _BLOOM_SEED):
         p = (h * a + bb) % MERSENNE_P % m
         if not (buf[p >> 3] >> (p & 7)) & 1:
@@ -784,13 +758,15 @@ def commit(
       of silently degrading it to the conservative fallback).
     - ``bloom_cols``: per-file BLOOM filters for these columns (the Delta
       bloom-index analog for point lookups on non-clustered columns, where
-      min/max ranges cannot prune).  Built in one distributed pass per
-      column over the commit's files; width sized per file at 16 bits per
-      distinct key (the measured bloom constant); stored as a base64
-      bitmap SIDECAR next to each immutable data file so the JSON log
-      stays KB-sized and carried-over files keep their index for free.
-      Probed by :func:`read_version_point`; the manifest records only
-      ``bloom_cols`` so later commits maintain the index like stats.
+      min/max ranges cannot prune), built on the driver with no Spark job
+      at 16 bits per distinct key of each file (the measured bloom
+      constant); stored as a base64 bitmap SIDECAR next to each immutable
+      data file so the JSON log stays KB-sized and carried-over files keep
+      their index for free.  Probed by :func:`read_version_point`; the
+      manifest records only ``bloom_cols`` so later commits maintain the
+      index like stats.  STRING and INTEGRAL columns only: another type, or
+      a missing name, raises :class:`SchemaEnforcementError` before any
+      file lands.
 
     Schema is ENFORCED ON WRITE (the Delta contract): an append-mode
     commit must carry every existing column at its existing type — new
@@ -867,6 +843,24 @@ def commit(
             f"append to {path} rejected: column(s) {sorted(shadowed)} shadow "
             "a renamed column's physical slot — pick a different name"
         )
+    # bloom columns, named or maintained, are checked before a file lands
+    explicit = bloom_cols is not None
+    prev_bloom_cols = prev_manifest.get("bloom_cols")
+    if explicit:
+        bloom_cols = [col_map.get(c, c) for c in bloom_cols]
+    elif prev_bloom_cols:
+        bloom_cols = prev_bloom_cols  # maintain the point-lookup index
+    types = {col_map.get(f.name, f.name): f.dataType for f in df.schema.fields}
+    unbloomable = {
+        c: types[c].simpleString() if c in types else "missing"
+        for c in bloom_cols or ()
+        if (explicit or c in types) and not isinstance(types.get(c), (StringType, IntegralType))
+    }
+    if unbloomable:
+        raise SchemaEnforcementError(
+            f"commit to {path} rejected before any file landed: bloom_cols "
+            f"{unbloomable} are not string or integral columns"
+        )
     table_cons = dict(prev_manifest.get("constraints", {}))
     commit_dir = os.path.join(path, f"commit_v{new_v:06d}")
     _write_commit_checked(df, commit_dir, col_map, table_cons, path)
@@ -919,13 +913,8 @@ def commit(
         if stats_cols:
             stats.update(_file_stats(new_files, stats_cols))
         manifest["stats"] = stats
-    prev_bloom_cols = prev_manifest.get("bloom_cols")
-    if bloom_cols is not None:
-        bloom_cols = [col_map.get(c, c) for c in bloom_cols]
-    elif prev_bloom_cols:
-        bloom_cols = prev_bloom_cols  # maintain the point-lookup index
     if bloom_cols:
-        _write_file_blooms(df.sparkSession, new_files, bloom_cols)
+        _write_file_blooms(new_files, bloom_cols)
         manifest["bloom_cols"] = sorted(bloom_cols)
     if col_map:
         manifest["column_map"] = col_map
@@ -1076,7 +1065,7 @@ def _rebase_append_manifest(
     prev_bloom_cols = prev_manifest.get("bloom_cols")
     if prev_bloom_cols:
         if not os.path.exists(_bloom_sidecar(new_files[0])):
-            _write_file_blooms(spark, new_files, prev_bloom_cols)
+            _write_file_blooms(new_files, prev_bloom_cols)
         manifest["bloom_cols"] = prev_bloom_cols
     prev_schema = prev_manifest.get("schema")
     if prev_schema is not None:
@@ -1272,7 +1261,7 @@ def _publish_rewrite_staged(
         prev_bloom_cols = prev_manifest.get("bloom_cols")
         if prev_bloom_cols:
             if not os.path.exists(_bloom_sidecar(new_files[0])):
-                _write_file_blooms(spark, new_files, prev_bloom_cols)
+                _write_file_blooms(new_files, prev_bloom_cols)
             manifest["bloom_cols"] = prev_bloom_cols
         prev_schema = prev_manifest.get("schema")
         if prev_schema is not None:
@@ -3122,7 +3111,7 @@ def _commit_update_dv_with_retry(
         prev_bloom_cols = prev_manifest.get("bloom_cols")
         if prev_bloom_cols:
             if not os.path.exists(_bloom_sidecar(new_files[0])):
-                _write_file_blooms(spark, new_files, prev_bloom_cols)
+                _write_file_blooms(new_files, prev_bloom_cols)
             manifest["bloom_cols"] = prev_bloom_cols
         prev_schema = prev_manifest.get("schema")
         if prev_schema is not None:
