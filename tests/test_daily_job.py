@@ -2,6 +2,7 @@
 stage sequence over a temp lake, idempotence on re-run, holiday gate."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -498,3 +499,40 @@ def test_concurrent_derived_writes_inherit_job_tags(spark, tmp_path, monkeypatch
     finally:
         spark.removeTag("quantlake-daily")
     assert seen == {lk.ttm: {"quantlake-daily"}, lk.metrics: {"quantlake-daily"}}
+
+
+def test_no_session_conf_set_by_overwrites_or_streams(spark, tmp_path, monkeypatch):
+    """The dynamic overwrite, the incremental derived rebuild and the
+    scaled streaming sink never set a conf on the caller's session: a
+    session-wide conf is shared by every driver thread.  A child session's
+    private conf may be set."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from us_equity_datalake_spark.equity.daily_job import update_fundamentals
+    from us_equity_datalake_spark.plans.base import REGISTRY
+    from us_equity_datalake_spark.sources.lake import overwrite_partition, write_partitioned
+    from us_equity_datalake_spark.sources.registry import DEFAULT_SF_DIR
+
+    day1, day2 = _fund_days(spark)
+    lk = LakePaths(str(tmp_path / "lk"))
+    update_fundamentals(spark, lk, day1, incremental=True)
+    path = str(tmp_path / "ticks")
+    ticks = spark.range(20).select(F.col("id"), (F.col("id") % 4).alias("part"))
+    write_partitioned(ticks, path, partition_by=["part"])
+
+    real_set, sets = RuntimeConfig.set, []
+
+    def spy(self, key, value):
+        sets.append((self, key))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    overwrite_partition(spark, ticks.where("part = 1"), path, partition_by=["part"])
+    r = update_fundamentals(spark, lk, day2, incremental=True)
+    assert 0 < r["derived_buckets_rebuilt"] < 64  # the incremental branch ran
+    sf_tiny = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")
+    REGISTRY["streaming_tumbling_sink"].fn(spark, sf_tiny).collect()
+    mine = spark.conf._jconf
+    assert [k for c, k in sets if c._jconf == mine] == []
+    # only a child session's state-partition count may have been set
+    assert {k for _, k in sets} <= {"spark.sql.shuffle.partitions"}

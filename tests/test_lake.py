@@ -201,3 +201,43 @@ def test_small_file_report_flags_fragmented_partition(spark, tmp_path):
     assert rep2["year=2024"]["n_files"] == 1
     assert not rep2["year=2024"]["needs_compaction"]
     assert spark.read.parquet(path).count() == 100
+
+
+def test_concurrent_dynamic_and_static_overwrites_keep_their_modes(spark, tmp_path):
+    """A dynamic overwrite of table A and a static overwrite of table B run
+    at once on one session: A keeps its untouched partition, B is replaced
+    whole.  A's write is slowed so both writes overlap."""
+    import threading
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    write_partitioned(_ticks(spark, 2022).unionByName(_ticks(spark, 2023)), a,
+                      partition_by=["year"])
+    write_partitioned(_ticks(spark, 2022).unionByName(_ticks(spark, 2023)), b,
+                      partition_by=["year"])
+    slow_a = _ticks(spark, 2023, base=500.0).withColumn(
+        "close",
+        F.col("close") + F.expr("0 * coalesce(length(reflect('java.lang.Thread', 'sleep', 1500L)), 0)"),
+    )
+    errs = []
+
+    def run(fn):
+        try:
+            fn()
+        except Exception as e:  # surfaced by the assert below
+            errs.append(e)
+
+    ta = threading.Thread(target=run, args=(
+        lambda: overwrite_partition(spark, slow_a, a, partition_by=["year"]),))
+    tb = threading.Thread(target=run, args=(
+        lambda: write_partitioned(_ticks(spark, 2024), b, partition_by=["year"]),))
+    ta.start()
+    threading.Event().wait(0.5)  # B writes while A's dynamic write is in flight
+    tb.start()
+    ta.join()
+    tb.join()
+    assert errs == []
+    got_a = spark.read.parquet(a)
+    assert sorted(r.year for r in got_a.select("year").distinct().collect()) == [2022, 2023]
+    assert got_a.where("year = 2023").agg(F.min("close")).first()[0] == 500.0
+    assert got_a.where("year = 2022").count() == 10
+    assert sorted(r.year for r in spark.read.parquet(b).select("year").distinct().collect()) == [2024]

@@ -39,36 +39,18 @@ def test_empty_and_dict_rows(spark):
     assert df.collect() == [Row(a="x", b=7)]
 
 
-def test_fallback_on_arrow_rejected_types(spark):
-    # nested Rows inside cells take the legacy pickled path, same results
-    rows = [(Row(x=1, y="a"),), (Row(x=2, y="b"),)]
-    ddl = "s struct<x:long,y:string>"
-    assert local_frame(spark, rows, ddl).collect() == \
-        spark.createDataFrame(rows, ddl).collect()
-
-
-class _ArrowPathFails:
-    """A session whose Arrow/pandas ``createDataFrame`` raises ``exc``; the
-    legacy row-list path is the real session's."""
-
-    def __init__(self, spark, exc):
-        self.spark, self.exc = spark, exc
-
-    def createDataFrame(self, data, schema=None):
-        import pandas as pd
-
-        if isinstance(data, pd.DataFrame):
-            raise self.exc
-        return self.spark.createDataFrame(data, schema=schema)
-
-
-def test_fallback_only_for_conversion_errors(spark):
-    """A value the converters reject takes the legacy path; any other error
-    (a lost JVM gateway, say) raises instead of being retried as rows."""
-    import pytest
-
-    rows, ddl = [("x", 1)], "a string, b long"
-    got = local_frame(_ArrowPathFails(spark, TypeError("unsupported cell")), rows, ddl)
-    assert got.collect() == [Row(a="x", b=1)]
-    with pytest.raises(RuntimeError, match="gateway"):
-        local_frame(_ArrowPathFails(spark, RuntimeError("gateway lost")), rows, ddl)
+def test_struct_cells_roundtrip(spark):
+    """Nested Rows, maps, binary, arrays of structs and full-precision
+    decimals all convert on the Arrow/pandas path and equal the pickled
+    row-list path's result: there is no fallback left to take."""
+    cases = [
+        ([(Row(x=1, y="a"),), (Row(x=2, y="b"),)], "s struct<x:long,y:string>"),
+        ([({"a": 1, "b": 2},), ({},), (None,)], "m map<string,long>"),
+        ([(b"\x00\x01\xff",), (None,)], "b binary"),
+        ([([Row(x=1, y="a"), Row(x=2, y=None)],), ([],)], "a array<struct<x:long,y:string>>"),
+        ([(decimal.Decimal("12345678901234567890.123456789012345678"),)], "d decimal(38,18)"),
+    ]
+    for rows, ddl in cases:
+        df = local_frame(spark, rows, ddl)
+        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+        assert df.collect() == spark.createDataFrame(rows, ddl).collect(), ddl

@@ -37,3 +37,30 @@ def test_oracle_sql_is_nonempty_text():
 
     for name, sql in m.oracle_sql().items():
         assert isinstance(sql, str) and sql.strip(), name
+
+
+def test_scratch_dir_removed_at_process_exit(tmp_path):
+    """A query's scratch dir outlives the query (its frame still reads the
+    files) but not the process: a process that made one and exits leaves
+    nothing behind.  No Spark session is started."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from us_equity_datalake_spark.plans.base import scratch_dir\n"
+        "p = scratch_dir('exit_probe', '/data/sf0.01')\n"
+        "os.makedirs(os.path.join(p, 'sub'))\n"
+        "open(os.path.join(p, 'sub', 'f.txt'), 'w').write('x')\n"
+        "print(p)\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    out = subprocess.run([sys.executable, "-c", code], cwd=repo, env=env,
+                         capture_output=True, text=True, check=True)
+    path = out.stdout.strip().splitlines()[-1]
+    assert os.path.basename(path).startswith("quantlake_exit_probe_sf0_01_")
+    assert os.path.dirname(path) == str(tmp_path)
+    assert not os.path.exists(path)
+    assert os.listdir(tmp_path) == []

@@ -3,10 +3,12 @@ must agree with their batch forms on the same data (availableNow + memory
 sink drives a bounded stream to completion synchronously)."""
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.sql import Row, functions as F, types as T
 
+from us_equity_datalake_spark.sources.registry import DEFAULT_SF_DIR
 from us_equity_datalake_spark.streaming.jobs import read_stream, run_available_now
 from us_equity_datalake_spark.streaming.windows import session_counts, streaming_dedup, tumbling_counts
 
@@ -17,6 +19,7 @@ SCHEMA = T.StructType([
     T.StructField("event_type", T.StringType()),
     T.StructField("value", T.DoubleType()),
 ])
+SF_TINY = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")  # the smallest generated sf
 
 
 @pytest.fixture(scope="module")
@@ -520,3 +523,66 @@ def test_change_feed_source_multi_batch_file_granularity(spark, tmp_path):
     expect = live.agg(F.count("*"), F.sum("v")).first()
     assert state_box["n"] == expect[0]
     assert abs(state_box["sum"] - float(expect[1])) < 1e-6
+
+
+def test_tumbling_stream_state_partitions_on_child_session(spark, tmp_path, monkeypatch):
+    """The scaled state-partition count reaches the engine through a child
+    session: the checkpoint holds exactly ``_stream_state_partitions`` state
+    partitions (pinned in its offset metadata), while the caller's
+    ``spark.sql.shuffle.partitions`` is never set and keeps its value."""
+    import json
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    from us_equity_datalake_spark.plans.streamjobs import (
+        _stream_state_partitions,
+        run_events_tumbling_stream,
+    )
+
+    sf = SF_TINY
+    want = _stream_state_partitions(spark, sf)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert int(before) != want  # otherwise the test cannot tell the sessions apart
+    real_set, caller_sets = RuntimeConfig.set, []
+    mine = spark.conf._jconf
+
+    def spy(self, key, value):
+        if self._jconf == mine:
+            caller_sets.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy)
+    run_events_tumbling_stream(spark, sf, root=str(tmp_path))
+    assert caller_sets == []
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    state = tmp_path / "ckpt" / "state" / "0"
+    assert sorted(d for d in os.listdir(state) if d.isdigit()) == [str(i) for i in range(want)]
+    offsets = sorted((f for f in os.listdir(tmp_path / "ckpt" / "offsets") if f.isdigit()), key=int)
+    meta = json.loads((tmp_path / "ckpt" / "offsets" / offsets[-1]).read_text().splitlines()[1])
+    assert meta["conf"]["spark.sql.shuffle.partitions"] == str(want)
+
+
+def test_run_available_now_returns_terminated_query_with_progress(spark, event_dir, tmp_path):
+    """The runner awaits the query and returns it terminated, so callers
+    read per-micro-batch progress; a parquet sink lands the rows."""
+    sink = str(tmp_path / "sink")
+    q = run_available_now(read_stream(spark, event_dir, SCHEMA),
+                          checkpoint=str(tmp_path / "ck"), path=sink)
+    assert not q.isActive
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 40
+    assert spark.read.parquet(sink).count() == 40
+    with pytest.raises(ValueError):
+        run_available_now(read_stream(spark, event_dir, SCHEMA), checkpoint=str(tmp_path / "ck2"),
+                          path=sink, foreach_batch=lambda df, i: None)
+
+
+def test_scaled_sinks_reuse_one_child_session(spark):
+    """A session that runs a stream adds a listener to the SparkContext's
+    bus for the context's life, so the scaled sinks reuse one child per
+    caller session and partition count instead of making one per call."""
+    from us_equity_datalake_spark.plans.streamjobs import _stream_session
+
+    sf = SF_TINY
+    child = _stream_session(spark, sf)
+    assert child is not spark and child is _stream_session(spark, sf)
+    assert child.sparkContext is spark.sparkContext

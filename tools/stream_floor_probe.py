@@ -51,26 +51,19 @@ CONFIGS = {
 
 def one_cycle(spark, src_dir: str, root: str, tag: str) -> float:
     """Two availableNow runs against one fresh checkpoint (the graded shape);
-    returns wall seconds for both runs together."""
+    returns wall seconds for both runs together.  The stream is built on
+    ``spark`` itself, so the confs a config sets on it apply."""
     from pyspark.sql import functions as F
+
+    from us_equity_datalake_spark.streaming.jobs import run_available_now
 
     sink = os.path.join(root, f"sink_{tag}")
     ckpt = os.path.join(root, f"ckpt_{tag}")
     schema = spark.read.parquet(src_dir).schema
     t0 = time.time()
     for _ in range(2):
-        q = (
-            spark.readStream.schema(schema)
-            .parquet(src_dir)
-            .select(F.col("*"))
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
-        )
-        q.awaitTermination()
+        stream = spark.readStream.schema(schema).parquet(src_dir).select(F.col("*"))
+        run_available_now(stream, checkpoint=ckpt, path=sink)
     return time.time() - t0
 
 

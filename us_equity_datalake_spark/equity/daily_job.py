@@ -284,15 +284,12 @@ def update_fundamentals(
     # materialized (metrics reads ttm's blocks, both land at different
     # paths): submit them from two driver threads so the metrics plan build
     # + write overlaps the ttm write's tail instead of waiting it out
-    # (guide §2.6).  The partitionOverwriteMode conf is session-wide, NOT
-    # thread-local, so ONE dynamic-mode scope wraps both concurrent writes —
-    # per-thread enter/exit could restore "static" mid-write and turn the
-    # racing overwrite into a whole-table replace.
+    # (guide §2.6).  The incremental run replaces only the touched buckets
+    # with a per-writer dynamic overwrite, so the two writes share no
+    # session state.
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
-
-    from us_equity_datalake_spark.sources.lake import _partition_overwrite_dynamic
 
     @inheritable_thread_target(spark)
     def _land(df, path):
@@ -300,31 +297,25 @@ def update_fundamentals(
         # caller's JVM-thread-local properties (job description/group) and
         # the session's job tags, so these jobs stay attributable (and
         # cancellable by tag)
-        write_partitioned(df, path, partition_by=["sym_bucket"])
+        if do_incremental:
+            overwrite_partition(spark, df, path, partition_by=["sym_bucket"])
+        else:
+            write_partitioned(df, path, partition_by=["sym_bucket"])
 
-    def _land_both():
-        # pool INSIDE any conf scope: pool-exit joins both threads BEFORE the
-        # scope restores the conf, so a failure in one write can never flip
-        # the other, still-running overwrite back to static mid-flight
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futs = [pool.submit(_land, ttm, lake.ttm),
-                    pool.submit(_land, metrics, lake.metrics)]
-        errs = [e for e in (f.exception() for f in futs) if e is not None]
-        if len(errs) > 1:
-            # both writes failed: keep the second on the first — as its cause
-            # when it has none, else as a note — so neither error is dropped
-            if errs[0].__cause__ is None:
-                errs[0].__cause__ = errs[1]
-            else:
-                errs[0].add_note(f"the concurrent write also failed: {errs[1]!r}")
-        if errs:
-            raise errs[0]
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [pool.submit(_land, ttm, lake.ttm),
+                pool.submit(_land, metrics, lake.metrics)]
+    errs = [e for e in (f.exception() for f in futs) if e is not None]
+    if len(errs) > 1:
+        # both writes failed: keep the second on the first — as its cause
+        # when it has none, else as a note — so neither error is dropped
+        if errs[0].__cause__ is None:
+            errs[0].__cause__ = errs[1]
+        else:
+            errs[0].add_note(f"the concurrent write also failed: {errs[1]!r}")
+    if errs:
+        raise errs[0]
 
-    if do_incremental:
-        with _partition_overwrite_dynamic(spark):
-            _land_both()
-    else:
-        _land_both()
     def _count(path: str) -> int:
         # a zero-row partitioned write leaves no schema-bearing files, so the
         # readback cannot infer a schema — that is simply 0 rows.  Any other

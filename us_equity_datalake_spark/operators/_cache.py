@@ -32,7 +32,7 @@ def track(df):
     return df
 
 
-def materialize_once(df, *, mode: "str | None" = None):
+def materialize_once(df):
     """Materialize a small multi-consumer frame EXACTLY ONCE through the
     normal AQE path, returning a frame whose consumers read the
     materialized blocks instead of re-running the pipeline.
@@ -47,44 +47,19 @@ def materialize_once(df, *, mode: "str | None" = None):
     measured ``=true`` collapsing the iterative kernels' deliberately-wide
     caches to 1 partition (pagerank 4.8→18.9 s).
 
-    Local mode (the bench topology): eager ``localCheckpoint`` — the
-    blocks live on the one executor, which IS the driver's process, so the
-    usual durability caveat (unreplicated blocks + truncated lineage →
-    an executor loss mid-query fails the job instead of recomputing, the
-    reason operators/dedup.py:500 chose persist) is vacuous.
-
-    Cluster: fall back to ``persist()`` + an eager count, scoping the
-    cached-plan-AQE conf to the materializing action so the fill still
-    coalesces.  Lineage is kept, so executor loss recomputes — the
-    robustness ADVICE r12 asked for.  (NOT a substitute for the feed
-    folds' localCheckpoint in snapshots.py: those exist to BOUND PLAN
-    DEPTH for the analyzer, which a lineage-keeping persist cannot do.)
+    The materialization is an eager ``localCheckpoint``.  ``get_spark``
+    builds ``local[N]`` only, where the blocks live on the one executor
+    that IS the driver's process, so the usual durability caveat
+    (unreplicated blocks + truncated lineage → an executor loss mid-query
+    fails the job instead of recomputing, the reason operators/dedup.py:500
+    chose persist) is vacuous.  (NOT a substitute for the feed folds'
+    localCheckpoint in snapshots.py: those exist to BOUND PLAN DEPTH for the
+    analyzer.)
 
     Blocks are freed by the ContextCleaner when the frame is collected, or
     deterministically via ``unpersist()`` — long-running streaming callers
-    should unpersist at end of batch (ADVICE r12).
-
-    ``mode``: None picks by deployment (checkpoint locally, persist on a
-    cluster); "checkpoint"/"persist" force a branch (tests, callers that
-    know their durability needs)."""
-    spark = df.sparkSession
-    if mode is None:
-        mode = (
-            "checkpoint"
-            if spark.sparkContext.master.startswith("local")
-            else "persist"
-        )
-    if mode == "checkpoint":
-        return df.localCheckpoint(eager=True)
-    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "true")
-    try:
-        df = df.persist()
-        df.count()
-    finally:
-        spark.conf.set(key, old)
-    return df
+    should unpersist at end of batch (ADVICE r12)."""
+    return df.localCheckpoint(eager=True)
 
 
 def release_caches() -> int:

@@ -12,6 +12,10 @@ results must be bit-identical across engines):
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -29,6 +33,32 @@ class QuerySpec:
 
 
 REGISTRY: dict[str, QuerySpec] = {}
+
+
+_SCRATCH: set[str] = set()  # every scratch path this process handed out
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    for path in sorted(_SCRATCH):
+        shutil.rmtree(path, ignore_errors=True)
+
+
+def scratch_dir(tag: str, sf_dir: str) -> str:
+    """A cleared per-process scratch path for a query's own tables.
+
+    The name carries the sf and the pid, because bench and check_correctness
+    may run the same query concurrently on the same sf and a shared path
+    races rmtree/overwrite.  The path is NOT created (many callers write to
+    it with Spark's default error-if-exists mode).  The returned frame still
+    reads these files after the query returns, so they are removed when the
+    process exits, not before; a later call with the same tag in the same
+    process clears the previous run's files first."""
+    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    path = os.path.join(tempfile.gettempdir(), f"quantlake_{tag}_{sf}_{os.getpid()}")
+    shutil.rmtree(path, ignore_errors=True)
+    _SCRATCH.add(path)
+    return path
 
 
 def collect_batched(frames: "list[DataFrame]") -> "list[list]":

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -29,7 +28,7 @@ from us_equity_datalake_spark.functions.safe_math import dec_sum, dec_sum_sql
 from us_equity_datalake_spark.operators._cache import materialize_once
 from us_equity_datalake_spark.sources import lake
 from us_equity_datalake_spark.sources.registry import load_table, local_frame
-from .base import collect_batched, register
+from .base import collect_batched, register, scratch_dir
 
 _CUT_A = 30000  # initial overwrite slice: o_orderkey < _CUT_A
 _CUT_B = 60000  # append slice: o_orderkey < _CUT_B (overlaps [0, _CUT_A))
@@ -52,13 +51,7 @@ _CUT_B = 60000  # append slice: o_orderkey < _CUT_B (overlaps [0, _CUT_A))
     "hash match.",
 )
 def lake_roundtrip_q(spark, sf_dir):
-    # pid-suffixed scratch dir: bench and check_correctness may run this query
-    # concurrently on the same sf, and a shared path races rmtree/overwrite.
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_roundtrip_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch_dir("roundtrip", sf_dir)
 
     orders = load_table(spark, "orders", sf_dir).withColumn(
         "year", F.year("o_orderdate")
@@ -116,9 +109,8 @@ def lake_roundtrip_q(spark, sf_dir):
 def bucketed_smj_q(spark, sf_dir):
     from us_equity_datalake_spark.operators.skew import write_bucketed
 
-    tag = f"{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{os.getpid()}"
-    root = os.path.join(tempfile.gettempdir(), f"quantlake_bsmj_{tag}")
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("bsmj", sf_dir)
+    tag = os.path.basename(root).removeprefix("quantlake_bsmj_")
     t_orders, t_cust = f"bsmj_orders_{tag}", f"bsmj_customer_{tag}"
 
     orders = load_table(spark, "orders", sf_dir).select("o_custkey", "o_totalprice")
@@ -208,11 +200,7 @@ _IDM_N = 40  # symbols (customers) in the fixture
 def incremental_derived_q(spark, sf_dir):
     from us_equity_datalake_spark.equity.daily_job import LakePaths, update_fundamentals
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_incderiv_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("incderiv", sf_dir)
     lp = LakePaths(root)
 
     cust = load_table(spark, "customer", sf_dir).filter(F.col("c_custkey") < _IDM_N).select(
@@ -302,10 +290,9 @@ def incremental_derived_q(spark, sf_dir):
 def pipe_directory_q(spark, sf_dir):
     from us_equity_datalake_spark.sources.ingest import read_pipe_delimited
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_pipedir_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{os.getpid()}.txt",
-    )
+    root = scratch_dir("pipedir", sf_dir)
+    os.makedirs(root)
+    path = os.path.join(root, "nasdaqtraded.txt")
     cust = (
         load_table(spark, "customer", sf_dir)
         .select("c_custkey", "c_name")
@@ -319,22 +306,17 @@ def pipe_directory_q(spark, sf_dir):
             test = "Y" if r.c_custkey % 11 == 0 else "N"
             fh.write(f"Y|{r.c_name}|{r.c_name} Common Stock|{etf}|{test}\n")
         fh.write("File Creation Time: 1231202422:00||||\n")
-    try:
-        directory = read_pipe_delimited(spark, path)
-        kept = directory.filter(
-            (F.col("`Nasdaq Traded`") == "Y")
-            & (F.col("ETF") == "N")
-            & (F.col("`Test Issue`") == "N")
-        )
-        report = kept.select(
-            F.col("Symbol").alias("symbol"),
-            F.col("`Security Name`").alias("security_name"),
-        )
-        rows = report.collect()
-        out = local_frame(spark, rows, schema=report.schema)
-    finally:
-        os.remove(path)
-    return out
+    directory = read_pipe_delimited(spark, path)
+    kept = directory.filter(
+        (F.col("`Nasdaq Traded`") == "Y")
+        & (F.col("ETF") == "N")
+        & (F.col("`Test Issue`") == "N")
+    )
+    report = kept.select(
+        F.col("Symbol").alias("symbol"),
+        F.col("`Security Name`").alias("security_name"),
+    )
+    return local_frame(spark, report.collect(), schema=report.schema)
 
 
 @register(
@@ -359,11 +341,7 @@ def pipe_directory_q(spark, sf_dir):
     "keeps pushdown, pruning and partition layout unchanged.",
 )
 def orc_roundtrip_q(spark, sf_dir):
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_orc_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("orc", sf_dir)
     li = load_table(spark, "lineitem", sf_dir).select(
         "l_returnflag", "l_linestatus", "l_extendedprice", "l_discount", "l_shipdate"
     )
@@ -417,10 +395,9 @@ _TOPK_TXT = 100
 def top3000_text_sink_q(spark, sf_dir):
     from us_equity_datalake_spark.equity.daily_job import write_symbol_list_txt
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_top3000_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{os.getpid()}.txt",
-    )
+    root = scratch_dir("top3000", sf_dir)
+    os.makedirs(root)
+    path = os.path.join(root, "top3000.txt")
     li = load_table(spark, "lineitem", sf_dir)
     sym = F.concat(
         F.lit("S"), F.lpad((F.col("l_suppkey") % 300).cast("string"), 3, "0")
@@ -429,17 +406,13 @@ def top3000_text_sink_q(spark, sf_dir):
         dec_sum(F.col("l_extendedprice") * F.col("l_quantity")).alias("total")
     )
     top = total.orderBy(F.desc("total"), F.asc("symbol")).limit(_TOPK_TXT)
-    try:
-        n = write_symbol_list_txt(top, path, order_by=[F.desc("total"), F.asc("symbol")])
-        with open(path, encoding="utf-8") as fh:
-            lines = [ln for ln in fh.read().splitlines() if ln]
-        assert len(lines) == n
-        out = local_frame(spark, 
-            [(i + 1, s) for i, s in enumerate(lines)], schema="rank bigint, symbol string"
-        )
-    finally:
-        os.remove(path)
-    return out
+    n = write_symbol_list_txt(top, path, order_by=[F.desc("total"), F.asc("symbol")])
+    with open(path, encoding="utf-8") as fh:
+        lines = [ln for ln in fh.read().splitlines() if ln]
+    assert len(lines) == n
+    return local_frame(
+        spark, [(i + 1, s) for i, s in enumerate(lines)], schema="rank bigint, symbol string"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -467,11 +440,7 @@ _FT_N = 40  # one file per doc: bounded like a daily filing batch
 def fulltext_roundtrip_q(spark, sf_dir):
     from us_equity_datalake_spark.sources.ingest import read_fulltext
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_fulltext_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("fulltext", sf_dir)
     os.makedirs(root)
     docs = (
         load_table(spark, "documents", sf_dir)
@@ -532,27 +501,21 @@ def universe_state_roundtrip_q(spark, sf_dir):
     from us_equity_datalake_spark.equity.universe import universe_transition
     from us_equity_datalake_spark.sources.ingest import read_json_state, write_json_state
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_unistate_{os.path.basename(sf_dir.rstrip('/')).replace('.', '_')}_{os.getpid()}.json",
-    )
+    root = scratch_dir("unistate", sf_dir)
+    os.makedirs(root)
+    path = os.path.join(root, "universe_state.json")
     cust = load_table(spark, "customer", sf_dir).filter(F.col("c_custkey") < 500)
     day1 = cust.filter(F.col("c_custkey") % 3 != 0).select(F.col("c_name").alias("ticker"))
     day2 = cust.filter(F.col("c_custkey") % 5 != 0).select(F.col("c_name").alias("ticker"))
-    try:
-        write_json_state(path, {"asof": "2024-06-09", "tickers": sorted(r.ticker for r in day1.collect())})
-        state = read_json_state(path)
-        prev = local_frame(spark, 
-            [(t,) for t in state["tickers"]],
-            T.StructType([T.StructField("ticker", T.StringType())]),
-        )
-        out = universe_transition(prev, day2, key="ticker").select("ticker", "status")
-        rows = out.collect()
-        res = local_frame(spark, rows, schema=out.schema)
-    finally:
-        if os.path.exists(path):
-            os.remove(path)
-    return res
+    write_json_state(path, {"asof": "2024-06-09", "tickers": sorted(r.ticker for r in day1.collect())})
+    state = read_json_state(path)
+    prev = local_frame(
+        spark,
+        [(t,) for t in state["tickers"]],
+        T.StructType([T.StructField("ticker", T.StringType())]),
+    )
+    out = universe_transition(prev, day2, key="ticker").select("ticker", "status")
+    return local_frame(spark, out.collect(), schema=out.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -591,11 +554,7 @@ _TT_CUT = 100000.0  # v3's copy-on-write delete threshold
 def lake_time_travel_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_tt_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("tt", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -662,11 +621,7 @@ _MERGED_PRICE = (
 def lake_merge_upsert_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_merge_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("merge", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -738,11 +693,7 @@ _CDF_DEL = 400000.0  # v3's delete threshold on the POST-merge price
 def lake_change_feed_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_cdf_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cdf", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -802,11 +753,7 @@ def lake_change_feed_q(spark, sf_dir):
 def lake_cdf_incremental_agg_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_cdfagg_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cdfagg", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -896,11 +843,7 @@ _OPT_TARGET = 2     # z-ordered output files
 def lake_optimize_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_opt_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("opt", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -978,11 +921,7 @@ def lake_optimize_q(spark, sf_dir):
 def lake_lifecycle_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_lc_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("lc", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderstatus", "o_totalprice"
     )
@@ -1052,11 +991,7 @@ def lake_lifecycle_q(spark, sf_dir):
 def lake_manifest_prune_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_prune_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("prune", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1110,11 +1045,7 @@ def lake_manifest_prune_q(spark, sf_dir):
 def lake_bloom_point_lookup_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_bloomix_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("bloomix", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1183,11 +1114,7 @@ def lake_bloom_point_lookup_q(spark, sf_dir):
 def lake_log_replay_agg_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_replay_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("replay", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1256,11 +1183,7 @@ _MC_DEL = 300000.0  # the metadata-count fixture's delete threshold
 def lake_metadata_count_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_metacount_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("metacount", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1313,11 +1236,7 @@ def lake_metadata_count_q(spark, sf_dir):
 def lake_quarantine_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_quar_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("quar", sf_dir)
     good_path, quar_path = os.path.join(root, "t"), os.path.join(root, "q")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -1385,11 +1304,7 @@ def lake_quarantine_q(spark, sf_dir):
 def lake_ivm_join_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_ivm_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("ivm", sf_dir)
     a_path, b_path, v_path = (os.path.join(root, d) for d in ("a", "b", "v"))
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
@@ -1504,11 +1419,7 @@ def lake_ivm_join_q(spark, sf_dir):
 def lake_schema_clone_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_sc_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("sc", sf_dir)
     src = os.path.join(base, "src")
     dst_a = os.path.join(base, "cloneA")
     dst_b = os.path.join(base, "cloneB")
@@ -1621,11 +1532,7 @@ def lake_concurrent_compact_q(spark, sf_dir):
 
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_ccmp_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("ccmp", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1696,11 +1603,7 @@ def lake_concurrent_compact_q(spark, sf_dir):
 def lake_history_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_hist_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("hist", sf_dir)
     src = os.path.join(base, "src")
     dst = os.path.join(base, "dst")
     orders = load_table(spark, "orders", sf_dir).select(
@@ -1790,11 +1693,7 @@ _DV_P2 = "o_orderkey % 11 = 5"
 def lake_deletion_vector_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_dv_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("dv", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
@@ -1892,11 +1791,7 @@ def lake_deletion_vector_q(spark, sf_dir):
 def lake_mor_update_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_mor_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("mor", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1987,11 +1882,7 @@ def lake_mor_update_q(spark, sf_dir):
 def lake_partition_evolution_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_pevo_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("pevo", sf_dir)
     orders = load_table(spark, "orders", sf_dir).where(
         F.col("o_custkey").isNotNull()
     ).select(
@@ -2103,11 +1994,7 @@ _DVCF_UP = 50000.0  # v3's UPDATE bump on o_totalprice
 def lake_dv_change_feed_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_dvcf_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("dvcf", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -2182,11 +2069,7 @@ def lake_dv_change_feed_q(spark, sf_dir):
 def lake_clone_pin_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    base = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_clonepin_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(base, ignore_errors=True)
+    base = scratch_dir("clonepin", sf_dir)
     src_root, clone_root = os.path.join(base, "src"), os.path.join(base, "clone")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -2282,11 +2165,7 @@ def lake_clone_pin_q(spark, sf_dir):
 def lake_column_rename_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_rename_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("rename", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -2365,11 +2244,7 @@ def lake_column_rename_q(spark, sf_dir):
 def lake_column_drop_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_drop_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("drop", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -2433,11 +2308,7 @@ def lake_column_drop_q(spark, sf_dir):
 def lake_constraint_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_cons_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cons", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -2509,11 +2380,7 @@ def lake_concurrent_dv_q(spark, sf_dir):
 
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_cdv_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cdv", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -2575,11 +2442,7 @@ def lake_concurrent_dv_q(spark, sf_dir):
 def lake_dv_retry_append_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_dvra_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("dvra", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -2669,11 +2532,7 @@ def lake_dv_retry_append_q(spark, sf_dir):
 def lake_row_tracking_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_rt_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("rt", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus"
     )
@@ -2744,11 +2603,7 @@ def lake_merge_evolve_q(spark, sf_dir):
 
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_mev_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("mev", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_totalprice"
     )
@@ -2830,13 +2685,7 @@ def lake_merge_evolve_q(spark, sf_dir):
 def lake_txn_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    facts_p = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_txf_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    der_p = facts_p.replace("_txf_", "_txd_")
-    shutil.rmtree(facts_p, ignore_errors=True)
-    shutil.rmtree(der_p, ignore_errors=True)
+    facts_p, der_p = scratch_dir("txf", sf_dir), scratch_dir("txd", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_totalprice"
     )
@@ -2990,13 +2839,7 @@ def lake_txn_q(spark, sf_dir):
 def lake_txn_cascade_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    facts_p = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_txc_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    der_p = facts_p.replace("_txc_", "_txcd_")
-    shutil.rmtree(facts_p, ignore_errors=True)
-    shutil.rmtree(der_p, ignore_errors=True)
+    facts_p, der_p = scratch_dir("txc", sf_dir), scratch_dir("txcd", sf_dir)
     f_rows = load_table(spark, "orders", sf_dir).where(
         F.col("o_orderstatus") == "F"
     ).select("o_orderkey", "o_custkey", "o_totalprice")
@@ -3117,11 +2960,7 @@ def lake_txn_cascade_q(spark, sf_dir):
 def lake_row_lineage_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_rl_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("rl", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_totalprice"
     )
@@ -3207,11 +3046,7 @@ def lake_row_lineage_q(spark, sf_dir):
 def lake_cdf_row_lineage_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_cfl_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cfl", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_totalprice"
     )
@@ -3320,11 +3155,7 @@ def lake_cdf_row_lineage_q(spark, sf_dir):
 def lake_cdf_merge_lineage_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_cml_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("cml", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -3442,11 +3273,7 @@ def lake_cdf_merge_lineage_q(spark, sf_dir):
 def lake_null_skipping_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_nullskip_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("nullskip", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderdate", "o_totalprice"
     )
@@ -3560,11 +3387,7 @@ def lake_null_skipping_q(spark, sf_dir):
 def lake_skipping_matrix_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_skipmx_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("skipmx", sf_dir)
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_totalprice"
     )

@@ -3,7 +3,7 @@ r5 #4).
 
 The streaming tier (streaming/windows.py) was previously graded through its
 batch-equivalent DataFrames; this module runs the SAME operators through the
-actual streaming engine — file source → ``trigger(availableNow=True)`` →
+actual streaming engine — file source → an ``availableNow`` trigger →
 parquet sink with a checkpoint — and grades the parquet the engine committed.
 The oracle must therefore model the engine's append-mode semantics: a
 windowed aggregate is only emitted once the event-time watermark passes the
@@ -25,11 +25,8 @@ bound — availableNow is the reference's daily micro-batch cadence
 
 from __future__ import annotations
 
-import functools
 import os
-import shutil
-import tempfile
-from contextlib import contextmanager
+import weakref
 
 from pyspark.sql import functions as F
 
@@ -37,6 +34,7 @@ from us_equity_datalake_spark.functions.hashing import md5_long32, md5_long32_sq
 from us_equity_datalake_spark.functions.safe_math import dec_sum_sql
 from us_equity_datalake_spark.operators._cache import materialize_once
 from us_equity_datalake_spark.sources.registry import load_table, local_frame
+from us_equity_datalake_spark.streaming.jobs import run_available_now
 from us_equity_datalake_spark.streaming.stateful import (
     universe_lifecycle,
     universe_lifecycle_timeout,
@@ -48,19 +46,10 @@ from us_equity_datalake_spark.streaming.windows import (
     stream_stream_interval_join,
     tumbling_counts,
 )
-from .base import register
+from .base import register, scratch_dir
 
 _WATERMARK_S = 7200  # 2 hours, mirrored in the oracle cutoff
 _SESSION_WATERMARK_S = 14400  # 4 hours — the session sink's cutoff
-
-
-def _scratch(sf_dir: str, tag: str) -> str:
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_stream_{tag}_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(path, ignore_errors=True)
-    return path
 
 
 # ---------------------------------------------------------------------------
@@ -78,19 +67,21 @@ def _scratch(sf_dir: str, tag: str) -> str:
 # ``defaultParallelism``: locally the partition count is data-proportional
 # (2 at sf0.1, growing with sf — also what the sf1 ladder measures), while on
 # a production cluster the cores cap binds and the topology is identical to
-# the previous fixed-conf behavior.  ``SPARK_GRAFT_STREAM_PARTITIONS``
-# overrides for operators who know their key cardinality; the session's conf
-# is restored on exit so batch queries are untouched.  State-partition count
-# is pinned per checkpoint by the engine, so both availableNow runs of a sink
-# (fresh checkpoint per invocation) see a consistent value.
+# the fixed-conf behavior.
+#
+# The count reaches the engine through a CHILD session (``_stream_session``):
+# ``spark.newSession()`` shares the SparkContext and every builder conf but
+# holds its own SQL conf, so the stateful sinks build their ``readStream`` on
+# it while batch set-up and the sink read-back stay on the caller's session.
+# No session-wide conf is ever flipped, so concurrent driver threads on the
+# caller's session keep their partition count.  The engine pins the count
+# into each checkpoint's offset metadata at first start, so every
+# availableNow run of a sink sees the same value.
 # ---------------------------------------------------------------------------
 _STREAM_PARTITION_TARGET_BYTES = 16 << 20  # source bytes per state partition
 
 
 def _stream_state_partitions(spark, sf_dir: str) -> int:
-    env = os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS")
-    if env:
-        return max(1, int(env))
     total = 0
     try:
         for f in os.listdir(sf_dir):
@@ -102,27 +93,36 @@ def _stream_state_partitions(spark, sf_dir: str) -> int:
     return int(min(spark.sparkContext.defaultParallelism, need))
 
 
-@contextmanager
-def _scaled_state_partitions(spark, sf_dir: str):
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_stream_state_partitions(spark, sf_dir))
+# One child per (caller session, partition count).  A session that runs a
+# stream adds a listener to the SparkContext's bus for the context's life,
+# so a fresh child per sink call would leak a listener and a session state
+# on every call.  Weak keys: a dropped caller session frees its children.
+# Two threads racing on a miss may each build a child; ``setdefault`` keeps
+# one, and the other never starts a stream, so it adds no listener.
+_CHILDREN: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _stream_session(spark, sf_dir: str):
+    """A child of ``spark`` whose private SQL conf carries the scaled
+    state-partition count; the caller's conf is untouched."""
+    n = _stream_state_partitions(spark, sf_dir)
+    children = _CHILDREN.setdefault(spark, {})
+    if n not in children:
+        child = spark.newSession()
+        child.conf.set("spark.sql.shuffle.partitions", str(n))
+        children.setdefault(n, child)
+    return children[n]
+
+
+def _events_stream(stream_spark, sf_dir: str, schema):
+    """The events table as a file-source stream.  The file source needs a
+    DIRECTORY basePath and testdata tables are single files, so stream the
+    sf dir with a glob pinned to events."""
+    return (
+        stream_spark.readStream.schema(schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
     )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
-def _stream_scaled(fn):
-    """Run a sink query under the scale-adaptive state-partition count."""
-
-    @functools.wraps(fn)
-    def wrapped(spark, sf_dir):
-        with _scaled_state_partitions(spark, sf_dir):
-            return fn(spark, sf_dir)
-
-    return wrapped
 
 
 def run_events_tumbling_stream(spark, sf_dir: str, *, watermark_s: int = _WATERMARK_S,
@@ -135,28 +135,14 @@ def run_events_tumbling_stream(spark, sf_dir: str, *, watermark_s: int = _WATERM
     window the final watermark passed — deterministic sink contents without
     relying on the first query's internal no-data-batch timing.  Returns the
     sink path."""
-    root = root or _scratch(sf_dir, "tumbling")
+    root = root or scratch_dir("stream_tumbling", sf_dir)
     sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
     schema = load_table(spark, "events", sf_dir).schema
+    ss = _stream_session(spark, sf_dir)
     for _ in range(2):
-        # the file source needs a DIRECTORY basePath; testdata tables are
-        # single files, so stream the sf dir with a glob pinned to events
-        src = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        q = (
-            tumbling_counts(src, window="1 hour", watermark=f"{watermark_s} seconds",
-                            exact_sum=True)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
-        )
-        q.awaitTermination()
+        agg = tumbling_counts(_events_stream(ss, sf_dir, schema), window="1 hour",
+                              watermark=f"{watermark_s} seconds", exact_sum=True)
+        run_available_now(agg, checkpoint=ckpt, path=sink)
     return sink
 
 
@@ -179,7 +165,6 @@ def run_events_tumbling_stream(spark, sf_dir: str, *, watermark_s: int = _WATERM
     "trailing windows stay in state, exactly like the reference's "
     "late-filing lookback holding a day open until its window closes.",
 )
-@_stream_scaled
 def streaming_tumbling_sink_q(spark, sf_dir):
     sink = run_events_tumbling_stream(spark, sf_dir)
     out = spark.read.parquet(sink)
@@ -220,7 +205,6 @@ def streaming_tumbling_sink_q(spark, sf_dir):
     "in the sink — trailing sessions stay in state.  Timestamps are compared "
     "at full microsecond precision (unix_micros vs epoch_us).",
 )
-@_stream_scaled
 def streaming_session_sink_q(spark, sf_dir):
     """Session windows (gap 2 h) over the events stream via the real engine.
 
@@ -232,25 +216,14 @@ def streaming_session_sink_q(spark, sf_dir):
     flushes every session the final watermark closed (same protocol as
     ``run_events_tumbling_stream``).
     """
-    root = _scratch(sf_dir, "session")
+    root = scratch_dir("stream_session", sf_dir)
     sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
     schema = load_table(spark, "events", sf_dir).schema
+    ss = _stream_session(spark, sf_dir)
     for _ in range(2):
-        src = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        q = (
-            session_counts(src, gap="2 hours", watermark=f"{_SESSION_WATERMARK_S} seconds")
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
-        )
-        q.awaitTermination()
+        sessions = session_counts(_events_stream(ss, sf_dir, schema), gap="2 hours",
+                                  watermark=f"{_SESSION_WATERMARK_S} seconds")
+        run_available_now(sessions, checkpoint=ckpt, path=sink)
     out = spark.read.parquet(sink)
     return out.select(
         F.unix_micros("session_start").alias("start_us"),
@@ -278,35 +251,21 @@ def streaming_session_sink_q(spark, sf_dir):
     "dropped once the right watermark passes ts + 24 h), the semantics the "
     "batch form never has to prove.",
 )
-@_stream_scaled
 def streaming_interval_join_sink_q(spark, sf_dir):
-    root = _scratch(sf_dir, "ssjoin")
+    root = scratch_dir("stream_ssjoin", sf_dir)
     sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
     schema = load_table(spark, "events", sf_dir).schema
-
-    def src():
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
-    views = src().filter(F.col("event_type") == "view").select("user_id", "ts")
-    clicks = src().filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("ts_r")
-    )
+    ss = _stream_session(spark, sf_dir)
+    views = _events_stream(ss, sf_dir, schema).filter(
+        F.col("event_type") == "view"
+    ).select("user_id", "ts")
+    clicks = _events_stream(ss, sf_dir, schema).filter(
+        F.col("event_type") == "click"
+    ).select("user_id", F.col("ts").alias("ts_r"))
     joined = stream_stream_interval_join(
         views, clicks, within="24 hours", watermark="48 hours"
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", sink)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(joined, checkpoint=ckpt, path=sink)
     out = spark.read.parquet(sink)
     return out.select(
         "user_id",
@@ -342,27 +301,15 @@ def streaming_interval_join_sink_q(spark, sf_dir):
     "-> parquet sink; the oracle assigns each event to both windows and "
     "keeps only those whose END the final watermark passed.",
 )
-@_stream_scaled
 def streaming_sliding_sink_q(spark, sf_dir):
-    root = _scratch(sf_dir, "sliding")
+    root = scratch_dir("stream_sliding", sf_dir)
     sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
     schema = load_table(spark, "events", sf_dir).schema
+    ss = _stream_session(spark, sf_dir)
     for _ in range(2):
-        src = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        q = (
-            sliding_counts(src, watermark=f"{_WATERMARK_S} seconds", exact_sum=True)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
-        )
-        q.awaitTermination()
+        slides = sliding_counts(_events_stream(ss, sf_dir, schema),
+                                watermark=f"{_WATERMARK_S} seconds", exact_sum=True)
+        run_available_now(slides, checkpoint=ckpt, path=sink)
     out = spark.read.parquet(sink)
     return out.select(
         F.unix_timestamp("window_start").alias("window_start"),
@@ -391,30 +338,18 @@ def streaming_sliding_sink_q(spark, sf_dir):
     "oracle replicates append-mode emission: only windows the final "
     "watermark passed reach the sink.",
 )
-@_stream_scaled
 def streaming_enrich_join_sink_q(spark, sf_dir):
-    root = _scratch(sf_dir, "enrich")
+    root = scratch_dir("stream_enrich", sf_dir)
     sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
     schema = load_table(spark, "events", sf_dir).schema
     dim = load_table(spark, "customer", sf_dir).select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
+    ss = _stream_session(spark, sf_dir)
     for _ in range(2):  # second availableNow run flushes final-watermark windows
-        src = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        q = (
-            stream_static_enrich(src, dim, watermark=f"{_WATERMARK_S} seconds")
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
-        )
-        q.awaitTermination()
+        enriched = stream_static_enrich(_events_stream(ss, sf_dir, schema), dim,
+                                        watermark=f"{_WATERMARK_S} seconds")
+        run_available_now(enriched, checkpoint=ckpt, path=sink)
     out = spark.read.parquet(sink)
     return out.select(
         F.unix_timestamp("window_start").alias("hour_ts"),
@@ -518,13 +453,13 @@ _LIFECYCLE_SNAPSHOT_SQL = f"""
     "is lag_date > prev_present + 14 days — each transition class is one "
     "window-predicate arm of a UNION ALL.",
 )
-@_stream_scaled
 def streaming_lifecycle_sink_q(spark, sf_dir):
-    root = _scratch(sf_dir, "lifecycle")
+    root = scratch_dir("stream_lifecycle", sf_dir)
     src = os.path.join(root, "src")
     sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
     snaps = _lifecycle_snapshots(spark, sf_dir)
     schema = snaps.drop("day_idx").schema
+    ss = _stream_session(spark, sf_dir)
     # two halves landed between two availableNow runs: run 2 processes ONLY
     # the late files, with per-symbol state restored from run 1's checkpoint
     for lo, hi in ((0, 15), (15, 30)):
@@ -535,17 +470,9 @@ def streaming_lifecycle_sink_q(spark, sf_dir):
             .write.mode("append")
             .parquet(src)
         )
-        stream = spark.readStream.schema(schema).parquet(src)
-        q = (
-            universe_lifecycle(stream, grace_days=14)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
-        )
-        q.awaitTermination()
+        stream = ss.readStream.schema(schema).parquet(src)
+        run_available_now(universe_lifecycle(stream, grace_days=14),
+                          checkpoint=ckpt, path=sink)
     return spark.read.parquet(sink).select("symbol", "snap_date", "event")
 
 
@@ -565,7 +492,6 @@ def streaming_lifecycle_sink_q(spark, sf_dir):
     "(keys older than max event time - 2 h are evicted — the re-emission "
     "contract past eviction is pinned in tests/test_streaming.py).",
 )
-@_stream_scaled
 def streaming_dedup_sink_q(spark, sf_dir):
     """I4's anti-join freshness gate (reference update/app.py accession-number
     existence probe) as a streaming dedup: the production topology for a feed
@@ -576,25 +502,19 @@ def streaming_dedup_sink_q(spark, sf_dir):
     nothing.  At 100 TB/day the identical topology runs continuously with the
     same bounded state.
     """
-    root = _scratch(sf_dir, "dedup")
+    root = scratch_dir("stream_dedup", sf_dir)
     src = os.path.join(root, "src")
     sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
     ev = load_table(spark, "events", sf_dir)
     ev.write.mode("overwrite").parquet(src)
     ev.write.mode("append").parquet(src)  # the duplicate delivery
-    stream = spark.readStream.schema(ev.schema).parquet(src)
+    stream = _stream_session(spark, sf_dir).readStream.schema(ev.schema).parquet(src)
     from us_equity_datalake_spark.streaming.windows import streaming_dedup
 
-    q = (
-        streaming_dedup(stream, keys=["event_id"], watermark_col="ts", watermark="2 hours")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", sink)
-        .start()
+    run_available_now(
+        streaming_dedup(stream, keys=["event_id"], watermark_col="ts", watermark="2 hours"),
+        checkpoint=ckpt, path=sink,
     )
-    q.awaitTermination()
     return spark.read.parquet(sink).select(
         "event_id",
         F.unix_micros("ts").alias("ts_us"),
@@ -687,13 +607,13 @@ _TIMEOUT_PRESENCE_SQL = """
     "The oracle replays both paths: gap delists are LAG gaps > 14 days, "
     "timeout delists are tail absences the final watermark outlived.",
 )
-@_stream_scaled
 def streaming_lifecycle_timeout_sink_q(spark, sf_dir):
-    root = _scratch(sf_dir, "lifetimeout")
+    root = scratch_dir("stream_lifetimeout", sf_dir)
     src = os.path.join(root, "src")
     sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
     snaps = _timeout_presences(spark, sf_dir)
     schema = snaps.drop("day_idx").schema
+    ss = _stream_session(spark, sf_dir)
     # two data runs + one EMPTY run: the empty run finds no new files and
     # executes the no-data batch that fires every expired timeout at the
     # final watermark (same flush discipline as run_events_tumbling_stream)
@@ -706,21 +626,9 @@ def streaming_lifecycle_timeout_sink_q(spark, sf_dir):
                 .write.mode("append")
                 .parquet(src)
             )
-        stream = (
-            spark.readStream.schema(schema)
-            .parquet(src)
-            .withWatermark("ts", "0 seconds")
-        )
-        q = (
-            universe_lifecycle_timeout(stream, grace_days=14)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
-        )
-        q.awaitTermination()
+        stream = ss.readStream.schema(schema).parquet(src).withWatermark("ts", "0 seconds")
+        run_available_now(universe_lifecycle_timeout(stream, grace_days=14),
+                          checkpoint=ckpt, path=sink)
     return spark.read.parquet(sink).select("symbol", "event_date", "event", "via")
 
 
@@ -756,37 +664,23 @@ def streaming_lifecycle_timeout_sink_q(spark, sf_dir):
     "strictly passed.  Two availableNow runs; the second run's no-data "
     "batch performs the final eviction flush.",
 )
-@_stream_scaled
 def streaming_interval_join_outer_sink_q(spark, sf_dir):
-    root = _scratch(sf_dir, "ssjoin_outer")
+    root = scratch_dir("stream_ssjoin_outer", sf_dir)
     sink, ckpt = os.path.join(root, "sink"), os.path.join(root, "ckpt")
     schema = load_table(spark, "events", sf_dir).schema
-
-    def src():
-        return (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-
+    ss = _stream_session(spark, sf_dir)
     for _ in range(2):
-        views = src().filter(F.col("event_type") == "view").select("user_id", "ts")
-        clicks = src().filter(F.col("event_type") == "click").select(
-            "user_id", F.col("ts").alias("ts_r")
-        )
+        views = _events_stream(ss, sf_dir, schema).filter(
+            F.col("event_type") == "view"
+        ).select("user_id", "ts")
+        clicks = _events_stream(ss, sf_dir, schema).filter(
+            F.col("event_type") == "click"
+        ).select("user_id", F.col("ts").alias("ts_r"))
         joined = stream_stream_interval_join(
             views, clicks, within="24 hours", watermark="48 hours",
             how="left_outer",
         )
-        q = (
-            joined.writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(joined, checkpoint=ckpt, path=sink)
     out = spark.read.parquet(sink)
     return out.select(
         "user_id",
@@ -821,7 +715,7 @@ _SM_BUMP = 50000.0  # the streamed update marker
 def streaming_merge_upsert_sink_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = _scratch(sf_dir, "smerge")
+    root = scratch_dir("stream_smerge", sf_dir)
     src, lake_path = os.path.join(root, "src"), os.path.join(root, "lake")
     ckpt = os.path.join(root, "ckpt")
     orders = load_table(spark, "orders", sf_dir).select(
@@ -850,13 +744,7 @@ def streaming_merge_upsert_sink_q(spark, sf_dir):
         part.write.mode("append").parquet(src)
         part.write.mode("append").parquet(src)  # the duplicate delivery
         stream = spark.readStream.schema(delta.schema).parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, checkpoint=ckpt, foreach_batch=merge_batch)
     return snapshots.read_version(spark, lake_path).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -892,11 +780,10 @@ def streaming_merge_upsert_sink_q(spark, sf_dir):
     "oracle models the final append-mode state: every 2-hour bucket whose "
     "end the final ms-truncated watermark (max ts - 2 h) has passed.",
 )
-@_stream_scaled
 def streaming_from_snapshot_sink_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = _scratch(sf_dir, "fromsnap")
+    root = scratch_dir("stream_fromsnap", sf_dir)
     lake_path = os.path.join(root, "lake")
     staging = os.path.join(root, "staging")
     feed_state = os.path.join(root, "feed_state.json")
@@ -911,20 +798,15 @@ def streaming_from_snapshot_sink_q(spark, sf_dir):
         events.where(F.col("ts") >= F.lit(c2)),
     ]
     schema = events.schema
+    ss = _stream_session(spark, sf_dir)
 
     def run_once():
-        src = spark.readStream.schema(schema).parquet(staging)
-        q = (
+        src = ss.readStream.schema(schema).parquet(staging)
+        run_available_now(
             tumbling_counts(src, window="2 hours",
-                            watermark=f"{_WATERMARK_S} seconds", exact_sum=True)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
+                            watermark=f"{_WATERMARK_S} seconds", exact_sum=True),
+            checkpoint=ckpt, path=sink,
         )
-        q.awaitTermination()
 
     for chunk in chunks:
         snapshots.commit(chunk.coalesce(1), lake_path)
@@ -982,32 +864,23 @@ def _cms_stream_oracle(n_shards: int = 4) -> str:
     "computes with the same md5 universal-hash family — bit-exact, "
     "including the overestimates.",
 )
-@_stream_scaled
 def streaming_cms_heavy_hitters_sink_q(spark, sf_dir):
     from pyspark.sql import Window
 
     from us_equity_datalake_spark.streaming.stateful import cms_heavy_hitters_stream
 
-    root = _scratch(sf_dir, "cmsstate")
+    root = scratch_dir("stream_cmsstate", sf_dir)
     src, sink, ckpt = (os.path.join(root, d) for d in ("src", "sink", "ckpt"))
     events = load_table(spark, "events", sf_dir).select("user_id", "ts")
     lo, hi = events.agg(F.min("ts"), F.max("ts")).collect()[0]
     mid = lo + (hi - lo) / 2
     chunks = [events.where(F.col("ts") < F.lit(mid)),
               events.where(F.col("ts") >= F.lit(mid))]
+    ss = _stream_session(spark, sf_dir)
     for chunk in chunks:
         chunk.coalesce(1).write.mode("append").parquet(src)
-        stream = spark.readStream.schema(events.schema).parquet(src)
-        q = (
-            cms_heavy_hitters_stream(stream)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
-        )
-        q.awaitTermination()
+        stream = ss.readStream.schema(events.schema).parquet(src)
+        run_available_now(cms_heavy_hitters_stream(stream), checkpoint=ckpt, path=sink)
     out = spark.read.parquet(sink)
     w = Window.partitionBy("shard")
     return (
@@ -1051,7 +924,7 @@ def streaming_cms_heavy_hitters_sink_q(spark, sf_dir):
 def streaming_dv_delete_sink_q(spark, sf_dir):
     from us_equity_datalake_spark.sources import snapshots
 
-    root = _scratch(sf_dir, "dvdel")
+    root = scratch_dir("stream_dvdel", sf_dir)
     lake, req_dir, ckpt = (
         os.path.join(root, "lake"), os.path.join(root, "req"), os.path.join(root, "ckpt")
     )
@@ -1082,13 +955,7 @@ def streaming_dv_delete_sink_q(spark, sf_dir):
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(req_dir, "*"))
     )
-    q = (
-        stream.writeStream.foreachBatch(redact)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(stream, checkpoint=ckpt, foreach_batch=redact)
 
     return (
         snapshots.read_version(spark, lake)
@@ -1163,7 +1030,7 @@ def streaming_cdf_apply_sink_q(spark, sf_dir):
 
     from us_equity_datalake_spark.sources import snapshots
 
-    root = _scratch(sf_dir, "cdfapply")
+    root = scratch_dir("stream_cdfapply", sf_dir)
     src_lake = os.path.join(root, "src")
     down_lake = os.path.join(root, "down")
     staging = os.path.join(root, "pointers")
@@ -1257,13 +1124,7 @@ def streaming_cdf_apply_sink_q(spark, sf_dir):
 
     def run_once():
         stream = spark.readStream.schema("version long").parquet(staging)
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, checkpoint=ckpt, foreach_batch=apply_batch)
 
     # v2 (DV delete) + v3 (DV update): the v2 pointer is delivered TWICE
     # (at-least-once) and both versions land in ONE micro-batch — the fold
@@ -1364,7 +1225,7 @@ def streaming_change_feed_source_sink_q(spark, sf_dir):
 
     from us_equity_datalake_spark.sources import snapshots
 
-    root = _scratch(sf_dir, "cfsource")
+    root = scratch_dir("stream_cfsource", sf_dir)
     src_lake = os.path.join(root, "src")
     down_lake = os.path.join(root, "down")
     staging = os.path.join(root, "cdf")
@@ -1462,13 +1323,7 @@ def streaming_change_feed_source_sink_q(spark, sf_dir):
             .option("recursiveFileLookup", "true")
             .parquet(staging)
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, checkpoint=ckpt, foreach_batch=apply_batch)
 
     run_once()  # applies v1 (all inserts)
 
@@ -1567,7 +1422,7 @@ def streaming_cdc_replica_sink_q(spark, sf_dir):
 
     from us_equity_datalake_spark.sources import snapshots
 
-    root = _scratch(sf_dir, "cdcreplica")
+    root = scratch_dir("stream_cdcreplica", sf_dir)
     src_lake = os.path.join(root, "src")
     replica = os.path.join(root, "replica")
     staging = os.path.join(root, "cdf")
@@ -1663,13 +1518,7 @@ def streaming_cdc_replica_sink_q(spark, sf_dir):
             .option("recursiveFileLookup", "true")
             .parquet(staging)
         )
-        q = (
-            stream.writeStream.foreachBatch(apply_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        run_available_now(stream, checkpoint=ckpt, foreach_batch=apply_batch)
 
     # v2 lands BEFORE the first engine run, so batch 1 spans v1+v2: the
     # cross-version in-batch resolution is exercised (insert-then-delete

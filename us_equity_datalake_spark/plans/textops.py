@@ -16,7 +16,7 @@ from us_equity_datalake_spark.functions.hashing import MERSENNE_P, perm_coeffici
 from us_equity_datalake_spark.operators import dedup, lm, sampling
 from us_equity_datalake_spark.operators._cache import materialize_once
 from us_equity_datalake_spark.sources.registry import load_table, parallelize_small_input
-from .base import register
+from .base import register, scratch_dir
 
 
 def _docs_parallel(spark, sf_dir):
@@ -499,8 +499,6 @@ def _pair_est_sql(a_id: str, b_id: str) -> str:
 )
 def doc_incremental_dedup_report_q(spark, sf_dir):
     import os
-    import shutil
-    import tempfile
 
     from us_equity_datalake_spark.operators import _cache
 
@@ -510,11 +508,7 @@ def doc_incremental_dedup_report_q(spark, sf_dir):
 
     # 1. the signature STORE: lake text hashed ONCE, persisted as parquet
     #    (in production this store is appended per batch, never recomputed)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_incdedup_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("incdedup", sf_dir)
     dedup.minhash_signatures(
         lake, text_col="text", id_col="doc_id", num_perm=_NUM_PERM, seed=_SEED
     ).write.parquet(root)

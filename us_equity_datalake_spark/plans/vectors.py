@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from us_equity_datalake_spark.functions.vector import cosine_sql
 from us_equity_datalake_spark.operators import similarity
 from us_equity_datalake_spark.sources.registry import load_table
-from .base import register
+from .base import register, scratch_dir
 
 _K = 5
 _NPROBE = 2
@@ -188,18 +188,12 @@ def ivf_topk_q(spark, sf_dir):
 )
 def ivf_persisted_topk_q(spark, sf_dir):
     import os
-    import shutil
-    import tempfile
 
     emb = load_table(spark, "embeddings", sf_dir)
     centroids = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_ivfidx_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("ivfidx", sf_dir)
     # build once: cluster the corpus by nearest centroid, lay it out
     # bucket-per-partition (the 100 TB layout: a probe touches nprobe dirs).
     # The pre-write hash distribution by the partition column is the
@@ -273,18 +267,12 @@ def ivf_persisted_topk_q(spark, sf_dir):
 )
 def ivf_incremental_topk_q(spark, sf_dir):
     import os
-    import shutil
-    import tempfile
 
     emb = load_table(spark, "embeddings", sf_dir)
     centroids = emb.filter(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        f"quantlake_ivfinc_{os.path.basename(sf_dir.rstrip('/'))}_{os.getpid()}",
-    )
-    shutil.rmtree(root, ignore_errors=True)
+    root = scratch_dir("ivfinc", sf_dir)
     idx_path = os.path.join(root, "index")
     base = emb.filter(F.col("vec_id") % 5 != 0)
     delta = emb.filter(F.col("vec_id") % 5 == 0)

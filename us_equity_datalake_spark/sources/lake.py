@@ -62,20 +62,18 @@ def overwrite_partition(
     """I3: dynamic partition overwrite — only partitions present in ``df`` are
     replaced; re-running with the same input is a no-op (idempotent upsert)."""
     df = _cluster_for_write(df, partition_by, files_per_partition)
-    with _partition_overwrite_dynamic(spark):
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+    _overwrite_dynamic(df, path, partition_by)
 
 
-class _partition_overwrite_dynamic:
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", self.prev)
+def _overwrite_dynamic(df: DataFrame, path: str, partition_by: list[str]) -> None:
+    # a writer option, not the session conf: concurrent writers on the same
+    # session keep their own overwrite mode
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
 
 
 def read_check_append(
@@ -143,8 +141,7 @@ def compact_partition(spark: SparkSession, path: str, *, partition_by: list[str]
     compacted = part.repartition(target_files, *partition_by).cache()
     compacted.count()
     try:
-        with _partition_overwrite_dynamic(spark):
-            compacted.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
+        _overwrite_dynamic(compacted, path, partition_by)
     finally:
         compacted.unpersist()
 
@@ -232,8 +229,7 @@ def consolidate_year(
         # sever lineage from the files the dynamic overwrite will replace
         staged = year_df.localCheckpoint(eager=True)
         n = staged.count()
-        with _partition_overwrite_dynamic(spark):
-            staged.write.mode("overwrite").partitionBy("year").parquet(history_path)
+        _overwrite_dynamic(staged, history_path, ["year"])
     else:
         staged = year_df.localCheckpoint(eager=True)
         n = staged.count()

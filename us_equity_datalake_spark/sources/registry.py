@@ -63,8 +63,10 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
     at ~0 CPU (worker fork + pickle round-trip).  Routing the same rows
     through pandas hits the Arrow path instead: batches decoded JVM-side
     (``PythonSQLUtils.toDataFrame``), no Python workers at execution time,
-    one partition per 10k rows.  Type conversion is schema-driven either
-    way; anything Arrow cannot convert falls back to the legacy path.
+    one partition per 10k rows.  Type conversion is schema-driven; Spark's
+    own Arrow fallback (on by default) converts what Arrow rejects, so
+    nested structs, maps, binary, arrays of structs and full-precision
+    decimals all take this path.
     """
     import pandas as pd
 
@@ -91,12 +93,7 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         },
         columns=[f.name for f in fields],
     )
-    try:
-        return spark.createDataFrame(pdf, schema=schema)
-    except (TypeError, ValueError, NotImplementedError):
-        # values the Arrow and pandas converters reject (Arrow's and
-        # PySpark's type/value errors derive from these): legacy pickled path
-        return spark.createDataFrame(rows, schema=schema)
+    return spark.createDataFrame(pdf, schema=schema)
 
 
 def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: list[str] | None = None) -> list[str]:
