@@ -161,13 +161,15 @@ def main() -> None:
     clean_path = os.path.join(REPO_DIR, "BENCH_CLEAN.json")
     if os.path.exists(clean_path):
         try:
-            ref_doc = json.load(open(clean_path))
-            # refs are sf- AND protocol-specific (noop materializes ~45% more
-            # work than count(); comparing across protocols would flag
-            # phantom outliers)
-            if ref_doc.get("sf") == sf and ref_doc.get("action", "count") == ACTION:
+            with open(clean_path) as fh:
+                ref_doc = json.load(fh)
+            # refs are sf-, protocol- AND core-count-specific (noop
+            # materializes ~45% more work than count(); a 32-core minimum
+            # would flag every query of a 4-core run as a phantom outlier)
+            if (ref_doc.get("sf") == sf and ref_doc.get("action", "count") == ACTION
+                    and ref_doc.get("cpus") == int(os.environ.get("SPARK_GRAFT_CPUS", "32"))):
                 clean_ref = ref_doc.get("queries", {})
-        except Exception:
+        except (OSError, ValueError):
             clean_ref = {}
     insuite = dict(timings)
     env_outliers: dict[str, dict] = {}

@@ -72,13 +72,6 @@ def test_two_phase_components_agree_with_union_find(spark):
         assert got == want, f"case {i}"
 
 
-def test_dedup_clusters_summary(spark):
-    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "src long, dst long")
-    rows = {r["component"]: r for r in components.dedup_clusters(edges).collect()}
-    assert rows[1]["cluster_size"] == 3 and rows[1]["members"] == [1, 2, 3]
-    assert rows[7]["cluster_size"] == 2 and rows[7]["members"] == [7, 8]
-
-
 def test_kmv_exact_below_k(spark):
     df = spark.createDataFrame([Row(g="a", k=i % 10) for i in range(100)])
     out = sketch.kmv_distinct(df, "k", by=["g"], k=64).collect()
@@ -331,19 +324,6 @@ def test_z_value_interleaves_bits(spark):
     assert abs(zs[(0, 0)] - zs[(1, 1)]) < abs(zs[(0, 0)] - zs[(255, 255)])
 
 
-def test_zorder_layout_sorts_within_partitions(spark):
-    df = spark.createDataFrame([Row(x=i % 17, y=(i * 7) % 13) for i in range(500)])
-    out = zorder.zorder_layout(df, ["x", "y"], bits=8)
-    # every partition must be sorted by the z key
-    def assert_sorted(it):
-        prev = None
-        for row in it:
-            assert prev is None or row["__z"] >= prev
-            prev = row["__z"]
-        return iter(())
-    list(out.rdd.mapPartitions(lambda it: assert_sorted(it)).collect())
-
-
 def test_expectations_audit_counts_violations(spark):
     df = spark.createDataFrame(
         [Row(a=1, b="x"), Row(a=-5, b="y"), Row(a=None, b="x"), Row(a=10, b="z")]
@@ -357,14 +337,6 @@ def test_expectations_audit_counts_violations(spark):
     assert out["b_domain"]["n_violations"] == 1
     assert out["a_positive"]["n_rows"] == 4
     assert abs(out["a_positive"]["violation_rate"] - 0.5) < 1e-9
-
-
-def test_deterministic_sample_is_subset_and_nested(spark):
-    df = spark.createDataFrame([Row(doc_id=i) for i in range(500)])
-    s10 = {r["doc_id"] for r in sampling.deterministic_sample(df, "doc_id", rate_pct=10).collect()}
-    s30 = {r["doc_id"] for r in sampling.deterministic_sample(df, "doc_id", rate_pct=30).collect()}
-    assert s10 <= s30  # nested samples: rate increase only adds rows
-    assert 20 < len(s30) < 250
 
 
 # ---------------------------------------------------------------------------

@@ -1,1558 +1,22 @@
-"""Multimodal binary-column plumbing: metadata extraction, stubbed decode
-batch shapes, resize correctness, frame-sampling UDTF shape."""
+"""Multimodal binary-column plumbing: the registered metadata query computes
+byte length and sha256 of an opaque payload with JVM column functions."""
 
 import hashlib
-
-import pytest
-from pyspark.sql import Row, types as T
-
-from us_equity_datalake_spark.multimodal import (
-    attach_binary_metadata,
-    decode_image,
-    extract_image_features,
-    resize_images,
-    sample_video_frames,
-)
-
-
-@pytest.fixture(scope="module")
-def assets(spark):
-    rows = [Row(asset_id=i, payload=f"fake-image-{i}".encode(), media_type="image/png") for i in range(6)]
-    return spark.createDataFrame(rows)
-
-
-def test_metadata_extraction_jvm_side(spark, assets):
-    out = {r["asset_id"]: r for r in attach_binary_metadata(assets).collect()}
-    assert out[0]["n_bytes"] == len(b"fake-image-0")
-    assert out[0]["sha256"] == hashlib.sha256(b"fake-image-0").hexdigest()
-
-
-def test_decode_image_shapes_and_determinism(spark, assets):
-    out = decode_image(assets, width=8, height=8).collect()
-    assert all(len(r["pixels"]) == 64 for r in out)
-    assert all(0.0 <= p <= 1.0 for p in out[0]["pixels"])
-    again = decode_image(assets, width=8, height=8).collect()
-    assert [r["pixels"] for r in sorted(out, key=lambda r: r["asset_id"])] == [
-        r["pixels"] for r in sorted(again, key=lambda r: r["asset_id"])
-    ]
-
-
-def test_decode_image_real_codec_gated(spark, assets):
-    """fake=False is the REAL PIL path: without PIL it must raise
-    NotImplementedError at the decode boundary (this image); with PIL
-    installed it must decode a genuine PNG to the contracted shape."""
-    try:
-        import PIL  # noqa: F401
-    except ImportError:
-        with pytest.raises(Exception) as ei:
-            decode_image(assets, fake=False).collect()
-        assert "NotImplementedError" in str(ei.value) or isinstance(ei.value, NotImplementedError)
-        return
-
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("L", (16, 16), color=128).save(buf, format="PNG")
-    png = spark.createDataFrame(
-        [Row(asset_id=1, payload=bytearray(buf.getvalue()), media_type="image/png", meta=None)],
-        schema=assets.schema,
-    )
-    out = decode_image(png, width=8, height=8, fake=False).collect()
-    assert len(out) == 1 and len(out[0]["pixels"]) == 64
-    assert all(abs(p - 128 / 255.0) < 1e-6 for p in out[0]["pixels"])  # uniform plane survives resize
-
-
-def _build_bmp(width, height, pixel_fn, *, bitcount=24, compression=0, top_down=False):
-    """Synthesize an uncompressed 24-bit BMP: BITMAPFILEHEADER +
-    BITMAPINFOHEADER + bottom-up (or top-down) padded BGR rows.
-    ``pixel_fn(x, y) -> (b, g, r)`` with y=0 the TOP row."""
-    import struct
-
-    stride = (width * 3 + 3) & ~3
-    rows = []
-    ys = range(height) if top_down else range(height - 1, -1, -1)
-    for y in ys:
-        row = b"".join(bytes(pixel_fn(x, y)) for x in range(width))
-        rows.append(row + b"\x00" * (stride - width * 3))
-    pix = b"".join(rows)
-    info = struct.pack("<IiiHHIIiiII", 40, width, -height if top_down else height,
-                       1, bitcount, compression, len(pix), 2835, 2835, 0, 0)
-    hdr = struct.pack("<2sIHHI", b"BM", 14 + len(info) + len(pix), 0, 0, 14 + len(info))
-    return hdr + info + pix
-
-
-def test_decode_image_real_bmp_path(spark):
-    """fake=False executes a REAL parse in-sandbox for 24-bit BMP (the image
-    twin of the WAV/AVI decoders): solid-color luma is exact, the nearest-
-    neighbor resize picks the right source pixels, top-down and bottom-up
-    orientations agree, garbage bytes raise, and a non-24bpp BMP hits the
-    PIL gate."""
-    schema = T.StructType([T.StructField("asset_id", T.LongType()),
-                           T.StructField("payload", T.BinaryType())])
-    # solid gray 100: luma = 100 exactly under the 0.299/0.587/0.114 weights
-    solid = _build_bmp(16, 16, lambda x, y: (100, 100, 100))
-    df = spark.createDataFrame([Row(asset_id=1, payload=bytearray(solid))], schema)
-    out = decode_image(df, width=8, height=8, fake=False).collect()
-    assert len(out[0]["pixels"]) == 64
-    assert all(abs(p - 100 / 255.0) < 1e-6 for p in out[0]["pixels"])
-
-    # left half black, right half white, 4x4 -> resize 2x2 picks (0,2) columns
-    halves = _build_bmp(4, 4, lambda x, y: (255, 255, 255) if x >= 2 else (0, 0, 0))
-    df2 = spark.createDataFrame([Row(asset_id=2, payload=bytearray(halves))], schema)
-    px = decode_image(df2, width=2, height=2, fake=False).collect()[0]["pixels"]
-    assert [round(p) for p in px] == [0, 1, 0, 1]
-
-    # top-down negative-height BMP must decode identically to bottom-up
-    grad = lambda x, y: (10 * y, 10 * y, 10 * y)  # noqa: E731 — row gradient
-    bu = _build_bmp(4, 4, grad)
-    td = _build_bmp(4, 4, grad, top_down=True)
-    both = spark.createDataFrame(
-        [Row(asset_id=3, payload=bytearray(bu)), Row(asset_id=4, payload=bytearray(td))], schema
-    )
-    res = {r["asset_id"]: r["pixels"] for r in decode_image(both, width=4, height=4, fake=False).collect()}
-    assert res[3] == res[4]
-    # y=0 is the top row in both -> first output pixel is luma 0
-    assert res[3][0] == 0.0 and abs(res[3][-1] - 30 / 255.0) < 1e-6
-
-    garbage = spark.createDataFrame([Row(asset_id=5, payload=bytearray(b"BMnot-really-a-bitmap"))], schema)
-    with pytest.raises(Exception) as ei:
-        decode_image(garbage, fake=False).collect()
-    assert "BMP" in str(ei.value) or "ValueError" in str(ei.value)
-
-    eight_bit = _build_bmp(4, 4, lambda x, y: (0, 0, 0), bitcount=8)
-    with pytest.raises(Exception) as ei:
-        decode_image(
-            spark.createDataFrame([Row(asset_id=6, payload=bytearray(eight_bit))], schema),
-            fake=False,
-        ).collect()
-    assert "24-bit" in str(ei.value)
-
-
-def test_resize_nearest_neighbor(spark, assets):
-    decoded = decode_image(assets, width=8, height=8)
-    out = resize_images(decoded, src_w=8, src_h=8, dst_w=4, dst_h=4).collect()
-    r = out[0]
-    assert len(r["pixels_resized"]) == 16
-    # nearest-neighbor: resized[0] samples source (0,0); resized[5] samples (2,2)
-    assert r["pixels_resized"][0] == r["pixels"][0]
-    assert r["pixels_resized"][5] == r["pixels"][2 * 8 + 2]
-
-
-def test_feature_extraction(spark, assets):
-    decoded = decode_image(assets, width=8, height=8)
-    r = extract_image_features(decoded).collect()[0]
-    assert r["px_min"] <= r["px_mean"] <= r["px_max"]
-
-
-def test_video_frame_sampling_udtf_shape(spark, assets):
-    out = sample_video_frames(assets, n_frames=3).collect()
-    assert len(out) == 6 * 3
-    by_asset = {}
-    for r in out:
-        by_asset.setdefault(r["asset_id"], []).append(r["frame_idx"])
-    assert all(sorted(v) == [0, 1, 2] for v in by_asset.values())
-    expected = hashlib.sha256(b"fake-image-0" + (0).to_bytes(4, "big")).hexdigest()
-    assert [r["frame_sha"] for r in out if r["asset_id"] == 0 and r["frame_idx"] == 0] == [expected]
-
-
-def _avi_chunk(cid: bytes, data: bytes) -> bytes:
-    import struct
-
-    pad = b"\x00" if len(data) % 2 else b""
-    return cid + struct.pack("<I", len(data)) + data + pad
-
-
-def _avi_list(ltype: bytes, payload: bytes) -> bytes:
-    return _avi_chunk(b"LIST", ltype + payload)
-
-
-def _build_avi(frames: list[bytes], width: int, height: int, compression: int = 0) -> bytes:
-    """Minimal valid RIFF/AVI: hdrl (avih + strl/strh/strf) + movi 00db frames."""
-    import struct
-
-    stride = (width * 3 + 3) & ~3
-    strf = struct.pack("<IiiHHIIiiII", 40, width, height, 1, 24, compression,
-                       stride * height, 0, 0, 0, 0)
-    strh = b"vids" + b"\x00" * 52
-    avih = struct.pack("<14I", 40000, 0, 0, 0, len(frames), 0, 1, 0, width, height, 0, 0, 0, 0)
-    hdrl = _avi_list(
-        b"hdrl",
-        _avi_chunk(b"avih", avih)
-        + _avi_list(b"strl", _avi_chunk(b"strh", strh) + _avi_chunk(b"strf", strf)),
-    )
-    movi = _avi_list(b"movi", b"".join(_avi_chunk(b"00db", f) for f in frames))
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def _solid_frame(width: int, height: int, bgr: tuple[int, int, int]) -> bytes:
-    stride = (width * 3 + 3) & ~3
-    row = bytes(bgr) * width + b"\x00" * (stride - width * 3)
-    return row * height
-
-
-def test_sample_video_frames_real_avi_path(spark):
-    """fake=False is a REAL parse (RIFF/AVI chunk walk, uncompressed BGR24):
-    uniform sampling picks the right source indices, per-frame mean luma
-    matches the synthesized solid colors, garbage bytes raise, and a
-    compressed stream hits the ffmpeg gate."""
-    import hashlib as _hl
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType([T.StructField("asset_id", T.LongType()),
-                           T.StructField("payload", T.BinaryType())])
-    # 6 solid gray frames: frame k has B=G=R=40k -> mean luma = 40k/255
-    frames = [_solid_frame(5, 4, (40 * k, 40 * k, 40 * k)) for k in range(6)]
-    avi = _build_avi(frames, 5, 4)
-    df = spark.createDataFrame([Row(asset_id=1, payload=bytearray(avi))], schema)
-
-    out = sorted(sample_video_frames(df, n_frames=3, fake=False).collect(),
-                 key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in out] == [0, 2, 4]  # i * 6 // 3
-    for r, k in zip(out, (0, 2, 4)):
-        assert abs(r.px_mean - (40 * k) / 255.0) < 1e-6
-        assert r.frame_sha == _hl.sha256(frames[k]).hexdigest()
-
-    # clip shorter than n_frames: sampled indices de-duplicate
-    short = spark.createDataFrame(
-        [Row(asset_id=2, payload=bytearray(_build_avi(frames[:2], 5, 4)))], schema
-    )
-    idxs = sorted(r.frame_idx for r in sample_video_frames(short, n_frames=4, fake=False).collect())
-    assert idxs == [0, 1]
-
-    garbage = spark.createDataFrame([Row(asset_id=3, payload=bytearray(b"not-an-avi"))], schema)
-    with pytest.raises(Exception) as ei:
-        sample_video_frames(garbage, fake=False).collect()
-    assert "RIFF" in str(ei.value) or "ValueError" in str(ei.value)
-
-    compressed = spark.createDataFrame(
-        [Row(asset_id=4, payload=bytearray(_build_avi(frames, 5, 4, compression=1)))], schema
-    )
-    with pytest.raises(Exception) as ei:
-        sample_video_frames(compressed, fake=False).collect()
-    assert "ffmpeg" in str(ei.value)
-
-
-def test_sample_video_frames_mjpeg_avi(spark):
-    """r6: Motion-JPEG AVI decodes in-sandbox — each 00db chunk is a
-    standalone baseline JPEG run through the real Huffman+IDCT decoder at
-    native size; per-frame mean luma matches the encoder's independent
-    reconstruction exactly (quant=1), and frame shas are of the JPEG bytes."""
-    import hashlib as _hl
-
-    import numpy as np
-    from pyspark.sql import types as T
-
-    rng = np.random.RandomState(11)
-    imgs = [(rng.rand(16, 24) * 255).round() for _ in range(3)]
-    encoded = [_build_jpeg(img) for img in imgs]
-    frames = [payload for payload, _ in encoded]
-    avi = _build_avi(frames, 24, 16, compression=0x47504A4D)  # 'MJPG'
-
-    schema = T.StructType([T.StructField("asset_id", T.LongType()),
-                           T.StructField("payload", T.BinaryType())])
-    df = spark.createDataFrame([Row(asset_id=1, payload=bytearray(avi))], schema)
-    out = sorted(sample_video_frames(df, n_frames=3, fake=False).collect(),
-                 key=lambda r: r.frame_idx)
-    assert [r.frame_idx for r in out] == [0, 1, 2]
-    for r, (payload, ref) in zip(out, encoded):
-        assert r.frame_sha == _hl.sha256(payload).hexdigest()
-        want = float(np.clip(ref, 0, 255).mean() / 255.0)
-        assert abs(r.px_mean - want) < 1e-6
-
-
-def _gif_lzw_encode(min_code_size: int, indices: list[int]) -> bytes:
-    """Canonical GIF LZW encoder (GIFLIB widening discipline: the encoder
-    widens one table-add AFTER the decoder does, because the decoder's table
-    lags one entry behind)."""
-    clear, eoi = 1 << min_code_size, (1 << min_code_size) + 1
-    out = bytearray()
-    acc = nbits = 0
-    code_size = min_code_size + 1
-
-    def emit(code):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += code_size
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table = {(i,): i for i in range(clear)}
-    next_code = eoi + 1
-    emit(clear)
-    w = ()
-    for k in indices:
-        wk = w + (k,)
-        if wk in table:
-            w = wk
-            continue
-        emit(table[w])
-        if next_code < 4096:
-            table[wk] = next_code
-            next_code += 1
-            if next_code > (1 << code_size) and code_size < 12:
-                code_size += 1
-        w = (k,)
-    if w:
-        emit(table[w])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _build_gif(idx_rows, palette, *, screen=None, offset=(0, 0), interlace=False,
-               bg=0, local_table=False, version=b"89a"):
-    """Minimal GIF: logical screen + one image block; palette is a list of
-    (r, g, b); idx_rows is a row-major list of palette-index rows."""
-    import struct
-
-    fh, fw = len(idx_rows), len(idx_rows[0])
-    sw, sh = screen if screen else (fw, fh)
-    n = max(2, 1 << (max(p.bit_length() for p in ([1] + [len(palette) - 1]))))
-    while n < len(palette):
-        n <<= 1
-    ct = b"".join(bytes(c) for c in palette) + b"\x00" * (3 * (n - len(palette)))
-    size_bits = n.bit_length() - 2  # 2^(size_bits+1) == n
-    out = bytearray(b"GIF" + version)
-    gflag = 0 if local_table else (0x80 | size_bits)
-    out += struct.pack("<HHBBB", sw, sh, gflag, bg, 0)
-    if not local_table:
-        out += ct
-    out += b"\x21\xfe\x05hello\x00"  # comment extension: must be skipped
-    lflag = (0x80 | size_bits if local_table else 0) | (0x40 if interlace else 0)
-    out += b"\x2c" + struct.pack("<HHHHB", offset[0], offset[1], fw, fh, lflag)
-    if local_table:
-        out += ct
-    min_code = max(2, (n - 1).bit_length())
-    flat = [v for row in idx_rows for v in row]
-    if interlace:  # rows stored in 4-pass order
-        order = [y for first, step in ((0, 8), (4, 8), (2, 4), (1, 2))
-                 for y in range(first, fh, step)]
-        flat = [v for y in order for v in idx_rows[y]]
-    data = _gif_lzw_encode(min_code, flat)
-    out += bytes([min_code])
-    for i in range(0, len(data), 255):
-        chunk = data[i:i + 255]
-        out += bytes([len(chunk)]) + chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
-def test_decode_image_real_gif_path():
-    """r6: GIF87a/89a decodes in-sandbox — LZW (incl. the KwKwK case and
-    width growth), palette luma, interlacing, sub-screen frames on a
-    background canvas, local color tables, resize grid, error arms."""
-    import numpy as np
-
-    from us_equity_datalake_spark.multimodal.columns import _gif_pixels
-
-    rng = np.random.RandomState(3)
-    palette = [(i * 16, i * 8, i * 4) for i in range(16)]
-    lum = [p[0] * 0.299 + p[1] * 0.587 + p[2] * 0.114 for p in palette]
-    idx = (rng.randint(0, 16, size=(13, 11))).tolist()
-    want = np.array([[lum[v] for v in row] for row in idx]) / 255.0
-
-    got = np.array(_gif_pixels(_build_gif(idx, palette), 11, 13)).reshape(13, 11)
-    np.testing.assert_allclose(got, want, atol=1e-12)
-
-    # interlaced + local color table + GIF87a parse identically
-    got_i = np.array(
-        _gif_pixels(_build_gif(idx, palette, interlace=True, local_table=True,
-                               version=b"87a"), 11, 13)
-    ).reshape(13, 11)
-    np.testing.assert_allclose(got_i, want, atol=1e-12)
-
-    # sub-screen frame: canvas filled with the background color around it
-    off = _build_gif(idx, palette, screen=(20, 16), offset=(3, 2), bg=5)
-    got_o = np.array(_gif_pixels(off, 20, 16)).reshape(16, 20)
-    np.testing.assert_allclose(got_o[2:15, 3:14], want, atol=1e-12)
-    assert abs(got_o[0, 0] - lum[5] / 255.0) < 1e-12
-
-    # repeated-run input exercises KwKwK codes
-    rep = [[1, 1, 1, 1, 2, 2, 2, 2] for _ in range(4)]
-    want_rep = np.array([[lum[v] for v in row] for row in rep]) / 255.0
-    got_rep = np.array(_gif_pixels(_build_gif(rep, palette), 8, 4)).reshape(4, 8)
-    np.testing.assert_allclose(got_rep, want_rep, atol=1e-12)
-
-    # resize grid: 2x downsample picks the (i*src)//dst rows/cols
-    got_small = np.array(_gif_pixels(_build_gif(idx, palette), 5, 6)).reshape(6, 5)
-    ys, xs = (np.arange(6) * 13) // 6, (np.arange(5) * 11) // 5
-    np.testing.assert_allclose(got_small, want[np.ix_(ys, xs)], atol=1e-12)
-
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        _gif_pixels(b"GIF89a" + b"\x00" * 4, 4, 4)  # truncated screen
-    with _pt.raises(ValueError):
-        _gif_pixels(b"NOTGIF" + bytes(20), 4, 4)
-    bad = bytearray(_build_gif(idx, palette))
-    bad[-10] ^= 0xFF  # corrupt the LZW tail
-    with _pt.raises(ValueError):
-        _gif_pixels(bytes(bad), 11, 13)
-
-
-def test_gif_lzw_width_growth_and_roundtrip():
-    """LZW code width must grow past 9/10/11 bits in lockstep between the
-    canonical encoder and the decoder: a high-entropy 120x120 16-color image
-    builds >2500 table entries (code width 12), and decode(encode(x)) == x.
-    Plus randomized roundtrips across palette sizes and shapes."""
-    import numpy as np
-
-    from us_equity_datalake_spark.multimodal.columns import _gif_lzw_decode, _gif_pixels
-
-    rng = np.random.RandomState(17)
-    flat = rng.randint(0, 16, size=120 * 120).tolist()
-    enc = _gif_lzw_encode(4, flat)
-    assert _gif_lzw_decode(4, enc, len(flat)) == flat
-    # entropy check: the table really grew past the 9-bit boundary
-    assert len(enc) > len(flat) * 9 // 8 // 2
-
-    for trial in range(6):
-        bits = int(rng.randint(1, 5))  # palette sizes 2..16
-        ncol = 1 << bits
-        fh, fw = int(rng.randint(1, 40)), int(rng.randint(1, 40))
-        palette = [(int(c[0]), int(c[1]), int(c[2]))
-                   for c in rng.randint(0, 256, size=(ncol, 3))]
-        lum = [p[0] * 0.299 + p[1] * 0.587 + p[2] * 0.114 for p in palette]
-        idx = rng.randint(0, ncol, size=(fh, fw)).tolist()
-        want = np.array([[lum[v] for v in row] for row in idx]) / 255.0
-        payload = _build_gif(idx, palette, interlace=bool(trial % 2))
-        got = np.array(_gif_pixels(payload, fw, fh)).reshape(fh, fw)
-        np.testing.assert_allclose(got, want, atol=1e-12,
-                                   err_msg=f"trial {trial} {fh}x{fw} ncol={ncol}")
-
-
-def test_jpeg_dims_header_walk():
-    """_jpeg_dims reads (h, w) from SOF0 and SOF2 without entropy decode."""
-    import numpy as np
-
-    from us_equity_datalake_spark.multimodal.columns import _jpeg_dims
-
-    img = (np.arange(24 * 40, dtype=np.float64).reshape(24, 40) % 256)
-    base, _ = _build_jpeg(img)
-    assert _jpeg_dims(base) == (24, 40)
-    prog = _build_progressive_jpeg(
-        img,
-        [dict(comps=[1], ss=0, se=0, ah=0, al=0),
-         dict(comps=[1], ss=1, se=63, ah=0, al=0)],
-    )[0]
-    assert _jpeg_dims(prog) == (24, 40)
-    with pytest.raises(ValueError):
-        _jpeg_dims(b"\xff\xd8\xff\xd9")  # SOI+EOI, no SOF
-
-
-def _strip_jpeg_dht(payload: bytes) -> bytes:
-    """Remove every DHT (0xFFC4) segment — the Motion-JPEG convention where
-    frames rely on the T.81 Annex K.3 default tables."""
-    import struct
-
-    out = bytearray(payload[:2])
-    pos = 2
-    while pos + 4 <= len(payload):
-        if payload[pos] != 0xFF:
-            out += payload[pos:]
-            break
-        marker = payload[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            out += payload[pos:pos + 2]
-            pos += 2
-            continue
-        (seglen,) = struct.unpack(">H", payload[pos + 2:pos + 4])
-        if marker != 0xC4:
-            out += payload[pos:pos + 2 + seglen]
-        pos += 2 + seglen
-        if marker == 0xDA:  # entropy data + EOI follow verbatim
-            out += payload[pos:]
-            break
-    return bytes(out)
-
-
-def test_jpeg_annex_k_default_tables():
-    """A DHT-less baseline JPEG (MJPEG convention) decodes identically to the
-    same frame with its tables embedded — the encoder writes the Annex K.3
-    luma tables, so the spec defaults must reproduce its exact bitstream
-    meaning.  A scan referencing a non-default slot still errors."""
-    import numpy as np
-
-    from us_equity_datalake_spark.multimodal.columns import _jpeg_pixels
-
-    rng = np.random.RandomState(7)
-    img = (rng.rand(16, 16) * 255).round()
-    payload, _ = _build_jpeg(img)
-    stripped = _strip_jpeg_dht(payload)
-    assert b"\xff\xc4" not in stripped[: stripped.index(b"\xff\xda")]
-    assert len(stripped) < len(payload)
-    assert _jpeg_pixels(stripped, 16, 16) == _jpeg_pixels(payload, 16, 16)
-
-
-def test_decode_audio_features_shape_and_determinism(spark):
-    from us_equity_datalake_spark.multimodal.columns import decode_audio_features
-
-    df = spark.createDataFrame(
-        [Row(asset_id=1, payload=bytearray(b"wav-bytes-1")), Row(asset_id=2, payload=bytearray(b""))],
-        T.StructType([T.StructField("asset_id", T.LongType()), T.StructField("payload", T.BinaryType())]),
-    )
-    out = {r.asset_id: r for r in decode_audio_features(df, n_mels=8, n_frames=4).collect()}
-    assert len(out[1].mel) == 4 and all(len(row) == 8 for row in out[1].mel)
-    assert out[2].duration_s == 0.0
-    # deterministic: same payload -> same features
-    again = {r.asset_id: r for r in decode_audio_features(df, n_mels=8, n_frames=4).collect()}
-    assert again[1].mel == out[1].mel
-
-
-def _sine_wav(freq_hz: float, sr: int = 8000, seconds: float = 1.0) -> bytes:
-    import io
-    import math
-    import struct
-    import wave
-
-    n = int(sr * seconds)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(sr)
-        w.writeframes(
-            b"".join(
-                struct.pack("<h", int(30000 * math.sin(2 * math.pi * freq_hz * t / sr)))
-                for t in range(n)
-            )
-        )
-    return buf.getvalue()
-
-
-def _sine_aiff(freq_hz: float, sr: int = 8000, seconds: float = 1.0) -> bytes:
-    """Same sine signal as :func:`_sine_wav`, packed as big-endian AIFF with
-    the 80-bit-extended sample rate (normalized: integer bit explicit)."""
-    import math
-    import struct
-
-    n = int(sr * seconds)
-    pcm = b"".join(
-        struct.pack(">h", int(30000 * math.sin(2 * math.pi * freq_hz * t / sr)))
-        for t in range(n)
-    )
-    # 80-bit extended: sr = m * 2^(e-16383-63) with the top mantissa bit set
-    e = sr.bit_length() - 1
-    m = sr << (63 - e)
-    f80 = struct.pack(">HQ", 16383 + e, m)
-    comm = b"COMM" + struct.pack(">IhLh", 18, 1, n, 16) + f80
-    ssnd = b"SSND" + struct.pack(">ILL", 8 + len(pcm), 0, 0) + pcm
-    body = b"AIFF" + comm + ssnd
-    return b"FORM" + struct.pack(">I", len(body)) + body
-
-
-def test_decode_audio_real_aiff_path(spark):
-    """The AIFF container of the SAME signal must produce identical features
-    to its WAV twin (shared feature tail), the 80-bit sample rate must parse
-    exactly, and garbage/odd-width arms raise."""
-    from pyspark.sql import Row, types as T
-
-    from us_equity_datalake_spark.multimodal.columns import (
-        _aiff_band_energies,
-        _float80,
-        _wav_band_energies,
-        decode_audio_features,
-    )
-
-    assert _float80(b"\x40\x0b\xfa\x00\x00\x00\x00\x00\x00\x00") == 8000.0
-    assert _float80(b"\x40\x0e\xac\x44\x00\x00\x00\x00\x00\x00") == 44100.0
-
-    wav, aiff = _sine_wav(440.0), _sine_aiff(440.0)
-    fw, dw = _wav_band_energies(wav, 8, 4)
-    fa, da = _aiff_band_energies(aiff, 8, 4)
-    assert fw == fa and dw == da  # bit-identical: same samples, same tail
-
-    schema = T.StructType([T.StructField("asset_id", T.LongType()),
-                           T.StructField("payload", T.BinaryType())])
-    df = spark.createDataFrame([Row(asset_id=1, payload=bytearray(aiff))], schema)
-    row = decode_audio_features(df, fake=False).collect()[0]
-    assert abs(row.duration_s - 1.0) < 1e-6
-    assert [pytest.approx(v, abs=1e-6) for r in fa for v in r] == \
-           [v for r in row.mel for v in r]
-
-    with pytest.raises(Exception):
-        _aiff_band_energies(b"FORM\x00\x00\x00\x04AIFF", 8, 4)  # no COMM/SSND
-    with pytest.raises(Exception):
-        _aiff_band_energies(b"RIFX" + bytes(40), 8, 4)
-
-
-def test_decode_audio_real_wav_path(spark):
-    """fake=False is a REAL decode (stdlib wave + numpy FFT): a pure tone's
-    energy lands in the band containing its frequency; duration comes from
-    the WAV header; garbage bytes raise."""
-    from us_equity_datalake_spark.multimodal.columns import decode_audio_features
-
-    schema = T.StructType([T.StructField("asset_id", T.LongType()), T.StructField("payload", T.BinaryType())])
-    # 8 bands over 0..4000 Hz (sr 8000); mid-band tones avoid the band edges:
-    # 700 Hz -> band 1 (504-1000 Hz), 3700 Hz -> band 7 (3504-4000 Hz)
-    df = spark.createDataFrame(
-        [Row(asset_id=1, payload=bytearray(_sine_wav(700.0))),
-         Row(asset_id=2, payload=bytearray(_sine_wav(3700.0)))],
-        schema,
-    )
-    out = {r.asset_id: r for r in decode_audio_features(df, fake=False, n_mels=8, n_frames=4).collect()}
-    for aid, expected_band in ((1, 1), (2, 7)):
-        r = out[aid]
-        assert abs(r.duration_s - 1.0) < 1e-6
-        assert len(r.mel) == 4 and all(len(frame) == 8 for frame in r.mel)
-        assert max(range(8), key=lambda i: r.mel[0][i]) == expected_band
-
-    garbage = spark.createDataFrame([Row(asset_id=3, payload=bytearray(b"not-a-wav"))], schema)
-    with pytest.raises(Exception):
-        decode_audio_features(garbage, fake=False).collect()
-
-
-_ADAM7 = [
-    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-]
-
-
-def _build_png(width, height, pixel_fn, *, channels=3, filters=None,
-               bit_depth=8, color_type=None, interlace=0, palette=None):
-    """Synthesize a PNG with explicit per-row filter types (cycling all five
-    by default), applying the spec's FORWARD filtering so the decoder's
-    defilter must invert every arm.  ``pixel_fn(x, y) -> tuple[channels]``.
-    interlace=1 emits a GENUINE Adam7 stream: 7 sub-images, each filtered
-    independently; color_type=3 emits a PLTE chunk."""
-    import struct
-    import zlib
-
-    if color_type is None:
-        color_type = {1: 0, 2: 4, 3: 2, 4: 6}[channels]
-    bpp = max(1, channels * bit_depth // 8)
-
-    def to_bytes(samples):
-        # sample list -> filtered-stream BYTES for this bit depth
-        if bit_depth == 8:
-            return list(samples)
-        if bit_depth == 16:
-            return [b for v in samples for b in (v >> 8, v & 255)]
-        per = 8 // bit_depth
-        out, cur, n = [], 0, 0
-        for v in samples:
-            cur = (cur << bit_depth) | (v & ((1 << bit_depth) - 1))
-            n += 1
-            if n == per:
-                out.append(cur)
-                cur, n = 0, 0
-        if n:
-            out.append(cur << (bit_depth * (per - n)))  # pad row to byte edge
-        return out
-
-    def filt(sample_rows):
-        rows = [to_bytes(r) for r in sample_rows]
-        out = bytearray()
-        if not rows:
-            return out
-        prev = [0] * len(rows[0])
-        for y, raw in enumerate(rows):
-            f = (filters[y] if filters is not None else y % 5)
-            line = bytearray([f])
-            rec = raw  # recon values ARE the raw pixels; we emit filtered bytes
-            for x in range(len(raw)):
-                a = rec[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                if f == 0:
-                    v = raw[x]
-                elif f == 1:
-                    v = raw[x] - a
-                elif f == 2:
-                    v = raw[x] - b
-                elif f == 3:
-                    v = raw[x] - (a + b) // 2
-                else:  # Paeth
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    v = raw[x] - pred
-                line.append(v % 256)
-            out += line
-            prev = raw
-        return out
-
-    if interlace == 0:
-        out = filt([
-            [v for x in range(width) for v in pixel_fn(x, y)] for y in range(height)
-        ])
-    else:
-        out = bytearray()
-        for x0, y0, dx, dy in _ADAM7:
-            xs, ys = range(x0, width, dx), range(y0, height, dy)
-            if not xs or not ys:
-                continue  # empty pass: no bytes at all
-            out += filt([[v for x in xs for v in pixel_fn(x, y)] for y in ys])
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, bit_depth, color_type, 0, 0, interlace)
-    body = chunk(b"IHDR", ihdr)
-    if color_type == 3:
-        pal = palette or [(i, (i * 3) % 256, (i * 7) % 256) for i in range(256)]
-        body += chunk(b"PLTE", bytes(v for rgb in pal for v in rgb))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + body
-        + chunk(b"IDAT", zlib.compress(bytes(out)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def test_decode_image_real_png_path(spark):
-    """r5: 8-bit PNG decodes in-sandbox via stdlib zlib — every filter type
-    (None/Sub/Up/Average/Paeth) is exercised by the synthesized fixture, the
-    luma and nearest-neighbor resize index math match the BMP path exactly,
-    gray and RGBA variants decode, garbage bytes raise, and the remaining
-    unsupported shape (16-bit depth) hits the PIL gate."""
-    schema = T.StructType([T.StructField("asset_id", T.LongType()),
-                           T.StructField("payload", T.BinaryType())])
-
-    # deterministic gradient over 7x9 RGB, rows cycle through all 5 filters
-    def pix(x, y):
-        return ((x * 37 + y * 11) % 256, (x * 5 + y * 73) % 256, (x + y * 29) % 256)
-
-    png = _build_png(7, 9, pix)
-    df = spark.createDataFrame([Row(asset_id=1, payload=bytearray(png))], schema)
-    got = decode_image(df, width=7, height=9, fake=False).collect()[0]["pixels"]
-    # expected luma computed independently, no resize (identity index map)
-    exp = [
-        (0.299 * pix(x, y)[0] + 0.587 * pix(x, y)[1] + 0.114 * pix(x, y)[2]) / 255.0
-        for y in range(9) for x in range(7)
-    ]
-    assert len(got) == 63
-    assert all(abs(g - e) < 1e-6 for g, e in zip(got, exp))
-
-    # resize picks the same source indexes as the BMP/resize_images math
-    halves = _build_png(4, 4, lambda x, y: (255, 255, 255) if x >= 2 else (0, 0, 0))
-    df2 = spark.createDataFrame([Row(asset_id=2, payload=bytearray(halves))], schema)
-    px = decode_image(df2, width=2, height=2, fake=False).collect()[0]["pixels"]
-    assert [round(p) for p in px] == [0, 1, 0, 1]
-
-    # grayscale (color type 0) and RGBA (alpha ignored) decode
-    gray = _build_png(5, 5, lambda x, y: (100,), channels=1)
-    rgba = _build_png(5, 5, lambda x, y: (100, 100, 100, 7), channels=4)
-    for payload in (gray, rgba):
-        d = spark.createDataFrame([Row(asset_id=3, payload=bytearray(payload))], schema)
-        p = decode_image(d, width=5, height=5, fake=False).collect()[0]["pixels"]
-        assert all(abs(v - 100 / 255.0) < 1e-6 for v in p)
-
-    from us_equity_datalake_spark.multimodal.columns import _png_pixels
-
-    # garbage bytes: parse-boundary ValueError
-    with pytest.raises(ValueError):
-        _png_pixels(b"\x89PNG\r\n\x1a\n" + b"\x00" * 4, 2, 2)
-    with pytest.raises(ValueError):
-        _png_pixels(b"not a png at all", 2, 2)
-
-    # an out-of-spec depth/color combination is corrupt: ValueError
-    twelve = bytearray(_build_png(3, 3, lambda x, y: (1, 2, 3)))
-    twelve[24] = 12  # IHDR bit-depth byte: 12 is not a PNG depth
-    with pytest.raises(ValueError):
-        _png_pixels(bytes(twelve), 2, 2)
-
-
-def test_png_adam7_interlace_and_palette():
-    """r6: Adam7 interlaced and 8-bit palette PNGs decode in-sandbox; the
-    interlaced result must be pixel-identical to the sequential decode of
-    the same image, palette goes through the PLTE lookup, and truncated
-    pass data still raises at the parse boundary."""
-    from us_equity_datalake_spark.multimodal.columns import _png_pixels
-
-    def pix(x, y):
-        return ((x * 37 + y * 11) % 256, (x * 5 + y * 73) % 256, (x + y * 29) % 256)
-
-    # 11x13 exercises ragged Adam7 pass geometry (not multiples of 8)
-    seq = _png_pixels(_build_png(11, 13, pix), 11, 13)
-    inter = _png_pixels(_build_png(11, 13, pix, interlace=1), 11, 13)
-    assert seq == inter
-    # tiny images leave some Adam7 passes EMPTY (no bytes) — 3x3 and 1x1
-    for wsz, hsz in ((3, 3), (1, 1), (2, 5)):
-        seq = _png_pixels(_build_png(wsz, hsz, pix), wsz, hsz)
-        inter = _png_pixels(_build_png(wsz, hsz, pix, interlace=1), wsz, hsz)
-        assert seq == inter
-
-    # palette: index i -> PLTE rgb; luma of entry 5 = (5, 15, 35) weighted
-    pal_png = _build_png(4, 4, lambda x, y: (5,), channels=1, color_type=3)
-    got = _png_pixels(pal_png, 4, 4)
-    exp = (5 * 0.299 + 15 * 0.587 + 35 * 0.114) / 255.0
-    assert all(abs(g - exp) < 1e-9 for g in got)
-    # interlaced palette composes both paths
-    pal_i = _build_png(9, 6, lambda x, y: ((x + y) % 256,), channels=1,
-                       color_type=3, interlace=1)
-    pal_s = _build_png(9, 6, lambda x, y: ((x + y) % 256,), channels=1,
-                       color_type=3)
-    assert _png_pixels(pal_i, 9, 6) == _png_pixels(pal_s, 9, 6)
-
-    # corrupt: truncate the interlaced stream mid-pass
-    import struct
-    import zlib
-    good = _build_png(11, 13, pix, interlace=1)
-    # rebuild with IDAT holding half the inflated bytes
-    sig, rest = good[:8], good[8:]
-    chunks = []
-    off = 0
-    while off + 8 <= len(rest):
-        (ln,) = struct.unpack(">I", rest[off:off + 4])
-        ct = rest[off + 4:off + 8]
-        chunks.append((ct, rest[off + 8:off + 8 + ln]))
-        off += 12 + ln
-    out = bytearray(sig)
-    for ct, data in chunks:
-        if ct == b"IDAT":
-            raw = zlib.decompress(data)
-            data = zlib.compress(raw[: len(raw) // 2])
-        out += (struct.pack(">I", len(data)) + ct + data
-                + struct.pack(">I", zlib.crc32(ct + data) & 0xFFFFFFFF))
-    with pytest.raises(ValueError):
-        _png_pixels(bytes(out), 4, 4)
-
-
-# ---------------------------------------------------------------------------
-# r6: baseline-JPEG decode (VERDICT r5 #5) — the test carries a minimal
-# baseline encoder (FDCT + quantize + Annex-K Huffman) so the fixture is
-# synthesized in-sandbox, and an INDEPENDENT dequant+IDCT reference so the
-# golden is decode(encode(img)) == reference-recon to 1e-9, with the
-# original-image delta bounded by the chosen quant table.
-# ---------------------------------------------------------------------------
-
-# ITU T.81 Annex K.3 standard Huffman tables (public spec constants):
-# luminance DC (counts, values) and luminance AC — the encoder points every
-# component at table 0, which is legal and keeps the fixture small.
-_K3_DC_COUNTS = [0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0]
-_K3_DC_VALUES = list(range(12))
-_K3_AC_COUNTS = [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125]
-_K3_AC_VALUES = [
-    0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41, 0x06,
-    0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91, 0xA1, 0x08,
-    0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24, 0x33, 0x62, 0x72,
-    0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A, 0x25, 0x26, 0x27, 0x28,
-    0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38, 0x39, 0x3A, 0x43, 0x44, 0x45,
-    0x46, 0x47, 0x48, 0x49, 0x4A, 0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59,
-    0x5A, 0x63, 0x64, 0x65, 0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75,
-    0x76, 0x77, 0x78, 0x79, 0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89,
-    0x8A, 0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-    0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6,
-    0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-    0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1, 0xE2,
-    0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2, 0xF3, 0xF4,
-    0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-]
-_JPEG_ZZ = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-
-def _huff_codes(counts, values):
-    codes, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(counts[length - 1]):
-            codes[values[k]] = (length, code)
-            code += 1
-            k += 1
-        code <<= 1
-    return codes
-
-
-class _JBitWriter:
-    def __init__(self):
-        self.out, self.acc, self.n = bytearray(), 0, 0
-
-    def put(self, val, nbits):
-        for i in reversed(range(nbits)):
-            self.acc = (self.acc << 1) | ((val >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)  # byte stuffing
-                self.acc, self.n = 0, 0
-
-    def flush(self):
-        while self.n:
-            self.put(1, 1)  # pad with 1s per spec
-
-
-def _dct_basis():
-    import numpy as np
-
-    u = np.arange(8).reshape(8, 1)
-    x = np.arange(8).reshape(1, 8)
-    a = 0.5 * np.cos((2 * x + 1) * u * np.pi / 16)
-    a[0, :] *= 1.0 / np.sqrt(2.0)
-    return a
-
-
-def _encode_block(writer, block, q, dc_pred, dc_codes, ac_codes):
-    """FDCT + quantize + entropy-code one 8x8 block; returns new DC pred and
-    the quantized coefficients (zigzag order) for the reference recon."""
-    import numpy as np
-
-    a = _dct_basis()
-    coeffs = a @ (block - 128.0) @ a.T
-    zz = np.array([int(round(coeffs.reshape(-1)[_JPEG_ZZ[i]] / q[i])) for i in range(64)])
-    diff = int(zz[0]) - dc_pred
-
-    def cat(v):
-        return abs(v).bit_length()
-
-    def amp(v, size):
-        return v if v >= 0 else v + (1 << size) - 1
-
-    s = cat(diff)
-    ln, code = dc_codes[s]
-    writer.put(code, ln)
-    if s:
-        writer.put(amp(diff, s), s)
-    run = 0
-    for k in range(1, 64):
-        v = int(zz[k])
-        if v == 0:
-            run += 1
-            continue
-        while run > 15:
-            ln, code = ac_codes[0xF0]  # ZRL
-            writer.put(code, ln)
-            run -= 16
-        s = cat(v)
-        ln, code = ac_codes[(run << 4) | s]
-        writer.put(code, ln)
-        writer.put(amp(v, s), s)
-        run = 0
-    if run:
-        ln, code = ac_codes[0x00]  # EOB
-        writer.put(code, ln)
-    return int(zz[0]), zz
-
-
-def _build_jpeg(img, *, quant=None, subsample="444", dri=0):
-    """Minimal baseline-sequential encoder: gray (h, w) -> 1 component;
-    RGB (h, w, 3) -> YCbCr, 4:4:4 or 4:2:0.  Returns (bytes, y_recon) where
-    y_recon is the INDEPENDENT dequant+IDCT reconstruction of the luma plane
-    (float, pre-clip) the decoder must reproduce."""
-    import struct
-
-    import numpy as np
-
-    img = np.asarray(img, dtype=np.float64)
-    gray = img.ndim == 2
-    fh, fw = img.shape[:2]
-    q = np.array(quant if quant is not None else [1] * 64, dtype=np.float64)
-    if gray:
-        planes = {1: img}
-        comps = [(1, 1, 1, 0)]
-    else:
-        y = 0.299 * img[..., 0] + 0.587 * img[..., 1] + 0.114 * img[..., 2]
-        cb = 128.0 - 0.168736 * img[..., 0] - 0.331264 * img[..., 1] + 0.5 * img[..., 2]
-        cr = 128.0 + 0.5 * img[..., 0] - 0.418688 * img[..., 1] - 0.081312 * img[..., 2]
-        if subsample == "420":
-            comps = [(1, 2, 2, 0), (2, 1, 1, 0), (3, 1, 1, 0)]
-            cb = cb.reshape(fh // 2, 2, fw // 2, 2).mean(axis=(1, 3))
-            cr = cr.reshape(fh // 2, 2, fw // 2, 2).mean(axis=(1, 3))
-        else:
-            comps = [(1, 1, 1, 0), (2, 1, 1, 0), (3, 1, 1, 0)]
-        planes = {1: y, 2: cb, 3: cr}
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = (fw + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (fh + 8 * vmax - 1) // (8 * vmax)
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xdb" + struct.pack(">HB", 67, 0) + bytes(int(v) for v in q)
-    sof = struct.pack(">BHHB", 8, fh, fw, len(comps))
-    for cid, hi, vi, tq in comps:
-        sof += bytes([cid, (hi << 4) | vi, tq])
-    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-    for tc, counts, values in ((0, _K3_DC_COUNTS, _K3_DC_VALUES), (1, _K3_AC_COUNTS, _K3_AC_VALUES)):
-        seg = bytes([tc << 4]) + bytes(counts) + bytes(values)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(seg)) + seg
-    if dri:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, dri)
-    sos = bytes([len(comps)])
-    for cid, *_ in comps:
-        sos += bytes([cid, 0x00])
-    sos += bytes([0, 63, 0])
-    out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-
-    dc_codes = _huff_codes(_K3_DC_COUNTS, _K3_DC_VALUES)
-    ac_codes = _huff_codes(_K3_AC_COUNTS, _K3_AC_VALUES)
-    a = _dct_basis()
-    writer = _JBitWriter()
-    dc_pred = {cid: 0 for cid, *_ in comps}
-    y_recon = np.zeros((mcuy * vmax * 8, mcux * hmax * 8))
-    rst = 0
-    for m in range(mcux * mcuy):
-        if dri and m and m % dri == 0:
-            writer.flush()
-            out += writer.out + bytes([0xFF, 0xD0 + (rst % 8)])
-            writer = _JBitWriter()
-            rst += 1
-            dc_pred = {cid: 0 for cid, *_ in comps}
-        my, mx = divmod(m, mcux)
-        for cid, hi, vi, _tq in comps:
-            plane = planes[cid]
-            ph, pw = plane.shape
-            for by in range(vi):
-                for bx in range(hi):
-                    y0, x0 = (my * vi + by) * 8, (mx * hi + bx) * 8
-                    block = np.full((8, 8), 128.0)
-                    ys, xs = min(8, ph - y0), min(8, pw - x0)
-                    if ys > 0 and xs > 0:
-                        block[:ys, :xs] = plane[y0 : y0 + ys, x0 : x0 + xs]
-                    dc_pred[cid], zz = _encode_block(
-                        writer, block, q, dc_pred[cid], dc_codes, ac_codes)
-                    if cid == 1:  # independent reference recon of luma
-                        deq = np.zeros(64)
-                        deq[_JPEG_ZZ] = zz * q
-                        y_recon[y0 : y0 + 8, x0 : x0 + 8] = a.T @ deq.reshape(8, 8) @ a + 128.0
-    writer.flush()
-    out += writer.out + b"\xff\xd9"
-    return bytes(out), y_recon[:fh, :fw]
-
-
-def test_decode_image_real_jpeg_path(spark):
-    """r6: baseline JPEG decodes in-sandbox — gray, YCbCr 4:4:4 and 4:2:0
-    (multi-Y-block MCU assembly), restart markers, resize index math, the
-    garbage-bytes arm and the progressive/12-bit PIL gates."""
-    import numpy as np
-
-    from us_equity_datalake_spark.multimodal.columns import _jpeg_pixels
-
-    rng = np.random.RandomState(5)
-
-    # gray 24x16, quant=1: decoder output == independent reference recon
-    img = (rng.rand(24, 16) * 255).round()
-    payload, ref = _build_jpeg(img)
-    got = np.array(_jpeg_pixels(payload, 16, 24)).reshape(24, 16) * 255.0
-    np.testing.assert_allclose(got, np.clip(ref, 0, 255), atol=1e-9)
-    assert np.abs(got - img).max() <= 4.0  # quant=1 keeps luma within ~rounding
-
-    # non-trivial quant table: reference equality still exact, delta grows
-    q50 = [16, 11, 10, 16, 24, 40, 51, 61] * 8
-    payload_q, ref_q = _build_jpeg(img, quant=q50)
-    got_q = np.array(_jpeg_pixels(payload_q, 16, 24)).reshape(24, 16) * 255.0
-    np.testing.assert_allclose(got_q, np.clip(ref_q, 0, 255), atol=1e-9)
-
-    # RGB 4:4:4 — decoder emits the luma plane
-    rgb = (rng.rand(16, 8, 3) * 255).round()
-    payload3, ref3 = _build_jpeg(rgb, subsample="444")
-    got3 = np.array(_jpeg_pixels(payload3, 8, 16)).reshape(16, 8) * 255.0
-    np.testing.assert_allclose(got3, np.clip(ref3, 0, 255), atol=1e-9)
-
-    # RGB 4:2:0 — four Y blocks per MCU, chroma entropy-synced but skipped
-    rgb2 = (rng.rand(16, 16, 3) * 255).round()
-    payload4, ref4 = _build_jpeg(rgb2, subsample="420")
-    got4 = np.array(_jpeg_pixels(payload4, 16, 16)).reshape(16, 16) * 255.0
-    np.testing.assert_allclose(got4, np.clip(ref4, 0, 255), atol=1e-9)
-
-    # restart markers: DRI=1 resets DC predictors every MCU
-    payload5, ref5 = _build_jpeg(img, dri=1)
-    got5 = np.array(_jpeg_pixels(payload5, 16, 24)).reshape(24, 16) * 255.0
-    np.testing.assert_allclose(got5, np.clip(ref5, 0, 255), atol=1e-9)
-
-    # resize picks the same (i*src)//dst indexes as the BMP/PNG math
-    halves = np.zeros((16, 16))
-    halves[:, 8:] = 255.0
-    payload6, _ = _build_jpeg(halves)
-    px = _jpeg_pixels(payload6, 2, 2)
-    assert [round(p) for p in px] == [0, 1, 0, 1]
-
-    # the Spark decode path routes .jpg payloads through the real decoder
-    schema = T.StructType([T.StructField("asset_id", T.LongType()),
-                           T.StructField("payload", T.BinaryType())])
-    df = spark.createDataFrame([Row(asset_id=1, payload=bytearray(payload))], schema)
-    got_spark = decode_image(df, width=16, height=24, fake=False).collect()[0]["pixels"]
-    np.testing.assert_allclose(
-        np.array(got_spark).reshape(24, 16) * 255.0, np.clip(ref, 0, 255), atol=1e-9)
-
-    # garbage bytes: parse-boundary ValueError
-    with pytest.raises(ValueError):
-        _jpeg_pixels(b"\xff\xd8" + b"\x00" * 16, 2, 2)
-    with pytest.raises(ValueError):
-        _jpeg_pixels(b"not a jpeg", 2, 2)
-    truncated = payload[: len(payload) // 2]
-    with pytest.raises(ValueError):
-        _jpeg_pixels(truncated, 2, 2)
-
-    # a baseline stream relabeled SOF2 is CORRUPT progressive input (a DC
-    # scan must have Se=0): ValueError, not a gate (r6 decodes real SOF2)
-    prog = payload.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(ValueError):
-        _jpeg_pixels(prog, 2, 2)
-    # 12-bit gate names the PIL path
-    i = payload.index(b"\xff\xc0")
-    twelve = payload[: i + 4] + b"\x0c" + payload[i + 5 :]
-    with pytest.raises(NotImplementedError):
-        _jpeg_pixels(twelve, 2, 2)
-
-
-def test_png_16bit_and_subbyte_depths():
-    """r6: the PNG decoder is spec-complete on depths — 16-bit samples are
-    big-endian pairs scaled 255/65535, 1/2/4-bit gray scales by
-    255/(2^d - 1), sub-byte palette indexes PLTE directly, and every depth
-    composes with Adam7 interlacing."""
-    from us_equity_datalake_spark.multimodal.columns import _png_pixels
-
-    # 16-bit gray: value 32768 -> 32768/65535 luma
-    g16 = _build_png(4, 3, lambda x, y: (32768,), channels=1, bit_depth=16)
-    got = _png_pixels(g16, 4, 3)
-    assert all(abs(v - 32768 / 65535.0) < 1e-9 for v in got)
-
-    # 16-bit RGB golden with varying values (exercises filters over 6-byte bpp)
-    def pix16(x, y):
-        return ((x * 4111 + y * 257) % 65536, (x * 31 + y * 7177) % 65536,
-                (x + y * 12289) % 65536)
-    rgb16 = _png_pixels(_build_png(5, 7, pix16), 5, 7)  # 8-bit baseline...
-    # build the real 16-bit stream and compare against direct luma math
-    p16 = _png_pixels(_build_png(5, 7, pix16, bit_depth=16), 5, 7)
-    exp = [
-        (0.299 * pix16(x, y)[0] + 0.587 * pix16(x, y)[1] + 0.114 * pix16(x, y)[2])
-        * (255.0 / 65535.0) / 255.0
-        for y in range(7) for x in range(5)
-    ]
-    assert all(abs(g - e) < 1e-9 for g, e in zip(p16, exp))
-    assert rgb16 != p16  # the 8-bit build truncates: different image, by design
-
-    # 4-bit gray gradient (ragged width: 5 px -> 2.5 bytes padded to 3)
-    g4 = _build_png(5, 4, lambda x, y: ((x + y) % 16,), channels=1, bit_depth=4)
-    got4 = _png_pixels(g4, 5, 4)
-    exp4 = [((x + y) % 16) * (255.0 / 15.0) / 255.0 for y in range(4) for x in range(5)]
-    assert all(abs(g - e) < 1e-9 for g, e in zip(got4, exp4))
-
-    # 1-bit gray checkerboard
-    g1 = _build_png(9, 2, lambda x, y: ((x + y) % 2,), channels=1, bit_depth=1)
-    got1 = _png_pixels(g1, 9, 2)
-    assert [round(v) for v in got1] == [(x + y) % 2 for y in range(2) for x in range(9)]
-
-    # 2-bit palette: index -> PLTE rgb luma
-    pal = [(0, 0, 0), (255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    p2 = _build_png(6, 3, lambda x, y: ((x % 4),), channels=1, color_type=3,
-                    bit_depth=2, palette=pal)
-    got2 = _png_pixels(p2, 6, 3)
-    lum = [0.0, 0.299, 0.587, 0.114]
-    exp2 = [lum[x % 4] for y in range(3) for x in range(6)]
-    assert all(abs(g - e) < 1e-9 for g, e in zip(got2, exp2))
-
-    # 16-bit + Adam7 compose: interlaced == sequential
-    seq = _png_pixels(_build_png(11, 5, pix16, bit_depth=16), 11, 5)
-    inter = _png_pixels(_build_png(11, 5, pix16, bit_depth=16, interlace=1), 11, 5)
-    assert seq == inter
-    # 4-bit + Adam7 compose
-    seq4 = _png_pixels(_build_png(7, 9, lambda x, y: ((3 * x + y) % 16,),
-                                  channels=1, bit_depth=4), 7, 9)
-    int4 = _png_pixels(_build_png(7, 9, lambda x, y: ((3 * x + y) % 16,),
-                                  channels=1, bit_depth=4, interlace=1), 7, 9)
-    assert seq4 == int4
-
-    # spec-invalid combos are corrupt: ValueError
-    for bad in (
-        _build_png(3, 3, lambda x, y: (1, 2, 3), bit_depth=4),     # RGB @ 4
-        _build_png(3, 3, lambda x, y: (1,), channels=1, color_type=3,
-                   bit_depth=16),                                   # palette @ 16
-    ):
-        with pytest.raises(ValueError):
-            _png_pixels(bad, 2, 2)
-
-
-# ---------------------------------------------------------------------------
-# r6 session 2: progressive-JPEG decode — the test carries a minimal
-# progressive encoder (spectral selection + successive approximation with
-# the spec's correction-bit buffering, ITU T.81 Annex G) so fixtures are
-# synthesized in-sandbox.  The golden is decode(encode(img)) == the
-# independent dequant+IDCT of the GROUND-TRUTH coefficients, so a
-# symmetric encode/decode bug cannot hide: the encoder's input coefficients
-# are the oracle, not its output stream.
-# ---------------------------------------------------------------------------
-
-
-# Progressive AC scans need EOBn symbols (0x10..0xE0) which the Annex-K
-# sequential tables do not define; progressive encoders ship custom tables.
-# A flat 9-bit canonical table over every symbol progressive AC coding can
-# emit (EOB0-14, ZRL, and all run/size pairs) is legal (incomplete tables
-# are allowed) and keeps the fixture simple.
-_PROG_AC_VALUES = (
-    [r << 4 for r in range(15)] + [0xF0]
-    + [(r << 4) | s for r in range(16) for s in range(1, 11)]
-)
-_PROG_AC_COUNTS = [0] * 8 + [len(_PROG_AC_VALUES)] + [0] * 7
-
-
-def _quantized_blocks(plane, q):
-    """Ground-truth zigzag coefficient grid for one component plane."""
-    import numpy as np
-
-    a = _dct_basis()
-    ph, pw = plane.shape
-    bh, bw = (ph + 7) // 8, (pw + 7) // 8
-    zz = np.zeros((bh, bw, 64), np.int64)
-    for by in range(bh):
-        for bx in range(bw):
-            block = np.full((8, 8), 128.0)
-            ys, xs = min(8, ph - by * 8), min(8, pw - bx * 8)
-            block[:ys, :xs] = plane[by * 8 : by * 8 + ys, bx * 8 : bx * 8 + xs]
-            c = a @ (block - 128.0) @ a.T
-            zz[by, bx] = [int(round(c.reshape(-1)[_JPEG_ZZ[i]] / q[i])) for i in range(64)]
-    return zz
-
-
-class _ProgACState:
-    """EOB-run + buffered-correction-bit state for one AC scan."""
-
-    def __init__(self, writer, ac_codes):
-        self.w, self.codes = writer, ac_codes
-        self.eobrun, self.bebuf = 0, []
-
-    def flush_eob(self):
-        if self.eobrun > 0:
-            r = self.eobrun.bit_length() - 1
-            ln, code = self.codes[r << 4]
-            self.w.put(code, ln)
-            if r:
-                self.w.put(self.eobrun - (1 << r), r)
-            self.eobrun = 0
-        for b in self.bebuf:
-            self.w.put(b, 1)
-        self.bebuf = []
-
-
-def _enc_ac_first(st, vals, raw, ss, se):
-    """One block of an AC first scan (Ah=0): EOB-run + run/size coding of
-    the point-transformed band values."""
-    if not vals[ss : se + 1].any():
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            st.flush_eob()
-        return
-    r = 0
-    for k in range(ss, se + 1):
-        v = int(vals[k])
-        if v == 0:
-            r += 1
-            continue
-        st.flush_eob()
-        while r > 15:
-            ln, code = st.codes[0xF0]
-            st.w.put(code, ln)
-            r -= 16
-        s = abs(v).bit_length()
-        ln, code = st.codes[(r << 4) | s]
-        st.w.put(code, ln)
-        st.w.put(v if v >= 0 else v + (1 << s) - 1, s)
-        r = 0
-    if r > 0:
-        st.eobrun += 1
-        if st.eobrun == 0x7FFF:
-            st.flush_eob()
-
-
-def _enc_ac_refine(st, absvals, raw, ss, se):
-    """One block of an AC refinement scan (Ah>0) — libjpeg jcphuff ordering.
-
-    TWO correction buffers, as in the spec: ``br`` holds this block's
-    correction bits since the last emitted symbol (they follow that symbol),
-    while ``st.bebuf`` holds bits riding with the pending EOB run (they
-    follow the EOBn code).  Conflating them emits a block's corrections
-    BEFORE its first symbol — a one-buffer desync this test suite caught.
-    ZRLs flush at every nonzero, guarded by the last-newly-significant
-    position; trailing corrections fold into the EOB run."""
-    eob = 0
-    for k in range(ss, se + 1):
-        if absvals[k] == 1:
-            eob = k
-    r = 0
-    br = []
-    for k in range(ss, se + 1):
-        t = int(absvals[k])
-        if t == 0:
-            r += 1
-            continue
-        while r > 15 and k <= eob:
-            st.flush_eob()
-            ln, code = st.codes[0xF0]
-            st.w.put(code, ln)
-            r -= 16
-            for b in br:
-                st.w.put(b, 1)
-            br = []
-        if t > 1:  # history-nonzero: correction bit rides with the next symbol
-            br.append(t & 1)
-            continue
-        st.flush_eob()
-        ln, code = st.codes[(r << 4) | 1]
-        st.w.put(code, ln)
-        st.w.put(1 if raw[k] >= 0 else 0, 1)
-        for b in br:
-            st.w.put(b, 1)
-        br = []
-        r = 0
-    if r > 0 or br:
-        st.eobrun += 1
-        st.bebuf.extend(br)
-        if st.eobrun == 0x7FFF:
-            st.flush_eob()
-
-
-def _build_progressive_jpeg(img, scans, *, quant=None, subsample="444", dri=0):
-    """Progressive encoder: ``scans`` is a list of dicts with keys
-    comps (list of component ids), ss, se, ah, al.  Returns
-    (bytes, y_recon) with y_recon the independent dequant+IDCT of the
-    ground-truth luma coefficients."""
-    import struct
-
-    import numpy as np
-
-    img = np.asarray(img, dtype=np.float64)
-    q = np.array(quant if quant is not None else [1] * 64, dtype=np.float64)
-    if img.ndim == 2:
-        fh, fw = img.shape
-        comps = [(1, 1, 1, 0)]
-        planes = {1: img}
-    else:
-        fh, fw = img.shape[:2]
-        y = 0.299 * img[..., 0] + 0.587 * img[..., 1] + 0.114 * img[..., 2]
-        cb = 128.0 - 0.168736 * img[..., 0] - 0.331264 * img[..., 1] + 0.5 * img[..., 2]
-        cr = 128.0 + 0.5 * img[..., 0] - 0.418688 * img[..., 1] - 0.081312 * img[..., 2]
-        if subsample == "420":
-            comps = [(1, 2, 2, 0), (2, 1, 1, 0), (3, 1, 1, 0)]
-            cb = cb.reshape(fh // 2, 2, fw // 2, 2).mean(axis=(1, 3))
-            cr = cr.reshape(fh // 2, 2, fw // 2, 2).mean(axis=(1, 3))
-        else:
-            comps = [(1, 1, 1, 0), (2, 1, 1, 0), (3, 1, 1, 0)]
-        planes = {1: y, 2: cb, 3: cr}
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcux = (fw + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (fh + 8 * vmax - 1) // (8 * vmax)
-    # ground-truth coefficients over MCU-padded grids
-    zz = {}
-    for cid, hi, vi, _tq in comps:
-        plane = planes[cid]
-        padded = np.full((mcuy * vi * 8, mcux * hi * 8), 128.0)
-        padded[: plane.shape[0], : plane.shape[1]] = plane
-        zz[cid] = _quantized_blocks(padded, q)
-
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xdb" + struct.pack(">HB", 67, 0) + bytes(int(v) for v in q)
-    sof = struct.pack(">BHHB", 8, fh, fw, len(comps))
-    for cid, hi, vi, tq in comps:
-        sof += bytes([cid, (hi << 4) | vi, tq])
-    out += b"\xff\xc2" + struct.pack(">H", 2 + len(sof)) + sof  # SOF2
-    for tc, counts, values in ((0, _K3_DC_COUNTS, _K3_DC_VALUES),
-                               (1, _PROG_AC_COUNTS, _PROG_AC_VALUES)):
-        seg = bytes([tc << 4]) + bytes(counts) + bytes(values)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(seg)) + seg
-    if dri:
-        out += b"\xff\xdd" + struct.pack(">HH", 4, dri)
-
-    dc_codes = _huff_codes(_K3_DC_COUNTS, _K3_DC_VALUES)
-    ac_codes = _huff_codes(_PROG_AC_COUNTS, _PROG_AC_VALUES)
-    comp_by_id = {c[0]: c for c in comps}
-
-    def cat(v):
-        return abs(v).bit_length()
-
-    for scan in scans:
-        scids, ss, se, ah, al = (scan["comps"], scan["ss"], scan["se"],
-                                 scan["ah"], scan["al"])
-        sos = bytes([len(scids)])
-        for cid in scids:
-            sos += bytes([cid, 0x00])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
-        writer = _JBitWriter()
-        st = _ProgACState(writer, ac_codes)
-        dc_pred = {cid: 0 for cid in scids}
-        rst = 0
-        interleaved = len(scids) > 1
-        if interleaved:
-            units = [("mcu", m) for m in range(mcux * mcuy)]
-        else:
-            cid0 = scids[0]
-            _, hi, vi, _ = comp_by_id[cid0]
-            cw = (fw * hi + hmax - 1) // hmax
-            ch = (fh * vi + vmax - 1) // vmax
-            bw_, bh_ = (cw + 7) // 8, (ch + 7) // 8
-            units = [("blk", b) for b in range(bw_ * bh_)]
-        for ui, (_kind, u) in enumerate(units):
-            if dri and ui and ui % dri == 0:
-                st.flush_eob()
-                writer.flush()
-                out += writer.out + bytes([0xFF, 0xD0 + (rst % 8)])
-                writer = _JBitWriter()
-                st = _ProgACState(writer, ac_codes)
-                rst += 1
-                dc_pred = {cid: 0 for cid in scids}
-            blocks = []
-            if interleaved:
-                my, mx = divmod(u, mcux)
-                for cid in scids:
-                    _, hi, vi, _ = comp_by_id[cid]
-                    for by in range(vi):
-                        for bx in range(hi):
-                            blocks.append((cid, my * vi + by, mx * hi + bx))
-            else:
-                by, bx = divmod(u, bw_)
-                blocks.append((scids[0], by, bx))
-            for cid, by, bx in blocks:
-                raw = zz[cid][by, bx]
-                if ss == 0 and ah == 0:  # DC first
-                    v = int(raw[0]) >> al
-                    diff = v - dc_pred[cid]
-                    dc_pred[cid] = v
-                    s = cat(diff)
-                    ln, code = dc_codes[s]
-                    writer.put(code, ln)
-                    if s:
-                        writer.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
-                elif ss == 0:  # DC refine
-                    writer.put((int(raw[0]) >> al) & 1, 1)
-                elif ah == 0:  # AC first: sign-preserving magnitude shift
-                    vals = np.sign(raw) * (np.abs(raw) >> al)
-                    _enc_ac_first(st, vals, raw, ss, se)
-                else:  # AC refine
-                    _enc_ac_refine(st, np.abs(raw) >> al, raw, ss, se)
-        st.flush_eob()
-        writer.flush()
-        out += writer.out
-    out += b"\xff\xd9"
-    # independent recon of the luma ground truth
-    a = _dct_basis()
-    lzz = zz[comps[0][0]]
-    y_recon = np.zeros((lzz.shape[0] * 8, lzz.shape[1] * 8))
-    for by in range(lzz.shape[0]):
-        for bx in range(lzz.shape[1]):
-            deq = np.zeros(64)
-            deq[_JPEG_ZZ] = lzz[by, bx] * q
-            y_recon[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
-                a.T @ deq.reshape(8, 8) @ a + 128.0
-            )
-    return bytes(out), y_recon[:fh, :fw]
-
-
-_FULL_LADDER = [
-    dict(comps=[1], ss=0, se=0, ah=0, al=1),    # DC first, 1 bit held back
-    dict(comps=[1], ss=1, se=5, ah=0, al=2),    # AC low band, coarse
-    dict(comps=[1], ss=1, se=5, ah=2, al=1),    # AC low band, +1 bit
-    dict(comps=[1], ss=6, se=63, ah=0, al=1),   # AC high band, coarse
-    dict(comps=[1], ss=0, se=0, ah=1, al=0),    # DC refinement
-    dict(comps=[1], ss=1, se=5, ah=1, al=0),    # AC low band, final bit
-    dict(comps=[1], ss=6, se=63, ah=1, al=0),   # AC high band, final bit
-]
-
-
-def test_progressive_jpeg_full_ladder_gray():
-    """The complete progressive ladder (spectral selection x successive
-    approximation, DC and AC refinements) recovers the ground-truth
-    coefficients bit-exactly: decode == independent recon to 1e-9."""
-    import numpy as np
-
-    from us_equity_datalake_spark.multimodal.columns import _jpeg_pixels
-
-    rng = np.random.RandomState(7)
-    img = np.clip(rng.randint(0, 256, (24, 17)).astype(float), 0, 255)
-    payload, recon = _build_progressive_jpeg(img, _FULL_LADDER)
-    got = _jpeg_pixels(payload, 17, 24)
-    exp = np.clip(recon, 0.0, 255.0) / 255.0
-    assert np.allclose(np.array(got).reshape(24, 17), exp, atol=1e-9)
-
-
-def test_progressive_jpeg_rgb_420_interleaved_dc():
-    """Interleaved DC scans with 4:2:0 sampling factors + per-component AC
-    scans: the chroma scans must be entropy-decoded for stream sync, the
-    luma must match its ground-truth recon."""
-    import numpy as np
-
-    from us_equity_datalake_spark.multimodal.columns import _jpeg_pixels
-
-    rng = np.random.RandomState(11)
-    img = rng.randint(0, 256, (16, 16, 3)).astype(float)
-    scans = [
-        dict(comps=[1, 2, 3], ss=0, se=0, ah=0, al=1),
-        dict(comps=[1, 2, 3], ss=0, se=0, ah=1, al=0),
-        dict(comps=[1], ss=1, se=63, ah=0, al=0),
-        dict(comps=[2], ss=1, se=63, ah=0, al=0),
-        dict(comps=[3], ss=1, se=63, ah=0, al=0),
-    ]
-    payload, recon = _build_progressive_jpeg(img, scans, subsample="420")
-    got = _jpeg_pixels(payload, 16, 16)
-    exp = np.clip(recon, 0.0, 255.0) / 255.0
-    assert np.allclose(np.array(got).reshape(16, 16), exp, atol=1e-9)
-
-
-def test_progressive_jpeg_quantized_smooth_image():
-    """With a real quant table on a smooth image (long zero runs, EOB runs
-    spanning blocks), the decode still equals the recon of the quantized
-    ground truth, and differs from the source by a bounded quant error."""
-    import numpy as np
-
-    from us_equity_datalake_spark.multimodal.columns import _jpeg_pixels
-
-    yy, xx = np.mgrid[0:32, 0:24]
-    img = 128.0 + 60.0 * np.sin(xx / 7.0) * np.cos(yy / 9.0)
-    quant = [16] + [11] * 63
-    payload, recon = _build_progressive_jpeg(img, _FULL_LADDER, quant=quant)
-    got = np.array(_jpeg_pixels(payload, 24, 32)).reshape(32, 24)
-    exp = np.clip(recon, 0.0, 255.0) / 255.0
-    assert np.allclose(got, exp, atol=1e-9)
-    assert np.abs(got * 255.0 - img).max() < 40  # bounded by the quant step
-
-
-def test_progressive_jpeg_restart_intervals():
-    """RSTn markers inside progressive scans reset DC predictors and the
-    EOB run; the decode must still be exact."""
-    import numpy as np
-
-    from us_equity_datalake_spark.multimodal.columns import _jpeg_pixels
-
-    rng = np.random.RandomState(23)
-    img = rng.randint(0, 256, (16, 32)).astype(float)
-    payload, recon = _build_progressive_jpeg(img, _FULL_LADDER, dri=3)
-    got = _jpeg_pixels(payload, 32, 16)
-    exp = np.clip(recon, 0.0, 255.0) / 255.0
-    assert np.allclose(np.array(got).reshape(16, 32), exp, atol=1e-9)
-
-
-def test_progressive_jpeg_error_arms():
-    import numpy as np
-    import pytest as _pytest
-
-    from us_equity_datalake_spark.multimodal.columns import _jpeg_pixels
-
-    rng = np.random.RandomState(3)
-    img = rng.randint(0, 256, (8, 8)).astype(float)
-    payload, _ = _build_progressive_jpeg(img, _FULL_LADDER)
-    # truncation mid-scan raises at the parse boundary
-    with _pytest.raises(ValueError):
-        _jpeg_pixels(payload[: len(payload) // 2], 4, 4)
-    # dropping EOI raises (scan walk must find a terminator)
-    with _pytest.raises(ValueError):
-        _jpeg_pixels(payload[:-2], 4, 4)
-
-
-def test_decode_image_progressive_jpeg_spark_path(spark):
-    """End-to-end: a progressive JPEG payload through decode_image's
-    mapInPandas kernel matches the ground-truth recon."""
-    import numpy as np
-
-    rng = np.random.RandomState(31)
-    img = rng.randint(0, 256, (16, 16)).astype(float)
-    payload, recon = _build_progressive_jpeg(img, _FULL_LADDER)
-    schema = T.StructType([T.StructField("asset_id", T.LongType()),
-                           T.StructField("payload", T.BinaryType())])
-    df = spark.createDataFrame([Row(asset_id=1, payload=bytearray(payload))], schema)
-    got = decode_image(df, width=16, height=16, fake=False).collect()[0]["pixels"]
-    exp = (np.clip(recon, 0, 255) / 255.0).reshape(-1)
-    assert np.allclose(np.array(got), exp, atol=1e-9)
+import os
+
+from us_equity_datalake_spark.plans import REGISTRY
+from us_equity_datalake_spark.sources.registry import DEFAULT_SF_DIR, load_table
+
+SF_TINY = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")  # the smallest generated sf
+
+
+def test_metadata_extraction_jvm_side(spark):
+    out = {
+        r["doc_id"]: (r["n_bytes"], r["sha256"])
+        for r in REGISTRY["multimodal_binary_metadata"].fn(spark, SF_TINY).collect()
+    }
+    texts = {r["doc_id"]: r["text"] for r in load_table(spark, "documents", SF_TINY).collect()}
+    assert out and out.keys() == texts.keys()
+    for doc_id, text in texts.items():
+        payload = text.encode("utf-8")
+        assert out[doc_id] == (len(payload), hashlib.sha256(payload).hexdigest())

@@ -315,29 +315,6 @@ def test_scd2_invariants(spark, case):
 
 
 # ---------------------------------------------------------------------------
-# GIF LZW — decode(encode(x)) == x for arbitrary index streams (pure Python,
-# no Spark job, so this property can afford real example counts)
-# ---------------------------------------------------------------------------
-
-
-@settings(max_examples=80, deadline=None)
-@given(
-    st.integers(min_value=2, max_value=8),
-    st.data(),
-)
-def test_gif_lzw_roundtrip_property(min_code, data):
-    from us_equity_datalake_spark.multimodal.columns import _gif_lzw_decode
-    from tests.test_multimodal import _gif_lzw_encode
-
-    nsym = 1 << min_code
-    idx = data.draw(
-        st.lists(st.integers(0, nsym - 1), min_size=1, max_size=400)
-    )
-    enc = _gif_lzw_encode(min_code, idx)
-    assert _gif_lzw_decode(min_code, enc, len(idx)) == idx
-
-
-# ---------------------------------------------------------------------------
 # Theta sketch — exhaustive regime (distinct keys <= k) is EXACT for any
 # input multiset; estimates keep intersection <= union in every regime
 # ---------------------------------------------------------------------------

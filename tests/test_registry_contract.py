@@ -64,3 +64,46 @@ def test_scratch_dir_removed_at_process_exit(tmp_path):
     assert os.path.dirname(path) == str(tmp_path)
     assert not os.path.exists(path)
     assert os.listdir(tmp_path) == []
+
+
+def test_no_orphan_operators():
+    """Every public top-level function or class in ``operators/`` is named
+    (as a whole word) in some ``.py`` file outside ``tests/`` besides its own
+    definition: an operator that only its tests reach is dead weight.
+    ``perfbench/`` counts as a caller.  No Spark session is started."""
+    import ast
+    import os
+    import re
+    from collections import Counter
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ops_dir = os.path.join(repo, "us_equity_datalake_spark", "operators")
+    words: dict[str, Counter] = {}
+    for root, dirs, files in os.walk(repo):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "__")) and
+                   os.path.join(root, d) != os.path.join(repo, "tests")]
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(root, f)
+                with open(path, encoding="utf-8") as fh:
+                    words[path] = Counter(re.findall(r"\w+", fh.read()))
+
+    orphans = []
+    for f in sorted(os.listdir(ops_dir)):
+        if not f.endswith(".py"):
+            continue
+        path = os.path.join(ops_dir, f)
+        with open(path, encoding="utf-8") as fh:
+            lines = fh.read().splitlines()
+        for node in ast.parse("\n".join(lines)).body:
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                continue
+            if node.name.startswith("_"):
+                continue
+            # the definition's own span (decorators, docstring, recursion)
+            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
+            own = re.findall(r"\w+", "\n".join(lines[start - 1:node.end_lineno]))
+            uses = sum(c[node.name] for c in words.values()) - own.count(node.name)
+            if uses <= 0:
+                orphans.append(f"operators/{f}::{node.name}")
+    assert not orphans, f"operators reached by no code outside tests/: {orphans}"

@@ -15,6 +15,7 @@ min/max index of Delta/Iceberg/Hudi) would prune at the FILE level.
 
 import os
 
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -23,6 +24,8 @@ from us_equity_datalake_spark.operators import zorder
 
 N_SIDE = 512          # x,y grid in [0, 512)
 N_FILES = 32
+ROWS_PER_FILE = N_SIDE * N_SIDE // N_FILES
+Z_BITS = 10           # Morton bits per dimension (covers N_SIDE)
 BOX = 64              # predicate: x < 64 AND y < 64
 
 
@@ -61,16 +64,27 @@ def layouts(spark, tmp_path_factory):
         F.floor(F.col("id") / N_SIDE).alias("y"),
     )
     paths = {k: os.path.join(root, k) for k in ("zorder", "xsort", "random")}
-    # z-ordered: range-partition + sort by the Morton key, key dropped
+    # The sorted layouts are written as ONE sorted partition cut into files
+    # of ROWS_PER_FILE rows, so every file is a contiguous key range fixed by
+    # the data alone.  (repartitionByRange takes its boundaries from a
+    # sampler seeded by the RDD id, so its files would vary with whatever
+    # ran earlier in the session.)
+    # z-ordered: sort by the Morton key, key dropped
     (
-        grid.withColumn("__z", zorder.z_value([F.col("x"), F.col("y")], bits=10))
-        .repartitionByRange(N_FILES, "__z")
+        grid.withColumn("__z", zorder.z_value([F.col("x"), F.col("y")], bits=Z_BITS))
+        .coalesce(1)
         .sortWithinPartitions("__z")
         .drop("__z")
-        .write.parquet(paths["zorder"])
+        .write.option("maxRecordsPerFile", ROWS_PER_FILE)
+        .parquet(paths["zorder"])
     )
     # single-dimension sort: prunes on x, blind on y
-    grid.repartitionByRange(N_FILES, "x").sortWithinPartitions("x").write.parquet(paths["xsort"])
+    (
+        grid.coalesce(1)
+        .sortWithinPartitions("x")
+        .write.option("maxRecordsPerFile", ROWS_PER_FILE)
+        .parquet(paths["xsort"])
+    )
     # unclustered: hash shuffle, every file spans the full x/y range
     grid.repartition(N_FILES).write.parquet(paths["random"])
     return paths
@@ -137,6 +151,31 @@ def test_file_footer_stats_give_file_level_skipping(layouts):
     # it to a few z-range files — the file-level skip a min/max index buys
     assert hit_r == N_FILES
     assert hit_z <= max(2, N_FILES // 8)
+
+
+def _morton(x, y):
+    """2-dim Morton key of non-negative int arrays: x owns the even bits
+    (the bit order of ``zorder.z_value``)."""
+    z = np.zeros_like(x)
+    for i in range(Z_BITS):
+        z |= ((x >> i) & 1) << (2 * i) | ((y >> i) & 1) << (2 * i + 1)
+    return z
+
+
+def test_zorder_files_are_aligned_morton_blocks(layouts):
+    path = layouts["zorder"]
+    blocks = []
+    for f in sorted(os.listdir(path)):
+        if not f.endswith(".parquet"):
+            continue
+        t = pq.read_table(os.path.join(path, f))
+        z = _morton(t.column("x").to_numpy().astype(np.int64), t.column("y").to_numpy().astype(np.int64))
+        lo = int(z.min())
+        assert lo % ROWS_PER_FILE == 0 and int(z.max()) == lo + ROWS_PER_FILE - 1, (f, lo, int(z.max()))
+        assert len(z) == ROWS_PER_FILE, (f, len(z))
+        blocks.append(lo // ROWS_PER_FILE)
+    # disjoint and covering: each of the N_FILES aligned blocks exactly once
+    assert sorted(blocks) == list(range(N_FILES)), blocks
 
 
 def test_layout_diag_survives_missing_stats_and_columns(tmp_path):

@@ -191,7 +191,6 @@ COMPUTE_NOTES_R7 = {
 UDF_PATH = {
     "filing_sentiment_agg": "pandas-UDF chunker + model kernel (the sanctioned Arrow path)",
     "doc_fixed_chunks": "pandas-UDF chunker",
-    "multimodal_binary_metadata": "mapInPandas decode plumbing",
 }
 
 COMPUTE_NOTES = {

@@ -2,14 +2,23 @@
 """Per-query job/stage profile via the Spark event log (guide §1/§7).
 
 Runs the named queries (bench protocol: noop sink, warm second run timed)
-with ``spark.eventLog.enabled`` and then parses the event log into a
-per-query breakdown: wall seconds, Spark job count, per-job duration with
-the job description/call site, and per-stage task counts + shuffle bytes.
+on the engine's own session (``session.get_spark``) with
+``spark.eventLog.enabled`` and then parses the event log into a per-query
+breakdown: wall seconds, Spark job count, and per-job duration and task
+count with the job description/call site.
 This is how we find WHERE a 5 s query spends its time — scheduling overhead
 (many tiny jobs), one slow stage, or shuffle volume.
 
+With ``--filter PREFIX`` and no names, every registered query with that
+prefix is profiled (``--filter ''`` surveys the whole registry); ``--out``
+writes one JSON row per query — wall, job count, task count, in-job seconds
+and the slowest job's (seconds, tasks) — to find queries bottlenecked on a
+low-parallelism job (1-4 tasks carrying most of the wall) or on job-count
+overhead (guide §1/§2.5).
+
 Usage:
     python tools/profile_query.py [--sf DIR] [--runs N] query [query ...]
+    python tools/profile_query.py [--sf DIR] --filter PREFIX [--out FILE]
 """
 
 from __future__ import annotations
@@ -19,6 +28,7 @@ import json
 import os
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
@@ -32,52 +42,59 @@ def main() -> None:
     ap.add_argument("--all", action="store_true",
                     help="include untagged jobs (streaming engine batches set "
                     "their own description) in the chronological view")
-    ap.add_argument("queries", nargs="+")
+    ap.add_argument("--filter", default=None, metavar="PREFIX",
+                    help="with no query names: every registered query with this prefix")
+    ap.add_argument("--out", default=None, metavar="FILE",
+                    help="write one JSON row per query (wall, njobs, ntasks, injob, "
+                    "top_job_s, top_job_tasks)")
+    ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
+    if not args.queries and args.filter is None:
+        ap.error("name the queries or pass --filter PREFIX")
 
     evdir = f"/tmp/quantlake_eventlog_{os.getpid()}"
     os.makedirs(evdir, exist_ok=True)
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", args.sf)
+    # the event log is a launch-time conf: hand it to the JVM that
+    # get_spark starts, so the profiled session is the engine's own
+    os.environ["PYSPARK_SUBMIT_ARGS"] = (
+        "--conf spark.eventLog.enabled=true "
+        f"--conf spark.eventLog.dir={evdir} "
+        "--conf spark.eventLog.compress=false "
+        "--conf spark.eventLog.rolling.enabled=false pyspark-shell")
 
-    from pyspark.sql import SparkSession
+    from us_equity_datalake_spark.session import get_spark
 
-    # mirror session.get_spark but with the event log on
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    from us_equity_datalake_spark import session as sess
-
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", sess._driver_memory())
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", evdir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-    )
-    for k, v in sess._DEFAULTS.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("profile")
     app_id = spark.sparkContext.applicationId
 
     import __spark_entry__ as entrymod
 
     qmap = entrymod.queries()
+    names = args.queries or [n for n in qmap if n.startswith(args.filter)]
     walls: dict[str, float] = {}
-    for name in args.queries:
+    for i, name in enumerate(names):
         fn = qmap[name]
         best = -1.0
-        for r in range(max(1, args.runs)):
-            tag = f"PROF:{name}:run{r}"
-            spark.sparkContext.setJobDescription(tag)
-            t0 = time.time()
-            fn(spark, args.sf).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best < 0 else min(best, dt)
+        try:
+            for r in range(max(1, args.runs)):
+                spark.sparkContext.setJobDescription(f"PROF:{name}:run{r}")
+                t0 = time.time()
+                fn(spark, args.sf).write.format("noop").mode("overwrite").save()
+                dt = time.time() - t0
+                best = dt if best < 0 else min(best, dt)
+                spark.sparkContext.setJobDescription(None)
+                spark.catalog.clearCache()
+        except Exception:  # a sweep reports the failure and goes on
+            print(f"{name} FAILED", file=sys.stderr)
+            traceback.print_exc()
+            best = -1.0
+        finally:
             spark.sparkContext.setJobDescription(None)
             spark.catalog.clearCache()
         walls[name] = best
+        if (i + 1) % 10 == 0:
+            spark._jvm.System.gc()
     spark.stop()
 
     # ---- parse the event log ----------------------------------------
@@ -90,37 +107,30 @@ def main() -> None:
     else:
         parts = [path]
     jobs: dict[int, dict] = {}
-    stages: dict[int, dict] = {}
-    import itertools
 
-    with open(os.devnull) as _dn:
-        lines = itertools.chain.from_iterable(open(p) for p in parts)
-        for line in lines:
-            try:
-                ev = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            et = ev.get("Event")
-            if et == "SparkListenerJobStart":
-                props = ev.get("Properties") or {}
-                jobs[ev["Job ID"]] = {
-                    "desc": props.get("spark.job.description", ""),
-                    "callsite": props.get("callSite.short", ""),
-                    "t0": ev.get("Submission Time", 0),
-                    "stages": [s["Stage ID"] for s in ev.get("Stage Infos", [])],
-                    "ntasks": sum(s.get("Number of Tasks", 0) for s in ev.get("Stage Infos", [])),
-                }
-            elif et == "SparkListenerJobEnd":
-                j = jobs.get(ev["Job ID"])
-                if j is not None:
-                    j["t1"] = ev.get("Completion Time", j["t0"])
-            elif et == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                stages[si["Stage ID"]] = {
-                    "name": si.get("Stage Name", ""),
-                    "ntasks": si.get("Number of Tasks", 0),
-                    "dur": (si.get("Completion Time", 0) - si.get("Submission Time", 0)) / 1000.0,
-                }
+    def _lines():
+        for p in parts:
+            with open(p) as fh:
+                yield from fh
+
+    for line in _lines():
+        try:
+            ev = json.loads(line)
+        except json.JSONDecodeError:
+            continue
+        et = ev.get("Event")
+        if et == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            jobs[ev["Job ID"]] = {
+                "desc": props.get("spark.job.description", ""),
+                "callsite": props.get("callSite.short", ""),
+                "t0": ev.get("Submission Time", 0),
+                "ntasks": sum(s.get("Number of Tasks", 0) for s in ev.get("Stage Infos", [])),
+            }
+        elif et == "SparkListenerJobEnd":
+            j = jobs.get(ev["Job ID"])
+            if j is not None:
+                j["t1"] = ev.get("Completion Time", j["t0"])
 
     per_q: dict[str, dict] = {}
     for jid, j in sorted(jobs.items()):
@@ -128,7 +138,7 @@ def main() -> None:
         if not desc.startswith("PROF:"):
             qname, run = "__untagged__", "?"
         else:
-            _, qname, run = desc.split(":", 2)
+            qname, run = desc[len("PROF:"):].rsplit(":", 1)
         d = per_q.setdefault(qname, {"runs": {}})
         r = d["runs"].setdefault(run, {"jobs": [], "ms": 0, "ntasks": 0})
         dur = j.get("t1", j["t0"]) - j["t0"]
@@ -136,16 +146,27 @@ def main() -> None:
         r["ms"] += dur
         r["ntasks"] += j.get("ntasks", 0)
 
-    for qname in args.queries:
-        d = per_q.get(qname)
+    rows = []
+    for qname in names:
+        d = per_q.get(qname, {"runs": {}})
+        last = d["runs"][max(d["runs"])] if d["runs"] else {"jobs": [], "ms": 0, "ntasks": 0}
+        top = max(last["jobs"], default=(0, 0, "", 0))
+        rows.append({
+            "query": qname,
+            "wall": round(walls.get(qname, -1), 3),
+            "njobs": len(last["jobs"]),
+            "ntasks": last["ntasks"],
+            "injob": round(last["ms"] / 1000.0, 3),
+            "top_job_s": round(top[0] / 1000.0, 3),
+            "top_job_tasks": top[3],
+        })
         print(f"\n=== {qname}  wall(best)={walls.get(qname, -1):.3f}s ===")
-        if not d:
+        if not d["runs"]:
             print("  (no tagged jobs)")
             continue
         for run in sorted(d["runs"]):
             r = d["runs"][run]
             print(f"  {run}: {len(r['jobs'])} jobs, {r['ms']/1000.0:.3f}s in-job, {r['ntasks']} tasks")
-        last = d["runs"][sorted(d["runs"])[-1]]
         for dur, jid, cs, nt in sorted(last["jobs"], reverse=True)[: args.jobs]:
             print(f"    job {jid:4d}  {dur/1000.0:7.3f}s  tasks={nt:4d}  {cs}")
         if args.gaps:
@@ -177,6 +198,15 @@ def main() -> None:
         n = sum(len(r["jobs"]) for r in per_q["__untagged__"]["runs"].values())
         print(f"\n(untagged jobs: {n})")
     print(f"\nevent log: {path}")
+
+    if args.out:
+        with open(args.out, "w") as f:
+            json.dump(rows, f, indent=1)
+        print(f"\n{'query':45s} {'wall':>6s} {'jobs':>4s} {'tasks':>5s} {'injob':>6s} {'topjob':>6s} {'toptk':>5s}")
+        for r in sorted(rows, key=lambda r: -r["wall"]):
+            print(f"{r['query']:45s} {r['wall']:6.2f} {r['njobs']:4d} {r['ntasks']:5d} "
+                  f"{r['injob']:6.2f} {r['top_job_s']:6.2f} {r['top_job_tasks']:5d}")
+        print(f"rows: {args.out}")
 
 
 if __name__ == "__main__":

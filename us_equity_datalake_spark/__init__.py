@@ -14,7 +14,6 @@ Subpackages
   over the driver's synthetic tables.
 - ``streaming``  — Structured Streaming equivalents (tumbling/sliding/session
   windows, stateful dedup upsert).
-- ``multimodal`` — opaque binary-column plumbing with stubbed decoders.
 """
 
 __version__ = "0.1.0"

@@ -27,12 +27,6 @@ def normalize_symbol(col: Column) -> Column:
     return F.upper(F.regexp_replace(col, r"[.\-]", ""))
 
 
-def coalesce_cik(wrds_cik: Column, sec_cik: Column) -> Column:
-    """J5 (security_master.py:459-477): WRDS mapping first, SEC snapshot
-    fallback; zero-pad to 10 digits."""
-    return F.lpad(F.coalesce(wrds_cik, sec_cik).cast("string"), 10, "0")
-
-
 def build_security_master(name_history: DataFrame) -> DataFrame:
     """Construct the interval dimension from a raw name history.
 

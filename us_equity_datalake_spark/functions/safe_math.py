@@ -30,11 +30,6 @@ def safe_mul(a: Column, b: Column) -> Column:
     return F.when(a.isNotNull() & b.isNotNull(), a * b).otherwise(F.lit(None))
 
 
-def round4(col: Column) -> Column:
-    """Ingest-time 4dp rounding (reference collectors.py:55-58)."""
-    return F.round(col, 4)
-
-
 def dec_sum(col: Column, scale: int = 6) -> Column:
     """Order-independent exact sum of a double column via decimal, as double."""
     return F.sum(col.cast(f"decimal(30,{scale})")).cast("double")

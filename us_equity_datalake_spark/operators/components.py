@@ -344,23 +344,6 @@ def pagerank_sql(
     """
 
 
-def dedup_clusters(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Cluster summary for near-dup dedup: one row per component with its
-    canonical survivor (min id), member count, and the members themselves —
-    the "keep one per duplicate cluster" decision table."""
-    cc = connected_components(edges, src=src, dst=dst, max_iter=max_iter)
-    return cc.groupBy("component").agg(
-        F.count("*").alias("cluster_size"),
-        F.sort_array(F.collect_list("node")).alias("members"),
-    )
-
-
 def triangle_count(edges: DataFrame, *, src: str = "src", dst: str = "dst") -> DataFrame:
     """Global triangle count + clustering coefficient over an undirected
     simple graph, with the DEGREE-ORDERED ORIENTATION that makes triangle

@@ -1,5 +1,4 @@
-"""Range / interval-overlap joins (J6-style: equi-on-expression + interval
-predicate, reference security_master.py:370-393).
+"""Range joins on time: pairs of rows whose timestamps lie within a tolerance.
 
 For a big-big temporal join (|ts_a − ts_b| <= tolerance) the scalable plan is
 **bucketed equi-join**: quantize time into tolerance-sized buckets, join on
@@ -10,7 +9,7 @@ fan-out is bounded — the plan that holds when one key has millions of rows.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def within_tolerance_pairs(
@@ -51,26 +50,3 @@ def within_tolerance_pairs(
     )
     return pairs
 
-
-def interval_overlap_join(
-    a: DataFrame,
-    b: DataFrame,
-    *,
-    equi: list[tuple[Column, Column]],
-    a_start: str,
-    a_end: str,
-    b_start: str,
-    b_end: str,
-    how: str = "inner",
-    broadcast_b: bool = True,
-) -> DataFrame:
-    """J6: equi conditions (possibly on expressions, e.g. substr(cusip,1,8))
-    plus interval-overlap ``a.start <= b.end AND b.start <= a.end``.  The equi
-    part keeps Spark on a hash join; broadcast the dimension side."""
-    cond = None
-    for l, r in equi:
-        c = l == r
-        cond = c if cond is None else (cond & c)
-    cond = cond & (F.col(f"a.{a_start}") <= F.col(f"b.{b_end}")) & (F.col(f"b.{b_start}") <= F.col(f"a.{a_end}"))
-    bb = F.broadcast(b.alias("b")) if broadcast_b else b.alias("b")
-    return a.alias("a").join(bb, cond, how)

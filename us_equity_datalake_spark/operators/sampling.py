@@ -73,12 +73,6 @@ def hash_split_sql(id_expr: str, *, train: int = 80, valid: int = 10, n_buckets:
     )
 
 
-def deterministic_sample(df: DataFrame, id_col: str, *, rate_pct: int, n_buckets: int = 100) -> DataFrame:
-    """Keep ~rate_pct% of rows, decided by id hash — a reproducible
-    `TABLESAMPLE` that survives reprocessing and engine changes."""
-    return df.filter(split_bucket(F.col(id_col), n_buckets) < rate_pct)
-
-
 # -- weighted priority sampling -------------------------------------------------
 #
 # Deterministic analog of weighted sampling without replacement: each row gets

@@ -1,22 +1,11 @@
-"""Set operations (SURVEY.md §2.7): schema-merging union, universe diff,
-anti-membership — the reference's snapshot state machine building blocks
+"""Set operations (SURVEY.md §2.7): universe diff and anti-membership — the
+reference's snapshot state machine building blocks
 (security_master.py:1251-1259; update/app.py:896-900).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def union_diagonal(a: DataFrame, b: DataFrame) -> DataFrame:
-    """U1: Polars ``concat(how='diagonal')`` → unionByName with null-fill."""
-    return a.unionByName(b, allowMissingColumns=True)
-
-
-def overwrite_year_partition(history: DataFrame, year_df: DataFrame, *, year: int, date_col: str) -> DataFrame:
-    """U1 consolidation semantics: remove a year then append — the logical form
-    of INSERT OVERWRITE of a year partition (update/app.py:515-541)."""
-    return history.filter(F.year(F.col(date_col)) != year).unionByName(year_df)
 
 
 def snapshot_diff(prev: DataFrame, cur: DataFrame, *, key: str) -> DataFrame:

@@ -1,35 +1,10 @@
-"""Statistical profile aggregation — the reference's sentiment aggregation
-family (A10, derived/sentiment.py:175-299) generalized: per group compute
-mean, count, stddev, median, Pearson-median skew (mean−median)/std, range
-(max−min), and an extreme-value ratio — all native Spark aggregates
-(``median`` is exact in Spark 3.4+, matching DuckDB's interpolated median).
+"""Statistical sketches: fixed-bin histogram quantiles with a DuckDB twin
+that grades them exactly (the quantile member of the sketch family).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def stat_profile(
-    df: DataFrame,
-    *,
-    group: list[str],
-    value: str,
-    extreme_threshold: float = -0.5,
-) -> DataFrame:
-    v = F.col(value)
-    base = df.groupBy(*group).agg(
-        F.count(v).alias("n"),
-        F.avg(v).alias("mean"),
-        F.stddev_samp(v).alias("std"),
-        F.median(v).alias("median"),
-        (F.max(v) - F.min(v)).alias("val_range"),
-        F.avg(F.when(v < extreme_threshold, 1.0).otherwise(0.0)).alias("extreme_ratio"),
-    )
-    skew = F.when(
-        F.col("std").isNotNull() & (F.col("std") != 0), (F.col("mean") - F.col("median")) / F.col("std")
-    ).otherwise(F.lit(None))
-    return base.withColumn("skew_pearson", skew)
 
 
 # ---------------------------------------------------------------------------

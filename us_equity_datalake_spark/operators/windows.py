@@ -1,58 +1,11 @@
-"""Window-function operators: TTM rolling sums, lag metrics, ordered ID
-assignment, keep-first ranking (SURVEY.md §2.5 W1–W6).
-
-The reference computes TTM with a Python loop over sorted groups
-(derived/ttm.py:111-147); here it is a single rows-based trailing window —
-one shuffle on the partition keys, sort within partition, whole-stage codegen.
+"""Window-function operators: ordered ID assignment (SURVEY.md §2.5 W5), as a
+single-partition running count for dimension-sized frames and as a
+distributed prefix sum at fact scale.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
-
-
-def trailing_window(partition: list[str], order: list[str], periods: int) -> WindowSpec:
-    return Window.partitionBy(*partition).orderBy(*order).rowsBetween(-(periods - 1), 0)
-
-
-def ttm_rolling(
-    df: DataFrame,
-    *,
-    partition: list[str],
-    order: str,
-    value: str = "value",
-    periods: int = 4,
-    out: str = "ttm",
-    carry_first: list[str] | None = None,
-) -> DataFrame:
-    """W1: trailing ``periods``-row sum per partition; rows with fewer than
-    ``periods`` observations get null (reference requires exactly 4 quarters,
-    derived/ttm.py:111-147 / test_ttm.py:120).
-
-    ``carry_first``: columns whose value from the window's FIRST row is carried
-    (the reference carries the window-start date).
-    """
-    w = trailing_window(partition, [order], periods)
-    res = df.withColumn(
-        out,
-        F.when(F.count(value).over(w) == periods, F.sum(value).over(w)).otherwise(F.lit(None)),
-    )
-    for c in carry_first or []:
-        res = res.withColumn(f"{c}_window_start", F.first(c).over(w))
-    return res
-
-
-def lag_diff(df: DataFrame, *, partition: list[str], order: str, value: str, offset: int = 1, out: str | None = None) -> DataFrame:
-    """W3: ``value - lag(value, offset)`` (rev_grw / ast_grw, metrics.py:187-207).
-    Null when no lag row exists — matches reference null-on-first-rows."""
-    w = Window.partitionBy(*partition).orderBy(order)
-    return df.withColumn(out or f"{value}_diff{offset}", F.col(value) - F.lag(value, offset).over(w))
-
-
-def lag_avg(df: DataFrame, *, partition: list[str], order: str, value: str, offset: int = 4, out: str | None = None) -> DataFrame:
-    """W2: ``(value + lag(value, offset)) / 2`` (avg_ast/avg_eqt, metrics.py:158-163)."""
-    w = Window.partitionBy(*partition).orderBy(order)
-    return df.withColumn(out or f"{value}_avg{offset}", (F.col(value) + F.lag(value, offset).over(w)) / 2)
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
 def assign_running_ids(
@@ -72,13 +25,6 @@ def assign_running_ids(
     """
     w = Window.orderBy(*order).rowsBetween(Window.unboundedPreceding, 0)
     return df.withColumn(out, F.sum(new_group.cast("long")).over(w) + F.lit(base))
-
-
-def keep_first(df: DataFrame, *, partition: list[str], order: list[Column], out_rank: str = "__rn") -> DataFrame:
-    """W6/A6: deterministic keep-first — explicit row_number ordering instead of
-    Polars ``maintain_order=True`` (SURVEY.md §7.3 item 4)."""
-    w = Window.partitionBy(*partition).orderBy(*order)
-    return df.withColumn(out_rank, F.row_number().over(w)).filter(F.col(out_rank) == 1).drop(out_rank)
 
 
 def assign_running_ids_distributed(

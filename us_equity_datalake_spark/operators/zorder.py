@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 
 def z_value(cols: list[Column], *, bits: int = 16) -> Column:
@@ -46,11 +46,3 @@ def z_value_sql(exprs: list[str], *, bits: int = 16) -> str:
         parts += [f"((({c} >> {i}) & 1) << {i * n + d})" for i in range(bits)]
     return "(" + " + ".join(parts) + ")"
 
-
-def zorder_layout(df: DataFrame, cols: list[str], *, bits: int = 16) -> DataFrame:
-    """Cluster rows for writing: range-partition then sort by the z key, so
-    each output file covers one contiguous z-range (a small hyper-rectangle
-    in the original dimensions).  Drop the key before the write if the table
-    schema shouldn't carry it."""
-    keyed = df.withColumn("__z", z_value([F.col(c) for c in cols], bits=bits))
-    return keyed.repartitionByRange("__z").sortWithinPartitions("__z")

@@ -725,14 +725,16 @@ def winnow_q(spark, sf_dir):
     """,
     doc="Multimodal binary-column plumbing: opaque payload (text bytes stand in "
     "for image bytes) -> ingest-time metadata (byte length, sha256) as pure "
-    "JVM column functions; decode kernels live in multimodal.columns.",
+    "JVM column functions.",
 )
 def multimodal_metadata_q(spark, sf_dir):
-    from us_equity_datalake_spark.multimodal import attach_binary_metadata
-
     docs = load_table(spark, "documents", sf_dir)
-    binary = docs.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("payload"))
-    return attach_binary_metadata(binary).select("doc_id", "n_bytes", "sha256")
+    payload = F.encode(F.col("text"), "UTF-8")
+    return docs.select(
+        "doc_id",
+        F.octet_length(payload).cast("long").alias("n_bytes"),
+        F.lower(F.sha2(payload, 256)).alias("sha256"),
+    )
 
 
 # ---------------------------------------------------------------------------
