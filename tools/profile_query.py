@@ -26,34 +26,18 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 import traceback
 
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--runs", type=int, default=2)
-    ap.add_argument("--jobs", type=int, default=12, help="top-N jobs to print per query")
-    ap.add_argument("--gaps", action="store_true", help="chronological job list with driver gaps")
-    ap.add_argument("--all", action="store_true",
-                    help="include untagged jobs (streaming engine batches set "
-                    "their own description) in the chronological view")
-    ap.add_argument("--filter", default=None, metavar="PREFIX",
-                    help="with no query names: every registered query with this prefix")
-    ap.add_argument("--out", default=None, metavar="FILE",
-                    help="write one JSON row per query (wall, njobs, ntasks, injob, "
-                    "top_job_s, top_job_tasks)")
-    ap.add_argument("queries", nargs="*")
-    args = ap.parse_args()
-    if not args.queries and args.filter is None:
-        ap.error("name the queries or pass --filter PREFIX")
-
-    evdir = f"/tmp/quantlake_eventlog_{os.getpid()}"
-    os.makedirs(evdir, exist_ok=True)
+def _profile(args, evdir: str):
+    """Run the queries on an event-logging session writing to ``evdir``;
+    returns (names, best walls, {job id: job}) read back from the log."""
     os.environ.setdefault("SPARK_GRAFT_SF_DIR", args.sf)
     # the event log is a launch-time conf: hand it to the JVM that
     # get_spark starts, so the profiled session is the engine's own
@@ -131,6 +115,34 @@ def main() -> None:
             j = jobs.get(ev["Job ID"])
             if j is not None:
                 j["t1"] = ev.get("Completion Time", j["t0"])
+    return names, walls, jobs
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--runs", type=int, default=2)
+    ap.add_argument("--jobs", type=int, default=12, help="top-N jobs to print per query")
+    ap.add_argument("--gaps", action="store_true", help="chronological job list with driver gaps")
+    ap.add_argument("--all", action="store_true",
+                    help="include untagged jobs (streaming engine batches set "
+                    "their own description) in the chronological view")
+    ap.add_argument("--filter", default=None, metavar="PREFIX",
+                    help="with no query names: every registered query with this prefix")
+    ap.add_argument("--out", default=None, metavar="FILE",
+                    help="write one JSON row per query (wall, njobs, ntasks, injob, "
+                    "top_job_s, top_job_tasks)")
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if not args.queries and args.filter is None:
+        ap.error("name the queries or pass --filter PREFIX")
+
+    evdir = tempfile.mkdtemp(prefix="quantlake_eventlog_")
+    try:
+        names, walls, jobs = _profile(args, evdir)
+    finally:
+        # parsed (or the sweep failed): the log itself is not kept
+        shutil.rmtree(evdir, ignore_errors=True)
 
     per_q: dict[str, dict] = {}
     for jid, j in sorted(jobs.items()):
@@ -197,7 +209,6 @@ def main() -> None:
     if "__untagged__" in per_q:
         n = sum(len(r["jobs"]) for r in per_q["__untagged__"]["runs"].values())
         print(f"\n(untagged jobs: {n})")
-    print(f"\nevent log: {path}")
 
     if args.out:
         with open(args.out, "w") as f:

@@ -52,7 +52,7 @@ _GRADING_PRIORITY = [
     # (delete_where_dv keys-form + append instead of full overwrite), the
     # merge family (id-preserving merge, mode label, watermark hint), the
     # txn family (stage-time metadata, member staging, recovery leases),
-    # the DV/rewrite publish loops (_publish_rewrite_staged factor-out),
+    # the DV/rewrite publish loops (now the one _publish_loop),
     # the row-tracking guards (external _row_id rejection), the lineage
     # feed (merge crossing + mergeSchema pre-images), factor_ic_decay
     # (persisted shared frame) ---

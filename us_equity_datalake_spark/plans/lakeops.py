@@ -2472,9 +2472,11 @@ def lake_dv_retry_append_q(spark, sf_dir):
     # after v4 lands.  The old cache()+count() both cost an extra action
     # and materialized through the no-AQE-coalescing cached-plan path.
     a1 = arm("after_retry_append", 3)
+    v3_files = (set(snapshots.read_manifest(root, 3)["files"])
+                - set(snapshots.read_manifest(root, 2)["files"]))
     snapshots.commit_rewrite_with_retry(                                 # v4
         orders.where(slice_pred).coalesce(1), root,
-        replace=lambda f: "commit_" in f and "commit_v0000" not in f,
+        replace=lambda f: f in v3_files,
     )
     return a1.unionByName(arm("after_disjoint_rewrite", 4))
 

@@ -11,9 +11,10 @@ time travel by reading an old manifest, instant rollback by re-pointing.
 This is the minimal honest core of that design (a manifest per version under
 ``_snapshots/``, files never rewritten), NOT a full transaction protocol:
 concurrent publishes are DETECTED (exclusive-create on the version file) and
-the benign append/append case is reconciled by :func:`commit_with_retry`
-(re-read the log, rebase, bump, retry — Delta's automatic append retry);
-rewrite/rewrite conflicts stay an explicit error, so single-writer-per-table
+every writer publishes through one optimistic loop (:func:`_publish_loop`:
+re-read the log, rebase, bump, retry — Delta's automatic retry).  Appends
+always rebase; rewrites and deletion-vector commits rebase only when the
+Delta conflict rules allow it and raise otherwise, so single-writer-per-table
 remains the operating assumption for mutating commits, same as the
 reference's daily job.
 
@@ -33,6 +34,7 @@ import shutil
 import socket
 import time
 import uuid
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegralType, StringType
@@ -137,6 +139,7 @@ def _publish(path: str, new_v: int, manifest: dict) -> None:
     # are monotone in practice; read_version_asof still guards against a
     # skewed clock by taking the LAST version at-or-before the timestamp.
     manifest.setdefault("committed_at", time.time())
+    os.makedirs(os.path.dirname(target), exist_ok=True)
     tmp = f"{target}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
     with open(tmp, "w") as f:
         json.dump(manifest, f, sort_keys=True)
@@ -722,6 +725,401 @@ class SchemaEnforcementError(ValueError):
     """An append would drop or retype columns of the table schema."""
 
 
+# Manifest keys a commit carries from the manifest it builds on unless it
+# sets them itself (version, mode, commit stamp, txn marker and the per-mode
+# extras are never carried).
+_MANIFEST_KEYS = ("files", "rows", "stats", "bloom_cols", "dv", "schema",
+                  "column_map", "dropped_physical", "constraints", *_RT_KEYS)
+
+
+def _carry(manifest: dict) -> dict:
+    """The carried part of ``manifest``: where every metadata-only commit
+    starts before it sets its own keys."""
+    return {k: manifest[k] for k in _MANIFEST_KEYS if k in manifest}
+
+
+def _head(path: str) -> "tuple[int, dict]":
+    """The latest version and its manifest ({} before the first commit)."""
+    v = latest_version(path)
+    return v, (read_manifest(path, v) if v else {})
+
+
+def _check_schema(what: str, prev_schema: "dict | None", new_schema: dict) -> None:
+    """Schema enforcement on write (the Delta contract): every column of
+    ``prev_schema`` must be present at its recorded type.  New columns are
+    the additive evolution :func:`read_version_merged` serves."""
+    if prev_schema is None:
+        return
+    dropped = sorted(c for c in prev_schema if c not in new_schema)
+    retyped = {c: (prev_schema[c], new_schema[c]) for c in prev_schema
+               if c in new_schema and new_schema[c] != prev_schema[c]}
+    if dropped or retyped:
+        raise SchemaEnforcementError(
+            f"{what}: dropped columns {dropped}, retyped {retyped}; pass "
+            "allow_schema_change=True (or overwrite) if intended"
+        )
+
+
+def _check_drift(base: dict, cur: dict, what: str) -> None:
+    """The metadata-drift guard of every rebase: a rename, drop or
+    constraint commit that landed after ``base`` conflicts with every writer
+    (the Delta rule: metadata changes conflict with everything).  Staged
+    files carry base's physical names, their rows were validated against
+    base's constraints, and predicates were resolved under base's names."""
+    changed = []
+    if dict(base.get("column_map") or {}) != dict(cur.get("column_map") or {}):
+        changed.append("column mapping changed")
+    if set(base.get("dropped_physical") or ()) != set(cur.get("dropped_physical") or ()):
+        changed.append("dropped columns changed")
+    if dict(base.get("constraints") or {}) != dict(cur.get("constraints") or {}):
+        changed.append("constraints changed")
+    if changed:
+        raise ConcurrentWriteError(
+            f"{what}: table metadata changed concurrently ({'; '.join(changed)}) "
+            "— the staged work was resolved under the old metadata; rerun it "
+            "against the new snapshot"
+        )
+
+
+@dataclass
+class _Staged:
+    """A writer's data: durable under its commit directory, not yet
+    published, with the table metadata it was written under.  ``base`` is
+    the manifest it was staged against, or the transaction status-doc
+    entry that recorded its column map, dropped slots and constraints."""
+
+    path: str
+    commit_dir: str
+    counts: "dict[str, int]"  # new data file -> footer row count
+    schema: dict  # the frame's logical schema, without _row_id
+    base: dict
+    has_row_id: bool = False
+    overwrite: bool = False
+    check_schema: bool = True  # re-run the drop/retype check on a rebase
+    stats_cols: "list[str] | None" = None  # physical; None maintains the table's
+    bloom_cols: "list[str] | None" = None
+    wm_hint: "int | None" = None
+    memo: dict = field(default_factory=dict)
+
+    def doc(self) -> dict:
+        """The entry a transaction's status doc records for recovery."""
+        return {
+            "path": self.path, "commit_dir": self.commit_dir,
+            "new_schema": self.schema, "has_row_id": self.has_row_id,
+            "column_map": dict(self.base.get("column_map", {})),
+            "dropped_physical": sorted(self.base.get("dropped_physical", [])),
+            "constraints": dict(self.base.get("constraints", {})),
+        }
+
+    @classmethod
+    def from_doc(cls, doc: dict) -> "_Staged":
+        return cls(doc["path"], doc["commit_dir"], _data_files(doc["commit_dir"]),
+                   doc["new_schema"], doc, has_row_id=doc.get("has_row_id", False))
+
+    def stats(self, cols: "list[str]") -> dict:
+        """Footer stats of the new files, read once per column set."""
+        key = ("stats", tuple(cols))
+        if key not in self.memo:
+            self.memo[key] = _file_stats(list(self.counts), cols)
+        return self.memo[key]
+
+    def blooms(self, cols: "list[str]") -> None:
+        """Bloom sidecars for the new files, written once per column set."""
+        key = ("bloom", tuple(sorted(cols)))
+        if key not in self.memo:
+            _write_file_blooms(list(self.counts), cols)
+            self.memo[key] = True
+
+    def discard(self) -> None:
+        shutil.rmtree(self.commit_dir, ignore_errors=True)
+
+
+def _stage(
+    df: DataFrame,
+    path: str,
+    base: dict,
+    *,
+    op: str = "commit",
+    overwrite: bool = False,
+    allow_schema_change: bool = False,
+    stats_cols: "list[str] | None" = None,
+    bloom_cols: "list[str] | None" = None,
+    trusted_row_ids: bool = False,
+    wm_hint: "int | None" = None,
+) -> _Staged:
+    """Write ``df`` as the data of a commit on top of manifest ``base``.
+
+    Every pre-write guard runs here, once, before any file lands: the
+    external ``_row_id`` reject, the drop/retype check (skipped for an
+    overwrite or ``allow_schema_change``), revived and shadowed physical
+    slots, the bloom type rule for named and maintained columns, and (on
+    the written files) the table constraints.  The data lands in the
+    lowest free ``commit_v{K}`` with K above base's version, claimed with
+    one atomic ``os.mkdir``: two racing writers never share a directory,
+    and a commit that failed before its publish never blocks the next one.
+    With no other writer in between, K is the version the commit publishes.
+    """
+    has_row_id = _ROW_ID in df.columns
+    if has_row_id and not trusted_row_ids:
+        _reject_external_row_ids(path, op)
+    schema = {f.name: f.dataType.simpleString()
+              for f in df.schema.fields if f.name != _ROW_ID}
+    prev_schema = base.get("schema") or {}
+    check_schema = not (overwrite or allow_schema_change)
+    if check_schema:
+        _check_schema(f"{op} to {path} rejected before any file landed",
+                      base.get("schema"), schema)
+    # column mapping: frames carry LOGICAL names, files the PHYSICAL ones,
+    # so every file agrees whatever the rename history.  An overwrite
+    # replaces the schema wholesale, so the map and the dropped slots reset.
+    col_map = {} if overwrite else dict(base.get("column_map", {}))
+    dropped_phys = set() if overwrite else set(base.get("dropped_physical", []))
+    added = [c for c in schema if c not in prev_schema]
+    # a NEW logical column may not reuse a dropped physical slot (old files
+    # still hold its bytes, and the scan would resurrect them into it) ...
+    revived = sorted(c for c in added if col_map.get(c, c) in dropped_phys)
+    if revived:
+        raise SchemaEnforcementError(
+            f"{op} to {path} rejected: column(s) {revived} reuse a DROPPED "
+            "column's physical slot — pick a different name (old files "
+            "still carry the dropped bytes under it)"
+        )
+    # ... nor take a name a renamed column occupies physically (adding 'v'
+    # after v->price: the write-side un-map would produce two 'v' columns)
+    occupied = {p for l, p in col_map.items() if p != l}
+    shadowed = sorted(c for c in added if c in occupied)
+    if shadowed:
+        raise SchemaEnforcementError(
+            f"{op} to {path} rejected: column(s) {shadowed} shadow a renamed "
+            "column's physical slot — pick a different name"
+        )
+    # bloom columns, named or maintained, must be string or integral
+    named = bloom_cols is not None
+    if named:
+        bloom_cols = [col_map.get(c, c) for c in bloom_cols]
+    types = {col_map.get(f.name, f.name): f.dataType for f in df.schema.fields}
+    unbloomable = {
+        c: types[c].simpleString() if c in types else "missing"
+        for c in (bloom_cols if named else base.get("bloom_cols") or ())
+        if (named or c in types)
+        and not isinstance(types.get(c), (StringType, IntegralType))
+    }
+    if unbloomable:
+        raise SchemaEnforcementError(
+            f"{op} to {path} rejected before any file landed: bloom_cols "
+            f"{unbloomable} are not string or integral columns"
+        )
+    os.makedirs(path, exist_ok=True)
+    k = int(base.get("version", 0)) + 1
+    while True:
+        commit_dir = os.path.join(path, f"commit_v{k:06d}")
+        try:
+            os.mkdir(commit_dir)
+            break
+        except FileExistsError:
+            k += 1
+    try:
+        _write_commit_checked(df, commit_dir, col_map,
+                              dict(base.get("constraints", {})), path)
+        counts = _data_files(commit_dir)
+    except BaseException:
+        shutil.rmtree(commit_dir, ignore_errors=True)
+        raise
+    return _Staged(
+        path, commit_dir, counts, schema, base, has_row_id=has_row_id,
+        overwrite=overwrite, check_schema=check_schema,
+        # stats and footers are keyed by the PHYSICAL names in the files
+        stats_cols=None if stats_cols is None else [col_map.get(c, c) for c in stats_cols],
+        bloom_cols=bloom_cols, wm_hint=wm_hint,
+    )
+
+
+def _next_manifest(
+    prev: dict,
+    staged: _Staged,
+    *,
+    drop: "set[str] | frozenset" = frozenset(),
+    dv_updates: "dict | None" = None,
+    mode: str,
+    txn: "dict | None" = None,
+) -> dict:
+    """The one carry of a DATA commit: the manifest that puts ``staged``'s
+    files on top of ``prev`` (the head this attempt builds on), without the
+    ``drop``ped files — or without any of prev's files for an overwrite.
+
+    - rows: carried-over files keep their counts, new files bring theirs;
+    - deletion vectors: carried-over files keep theirs (dropping them would
+      RESURRECT deleted rows), dropped and overwritten files shed theirs
+      (the rewrite applied them), ``dv_updates`` land on top;
+    - row tracking (:func:`_carry_row_tracking`), re-read from prev, so
+      racing appends get disjoint id ranges; a writer that MINTED ids
+      against its base watermark conflicts once the watermark moved;
+    - stats and bloom columns: the named ones, else the ones prev
+      maintains, collected for the new files (once per column set);
+    - schema: the additive union (an overwrite's own schema), re-validated
+      against prev unless the writer opted out;
+    - column map and dropped slots (reset by an overwrite) and constraints:
+      the ones the data was written under, which the drift guard holds
+      equal to prev's."""
+    new = staged.counts
+    ow = staged.overwrite
+    files = [] if ow else sorted(f for f in prev.get("files", []) if f not in drop)
+    files += list(new)
+    m: dict = {"mode": mode, "files": files}
+    prev_rows = prev.get("rows", {})
+    m["rows"] = {**{f: prev_rows[f] for f in files if f in prev_rows}, **new}
+    prev_dv = {} if ow else prev.get("dv", {})
+    dv = {**{f: prev_dv[f] for f in files if f in prev_dv}, **(dv_updates or {})}
+    if dv:
+        m["dv"] = dv
+    if staged.wm_hint is not None and int(prev.get("row_id_watermark", 0)) != int(
+        staged.base.get("row_id_watermark", 0)
+    ):
+        raise ConcurrentWriteError(
+            f"{mode} commit to {staged.path} conflicts with a concurrent "
+            "commit: it minted row ids above a watermark that has since "
+            "moved — rerun it against the new snapshot"
+        )
+    _carry_row_tracking(m, prev, files, new, staged.has_row_id, wm_hint=staged.wm_hint)
+    prev_schema = prev.get("schema")
+    if staged.check_schema:
+        _check_schema(
+            f"{mode} commit to {staged.path} rejected at publish (rebased "
+            f"onto v{prev.get('version', 0)})", prev_schema, staged.schema,
+        )
+    m["schema"] = (staged.schema if ow or prev_schema is None
+                   else {**prev_schema, **staged.schema})
+    prev_stats = prev.get("stats", {})
+    cols = staged.stats_cols
+    if cols is None:
+        cols = sorted({c for st in prev_stats.values() for c in st})
+    if cols or prev_stats:
+        m["stats"] = {f: prev_stats[f] for f in files if f in prev_stats}
+        if cols:
+            m["stats"].update(staged.stats(cols))
+    bloom = staged.bloom_cols if staged.bloom_cols is not None else prev.get("bloom_cols")
+    if bloom:
+        staged.blooms(bloom)
+        m["bloom_cols"] = sorted(bloom)
+    meta = {} if ow else staged.base
+    if meta.get("column_map"):
+        m["column_map"] = dict(meta["column_map"])
+    if meta.get("dropped_physical"):
+        m["dropped_physical"] = sorted(meta["dropped_physical"])
+    if staged.base.get("constraints"):
+        m["constraints"] = dict(staged.base["constraints"])
+    if txn is not None:
+        m["txn"] = txn
+    return m
+
+
+def _publish_loop(path: str, build, max_retries: int, *, discard=None) -> int:
+    """The one optimistic publish loop (the Delta protocol): read the log
+    head, ``build(prev_v, prev_manifest)`` the next manifest on it and
+    publish that as ``prev_v + 1``; a lost race re-reads the head and
+    builds again.  ``build`` raises :class:`ConcurrentWriteError` on a real
+    conflict — no retry can fix one.  ``discard`` (a single-table writer's
+    staged data) runs when the loop gives up: when reading the head or
+    ``build`` raises, or when every attempt lost; never after a publish
+    whose outcome is unknown.  Returns the published version."""
+    last_err: ConcurrentWriteError | None = None
+    for _ in range(max_retries):
+        try:
+            prev_v, prev = _head(path)
+            manifest = build(prev_v, prev)
+        except BaseException:
+            if discard is not None:
+                discard()
+            raise
+        manifest["version"] = prev_v + 1
+        try:
+            _publish(path, prev_v + 1, manifest)
+            return prev_v + 1
+        except ConcurrentWriteError as e:
+            last_err = e
+    if discard is not None:
+        discard()
+    raise ConcurrentWriteError(
+        f"commit to {path} lost the publish race {max_retries} times"
+    ) from last_err
+
+
+def _publish_staged(
+    staged: _Staged,
+    *,
+    mode: str,
+    rule=None,
+    drop: "set[str] | frozenset" = frozenset(),
+    txn: "dict | None" = None,
+    max_retries: int = 5,
+) -> int:
+    """Publish staged data through :func:`_publish_loop`.  Each attempt
+    runs the drift guard, then the writer's own conflict ``rule(prev_v,
+    prev)`` (None for an append; it returns the writer's deletion-vector
+    updates, if any), then :func:`_next_manifest`.  A single-table writer
+    that gives up removes its staged directory; a transaction member keeps
+    it, because :func:`recover_transactions` rolls forward from it."""
+    what = f"{mode} commit to {staged.path}"
+
+    def build(prev_v: int, prev: dict) -> dict:
+        _check_drift(staged.base, prev, what)
+        dv_updates = rule(prev_v, prev) if rule is not None else None
+        return _next_manifest(prev, staged, drop=drop, dv_updates=dv_updates,
+                              mode=mode, txn=txn)
+
+    return _publish_loop(staged.path, build, max_retries,
+                         discard=None if txn is not None else staged.discard)
+
+
+def _rewrite_rule(path: str, drop: "set[str]", base_dv: dict, *, match=None,
+                  known: "set[str] | frozenset" = frozenset()):
+    """The conflict rule of a copy-on-write rewrite whose dropped-file set
+    was decided once, against the snapshot it read (Delta's rewrite rules).
+    The rebase raises :class:`ConcurrentWriteError` when
+
+    - a file it drops is already gone (an overlapping rewrite landed);
+    - a file it never read matches its predicate ``match`` (its
+      replacement rows would swallow that file's rows).  On crash recovery
+      the predicate is gone (it does not serialize into the status doc),
+      so every file outside ``known`` counts: unknown overlap is a conflict;
+    - a file it drops had its deletion vector changed (the replacement rows
+      were derived from the old vector).
+
+    Otherwise the rebase is safe: the head's files minus ours dropped plus
+    our new files."""
+
+    def rule(prev_v: int, prev: dict) -> None:
+        files = prev.get("files", [])
+        gone = drop - set(files)
+        if gone:
+            raise ConcurrentWriteError(
+                f"rewrite of {path} conflicts with a concurrent commit: "
+                f"{len(gone)} of this rewrite's target files were already "
+                "removed (overlapping rewrite) — rerun the transaction "
+                "against the new snapshot"
+            )
+        unseen = [f for f in files if f not in drop
+                  and (match(f) if match is not None else f not in known)]
+        if unseen:
+            raise ConcurrentWriteError(
+                f"rewrite of {path} conflicts with a concurrent commit: "
+                f"{len(unseen)} files matching (or, on recovery, possibly "
+                "matching) the rewrite predicate were added after this "
+                "transaction's snapshot — rerun against the new snapshot"
+            )
+        prev_dv = prev.get("dv", {})
+        drifted = [f for f in drop if prev_dv.get(f) != base_dv.get(f)]
+        if drifted:
+            raise ConcurrentWriteError(
+                f"rewrite of {path} conflicts with a concurrent commit: "
+                f"deletion vectors changed on {len(drifted)} of this "
+                "rewrite's target files after this transaction's snapshot "
+                "— rerun against the new snapshot"
+            )
+
+    return rule
+
+
 def commit(
     df: DataFrame,
     path: str,
@@ -731,8 +1129,8 @@ def commit(
     stats_cols: "list[str] | None" = None,
     bloom_cols: "list[str] | None" = None,
     allow_schema_change: bool = False,
+    max_retries: int = 5,
     _mode_label: "str | None" = None,
-    _dv_updates: "dict[str, list[int]] | None" = None,
     _trusted_row_ids: bool = False,
     _id_watermark_hint: "int | None" = None,
 ) -> int:
@@ -776,335 +1174,44 @@ def commit(
     which replaces the schema with the data).  Silent drops/retypes are
     how a lake quietly loses a column at version 847.
 
-    Returns the new version number.  Files land under ``commit_v{N}/`` so a
-    commit's files are identifiable without tracking Spark's part-file names.
+    Concurrency (the Delta optimistic protocol): the data is written once
+    (:func:`_stage`), then the manifest publish loops up to
+    ``max_retries`` times.  A commit that loses the publish race re-reads
+    the log and rebases: an append onto any winner (two appends cannot
+    conflict); a rewrite or overwrite only when the winner neither removed
+    a file it drops, nor added a file its predicate matches, nor changed a
+    dropped file's deletion vector (:func:`_rewrite_rule`).  A rename,
+    drop or constraint change in between always conflicts.  A commit that
+    gives up after staging (a conflict, a reject at publish, every attempt
+    lost) removes its staged files.
+
+    Returns the new version number.  Files land under ``commit_v{K}/``, K
+    the lowest free number above the version the commit read — with no
+    other writer in between, the version it publishes — so a commit's
+    files are identifiable without tracking Spark's part-file names.
     """
-    prev_v = latest_version(path)
-    new_v = prev_v + 1
-    prev_manifest = read_manifest(path, prev_v) if prev_v else {}
-    has_row_id = _ROW_ID in df.columns
-    if has_row_id and not _trusted_row_ids:
-        _reject_external_row_ids(path, "commit")
-    new_schema = {
-        f.name: f.dataType.simpleString()
-        for f in df.schema.fields
-        if f.name != _ROW_ID  # hidden physical column, never in the schema
-    }
-    prev_schema = prev_manifest.get("schema")
-    if (
-        mode != "overwrite"
-        and not allow_schema_change
-        and prev_schema is not None
-    ):
-        dropped = {c for c in prev_schema if c not in new_schema}
-        retyped = {
-            c: (prev_schema[c], new_schema[c])
-            for c in prev_schema
-            if c in new_schema and new_schema[c] != prev_schema[c]
-        }
-        if dropped or retyped:
-            raise SchemaEnforcementError(
-                f"append to {path} rejected before any file landed: "
-                f"dropped columns {sorted(dropped)}, retyped {retyped}; "
-                "pass allow_schema_change=True (or overwrite) if intended"
-            )
-    # column mapping (rename/drop support): incoming frames carry LOGICAL
-    # names; files are always written with the PHYSICAL names so every file
-    # in the table agrees regardless of rename history.  Overwrite replaces
-    # the schema wholesale, so the map and the dropped list reset.
-    col_map = {} if mode == "overwrite" else dict(prev_manifest.get("column_map", {}))
-    dropped_phys = (
-        set() if mode == "overwrite"
-        else set(prev_manifest.get("dropped_physical", []))
+    _, base = _head(path)
+    overwrite = mode == "overwrite"
+    match = (lambda f: True) if overwrite else replace
+    # a rewrite's dropped-file set is decided ONCE, against the snapshot read
+    drop = {f for f in base.get("files", []) if match(f)} if match else set()
+    staged = _stage(
+        df, path, base, overwrite=overwrite,
+        allow_schema_change=allow_schema_change, stats_cols=stats_cols,
+        bloom_cols=bloom_cols, trusted_row_ids=_trusted_row_ids,
+        wm_hint=_id_watermark_hint,
     )
-    # a NEW logical column may not reuse a dropped physical slot: old files
-    # still hold stale bytes under that name, and the scan-side projection
-    # would resurrect them into the new column
-    revived = {
-        c for c in new_schema
-        if c not in (prev_schema or {}) and col_map.get(c, c) in dropped_phys
-    }
-    if revived:
-        raise SchemaEnforcementError(
-            f"append to {path} rejected: column(s) {sorted(revived)} reuse a "
-            "DROPPED column's physical slot — pick a different name (old "
-            "files still carry the dropped bytes under it)"
-        )
-    # a NEW logical column also may not take a name another logical column
-    # occupies PHYSICALLY (e.g. adding 'v' after a v->price rename): the
-    # write-side un-map would produce two physical 'v' columns
-    occupied = {p for l, p in col_map.items() if p != l}
-    shadowed = {
-        c for c in new_schema
-        if c not in (prev_schema or {}) and c in occupied
-    }
-    if shadowed:
-        raise SchemaEnforcementError(
-            f"append to {path} rejected: column(s) {sorted(shadowed)} shadow "
-            "a renamed column's physical slot — pick a different name"
-        )
-    # bloom columns, named or maintained, are checked before a file lands
-    explicit = bloom_cols is not None
-    prev_bloom_cols = prev_manifest.get("bloom_cols")
-    if explicit:
-        bloom_cols = [col_map.get(c, c) for c in bloom_cols]
-    elif prev_bloom_cols:
-        bloom_cols = prev_bloom_cols  # maintain the point-lookup index
-    types = {col_map.get(f.name, f.name): f.dataType for f in df.schema.fields}
-    unbloomable = {
-        c: types[c].simpleString() if c in types else "missing"
-        for c in bloom_cols or ()
-        if (explicit or c in types) and not isinstance(types.get(c), (StringType, IntegralType))
-    }
-    if unbloomable:
-        raise SchemaEnforcementError(
-            f"commit to {path} rejected before any file landed: bloom_cols "
-            f"{unbloomable} are not string or integral columns"
-        )
-    table_cons = dict(prev_manifest.get("constraints", {}))
-    commit_dir = os.path.join(path, f"commit_v{new_v:06d}")
-    _write_commit_checked(df, commit_dir, col_map, table_cons, path)
-    new_counts = _data_files(commit_dir)
-    new_files = list(new_counts)
-    if mode == "overwrite":
-        files = new_files
-    else:
-        prev_files = prev_manifest.get("files", [])
-        if replace is not None:
-            prev_files = [f for f in prev_files if not replace(f)]
-        files = sorted(prev_files) + new_files
-    os.makedirs(os.path.join(path, _SNAP_DIR), exist_ok=True)
-    manifest = {"version": new_v, "mode": _mode_label or mode, "files": files}
-    # deletion vectors ride the manifest: carried-over files keep theirs
-    # (dropping them would RESURRECT deleted rows on the next append);
-    # replaced/overwritten files shed theirs — the rewrite applied them.
-    prev_dv = {} if mode == "overwrite" else prev_manifest.get("dv", {})
-    dv = {f: prev_dv[f] for f in files if f in prev_dv}
-    for f, extra in (_dv_updates or {}).items():
-        if f not in set(files):
-            raise ValueError(f"dv update for file not in manifest: {f}")
-        merged = set(extra)
-        if f in dv:
-            merged.update(_read_dv_positions(dv[f]))
-        dv[f] = _write_dv_sidecar(path, new_v, f, merged)
-    if dv:
-        manifest["dv"] = dv
-    _carry_row_tracking(manifest, prev_manifest, files, new_counts,
-                        has_row_id, wm_hint=_id_watermark_hint)
-    manifest["schema"] = (
-        new_schema
-        if mode == "overwrite" or prev_schema is None
-        else {**prev_schema, **new_schema}  # additive union; types validated
-    )
-    prev_rows = prev_manifest.get("rows", {})
-    manifest["rows"] = {
-        **{f: prev_rows[f] for f in files if f in prev_rows}, **new_counts
-    }
-    prev_stats = prev_manifest.get("stats", {})
-    if stats_cols is not None:
-        # caller passes LOGICAL names; footers and the stats index are
-        # keyed by the PHYSICAL names that live in the files
-        stats_cols = [col_map.get(c, c) for c in stats_cols]
-    elif prev_stats:
-        # maintain the existing skipping index: re-collect the same columns
-        stats_cols = sorted({c for st in prev_stats.values() for c in st})
-    if stats_cols or prev_stats:
-        stats = {f: prev_stats[f] for f in files if f in prev_stats}
-        if stats_cols:
-            stats.update(_file_stats(new_files, stats_cols))
-        manifest["stats"] = stats
-    if bloom_cols:
-        _write_file_blooms(new_files, bloom_cols)
-        manifest["bloom_cols"] = sorted(bloom_cols)
-    if col_map:
-        manifest["column_map"] = col_map
-    if dropped_phys:
-        manifest["dropped_physical"] = sorted(dropped_phys)
-    if table_cons:
-        manifest["constraints"] = table_cons
-    _publish(path, new_v, manifest)
-    return new_v
+    rule = None if match is None else _rewrite_rule(path, drop, base.get("dv", {}),
+                                                    match=match)
+    return _publish_staged(staged, mode=_mode_label or mode, rule=rule,
+                           drop=drop, max_retries=max_retries)
 
 
 def commit_with_retry(df: DataFrame, path: str, *, max_retries: int = 5) -> int:
-    """Append-mode commit that RECONCILES with concurrent appenders — the
-    benign append/append case Delta retries automatically (two appends
-    cannot conflict: neither removes files the other read).
-
-    The data files are written ONCE into a uniquely-named commit directory
-    (plain :func:`commit` names the directory after the version, so two
-    racing appenders collide at the data write, not just at publish);
-    then the manifest publish loops: on :class:`ConcurrentWriteError`
-    re-read the log — the previous file list now includes the winner's
-    files — rebase this commit's files onto it, bump the version, retry.
-    Rewrite conflicts (``replace``/``overwrite``) stay an explicit error:
-    reconciling those needs row-level conflict detection, which is exactly
-    the part of the Delta protocol this module documents as out of scope.
-
-    Returns the new version number.
-    """
-    has_row_id = _ROW_ID in df.columns
-    if has_row_id:
-        _reject_external_row_ids(path, "commit_with_retry")
-    new_schema = {f.name: f.dataType.simpleString()
-                  for f in df.schema.fields if f.name != _ROW_ID}
-    col_map, dropped_phys, table_cons = _append_precheck(path, new_schema)
-    commit_dir = os.path.join(path, f"commit_{uuid.uuid4().hex[:12]}")
-    _write_commit_checked(df, commit_dir, col_map, table_cons, path)
-    new_counts = _data_files(commit_dir)
-    stats_cache: dict = {}
-    last_err: ConcurrentWriteError | None = None
-    for _ in range(max_retries):
-        new_v, manifest = _rebase_append_manifest(
-            df.sparkSession, path,
-            new_counts=new_counts, new_schema=new_schema,
-            has_row_id=has_row_id, col_map=col_map,
-            dropped_phys=dropped_phys, table_cons=table_cons,
-            stats_cache=stats_cache,
-        )
-        try:
-            _publish(path, new_v, manifest)
-            return new_v
-        except ConcurrentWriteError as e:
-            last_err = e
-            continue
-    raise ConcurrentWriteError(
-        f"append to {path} lost the publish race {max_retries} times"
-    ) from last_err
-
-
-def _append_precheck(path: str, new_schema: dict) -> tuple:
-    """Pre-write guards shared by every reconciling append writer: reject a
-    revived dropped slot, a shadowed renamed slot, or a drop/retype against
-    the CURRENT latest schema — all before any file lands.  Returns the
-    latest (col_map, dropped_phys, table_cons) the data must be written
-    under."""
-    latest0 = latest_version(path)
-    m_latest0 = read_manifest(path, latest0) if latest0 else {}
-    prev_schema0 = m_latest0.get("schema")
-    col_map = dict(m_latest0.get("column_map", {}))
-    dropped_phys = set(m_latest0.get("dropped_physical", []))
-    table_cons = dict(m_latest0.get("constraints", {}))
-    revived = {c for c in new_schema
-               if c not in (prev_schema0 or {}) and col_map.get(c, c) in dropped_phys}
-    if revived:
-        raise SchemaEnforcementError(
-            f"append to {path} rejected: column(s) {sorted(revived)} reuse a "
-            "DROPPED column's physical slot"
-        )
-    occupied = {p for l, p in col_map.items() if p != l}
-    shadowed = {c for c in new_schema
-                if c not in (prev_schema0 or {}) and c in occupied}
-    if shadowed:
-        raise SchemaEnforcementError(
-            f"append to {path} rejected: column(s) {sorted(shadowed)} shadow "
-            "a renamed column's physical slot"
-        )
-    if prev_schema0 is not None:
-        dropped = {c for c in prev_schema0 if c not in new_schema}
-        retyped = {c for c in prev_schema0
-                   if c in new_schema and new_schema[c] != prev_schema0[c]}
-        if dropped or retyped:
-            raise SchemaEnforcementError(
-                f"append to {path} rejected before any file landed: "
-                f"dropped columns {sorted(dropped)}, retyped {sorted(retyped)}"
-            )
-    return col_map, dropped_phys, table_cons
-
-
-def _rebase_append_manifest(
-    spark: SparkSession,
-    path: str,
-    *,
-    new_counts: "dict[str, int]",
-    new_schema: dict,
-    has_row_id: bool,
-    col_map: dict,
-    dropped_phys: set,
-    table_cons: dict,
-    stats_cache: dict,
-) -> "tuple[int, dict]":
-    """ONE rebase attempt of an append whose data files are already staged:
-    build the manifest against the CURRENT latest version — files, rows,
-    deletion vectors (an append removes nothing, so every carried-over file
-    keeps its vector; publishing without them would RESURRECT deleted
-    rows), row-tracking watermark, maintained stats/bloom indexes, additive
-    schema union (re-validated against the manifest actually rebased onto —
-    ADVICE r8), and the column-map / constraint drift guards.  Returns
-    ``(new_v, manifest)`` ready for :func:`_publish`; ``stats_cache``
-    memoizes footer stats across retries."""
-    new_files = list(new_counts)
-    prev_v = latest_version(path)
-    prev_manifest = read_manifest(path, prev_v) if prev_v else {}
-    prev_files = prev_manifest.get("files", [])
-    new_v = prev_v + 1
-    os.makedirs(os.path.join(path, _SNAP_DIR), exist_ok=True)
-    manifest = {
-        "version": new_v,
-        "mode": "append",
-        "files": sorted(prev_files) + new_files,
-    }
-    prev_rows = prev_manifest.get("rows", {})
-    manifest["rows"] = {
-        **{f: prev_rows[f] for f in prev_files if f in prev_rows},
-        **new_counts,
-    }
-    prev_dv = prev_manifest.get("dv", {})
-    dv = {f: prev_dv[f] for f in prev_files if f in prev_dv}
-    if dv:
-        manifest["dv"] = dv
-    _carry_row_tracking(
-        manifest, prev_manifest, manifest["files"], new_counts, has_row_id
-    )
-    prev_stats = prev_manifest.get("stats", {})
-    if prev_stats:
-        if "stats" not in stats_cache:
-            cols = sorted({c for st in prev_stats.values() for c in st})
-            stats_cache["stats"] = _file_stats(new_files, cols)
-        manifest["stats"] = {**prev_stats, **stats_cache["stats"]}
-    prev_bloom_cols = prev_manifest.get("bloom_cols")
-    if prev_bloom_cols:
-        if not os.path.exists(_bloom_sidecar(new_files[0])):
-            _write_file_blooms(new_files, prev_bloom_cols)
-        manifest["bloom_cols"] = prev_bloom_cols
-    prev_schema = prev_manifest.get("schema")
-    if prev_schema is not None:
-        dropped = {c for c in prev_schema if c not in new_schema}
-        retyped = {c for c in prev_schema
-                   if c in new_schema and new_schema[c] != prev_schema[c]}
-        if dropped or retyped:
-            raise SchemaEnforcementError(
-                f"append to {path} rejected at publish (rebased onto "
-                f"v{prev_v}): dropped columns {sorted(dropped)}, "
-                f"retyped {sorted(retyped)}"
-            )
-    manifest["schema"] = (
-        new_schema if prev_schema is None else {**prev_schema, **new_schema}
-    )
-    if (dict(prev_manifest.get("column_map", {})) != col_map
-            or set(prev_manifest.get("dropped_physical", [])) != dropped_phys):
-        raise ConcurrentWriteError(
-            f"append to {path}: column mapping changed concurrently "
-            "(a rename/drop landed between write and publish); the "
-            "files were written under the old physical mapping — retry "
-            "the whole commit"
-        )
-    if col_map:
-        manifest["column_map"] = col_map
-    if dropped_phys:
-        manifest["dropped_physical"] = sorted(dropped_phys)
-    if dict(prev_manifest.get("constraints", {})) != table_cons:
-        # rows were validated against the OLD set, and a silent carry
-        # would also DROP the winner's new constraint from the manifest
-        raise ConcurrentWriteError(
-            f"append to {path}: table constraints changed concurrently "
-            "(a constraint was added/dropped between write and publish); "
-            "the rows were validated against the old set — retry the "
-            "whole commit"
-        )
-    if table_cons:
-        manifest["constraints"] = table_cons
-    return new_v, manifest
+    """An append :func:`commit` (kept for its callers): the reconciling
+    append — on a lost publish race it rebases onto the winner, the benign
+    append/append case Delta retries automatically."""
+    return commit(df, path, max_retries=max_retries)
 
 
 def commit_rewrite_with_retry(
@@ -1115,197 +1222,13 @@ def commit_rewrite_with_retry(
     max_retries: int = 5,
     _trusted_row_ids: bool = False,
 ) -> int:
-    """Copy-on-write partial rewrite that RECONCILES with concurrent
-    writers when the touched-file sets are DISJOINT — the Delta conflict
-    rule for rewrite/rewrite: two transactions may both land iff neither
-    removed a file the other read-and-removed (e.g. two compactions of
-    different partitions).
-
-    The dropped-file set is decided ONCE, against the snapshot this
-    transaction read (``replace(file_entry) -> bool`` over that manifest's
-    files); the replacement data is written once to a uniquely-named
-    commit directory.  On losing the publish race the commit rebases onto
-    the winner and re-checks, raising :class:`ConcurrentWriteError`
-    (no retry can fix a real conflict) when
-
-    - the winner already removed any file THIS rewrite drops (overlapping
-      rewrites — both rewrote the same region), or
-    - the winner added files matching ``replace`` that this transaction
-      never read (its replacement rows would silently swallow the
-      winner's new rows — a write-after-read conflict).
-
-    Otherwise the rebase is safe: winner's file list minus our dropped
-    files plus our new files.  Returns the new version."""
-    prev_v0 = latest_version(path)
-    if prev_v0 == 0:
-        raise ValueError(f"rewrite of {path}: table has no commits")
-    m0 = read_manifest(path, prev_v0)
-    dropped = {f for f in m0["files"] if replace(f)}
-    m0_dv = dict(m0.get("dv", {}))
-    has_row_id = _ROW_ID in df.columns
-    if has_row_id and not _trusted_row_ids:
-        _reject_external_row_ids(path, "rewrite")
-    new_schema = {f.name: f.dataType.simpleString()
-                  for f in df.schema.fields if f.name != _ROW_ID}
-    col_map = dict(m0.get("column_map", {}))
-    dropped_phys = set(m0.get("dropped_physical", []))
-    table_cons = dict(m0.get("constraints", {}))
-    commit_dir = os.path.join(path, f"commit_{uuid.uuid4().hex[:12]}")
-    _write_commit_checked(df, commit_dir, col_map, table_cons, path)
-    return _publish_rewrite_staged(
-        df.sparkSession, path,
-        new_counts=_data_files(commit_dir), dropped=dropped, m0_dv=m0_dv,
-        new_schema=new_schema, has_row_id=has_row_id, col_map=col_map,
-        dropped_phys=dropped_phys, table_cons=table_cons,
-        max_retries=max_retries, match=replace,
-    )
-
-
-def _publish_rewrite_staged(
-    spark: SparkSession,
-    path: str,
-    *,
-    new_counts: "dict[str, int]",
-    dropped: "set[str]",
-    m0_dv: dict,
-    new_schema: dict,
-    has_row_id: bool,
-    col_map: dict,
-    dropped_phys: set,
-    table_cons: dict,
-    max_retries: int = 5,
-    txn: "dict | None" = None,
-    match: "callable | None" = None,
-    base_files: "set[str] | None" = None,
-) -> int:
-    """The publish half of a copy-on-write rewrite whose replacement files
-    are already durable: the :func:`commit_rewrite_with_retry` rebase loop,
-    factored out so a multi-table transaction can stage a rewrite member
-    and publish (or crash-recover) it later with the SAME conflict rules —
-    the dropped-file set and the metadata the data was written under come
-    from stage time, never re-derived.
-
-    The write-after-read check uses ``match`` (the rewrite predicate) when
-    the caller still holds it; on CRASH RECOVERY the callable is gone (a
-    predicate does not serialize into the status doc), so the check falls
-    back to ``base_files`` — any file that appeared since the stage-time
-    snapshot MIGHT contain rows this rewrite should have read, and the
-    rebase refuses conservatively (the Delta rule: unknown overlap is a
-    conflict; the operator escape is abort_transaction)."""
-    new_files = list(new_counts)
-    new_stats: dict | None = None
-    last_err: ConcurrentWriteError | None = None
-    for _ in range(max_retries):
-        prev_v = latest_version(path)
-        prev_manifest = read_manifest(path, prev_v) if prev_v else {}
-        prev_files = prev_manifest.get("files", [])
-        overwritten = dropped - set(prev_files)
-        if overwritten:
-            raise ConcurrentWriteError(
-                f"rewrite of {path} conflicts with a concurrent commit: "
-                f"{len(overwritten)} of this rewrite's target files were "
-                "already removed (overlapping rewrite) — rerun the "
-                "transaction against the new snapshot"
-            )
-        if match is not None:
-            unseen = [f for f in prev_files if f not in dropped and match(f)]
-        else:
-            known = (base_files or set()) | set(new_files)
-            unseen = [f for f in prev_files
-                      if f not in dropped and f not in known]
-        if unseen:
-            raise ConcurrentWriteError(
-                f"rewrite of {path} conflicts with a concurrent commit: "
-                f"{len(unseen)} files matching (or, on recovery, possibly "
-                "matching) the rewrite predicate were added after this "
-                "transaction's snapshot — rerun against the new snapshot"
-            )
-        new_v = prev_v + 1
-        os.makedirs(os.path.join(path, _SNAP_DIR), exist_ok=True)
-        files = sorted(f for f in prev_files if f not in dropped) + new_files
-        manifest = {"version": new_v, "mode": "replace", "files": files}
-        prev_rows = prev_manifest.get("rows", {})
-        manifest["rows"] = {
-            **{f: prev_rows[f] for f in files if f in prev_rows}, **new_counts
-        }
-        # Deletion vectors: carried-over files keep their LATEST vectors (a
-        # concurrent delete on an untouched file survives this rebase);
-        # dropped files shed theirs — the rewrite's replacement rows applied
-        # them.  But a vector that CHANGED on a dropped file since this
-        # transaction's snapshot is a real write-after-read conflict (the
-        # Delta rewrite-vs-delete rule): the replacement rows were derived
-        # from the OLD vector, so carrying on would resurrect that writer's
-        # deletes inside our rewritten files.
-        prev_dv = prev_manifest.get("dv", {})
-        dv_drift = [f for f in sorted(dropped) if prev_dv.get(f) != m0_dv.get(f)]
-        if dv_drift:
-            raise ConcurrentWriteError(
-                f"rewrite of {path} conflicts with a concurrent commit: "
-                f"deletion vectors changed on {len(dv_drift)} of this "
-                "rewrite's target files after this transaction's snapshot "
-                "— rerun against the new snapshot"
-            )
-        dv = {f: prev_dv[f] for f in files if f in prev_dv}
-        if dv:
-            manifest["dv"] = dv
-        _carry_row_tracking(manifest, prev_manifest, files, new_counts, has_row_id)
-        prev_stats = prev_manifest.get("stats", {})
-        if prev_stats:
-            if new_stats is None:
-                cols = sorted({c for st in prev_stats.values() for c in st})
-                new_stats = _file_stats(new_files, cols)
-            manifest["stats"] = {
-                **{f: prev_stats[f] for f in files if f in prev_stats},
-                **new_stats,
-            }
-        prev_bloom_cols = prev_manifest.get("bloom_cols")
-        if prev_bloom_cols:
-            if not os.path.exists(_bloom_sidecar(new_files[0])):
-                _write_file_blooms(new_files, prev_bloom_cols)
-            manifest["bloom_cols"] = prev_bloom_cols
-        prev_schema = prev_manifest.get("schema")
-        if prev_schema is not None:
-            dropped_cols = {c for c in prev_schema if c not in new_schema}
-            retyped = {c for c in prev_schema
-                       if c in new_schema and new_schema[c] != prev_schema[c]}
-            if dropped_cols or retyped:
-                raise SchemaEnforcementError(
-                    f"rewrite of {path} rejected: dropped columns "
-                    f"{sorted(dropped_cols)}, retyped {sorted(retyped)}"
-                )
-        manifest["schema"] = (
-            new_schema if prev_schema is None else {**prev_schema, **new_schema}
-        )
-        if (dict(prev_manifest.get("column_map", {})) != col_map
-                or set(prev_manifest.get("dropped_physical", [])) != dropped_phys):
-            raise ConcurrentWriteError(
-                f"rewrite of {path}: column mapping changed concurrently "
-                "(a rename/drop landed between write and publish) — rerun "
-                "the transaction against the new snapshot"
-            )
-        if col_map:
-            manifest["column_map"] = col_map
-        if dropped_phys:
-            manifest["dropped_physical"] = sorted(dropped_phys)
-        if dict(prev_manifest.get("constraints", {})) != table_cons:
-            raise ConcurrentWriteError(
-                f"rewrite of {path}: table constraints changed concurrently "
-                "(a constraint was added/dropped between write and publish) "
-                "— rerun the transaction against the new snapshot"
-            )
-        if table_cons:
-            manifest["constraints"] = table_cons
-        if txn is not None:
-            manifest["txn"] = txn
-        try:
-            _publish(path, new_v, manifest)
-            return new_v
-        except ConcurrentWriteError as e:
-            last_err = e
-            continue
-    raise ConcurrentWriteError(
-        f"rewrite of {path} lost the publish race {max_retries} times"
-    ) from last_err
+    """A ``replace`` :func:`commit` published under mode ``'replace'``
+    (kept for its callers): a copy-on-write partial rewrite that rebases
+    past concurrent writers whose touched-file sets are DISJOINT from its
+    own (e.g. two compactions of different partitions) and raises
+    :class:`ConcurrentWriteError` on a real conflict (:func:`_rewrite_rule`)."""
+    return commit(df, path, replace=replace, max_retries=max_retries,
+                  _mode_label="replace", _trusted_row_ids=_trusted_row_ids)
 
 
 def _txn_dir(path: str) -> str:
@@ -1371,9 +1294,9 @@ def commit_transaction(
     Protocol (two-phase, coordinator = a status file in the FIRST table's
     log):
 
-    1. STAGE: append/rewrite members write their data files to
-       uniquely-named commit directories (schema/constraint/column-map
-       validation exactly as :func:`commit_with_retry`); delete members
+    1. STAGE: append/rewrite members write their data files to their
+       own commit directories (every pre-write guard of :func:`_stage`,
+       exactly as a plain :func:`commit`); delete members
        resolve their stage-time position sets — no manifest published,
        nothing visible.
     2. INTENT: one status file records {txn_id, pending, tables:[...]}
@@ -1427,115 +1350,68 @@ def commit_transaction(
         )
     txn_id = uuid.uuid4().hex[:16]
     staged = []
-    for m in members:
-        path = m["path"]
-        if m["op"] == "append":
-            df = m["df"]
-            if _ROW_ID in df.columns:
-                _reject_external_row_ids(path, "commit_transaction")
-            new_schema = {f.name: f.dataType.simpleString()
-                          for f in df.schema.fields}
-            col_map, dropped_phys, table_cons = _append_precheck(path, new_schema)
-            commit_dir = os.path.join(path, f"commit_{uuid.uuid4().hex[:12]}")
-            _write_commit_checked(df, commit_dir, col_map, table_cons, path)
-            # the stage-time column map / dropped slots / constraints ride
-            # the entry AND the status doc: publish (and crash recovery)
-            # must compare what the data was WRITTEN under against the
-            # manifest it rebases onto, or the drift guards in
-            # _rebase_append_manifest compare current-vs-current and are
-            # vacuous (ADVICE r11)
-            staged.append({
-                "op": "append", "path": path, "commit_dir": commit_dir,
-                "new_schema": new_schema, "has_row_id": False,
-                "column_map": col_map,
-                "dropped_physical": sorted(dropped_phys),
-                "constraints": table_cons,
-            })
-        elif m["op"] == "delete_dv":
-            v0 = latest_version(path)
-            if v0 == 0:
-                raise ValueError(f"txn delete_dv of {path}: table has no commits")
-            m0 = read_manifest(path, v0)
-            live = _scan_files(spark, m0["files"], m0, with_lineage=True)
-            if m.get("keys") is not None:
-                from pyspark.sql import functions as F
-
-                if not m.get("key"):
-                    raise ValueError("txn delete_dv: keys needs key=<column>")
-                hits = live.join(
-                    F.broadcast(m["keys"].select(m["key"]).distinct()),
-                    m["key"], "left_semi",
-                )
-            else:
-                from pyspark.sql import functions as F
-
-                hits = live.where(F.coalesce(m["predicate"], F.lit(False)))
-            updates = _collect_dv_updates(
-                hits.select("__file", "__pos"), set(m0["files"]),
-                "commit_transaction",
-            )
-            staged.append({
-                "op": "delete_dv", "path": path,
-                "updates": {f: [int(p) for p in ps]
-                            for f, ps in updates.items()},
-                "base_dv": {f: m0["dv"][f] for f in updates
-                            if f in m0.get("dv", {})},
-                "n_deleted": sum(len(ps) for ps in updates.values()),
-                "column_map": dict(m0.get("column_map", {})),
-                "dropped_physical": sorted(m0.get("dropped_physical", [])),
-                "constraints": dict(m0.get("constraints", {})),
-            })
-        else:  # rewrite
-            df = m["df"]
-            if _ROW_ID in df.columns:
-                _reject_external_row_ids(path, "commit_transaction")
-            v0 = latest_version(path)
-            if v0 == 0:
-                raise ValueError(f"txn rewrite of {path}: table has no commits")
-            m0 = read_manifest(path, v0)
-            dropped = sorted(f for f in m0["files"] if m["replace"](f))
-            new_schema = {f.name: f.dataType.simpleString()
-                          for f in df.schema.fields}
-            col_map = dict(m0.get("column_map", {}))
-            dropped_phys = set(m0.get("dropped_physical", []))
-            table_cons = dict(m0.get("constraints", {}))
-            commit_dir = os.path.join(path, f"commit_{uuid.uuid4().hex[:12]}")
-            _write_commit_checked(df, commit_dir, col_map, table_cons, path)
-            staged.append({
-                "op": "rewrite", "path": path, "commit_dir": commit_dir,
-                "new_schema": new_schema, "has_row_id": False,
-                "dropped": dropped,
-                "base_dv_dropped": {
-                    f: m0.get("dv", {}).get(f) for f in dropped
-                },
-                "base_files": sorted(m0["files"]),
-                "column_map": col_map,
-                "dropped_physical": sorted(dropped_phys),
-                "constraints": table_cons,
-                "match": m["replace"],  # in-memory only, not serialized
-            })
-    # shrink the schema-wedge window: re-validate EVERY member against the
-    # now-current log right before the first publish — a rename/constraint
-    # that landed during staging aborts cleanly here (nothing visible yet)
-    # instead of wedging the transaction half-published (ADVICE r11)
     try:
-        for s in staged:
-            if s["op"] == "append":
-                cm, dp, tc = _append_precheck(s["path"], s["new_schema"])
-            else:
-                m_now = read_manifest(s["path"], latest_version(s["path"]))
-                cm = dict(m_now.get("column_map", {}))
-                dp = set(m_now.get("dropped_physical", []))
-                tc = dict(m_now.get("constraints", {}))
-            if (cm != s["column_map"]
-                    or sorted(dp) != s["dropped_physical"]
-                    or tc != s["constraints"]):
-                raise ConcurrentWriteError(
-                    f"txn {txn_id}: table {s['path']} metadata changed "
-                    "between stage and publish (rename/drop/constraint) — "
-                    "the staged files were written under the old mapping"
+        for m in members:
+            path = m["path"]
+            v0, m0 = _head(path)
+            if m["op"] != "append" and v0 == 0:
+                raise ValueError(f"txn {m['op']} of {path}: table has no commits")
+            if m["op"] == "delete_dv":
+                from pyspark.sql import functions as F
+
+                live = _scan_files(spark, m0["files"], m0, with_lineage=True)
+                if m.get("keys") is not None:
+                    if not m.get("key"):
+                        raise ValueError("txn delete_dv: keys needs key=<column>")
+                    hits = live.join(
+                        F.broadcast(m["keys"].select(m["key"]).distinct()),
+                        m["key"], "left_semi",
+                    )
+                else:
+                    hits = live.where(F.coalesce(m["predicate"], F.lit(False)))
+                updates = _collect_dv_updates(
+                    hits.select("__file", "__pos"), set(m0["files"]),
+                    "commit_transaction",
                 )
-    except (ConcurrentWriteError, SchemaEnforcementError):
+                staged.append({
+                    "op": "delete_dv", "path": path,
+                    "updates": {f: [int(p) for p in ps]
+                                for f, ps in updates.items()},
+                    "base_dv": {f: m0["dv"][f] for f in updates
+                                if f in m0.get("dv", {})},
+                    "n_deleted": sum(len(ps) for ps in updates.values()),
+                    "column_map": dict(m0.get("column_map", {})),
+                    "dropped_physical": sorted(m0.get("dropped_physical", [])),
+                    "constraints": dict(m0.get("constraints", {})),
+                })
+                continue
+            # append and rewrite members stage like any commit; the
+            # stage-time column map / dropped slots / constraints ride the
+            # entry AND the status doc, so publish (and crash recovery)
+            # compares what the data was WRITTEN under against the head it
+            # rebases onto (ADVICE r11)
+            entry = {"op": m["op"],
+                     **_stage(m["df"], path, m0, op="commit_transaction").doc()}
+            if m["op"] == "rewrite":
+                dropped = sorted(f for f in m0["files"] if m["replace"](f))
+                entry.update({
+                    "dropped": dropped,
+                    "base_dv_dropped": {f: m0.get("dv", {}).get(f) for f in dropped},
+                    "base_files": sorted(m0["files"]),
+                    "match": m["replace"],  # in-memory only, not serialized
+                })
+            staged.append(entry)
+        # shrink the schema-wedge window: re-validate EVERY member against
+        # the now-current log right before the first publish — a rename or
+        # constraint that landed during staging aborts cleanly here (nothing
+        # visible yet) instead of wedging the transaction half-published
+        for s in staged:
+            _, now = _head(s["path"])
+            _check_drift(s, now, f"txn {txn_id}: table {s['path']}")
+            if "new_schema" in s:
+                _check_schema(f"txn {txn_id}: table {s['path']} rejected "
+                              "before publish", now.get("schema"), s["new_schema"])
+    except BaseException:
         for t in staged:
             if t.get("commit_dir"):
                 shutil.rmtree(t["commit_dir"], ignore_errors=True)
@@ -1573,28 +1449,26 @@ def commit_transaction(
 def _publish_txn_member(
     spark, entry: dict, txn_id: str, status_path: str, max_retries: int
 ) -> int:
-    """Dispatch one staged transaction member to its op-specific publish
-    (append rebase / DV rebase / rewrite conflict loop)."""
+    """Publish one staged transaction member under its op's conflict rule
+    (append: none; rewrite: :func:`_rewrite_rule`; DV delete:
+    :func:`_dv_delete_build`), stamped with the transaction marker."""
     op = entry.get("op", "append")
     if op == "delete_dv":
         return _publish_txn_delete_dv(
             spark, entry, txn_id, status_path, max_retries
         )
     if op == "rewrite":
-        return _publish_rewrite_staged(
-            spark, entry["path"],
-            new_counts=_data_files(entry["commit_dir"]),
-            dropped=set(entry["dropped"]),
-            m0_dv={f: e for f, e in entry.get("base_dv_dropped", {}).items()
-                   if e is not None},
-            new_schema=entry["new_schema"], has_row_id=False,
-            col_map=dict(entry.get("column_map", {})),
-            dropped_phys=set(entry.get("dropped_physical", [])),
-            table_cons=dict(entry.get("constraints", {})),
-            max_retries=max_retries,
-            txn={"id": txn_id, "status": status_path},
+        staged = _Staged.from_doc(entry)
+        drop = set(entry["dropped"])
+        rule = _rewrite_rule(
+            entry["path"], drop,
+            {f: e for f, e in entry.get("base_dv_dropped", {}).items() if e is not None},
             match=entry.get("match"),
-            base_files=set(entry.get("base_files", [])),
+            known=set(entry.get("base_files", [])) | set(staged.counts),
+        )
+        return _publish_staged(
+            staged, mode="replace", rule=rule, drop=drop,
+            txn={"id": txn_id, "status": status_path}, max_retries=max_retries,
         )
     return _publish_txn_table(spark, entry, txn_id, status_path, max_retries)
 
@@ -1602,101 +1476,34 @@ def _publish_txn_member(
 def _publish_txn_delete_dv(
     spark, entry: dict, txn_id: str, status_path: str, max_retries: int
 ) -> int:
-    """Publish a staged DV-delete transaction member: rebase the
-    stage-time position sets onto the CURRENT manifest with the same
-    conflict rules as :func:`delete_where_dv`'s race path (disjoint
-    concurrent vectors merge, overlapping rows / rewritten files /
-    metadata drift raise).  A member that matched nothing is a no-op —
+    """Publish a staged DV-delete transaction member: the stage-time
+    position sets rebase onto the head with the same conflict rules as
+    :func:`delete_where_dv`.  A member that matched nothing is a no-op —
     no version burned, the table's current version reported."""
     path = entry["path"]
-    ours_new = {f: ps for f, ps in entry.get("updates", {}).items()}
-    if not ours_new:
+    updates = entry.get("updates", {})
+    if not updates:
         return latest_version(path)
-    base_dv = entry.get("base_dv", {})
-    pseudo_base = {
-        "column_map": entry.get("column_map", {}),
-        "dropped_physical": entry.get("dropped_physical", []),
-        "constraints": entry.get("constraints", {}),
-    }
-    last_err: "ConcurrentWriteError | None" = None
-    for _ in range(max_retries):
-        v_cur = latest_version(path)
-        m_cur = read_manifest(path, v_cur)
-        if _dv_metadata_drift(pseudo_base, m_cur):
-            raise ConcurrentWriteError(
-                f"txn {txn_id} delete_dv of {path}: table metadata changed "
-                "concurrently (rename/drop/constraint) — rerun the "
-                "transaction against the new snapshot"
-            )
-        new_v = v_cur + 1
-        merged = _rebase_dv_entries(
-            path, new_v, base_dv, m_cur.get("dv", {}), ours_new,
-            set(m_cur["files"]), "txn delete_dv",
-        )
-        dv = {**m_cur.get("dv", {}), **merged}
-        manifest = {
-            k: m_cur[k]
-            for k in ("files", "schema", "rows", "stats", "bloom_cols",
-                      "column_map", "dropped_physical", "constraints",
-                      *_RT_KEYS)
-            if k in m_cur
-        }
-        manifest.update({
-            "version": new_v, "mode": "delete_dv", "dv": dv,
-            "dv_rows_deleted": int(entry.get("n_deleted", 0)),
-            "txn": {"id": txn_id, "status": status_path},
-        })
-        try:
-            _publish(path, new_v, manifest)
-            return new_v
-        except ConcurrentWriteError as e:
-            last_err = e
-            continue
-    raise ConcurrentWriteError(
-        f"txn {txn_id} delete_dv of {path} lost the publish race "
-        f"{max_retries} times"
-    ) from last_err
+    build = _dv_delete_build(
+        path, {**entry, "dv": entry.get("base_dv", {})}, lambda: updates,
+        int(entry.get("n_deleted", 0)),
+        f"txn {txn_id} delete_dv", txn={"id": txn_id, "status": status_path},
+    )
+    return _publish_loop(path, build, max_retries)
 
 
 def _publish_txn_table(
     spark, entry: dict, txn_id: str, status_path: str, max_retries: int
 ) -> int:
-    """Publish ONE staged transaction table through the reconciling append
-    rebase, stamping the manifest with the transaction marker.  The column
-    map / dropped slots / constraints the data was WRITTEN under come from
-    the staged entry (recorded at stage time, carried in the status doc for
-    recovery) — re-deriving them here would make the drift guards vacuous
-    and publish files under a stale physical mapping (ADVICE r11)."""
-    new_counts = _data_files(entry["commit_dir"])
-    if "column_map" in entry:
-        col_map = dict(entry["column_map"])
-        dropped_phys = set(entry.get("dropped_physical", []))
-        table_cons = dict(entry.get("constraints", {}))
-    else:  # legacy pending status doc (pre-r12): best effort, re-derive
-        col_map, dropped_phys, table_cons = _append_precheck(
-            entry["path"], entry["new_schema"]
-        )
-    stats_cache: dict = {}
-    last_err = None
-    for _ in range(max_retries):
-        new_v, manifest = _rebase_append_manifest(
-            spark, entry["path"],
-            new_counts=new_counts, new_schema=entry["new_schema"],
-            has_row_id=entry["has_row_id"], col_map=col_map,
-            dropped_phys=dropped_phys, table_cons=table_cons,
-            stats_cache=stats_cache,
-        )
-        manifest["txn"] = {"id": txn_id, "status": status_path}
-        try:
-            _publish(entry["path"], new_v, manifest)
-            return new_v
-        except ConcurrentWriteError as e:
-            last_err = e
-            continue
-    raise ConcurrentWriteError(
-        f"txn {txn_id}: table {entry['path']} lost the publish race "
-        f"{max_retries} times"
-    ) from last_err
+    """Publish ONE staged transaction append, stamped with the transaction
+    marker.  The column map / dropped slots / constraints the data was
+    WRITTEN under come from the staged entry (recorded at stage time,
+    carried in the status doc for recovery) — re-deriving them here would
+    make the drift guard vacuous (ADVICE r11)."""
+    return _publish_staged(
+        _Staged.from_doc(entry), mode="append",
+        txn={"id": txn_id, "status": status_path}, max_retries=max_retries,
+    )
 
 
 def _txn_owner_alive(doc: dict) -> bool:
@@ -1951,12 +1758,7 @@ def enable_row_tracking(path: str) -> int:
         base[f] = wm
         wm += int(rows[f])
     new_v = v0 + 1
-    manifest = {
-        k: m0[k]
-        for k in ("files", "rows", "stats", "bloom_cols", "dv", "schema",
-                  "column_map", "dropped_physical", "constraints")
-        if k in m0
-    }
+    manifest = _carry(m0)
     manifest.update({
         "version": new_v,
         "mode": "enable_row_tracking",
@@ -2077,12 +1879,8 @@ def rename_column(path: str, old: str, new: str) -> int:
         cmap[new] = physical
     schema[new] = schema.pop(old)
     new_v = v0 + 1
-    manifest = {
-        k: m0[k]
-        for k in ("files", "rows", "stats", "bloom_cols", "dv",
-                  "dropped_physical", "constraints", *_RT_KEYS)
-        if k in m0
-    }
+    manifest = _carry(m0)
+    manifest.pop("column_map", None)
     manifest.update({
         "version": new_v,
         "mode": "rename",
@@ -2138,12 +1936,8 @@ def drop_column(path: str, col: str) -> int:
     schema.pop(col)
     dropped = sorted(set(m0.get("dropped_physical", [])) | {physical})
     new_v = v0 + 1
-    manifest = {
-        k: m0[k]
-        for k in ("files", "rows", "stats", "bloom_cols", "dv", "constraints",
-                  *_RT_KEYS)
-        if k in m0
-    }
+    manifest = _carry(m0)
+    manifest.pop("column_map", None)
     manifest.update({
         "version": new_v,
         "mode": "drop",
@@ -2355,14 +2149,11 @@ def rollback(path: str, to_version: int) -> int:
     m_cur = read_manifest(path, cur_v)
     new_v = cur_v + 1
     manifest = {
+        **_carry(target),
         "version": new_v,
         "mode": "rollback",
         "rolled_back_to": to_version,
-        "files": target["files"],
     }
-    for carried in ("stats", "bloom_cols", "rows", "schema", "dv", "column_map", "dropped_physical", "constraints", *_RT_KEYS):
-        if carried in target:
-            manifest[carried] = target[carried]
     if manifest.get("row_tracking") or m_cur.get("row_tracking"):
         # row ids are NEVER reused: the watermark stays at the table's
         # all-time high even though the rolled-back rows' ids leave the
@@ -2421,16 +2212,12 @@ def clone(src_path: str, dst_path: str, *, version: int | None = None) -> int:
     src = read_manifest(src_path, v)
     if latest_version(dst_path) != 0:
         raise ValueError(f"clone target {dst_path} already has commits")
-    os.makedirs(os.path.join(dst_path, _SNAP_DIR), exist_ok=True)
     manifest = {
+        **_carry(src),
         "version": 1,
         "mode": "clone",
         "cloned_from": {"path": src_path, "version": v},
-        "files": src["files"],
     }
-    for carried in ("stats", "bloom_cols", "rows", "schema", "dv", "column_map", "dropped_physical", "constraints", *_RT_KEYS):
-        if carried in src:
-            manifest[carried] = src[carried]
     _publish(dst_path, 1, manifest)
     reg = {
         "clone_path": os.path.realpath(dst_path),
@@ -2898,17 +2685,42 @@ def _rebase_dv_entries(
     return out
 
 
-def _dv_metadata_drift(m_base: dict, m_cur: dict) -> bool:
-    """True when a metadata commit (rename/drop/constraint) landed between
-    ``m_base`` and ``m_cur`` — a DV rebase across those is refused: the
-    transaction's predicate and post-images were resolved under the base
-    metadata (the Delta rule: metadata changes conflict with everything)."""
-    return (
-        dict(m_base.get("column_map", {})) != dict(m_cur.get("column_map", {}))
-        or set(m_base.get("dropped_physical", []))
-        != set(m_cur.get("dropped_physical", []))
-        or dict(m_base.get("constraints", {})) != dict(m_cur.get("constraints", {}))
-    )
+def _dv_delete_build(
+    path: str,
+    base: dict,
+    ours,
+    n_deleted: int,
+    op: str,
+    *,
+    staged: "tuple[int, dict] | None" = None,
+    txn: "dict | None" = None,
+):
+    """The :func:`_publish_loop` build of a merge-on-read DELETE: carry the
+    head manifest and point the touched files at vectors that hold our
+    deleted positions.  ``staged`` = (version, {file: entry}) names
+    sidecars already written for a publish on top of that version, used
+    as they are while it is still the head.  On any other head our NEW
+    positions per file (``ours()``) rebase through
+    :func:`_rebase_dv_entries`: disjoint vectors merge, overlapping
+    positions or a rewritten file raise — the benign DV/DV concurrency
+    Delta auto-resolves, and no more."""
+
+    def build(prev_v: int, prev: dict) -> dict:
+        _check_drift(base, prev, f"{op} of {path}")
+        if staged is not None and prev_v == staged[0]:
+            merged = staged[1]
+        else:
+            merged = _rebase_dv_entries(
+                path, prev_v + 1, base.get("dv", {}), prev.get("dv", {}),
+                ours(), set(prev["files"]), op,
+            )
+        m = {**_carry(prev), "mode": "delete_dv",
+             "dv": {**prev.get("dv", {}), **merged}, "dv_rows_deleted": n_deleted}
+        if txn is not None:
+            m["txn"] = txn
+        return m
+
+    return build
 
 
 def delete_where_dv(
@@ -2958,10 +2770,9 @@ def delete_where_dv(
         ).select("__file", "__pos")
     else:
         hits = live.where(F.coalesce(predicate, F.lit(False))).select("__file", "__pos")
-    new_v = v0 + 1
     prev_dv = m0.get("dv", {})
     entries, n_deleted = _stage_dv_sidecars(
-        spark, path, new_v, hits, prev_dv, set(m0["files"]), "delete_where_dv"
+        spark, path, v0 + 1, hits, prev_dv, set(m0["files"]), "delete_where_dv"
     )
     if n_deleted == 0:  # nothing matched: don't burn a version on a no-op
         return {
@@ -2971,177 +2782,28 @@ def delete_where_dv(
             "rows_deleted": 0,
             "files_rewritten": 0,
         }
-    dv = {**prev_dv, **entries}
-    manifest = {k: m0[k] for k in ("files", "schema", "rows", "stats", "bloom_cols", "column_map", "dropped_physical", "constraints", *_RT_KEYS) if k in m0}
-    manifest.update({"version": new_v, "mode": "delete_dv", "dv": dv,
-                     "dv_rows_deleted": n_deleted})
 
-    def _result(v, files_total, n_dv):
+    def ours():
+        # our NEW positions per file: the staged vector minus the base one
+        import numpy as np
+
         return {
-            "version": v,
-            "files_total": files_total,
-            "files_with_dv": n_dv,
-            "rows_deleted": n_deleted,
-            "files_rewritten": 0,
+            f: np.setdiff1d(_dv_positions_arr(e), _dv_positions_arr(prev_dv.get(f)),
+                            assume_unique=True)
+            for f, e in entries.items()
         }
 
-    try:
-        _publish(path, new_v, manifest)
-        return _result(new_v, len(m0["files"]), len(dv))
-    except ConcurrentWriteError:
-        pass
-    # Lost the publish race: rebase onto the winner(s) — the benign DV/DV
-    # concurrency Delta auto-resolves.  Our NEW positions per file are the
-    # staged vector minus the base vector we merged in.
-    import numpy as np
-
-    ours_new = {
-        f: np.setdiff1d(
-            _dv_positions_arr(e), _dv_positions_arr(prev_dv.get(f)),
-            assume_unique=True,
-        )
-        for f, e in entries.items()
+    build = _dv_delete_build(path, m0, ours, n_deleted, "delete_where_dv",
+                             staged=(v0, entries))
+    v = _publish_loop(path, build, max_retries)
+    m = read_manifest(path, v)
+    return {
+        "version": v,
+        "files_total": len(m["files"]),
+        "files_with_dv": len(m["dv"]),
+        "rows_deleted": n_deleted,
+        "files_rewritten": 0,
     }
-    last_err: ConcurrentWriteError | None = None
-    for _ in range(max_retries):
-        v_cur = latest_version(path)
-        m_cur = read_manifest(path, v_cur)
-        if _dv_metadata_drift(m0, m_cur):
-            raise ConcurrentWriteError(
-                f"delete_where_dv of {path}: table metadata changed "
-                "concurrently (rename/drop/constraint) — rerun the "
-                "transaction against the new snapshot"
-            )
-        new_v = v_cur + 1
-        merged = _rebase_dv_entries(
-            path, new_v, prev_dv, m_cur.get("dv", {}), ours_new,
-            set(m_cur["files"]), "delete_where_dv",
-        )
-        dv = {**m_cur.get("dv", {}), **merged}
-        manifest = {k: m_cur[k] for k in ("files", "schema", "rows", "stats", "bloom_cols", "column_map", "dropped_physical", "constraints", *_RT_KEYS) if k in m_cur}
-        manifest.update({"version": new_v, "mode": "delete_dv", "dv": dv,
-                         "dv_rows_deleted": n_deleted})
-        try:
-            _publish(path, new_v, manifest)
-            return _result(new_v, len(m_cur["files"]), len(dv))
-        except ConcurrentWriteError as e:
-            last_err = e
-            continue
-    raise ConcurrentWriteError(
-        f"delete_where_dv of {path} lost the publish race {max_retries} times"
-    ) from last_err
-
-
-def _commit_update_dv_with_retry(
-    df: DataFrame,
-    path: str,
-    m_base: dict,
-    updates: "dict[str, list[int]]",
-    *,
-    max_retries: int = 5,
-) -> int:
-    """The merge-on-read UPDATE's atomic commit, RECONCILING with concurrent
-    writers: post-image files are written ONCE to a uniquely-named commit
-    directory; the publish loop rebases onto any race winner — carrying the
-    winner's files/stats/vectors forward and merging OUR position deltas
-    via :func:`_rebase_dv_entries` (disjoint-row DV commits both land;
-    overlapping rows or a rewrite of a touched file raise, the Delta
-    conflict rules).  Metadata drift (rename/drop/constraint) across the
-    race refuses the rebase outright."""
-    spark = df.sparkSession
-    col_map = dict(m_base.get("column_map", {}))
-    dropped_phys = set(m_base.get("dropped_physical", []))
-    table_cons = dict(m_base.get("constraints", {}))
-    has_row_id = _ROW_ID in df.columns
-    new_schema = {f.name: f.dataType.simpleString()
-                  for f in df.schema.fields if f.name != _ROW_ID}
-    base_schema = m_base.get("schema")
-    revived = {c for c in new_schema
-               if c not in (base_schema or {}) and col_map.get(c, c) in dropped_phys}
-    if revived:
-        raise SchemaEnforcementError(
-            f"update_where_dv of {path} rejected: column(s) {sorted(revived)} "
-            "reuse a DROPPED column's physical slot"
-        )
-    occupied = {p for l, p in col_map.items() if p != l}
-    shadowed = {c for c in new_schema
-                if c not in (base_schema or {}) and c in occupied}
-    if shadowed:
-        raise SchemaEnforcementError(
-            f"update_where_dv of {path} rejected: column(s) {sorted(shadowed)} "
-            "shadow a renamed column's physical slot"
-        )
-    commit_dir = os.path.join(path, f"commit_{uuid.uuid4().hex[:12]}")
-    _write_commit_checked(df, commit_dir, col_map, table_cons, path)
-    new_counts = _data_files(commit_dir)
-    new_files = list(new_counts)
-    new_stats: dict | None = None
-    last_err: ConcurrentWriteError | None = None
-    for _ in range(max_retries):
-        prev_v = latest_version(path)
-        prev_manifest = read_manifest(path, prev_v)
-        if _dv_metadata_drift(m_base, prev_manifest):
-            raise ConcurrentWriteError(
-                f"update_where_dv of {path}: table metadata changed "
-                "concurrently (rename/drop/constraint) — rerun the "
-                "transaction against the new snapshot"
-            )
-        prev_files = prev_manifest.get("files", [])
-        new_v = prev_v + 1
-        merged = _rebase_dv_entries(
-            path, new_v, m_base.get("dv", {}), prev_manifest.get("dv", {}),
-            updates, set(prev_files), "update_where_dv",
-        )
-        dv = {**prev_manifest.get("dv", {}), **merged}
-        files = sorted(prev_files) + new_files
-        manifest = {"version": new_v, "mode": "update_dv", "files": files,
-                    "dv": dv}
-        _carry_row_tracking(manifest, prev_manifest, files, new_counts, has_row_id)
-        prev_rows = prev_manifest.get("rows", {})
-        manifest["rows"] = {
-            **{f: prev_rows[f] for f in prev_files if f in prev_rows},
-            **new_counts,
-        }
-        prev_stats = prev_manifest.get("stats", {})
-        if prev_stats:
-            if new_stats is None:
-                cols = sorted({c for st in prev_stats.values() for c in st})
-                new_stats = _file_stats(new_files, cols)
-            manifest["stats"] = {**prev_stats, **new_stats}
-        prev_bloom_cols = prev_manifest.get("bloom_cols")
-        if prev_bloom_cols:
-            if not os.path.exists(_bloom_sidecar(new_files[0])):
-                _write_file_blooms(new_files, prev_bloom_cols)
-            manifest["bloom_cols"] = prev_bloom_cols
-        prev_schema = prev_manifest.get("schema")
-        if prev_schema is not None:
-            dropped = {c for c in prev_schema if c not in new_schema}
-            retyped = {c for c in prev_schema
-                       if c in new_schema and new_schema[c] != prev_schema[c]}
-            if dropped or retyped:
-                raise SchemaEnforcementError(
-                    f"update_where_dv of {path} rejected at publish (rebased "
-                    f"onto v{prev_v}): dropped columns {sorted(dropped)}, "
-                    f"retyped {sorted(retyped)}"
-                )
-        manifest["schema"] = (
-            new_schema if prev_schema is None else {**prev_schema, **new_schema}
-        )
-        if col_map:
-            manifest["column_map"] = col_map
-        if dropped_phys:
-            manifest["dropped_physical"] = sorted(dropped_phys)
-        if table_cons:
-            manifest["constraints"] = table_cons
-        try:
-            _publish(path, new_v, manifest)
-            return new_v
-        except ConcurrentWriteError as e:
-            last_err = e
-            continue
-    raise ConcurrentWriteError(
-        f"update_where_dv of {path} lost the publish race {max_retries} times"
-    ) from last_err
 
 
 def update_where_dv(
@@ -3204,7 +2866,17 @@ def update_where_dv(
         new_images = new_images.withColumn(
             col, expr.cast(existing[col]) if col in existing else expr
         )
-    v = _commit_update_dv_with_retry(new_images, path, m0, updates)
+    staged = _stage(new_images, path, m0, op="update_where_dv", trusted_row_ids=True)
+
+    def rule(prev_v: int, prev: dict) -> dict:
+        # OUR position deltas merge onto the head's vectors: disjoint rows
+        # both land; overlapping rows or a rewritten target file raise
+        return _rebase_dv_entries(
+            path, prev_v + 1, m0.get("dv", {}), prev.get("dv", {}), updates,
+            set(prev.get("files", [])), "update_where_dv",
+        )
+
+    v = _publish_staged(staged, mode="update_dv", rule=rule)
     return {
         "version": v,
         "rows_updated": n_updated,
@@ -3785,14 +3457,15 @@ def commit_checked(
 def _write_commit_checked(
     df: DataFrame, commit_dir: str, col_map: dict, constraints: dict, path: str
 ) -> None:
-    """Write ``df`` (physical names) to ``commit_dir``, then validate the
+    """Write ``df`` (physical names) into ``commit_dir`` (claimed empty by
+    :func:`_stage`), then validate the
     WRITTEN files against the table constraints — single pass over ``df``
     (Delta enforces during the write itself; a pre-write action would
     compute the frame twice, and a nondeterministic frame could pass
     validation yet land violating rows).  On violation the commit directory
     is deleted before raising, keeping the reject atomic: nothing is
     published, nothing is left on disk."""
-    _unapply_col_map(df, col_map).write.mode("error").parquet(commit_dir)
+    _unapply_col_map(df, col_map).write.mode("append").parquet(commit_dir)
     if not constraints:
         return
     try:
@@ -3801,8 +3474,6 @@ def _write_commit_checked(
         )
         _check_table_constraints(written, constraints, path)
     except ConstraintViolation:
-        import shutil
-
         shutil.rmtree(commit_dir, ignore_errors=True)
         raise
 
@@ -3867,12 +3538,7 @@ def add_table_constraint(
         )
     cons[name] = predicate_sql
     new_v = v0 + 1
-    manifest = {
-        k: m0[k]
-        for k in ("files", "rows", "stats", "bloom_cols", "dv", "schema",
-                  "column_map", "dropped_physical", *_RT_KEYS)
-        if k in m0
-    }
+    manifest = _carry(m0)
     manifest.update({
         "version": new_v,
         "mode": "add_constraint",
@@ -3894,12 +3560,8 @@ def drop_table_constraint(path: str, name: str) -> int:
         raise ValueError(f"no constraint {name!r} on {path}")
     cons.pop(name)
     new_v = v0 + 1
-    manifest = {
-        k: m0[k]
-        for k in ("files", "rows", "stats", "bloom_cols", "dv", "schema",
-                  "column_map", "dropped_physical", *_RT_KEYS)
-        if k in m0
-    }
+    manifest = _carry(m0)
+    manifest.pop("constraints", None)
     manifest.update({
         "version": new_v,
         "mode": "drop_constraint",
