@@ -3659,8 +3659,9 @@ def test_writer_that_gives_up_removes_its_staged_data(spark, tmp_path, monkeypat
         raise snapshots.ConcurrentWriteError("lost (injected)")
 
     monkeypatch.setattr(snapshots, "_publish", always_lose)
-    with pytest.raises(snapshots.ConcurrentWriteError, match="2 times"):
-        snapshots.commit(spark.range(9, 11), a, max_retries=2)
+    with pytest.raises(snapshots.ConcurrentWriteError,
+                       match=f"{snapshots._MAX_RETRIES} times"):
+        snapshots.commit(spark.range(9, 11), a)
     monkeypatch.undo()
     assert _unreferenced_commit_dirs(a) == []
 
@@ -3705,10 +3706,11 @@ def _race_table(spark, path):
 
 def test_each_writer_races_each_winner(spark, tmp_path, monkeypatch):
     """Table-driven race: every writer loses its first publish to a winning
-    append, a winning rewrite of file A, or a winning DV delete in file A,
-    then rebases or raises under the Delta conflict rules.  A rebased
-    writer publishes v4 holding both commits; a conflicting one raises and
-    leaves v3 and no staged data behind."""
+    append, a winning rewrite of file A, or a winning DV delete in file A
+    (and the merge also to a winning merge of the same new key), then
+    rebases or raises under the Delta conflict rules.  A rebased writer
+    publishes v4 holding both commits; a conflicting one raises and leaves
+    v3 and no staged data behind."""
     import pytest
 
     def add(lo, hi, scale=1.0):
@@ -3721,6 +3723,9 @@ def test_each_writer_races_each_winner(spark, tmp_path, monkeypatch):
         for i in range(5):
             m.pop(i, None)
         add(1, 5)(m)
+
+    def keyed(*pairs):
+        return spark.createDataFrame(list(pairs), "id long, v double").coalesce(1)
 
     def writer_ops(path, other, file_a, rows):
         def txn(member):
@@ -3741,6 +3746,11 @@ def test_each_writer_races_each_winner(spark, tmp_path, monkeypatch):
                 "update_dv", lambda m: m.update({1: -1.0})),
             "delete_dv": (lambda: snapshots.delete_where_dv(
                 spark, path, F.col("id") == 2)["version"], "delete_dv", delete(2)),
+            "merge": (lambda: snapshots.merge_upsert(
+                spark, path, keyed((1, -1.0), (200, 200.0)), key="id")["version"],
+                "merge", lambda m: m.update({1: -1.0, 200: 200.0})),
+            "delete_where": (lambda: snapshots.delete_where(
+                spark, path, F.col("id") == 2)["version"], "append", delete(2)),
             "txn_append": (lambda: txn((rows(200, 202), path)), "append", add(200, 202)),
             "txn_rewrite": (lambda: txn({"op": "rewrite", "path": path,
                                          "df": rows(1, 5), "replace": in_a}),
@@ -3758,22 +3768,30 @@ def test_each_writer_races_each_winner(spark, tmp_path, monkeypatch):
                 tens.coalesce(1), path, replace=lambda f: f == file_a), add(0, 5, 10.0)),
             "delete_dv": (lambda: snapshots.delete_where_dv(spark, path, F.col("id") == 3),
                           delete(3)),
+            "merge": (lambda: snapshots.merge_upsert(
+                spark, path, keyed((200, -200.0)), key="id"), lambda m: m.update({200: -200.0})),
         }
 
-    # the conflict each writer raises, by winner (None: it rebases and lands)
+    # the conflict each writer raises, by winner (None: it rebases and
+    # lands).  A merge or a row-predicate delete may match rows in any file
+    # it never read, so every file added since its snapshot conflicts; only
+    # the merge races a winning merge (both inserting new key 200).
     expected = {
         "append": (None, None, None),
         "rewrite": (None, "already removed", "deletion vectors changed"),
         "overwrite": ("added after", "already removed", "deletion vectors changed"),
         "update_dv": (None, "rewritten", None),
         "delete_dv": (None, "rewritten", None),
+        "merge": ("added after", "already removed", "deletion vectors changed",
+                  "added after"),
+        "delete_where": ("added after", "already removed", "deletion vectors changed"),
         "txn_append": (None, None, None),
         "txn_rewrite": (None, "already removed", "deletion vectors changed"),
         "txn_delete_dv": (None, "rewritten", None),
     }
     failures = []
     for wname, conflicts in expected.items():
-        for vname, conflict in zip(("append", "rewrite", "delete_dv"), conflicts):
+        for vname, conflict in zip(("append", "rewrite", "delete_dv", "merge"), conflicts):
             case = tmp_path / f"{wname}-{vname}"
             path, other = str(case / "t"), str(case / "o")
             file_a, rows = _race_table(spark, path)
@@ -3848,31 +3866,61 @@ def test_publish_loop_is_the_only_retry_loop():
 
 def test_id_minting_merge_conflicts_with_a_racing_append(spark, tmp_path, monkeypatch):
     """On a row-tracked table a MERGE mints ids for new keys from the
-    watermark it read.  When a racing append moved the watermark first, the
-    merge must not rebase (both would own the same ids): it raises, and
-    every live id stays unique."""
+    watermark it read.  A racing append that lands first, at the merge's
+    publish or between its scan and its commit, must make the merge raise
+    (a rebase would give both the same ids): every live id stays unique."""
     import pytest
 
-    path = str(tmp_path / "t")
-    snapshots.commit(_sorted1(spark.range(0, 4)), path)
-    snapshots.enable_row_tracking(path)                              # v2
-    orig = snapshots._publish
-    fired = {"done": False}
+    def at_publish(path):
+        orig = snapshots._publish
 
-    def inject(p, v, manifest):
-        if not fired["done"]:
-            fired["done"] = True
+        def inject(p, v, manifest):
             monkeypatch.setattr(snapshots, "_publish", orig)
             snapshots.commit(_sorted1(spark.range(10, 12)), path)   # winner v3
-            monkeypatch.setattr(snapshots, "_publish", inject)
             raise snapshots.ConcurrentWriteError("lost the race (injected)")
-        return orig(p, v, manifest)
 
-    monkeypatch.setattr(snapshots, "_publish", inject)
-    with pytest.raises(snapshots.ConcurrentWriteError, match="watermark"):
-        snapshots.merge_upsert(spark, path, _sorted1(spark.range(3, 6)), key="id")
-    monkeypatch.undo()
-    assert snapshots.latest_version(path) == 3
-    ids = [r._row_id for r in snapshots.read_version_row_ids(spark, path).collect()]
-    assert sorted(ids) == list(range(6))
-    assert _unreferenced_commit_dirs(path) == []
+        monkeypatch.setattr(snapshots, "_publish", inject)
+
+    def during_scan(path):
+        orig = snapshots.commit
+
+        def append_first(df, p, **kw):
+            monkeypatch.setattr(snapshots, "commit", orig)
+            orig(_sorted1(spark.range(10, 12)), path)               # winner v3
+            return orig(df, p, **kw)
+
+        monkeypatch.setattr(snapshots, "commit", append_first)
+
+    for race in (at_publish, during_scan):
+        path = str(tmp_path / race.__name__)
+        snapshots.commit(_sorted1(spark.range(0, 4)), path)
+        snapshots.enable_row_tracking(path)                          # v2
+        race(path)
+        with pytest.raises(snapshots.ConcurrentWriteError, match="added after"):
+            snapshots.merge_upsert(spark, path, _sorted1(spark.range(3, 6)), key="id")
+        monkeypatch.undo()
+        assert snapshots.latest_version(path) == 3
+        ids = [r._row_id for r in snapshots.read_version_row_ids(spark, path).collect()]
+        assert sorted(ids) == list(range(6)), race.__name__
+        assert _unreferenced_commit_dirs(path) == []
+
+
+def test_txn_rewrite_member_whose_replace_raises_stages_nothing(spark, tmp_path):
+    """A rewrite member's dropped set is decided before its data lands: a
+    ``replace`` that raises leaves no staged directory under any member."""
+    import pytest
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    snapshots.commit(spark.range(0, 3), a)
+    snapshots.commit(spark.range(0, 3), b)
+
+    def boom(f):
+        raise RuntimeError("bad predicate")
+
+    with pytest.raises(RuntimeError, match="bad predicate"):
+        snapshots.commit_transaction([
+            (spark.range(3, 5), a),
+            {"op": "rewrite", "path": b, "df": spark.range(0, 2), "replace": boom},
+        ])
+    assert _unreferenced_commit_dirs(a) == []
+    assert _unreferenced_commit_dirs(b) == []

@@ -1013,19 +1013,29 @@ def _next_manifest(
     return m
 
 
-def _publish_loop(path: str, build, max_retries: int, *, discard=None) -> int:
+_MAX_RETRIES = 5  # publish attempts before a writer gives up on a busy log
+
+
+def _publish_loop(path: str, build, max_retries: int = _MAX_RETRIES, *,
+                  discard=None, head: "tuple[int, dict] | None" = None) -> int:
     """The one optimistic publish loop (the Delta protocol): read the log
     head, ``build(prev_v, prev_manifest)`` the next manifest on it and
     publish that as ``prev_v + 1``; a lost race re-reads the head and
     builds again.  ``build`` raises :class:`ConcurrentWriteError` on a real
-    conflict — no retry can fix one.  ``discard`` (a single-table writer's
-    staged data) runs when the loop gives up: when reading the head or
-    ``build`` raises, or when every attempt lost; never after a publish
-    whose outcome is unknown.  Returns the published version."""
+    conflict — no retry can fix one.  ``head`` is a ``(version, manifest)``
+    the caller already read: the first attempt builds on it without
+    re-reading when it is still the latest.  ``discard`` (a single-table
+    writer's staged data) runs when the loop gives up: when reading the
+    head or ``build`` raises, or when every attempt lost; never after a
+    publish whose outcome is unknown.  Returns the published version."""
     last_err: ConcurrentWriteError | None = None
     for _ in range(max_retries):
         try:
-            prev_v, prev = _head(path)
+            if head is not None and latest_version(path) == head[0]:
+                prev_v, prev = head
+            else:
+                prev_v, prev = _head(path)
+            head = None
             manifest = build(prev_v, prev)
         except BaseException:
             if discard is not None:
@@ -1051,7 +1061,7 @@ def _publish_staged(
     rule=None,
     drop: "set[str] | frozenset" = frozenset(),
     txn: "dict | None" = None,
-    max_retries: int = 5,
+    max_retries: int = _MAX_RETRIES,
 ) -> int:
     """Publish staged data through :func:`_publish_loop`.  Each attempt
     runs the drift guard, then the writer's own conflict ``rule(prev_v,
@@ -1067,8 +1077,10 @@ def _publish_staged(
         return _next_manifest(prev, staged, drop=drop, dv_updates=dv_updates,
                               mode=mode, txn=txn)
 
-    return _publish_loop(staged.path, build, max_retries,
-                         discard=None if txn is not None else staged.discard)
+    if txn is not None:  # staged.base is a status-doc entry, not a manifest
+        return _publish_loop(staged.path, build, max_retries)
+    return _publish_loop(staged.path, build, max_retries, discard=staged.discard,
+                         head=(int(staged.base.get("version", 0)), staged.base))
 
 
 def _rewrite_rule(path: str, drop: "set[str]", base_dv: dict, *, match=None,
@@ -1129,10 +1141,10 @@ def commit(
     stats_cols: "list[str] | None" = None,
     bloom_cols: "list[str] | None" = None,
     allow_schema_change: bool = False,
-    max_retries: int = 5,
     _mode_label: "str | None" = None,
     _trusted_row_ids: bool = False,
     _id_watermark_hint: "int | None" = None,
+    _base: "dict | None" = None,
 ) -> int:
     """Write ``df`` as a new immutable commit and a new manifest.
 
@@ -1176,7 +1188,7 @@ def commit(
 
     Concurrency (the Delta optimistic protocol): the data is written once
     (:func:`_stage`), then the manifest publish loops up to
-    ``max_retries`` times.  A commit that loses the publish race re-reads
+    ``_MAX_RETRIES`` times.  A commit that loses the publish race re-reads
     the log and rebases: an append onto any winner (two appends cannot
     conflict); a rewrite or overwrite only when the winner neither removed
     a file it drops, nor added a file its predicate matches, nor changed a
@@ -1189,8 +1201,13 @@ def commit(
     the lowest free number above the version the commit read — with no
     other writer in between, the version it publishes — so a commit's
     files are identifiable without tracking Spark's part-file names.
+
+    ``_base`` is the manifest an internal caller read and derived ``df``
+    from (its ids minted from that watermark, its ``replace`` decided on
+    those files): the commit stages and rebases from it, not from a later
+    head, so a commit that landed in between counts as a concurrent one.
     """
-    _, base = _head(path)
+    base = _head(path)[1] if _base is None else _base
     overwrite = mode == "overwrite"
     match = (lambda f: True) if overwrite else replace
     # a rewrite's dropped-file set is decided ONCE, against the snapshot read
@@ -1203,15 +1220,14 @@ def commit(
     )
     rule = None if match is None else _rewrite_rule(path, drop, base.get("dv", {}),
                                                     match=match)
-    return _publish_staged(staged, mode=_mode_label or mode, rule=rule,
-                           drop=drop, max_retries=max_retries)
+    return _publish_staged(staged, mode=_mode_label or mode, rule=rule, drop=drop)
 
 
-def commit_with_retry(df: DataFrame, path: str, *, max_retries: int = 5) -> int:
+def commit_with_retry(df: DataFrame, path: str) -> int:
     """An append :func:`commit` (kept for its callers): the reconciling
     append — on a lost publish race it rebases onto the winner, the benign
     append/append case Delta retries automatically."""
-    return commit(df, path, max_retries=max_retries)
+    return commit(df, path)
 
 
 def commit_rewrite_with_retry(
@@ -1219,7 +1235,6 @@ def commit_rewrite_with_retry(
     path: str,
     *,
     replace,
-    max_retries: int = 5,
     _trusted_row_ids: bool = False,
 ) -> int:
     """A ``replace`` :func:`commit` published under mode ``'replace'``
@@ -1227,8 +1242,8 @@ def commit_rewrite_with_retry(
     past concurrent writers whose touched-file sets are DISJOINT from its
     own (e.g. two compactions of different partitions) and raises
     :class:`ConcurrentWriteError` on a real conflict (:func:`_rewrite_rule`)."""
-    return commit(df, path, replace=replace, max_retries=max_retries,
-                  _mode_label="replace", _trusted_row_ids=_trusted_row_ids)
+    return commit(df, path, replace=replace, _mode_label="replace",
+                  _trusted_row_ids=_trusted_row_ids)
 
 
 def _txn_dir(path: str) -> str:
@@ -1389,9 +1404,9 @@ def commit_transaction(
             # stage-time column map / dropped slots / constraints ride the
             # entry AND the status doc, so publish (and crash recovery)
             # compares what the data was WRITTEN under against the head it
-            # rebases onto (ADVICE r11)
-            entry = {"op": m["op"],
-                     **_stage(m["df"], path, m0, op="commit_transaction").doc()}
+            # rebases onto (ADVICE r11).  A rewrite's dropped set is decided
+            # before its data lands, so a failing predicate stages nothing.
+            entry = {"op": m["op"]}
             if m["op"] == "rewrite":
                 dropped = sorted(f for f in m0["files"] if m["replace"](f))
                 entry.update({
@@ -1400,6 +1415,7 @@ def commit_transaction(
                     "base_files": sorted(m0["files"]),
                     "match": m["replace"],  # in-memory only, not serialized
                 })
+            entry.update(_stage(m["df"], path, m0, op="commit_transaction").doc())
             staged.append(entry)
         # shrink the schema-wedge window: re-validate EVERY member against
         # the now-current log right before the first publish — a rename or
@@ -1584,7 +1600,7 @@ def recover_transactions(
             continue
         for t in unpublished:
             _publish_txn_member(spark, dict(t), txn_id, status_path,
-                                max_retries=5)
+                                max_retries=_MAX_RETRIES)
         _write_txn_status(status_path, {"txn_id": txn_id, "status": "committed"})
         out[txn_id] = "committed" if unpublished else "already_complete"
     return out
@@ -2448,10 +2464,12 @@ def merge_upsert(
     new_rows = survivors.unionByName(
         delta, allowMissingColumns=allow_schema_evolution
     )
+    # a file added after m may hold a key this merge inserts: any unseen
+    # file conflicts (a rebase would land that key twice)
     v = commit(
-        new_rows, path, replace=lambda f: f in touched_set,
+        new_rows, path, replace=lambda f: f in touched_set or f not in manifest_files,
         _mode_label="merge", _trusted_row_ids=tracked,
-        _id_watermark_hint=wm_hint,
+        _id_watermark_hint=wm_hint, _base=m,
     )
     return {"version": v, "files_total": n_total, "files_rewritten": len(touched_set)}
 
@@ -2487,7 +2505,10 @@ def delete_where(spark: SparkSession, path: str, predicate) -> dict:
         .where(~F.coalesce(predicate, F.lit(False)))
         .drop("__file", "__pos")
     )
-    v = commit(survivors, path, replace=lambda f: f in touched_set)
+    # a file added after m may hold rows the predicate matches: any unseen
+    # file conflicts, the same rule as a merge
+    v = commit(survivors, path,
+               replace=lambda f: f in touched_set or f not in manifest_files, _base=m)
     return {"version": v, "files_total": n_total, "files_rewritten": len(touched_set)}
 
 
