@@ -37,6 +37,35 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPO_DIR = os.path.dirname(os.path.abspath(__file__))
 ACTION = os.environ.get("SPARK_GRAFT_BENCH_ACTION", "noop")
+DETAIL_PATH = os.path.join(REPO_DIR, "BENCH_DETAIL.json")
+
+
+def load_detail(path: str = DETAIL_PATH) -> dict:
+    """BENCH_DETAIL.json as a dict; a missing file is ``{}``.  A file that
+    does not parse raises, so no writer replaces sections it cannot read."""
+    try:
+        with open(path, encoding="utf-8") as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {}
+
+
+def merge_detail(sections: dict, path: str = DETAIL_PATH) -> dict:
+    """Set ``sections``' top-level keys in BENCH_DETAIL.json and keep every
+    other section: the one writer ``bench.py`` and the tools share.  The
+    merged file goes to a temp file beside it and is moved into place, so
+    a failed write leaves the old file whole.  Returns the merged dict."""
+    detail = load_detail(path)
+    detail.update(sections)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    try:
+        with open(tmp, "w", encoding="utf-8") as f:
+            json.dump(detail, f, indent=1)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+    return detail
 
 
 def _materialize(df) -> None:
@@ -270,7 +299,6 @@ def main() -> None:
             key=lambda kv: -kv[1],
         )[:10]
     )
-    detail_path = os.path.join(REPO_DIR, "BENCH_DETAIL.json")
     detail = {
         "metric": "query_inventory_total_wall",
         "value": round(total, 3),
@@ -285,16 +313,7 @@ def main() -> None:
         "runs": runs,
         "action": ACTION,
     }
-    if os.path.exists(detail_path):
-        try:  # preserve sections other runs wrote (e.g. the sf1 scale smoke)
-            prev = json.load(open(detail_path))
-            for k, v in prev.items():
-                if k not in detail:
-                    detail[k] = v
-        except Exception:
-            pass
-    with open(detail_path, "w") as f:
-        json.dump(detail, f, indent=1)
+    merge_detail(detail)  # keeps the sections other tools wrote
     print(
         json.dumps(
             {

@@ -315,3 +315,66 @@ def test_cli_where_planner(spark, tmp_path, capsys, monkeypatch):
     out = _json.loads(capsys.readouterr().out.splitlines()[0])
     assert out["files_total"] == 3 and out["files_scanned"] == 1
     assert out["n_rows"] == 10
+
+
+def test_cli_ticks_reads_across_symbol_change_and_hot_history(spark, tmp_path, capsys, monkeypatch):
+    """`ticks` serves the symbol-based reads over a consolidated history
+    (2021-2022) plus the hot year (2023): sid 1001 trades as OLD through
+    2021 and as NEW from 2022.  --start/--end is the calendar-aligned slice
+    across the split; --as-of is the resolved security's whole series."""
+    import datetime as _dt
+    import json as _json
+    import os
+
+    from pyspark.sql import Row
+
+    import us_equity_datalake_spark.cli as cli
+    from us_equity_datalake_spark.equity.daily_job import LakePaths
+    from us_equity_datalake_spark.sources.lake import write_partitioned
+
+    monkeypatch.setattr(
+        "us_equity_datalake_spark.session.get_spark", lambda name: spark
+    )
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    D = _dt.date
+    root = str(tmp_path / "lake")
+    lake = LakePaths(root)
+
+    def bars(days):
+        return spark.createDataFrame(
+            [Row(security_id=1001, timestamp=d, close=float(d.year) + d.day / 100,
+                 year=d.year, month=d.month) for d in days])
+
+    write_partitioned(bars([D(2021, 1, 4), D(2022, 12, 30)]),
+                      os.path.join(root, "raw", "ticks", "history"), partition_by=["year"])
+    write_partitioned(bars([D(2023, 1, 4)]), lake.ticks_daily, partition_by=["year", "month"])
+    spark.createDataFrame([
+        Row(security_id=1001, symbol="OLD", start_date=D(2021, 1, 1), end_date=D(2021, 12, 31)),
+        Row(security_id=1001, symbol="NEW", start_date=D(2022, 1, 1), end_date=D(2099, 12, 31)),
+    ]).write.parquet(lake.security_master)
+
+    def run(*argv):
+        assert cli.main(["ticks", "--lake", root, *argv]) == 0
+        return [_json.loads(line) for line in capsys.readouterr().out.splitlines()]
+
+    # weekdays 2022-12-30 .. 2023-01-05: one history bar, one hot bar, and
+    # the untraded weekdays kept with null bar columns
+    out = run("--symbol", "NEW", "--start", "2022-12-30", "--end", "2023-01-05",
+              "--history", os.path.join("raw", "ticks", "history"))
+    assert [r["timestamp"] for r in out] == [
+        "2022-12-30", "2023-01-02", "2023-01-03", "2023-01-04", "2023-01-05"]
+    assert {r["timestamp"]: r.get("close") for r in out if r.get("close")} == {
+        "2022-12-30": 2022.3, "2023-01-04": 2023.04}
+
+    # NEW as of 2023 resolves to sid 1001: its OLD-era bar comes back too
+    out = run("--symbol", "NEW", "--as-of", "2023-06-01")
+    assert [(r["security_id"], r["timestamp"]) for r in out] == [
+        (1001, "2021-01-04"), (1001, "2022-12-30"), (1001, "2023-01-04")]
+    # OLD before the change is the same security; OLD today trades nothing,
+    # so every aligned weekday is null
+    assert len(run("--symbol", "OLD", "--as-of", "2021-06-01")) == 3
+    out = run("--symbol", "OLD", "--start", "2023-01-02", "--end", "2023-01-06")
+    assert len(out) == 5 and not any("close" in r for r in out)
+    for bad in (["--start", "2023-01-02"], ["--as-of", "2023-01-02", "--end", "2023-01-06"]):
+        with pytest.raises(SystemExit):
+            cli.main(["ticks", "--lake", root, "--symbol", "NEW", *bad])

@@ -442,32 +442,6 @@ def test_kmeans_assign_separates_blobs(spark):
     assert again == out
 
 
-def test_register_views_enables_plain_sql(spark):
-    """The SQL surface: register the lake as temp views, run a query through
-    spark.sql and cross-check the DataFrame form."""
-    from us_equity_datalake_spark.sources.registry import register_views
-
-    names = register_views(spark, "/root/testdata/sf0.001")
-    assert {"customer", "orders", "lineitem", "documents", "embeddings"} <= set(names)
-    sql_n = spark.sql(
-        "SELECT COUNT(*) AS n FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey "
-        "WHERE c.c_mktsegment = 'BUILDING'"
-    ).collect()[0].n
-    from us_equity_datalake_spark.sources.registry import load_table
-
-    df_n = (
-        load_table(spark, "orders", "/root/testdata/sf0.001")
-        .join(
-            load_table(spark, "customer", "/root/testdata/sf0.001").filter(
-                F.col("c_mktsegment") == "BUILDING"
-            ),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        .count()
-    )
-    assert sql_n == df_n > 0
-
-
 def test_distributed_prefix_sum_matches_window(spark):
     """Two-phase prefix sum must equal the single-partition window cumsum
     bit-exact on integers — including skewed key distributions and bucket
@@ -500,17 +474,15 @@ def test_distributed_prefix_sum_matches_window(spark):
         assert got == expect, f"mismatch at num_buckets={n_buckets}"
 
 
-def test_assign_running_ids_distributed_matches_window_form(spark):
-    """W5 scale path: the prefix-sum id assignment must equal the
-    single-partition-window form on the same change-detection input."""
+def test_assign_running_ids_matches_running_count(spark):
+    """W5: the window-form id assignment equals ``base`` plus the running
+    count of new-group flags in key order."""
     import random
+    from itertools import accumulate
 
     from pyspark.sql import Row
 
-    from us_equity_datalake_spark.operators.windows import (
-        assign_running_ids,
-        assign_running_ids_distributed,
-    )
+    from us_equity_datalake_spark.operators.windows import assign_running_ids
 
     rng = random.Random(3)
     rows = [Row(k=i, grp=rng.randint(0, 1) == 1) for i in range(1000)]
@@ -519,11 +491,8 @@ def test_assign_running_ids_distributed_matches_window_form(spark):
         r.k: r.assigned_id
         for r in assign_running_ids(df, order=["k"], new_group=F.col("grp")).collect()
     }
-    d_ids = {
-        r.k: r.assigned_id
-        for r in assign_running_ids_distributed(df, order="k", new_group=F.col("grp")).collect()
-    }
-    assert d_ids == w_ids
+    expect = dict(enumerate(1000 + c for c in accumulate(int(r.grp) for r in rows)))
+    assert w_ids == expect
 
 
 def test_subword_count_golden(spark):

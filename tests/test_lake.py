@@ -176,33 +176,6 @@ def test_read_hot_cold_router_after_consolidation(spark, tmp_path):
     assert "PartitionFilters" in plan  # year predicate reaches both scans
 
 
-def test_small_file_report_flags_fragmented_partition(spark, tmp_path):
-    """I5 policy: many tiny files in one partition -> needs_compaction; after
-    compact_partition the flag clears."""
-    from pyspark.sql import Row
-
-    from us_equity_datalake_spark.sources.lake import (
-        compact_partition,
-        small_file_report,
-        write_partitioned,
-    )
-
-    path = str(tmp_path / "frag")
-    df = spark.createDataFrame([Row(k=i, year=2024) for i in range(100)]).repartition(10)
-    # bypass the default write clustering — the fragmentation IS the fixture
-    write_partitioned(df, path, partition_by=["year"], files_per_partition=None)
-
-    rep = {r["partition"]: r for r in small_file_report(spark, path)}
-    frag = rep["year=2024"]
-    assert frag["n_files"] == 10 and frag["needs_compaction"]
-
-    compact_partition(spark, path, partition_by=["year"], predicate="year = 2024", target_files=1)
-    rep2 = {r["partition"]: r for r in small_file_report(spark, path)}
-    assert rep2["year=2024"]["n_files"] == 1
-    assert not rep2["year=2024"]["needs_compaction"]
-    assert spark.read.parquet(path).count() == 100
-
-
 def test_concurrent_dynamic_and_static_overwrites_keep_their_modes(spark, tmp_path):
     """A dynamic overwrite of table A and a static overwrite of table B run
     at once on one session: A keeps its untouched partition, B is replaced

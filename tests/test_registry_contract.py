@@ -3,6 +3,10 @@ registration order) must stay structurally sound — a typo'd priority name or
 a query that silently loses its oracle should fail here, not in the driver's
 round-end grading."""
 
+import ast
+import os
+from collections import defaultdict
+
 
 def test_every_query_has_an_oracle():
     import __spark_entry__ as m
@@ -66,44 +70,168 @@ def test_scratch_dir_removed_at_process_exit(tmp_path):
     assert os.listdir(tmp_path) == []
 
 
-def test_no_orphan_operators():
-    """Every public top-level function or class in ``operators/`` is named
-    (as a whole word) in some ``.py`` file outside ``tests/`` besides its own
-    definition: an operator that only its tests reach is dead weight.
-    ``perfbench/`` counts as a caller.  No Spark session is started."""
-    import ast
-    import os
-    import re
-    from collections import Counter
+# The only definitions no entry point reaches on purpose: each needs a network,
+# WRDS rows or model weights, so only an operator with those calls it.  Their
+# private helpers are reached through them.
+EDGES = {
+    "sources/adapters.py::read_crsp_ticks": "WRDS: CRSP dsf range read over JDBC",
+    "sources/adapters.py::crsp_universe_query": "WRDS: CRSP historical universe query",
+    "sources/adapters.py::fetch_openfigi_mapping": "network: batched OpenFIGI lookup",
+    "sources/adapters.py::figi_map_df": "network: lands the OpenFIGI mapping",
+    "sources/adapters.py::sec_company_tickers_rows": "network: EDGAR company_tickers.json",
+    "sources/adapters.py::parse_alpaca_bars_page": "network: Alpaca bars page",
+    "sources/adapters.py::universe_rows_to_df": "WRDS: lands CRSP universe rows",
+    "sources/ingest.py::fanout_fetch": "network: per-key fetch on the executors",
+    "sources/ingest.py::fetch_paginated": "network: next-page-token API drain",
+    "sources/ingest.py::filter_unwritten": "network: skips keys landed by an earlier fetch",
+    "sources/ingest.py::rows_to_df": "network: lands driver-fetched records",
+    "functions/timeops.py::trade_day_range_utc": "network: Alpaca request window of a day",
+    "functions/timeops.py::month_range_utc": "network: Alpaca request window of a month",
+    "equity/sentiment.py::finbert_model": "weights: the ProsusAI/finbert checkpoint",
+    "equity/security_master.py::build_security_master": "WRDS: master from the CRSP name history",
+    "equity/daily_job.py::load_security_master": "WRDS: its stale-master rebuild path",
+}
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    ops_dir = os.path.join(repo, "us_equity_datalake_spark", "operators")
-    words: dict[str, Counter] = {}
-    for root, dirs, files in os.walk(repo):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "__")) and
-                   os.path.join(root, d) != os.path.join(repo, "tests")]
+_PKG = "us_equity_datalake_spark"
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _unreached(repo: str, edges: "dict[str, str]"):
+    """Trace the package's top-level definitions (``"<module path>::<name>"``)
+    from its entry points and return ``(unreached, undefined edges, edges
+    reached anyway)``.
+
+    Roots: every name, attribute, import alias or string literal in a ``.py``
+    file outside the package and ``tests/`` (tools, ``bench.py``,
+    ``__spark_entry__.py``, ``perfbench/``, which wraps snapshot functions by
+    name); every module-level statement of the package other than a
+    definition; every ``@register`` definition; every ``edges`` entry.  Inside
+    the package only a name, an attribute or an import alias in a reached body
+    reaches a definition: docstrings, comments, ``__all__`` and other strings
+    do not."""
+    pkg_dir = os.path.join(repo, _PKG)
+    mods = {}  # dotted module -> (path relative to the package, tree, is package)
+    for root, dirs, files in os.walk(pkg_dir):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "__"))]
         for f in files:
             if f.endswith(".py"):
-                path = os.path.join(root, f)
-                with open(path, encoding="utf-8") as fh:
-                    words[path] = Counter(re.findall(r"\w+", fh.read()))
+                rel = os.path.relpath(os.path.join(root, f), pkg_dir).replace(os.sep, "/")
+                dotted = ".".join([_PKG, *rel[:-3].split("/")]).removesuffix(".__init__")
+                with open(os.path.join(root, f), encoding="utf-8") as fh:
+                    mods[dotted] = (rel, ast.parse(fh.read()), f == "__init__.py")
 
-    orphans = []
-    for f in sorted(os.listdir(ops_dir)):
-        if not f.endswith(".py"):
+    defs, by_name, binds = {}, defaultdict(list), defaultdict(dict)
+    for dotted, (rel, tree, is_pkg) in mods.items():
+        for node in tree.body:
+            if isinstance(node, _DEFS):
+                defs[f"{rel}::{node.name}"] = (dotted, node)
+                by_name[node.name].append(f"{rel}::{node.name}")
+        # what each import binds: a module (name None) or a module's name
+        pkg = dotted if is_pkg else dotted.rpartition(".")[0]
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                target = node.module
+                if node.level:
+                    base = pkg.rsplit(".", node.level - 1)[0] if node.level > 1 else pkg
+                    target = f"{base}.{node.module}" if node.module else base
+                for a in node.names:
+                    sub = f"{target}.{a.name}"
+                    binds[dotted][a.asname or a.name] = (sub, None) if sub in mods else (target, a.name)
+            elif isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.asname and a.name in mods:
+                        binds[dotted][a.asname] = (a.name, None)
+
+    def resolve(dotted, name, hops=0):
+        """The definition ``name`` means in module ``dotted``, through re-exports."""
+        if dotted not in mods or hops > 5:
+            return []
+        key = f"{mods[dotted][0]}::{name}"
+        if key in defs:
+            return [key]
+        target, orig = binds[dotted].get(name, (None, None))
+        return resolve(target, orig, hops + 1) if orig else []
+
+    def module_of(dotted, expr):
+        if isinstance(expr, ast.Name):
+            bound = binds[dotted].get(expr.id)
+            return bound[0] if bound and bound[1] is None else None
+        if isinstance(expr, ast.Attribute):
+            base = module_of(dotted, expr.value)
+            return f"{base}.{expr.attr}" if f"{base}.{expr.attr}" in mods else None
+        return None
+
+    def refs(dotted, nodes):
+        out = []
+        for x in (x for n in nodes for x in ast.walk(n)):
+            if isinstance(x, ast.Name):
+                out += resolve(dotted, x.id)
+            elif isinstance(x, ast.Attribute):
+                # an attribute of an unknown object may be any same-named definition
+                base = module_of(dotted, x.value)
+                out += resolve(base, x.attr) if base else by_name.get(x.attr, [])
+            elif isinstance(x, (ast.Import, ast.ImportFrom)):
+                for a in x.names:
+                    target, orig = binds[dotted].get(a.asname or a.name, (None, None))
+                    out += resolve(target, orig) if orig else []
+        return out
+
+    roots = []
+    for root, dirs, files in os.walk(repo):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "__"))
+                   and os.path.join(root, d) not in (pkg_dir, os.path.join(repo, "tests"))]
+        for f in (f for f in files if f.endswith(".py")):
+            with open(os.path.join(root, f), encoding="utf-8") as fh:
+                for x in ast.walk(ast.parse(fh.read())):
+                    if isinstance(x, ast.Name):
+                        roots += by_name.get(x.id, [])
+                    elif isinstance(x, ast.Attribute):
+                        roots += by_name.get(x.attr, [])
+                    elif isinstance(x, ast.Constant) and isinstance(x.value, str):
+                        roots += by_name.get(x.value, [])
+                    elif isinstance(x, (ast.Import, ast.ImportFrom)):
+                        for a in x.names:
+                            roots += by_name.get(a.name.rpartition(".")[2], [])
+    for dotted, (rel, tree, _) in mods.items():
+        for node in tree.body:
+            if not isinstance(node, _DEFS):
+                roots += refs(dotted, [node])
+                continue
+            # decorators, defaults and bases run at import time
+            head = list(node.decorator_list)
+            if isinstance(node, ast.ClassDef):
+                head += node.bases + node.keywords
+            else:
+                head += node.args.defaults + [d for d in node.args.kw_defaults if d]
+            roots += refs(dotted, head)
+            for d in node.decorator_list:
+                d = d.func if isinstance(d, ast.Call) else d
+                if getattr(d, "id", getattr(d, "attr", None)) == "register":
+                    roots.append(f"{rel}::{node.name}")
+
+    reached, referenced, todo = set(), set(roots), roots + list(edges)
+    while todo:
+        key = todo.pop()
+        if key in reached or key not in defs:
             continue
-        path = os.path.join(ops_dir, f)
-        with open(path, encoding="utf-8") as fh:
-            lines = fh.read().splitlines()
-        for node in ast.parse("\n".join(lines)).body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
-            if node.name.startswith("_"):
-                continue
-            # the definition's own span (decorators, docstring, recursion)
-            start = min([node.lineno] + [d.lineno for d in node.decorator_list])
-            own = re.findall(r"\w+", "\n".join(lines[start - 1:node.end_lineno]))
-            uses = sum(c[node.name] for c in words.values()) - own.count(node.name)
-            if uses <= 0:
-                orphans.append(f"operators/{f}::{node.name}")
-    assert not orphans, f"operators reached by no code outside tests/: {orphans}"
+        reached.add(key)
+        dotted, node = defs[key]
+        found = [k for k in refs(dotted, node.body) if k != key]
+        referenced.update(found)
+        todo += found
+    return (sorted(set(defs) - reached), sorted(set(edges) - set(defs)),
+            sorted(set(edges) & referenced))
+
+
+def test_every_definition_is_reached_from_an_entry_point():
+    """Every top-level function or class in the package is reached from an
+    entry point (a registered query, the CLI, the daily job, a tool,
+    ``bench.py`` or ``perfbench``), or is listed in ``EDGES`` with its
+    reason; code that only its tests reach is dead weight.  An ``EDGES``
+    entry must exist and must not be reached anyway, so the list cannot rot.
+    No Spark session is started."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    unreached, undefined, reached_anyway = _unreached(repo, EDGES)
+    assert not unreached, f"reached by no entry point: {unreached}"
+    assert not undefined, f"EDGES entries that name no definition: {undefined}"
+    assert not reached_anyway, f"EDGES entries an entry point reaches: {reached_anyway}"

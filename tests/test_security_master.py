@@ -8,9 +8,8 @@ from pyspark.sql import Row
 from us_equity_datalake_spark.equity.security_master import (
     build_security_master,
     normalize_symbol,
-    resolve_auto,
-    resolve_pit,
 )
+from us_equity_datalake_spark.operators.pit import auto_resolve, pit_lookup
 
 D = dt.date.fromisoformat
 
@@ -24,6 +23,19 @@ NH_SCHEMA = (
 def nh(permno, symbol, company, start, end, cik=None, cusip=None):
     return Row(permno=permno, symbol=symbol, company=company, cik=cik, cusip=cusip,
                start_date=D(start), end_date=D(end))
+
+
+def _pit(facts, master):
+    """J1 on the master columns: exact point-in-time lookup."""
+    dim = master.select("security_id", "symbol", "start_date", "end_date")
+    return pit_lookup(facts, dim, key="symbol", fact_date="date")
+
+
+def _auto(queries, master):
+    """J2 on the master columns: nearest validity interval of the symbol."""
+    dim = master.select("security_id", "symbol", "start_date", "end_date")
+    return auto_resolve(queries, dim, key="symbol", query_date="date",
+                        tiebreak=["start_date", "security_id"])
 
 
 def _master(spark):
@@ -60,14 +72,14 @@ def test_pit_resolution_exact(spark):
     master = _master(spark)
     facts = spark.createDataFrame([Row(symbol="FB", date=D("2021-12-31")),
                                    Row(symbol="META", date=D("2023-01-15"))])
-    out = {r["symbol"]: r for r in resolve_pit(facts, master).collect()}
+    out = {r["symbol"]: r for r in _pit(facts, master).collect()}
     assert out["FB"]["security_id"] == out["META"]["security_id"]
 
 
 def test_pit_no_match_outside_interval(spark):
     master = _master(spark)
     facts = spark.createDataFrame([Row(symbol="META", date=D("2021-12-31"))])
-    out = resolve_pit(facts, master).collect()
+    out = _pit(facts, master).collect()
     assert len(out) == 1 and out[0]["security_id"] is None  # left join preserves
 
 
@@ -76,7 +88,7 @@ def test_auto_resolve_meta_before_rename(spark):
     (crsp_ticks.py:119-124 example — FIXTURES.md invariant 1)."""
     master = _master(spark)
     queries = spark.createDataFrame([Row(symbol="META", date=D("2021-12-31"))])
-    out = resolve_auto(queries, master).collect()
+    out = _auto(queries, master).collect()
     fb_sid = {r["symbol"]: r["security_id"] for r in master.collect()}["FB"]
     assert out[0]["security_id"] == fb_sid
     assert out[0]["temporal_distance"] > 0
@@ -87,7 +99,7 @@ def test_auto_resolve_temporal_distance_tiebreak(spark):
     master = _master(spark)
     # 2014-01-01: 4 years after old window end (2009-12-31), 2 years before new start
     queries = spark.createDataFrame([Row(symbol="XY", date=D("2014-01-01"))])
-    out = resolve_auto(queries, master).collect()
+    out = _auto(queries, master).collect()
     new_sid = {r["company"]: r["security_id"] for r in master.collect()}["Xy New"]
     assert out[0]["security_id"] == new_sid
 
@@ -95,7 +107,7 @@ def test_auto_resolve_temporal_distance_tiebreak(spark):
 def test_auto_resolve_no_candidates_preserved(spark):
     master = _master(spark)
     queries = spark.createDataFrame([Row(symbol="ZZZZ", date=D("2020-01-01"))])
-    out = resolve_auto(queries, master).collect()
+    out = _auto(queries, master).collect()
     assert len(out) == 1 and out[0]["security_id"] is None
 
 

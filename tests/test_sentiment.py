@@ -13,9 +13,7 @@ from us_equity_datalake_spark.equity.sentiment import (
     aggregate_filing_sentiment,
     chunk_text,
     extract_mdna,
-    melt_sentiment_long,
     score_chunks,
-    SENTIMENT_METRICS,
 )
 
 
@@ -137,15 +135,6 @@ def test_score_chunks_deterministic_singleton(spark):
     assert out1 == expected  # distributed result == local model
 
 
-def test_melt_produces_21_metrics(spark):
-    r = _agg(spark, [("positive", 0.9), ("negative", 0.8)])
-    wide = spark.createDataFrame([r])
-    long = melt_sentiment_long(wide)
-    metrics = {row["metric"] for row in long.collect()}
-    assert metrics == set(SENTIMENT_METRICS)
-    assert long.filter("model_name = 'hash-sentiment'").count() == len(SENTIMENT_METRICS)
-
-
 def test_finbert_gate_or_load():
     """FinBertModel loads the public ProsusAI/finbert checkpoint when
     transformers+torch are installed; in this image it must raise the
@@ -198,51 +187,3 @@ def test_finbert_real_model_contract():
     assert model.predict([]) == []
     # directional sanity on unambiguous sentences
     assert out[0][0] == "positive" and out[1][0] == "negative"
-
-
-def test_numpy_bow_real_weights_path(spark, tmp_path_factory):
-    """The REAL weights-artifact inference path executes in-sandbox: an .npz
-    checkpoint on disk, loaded per-executor through the score_chunks
-    singleton, batch-scored with one matmul — lexicon-consistent labels with
-    calibrated confidence, plus the shape-mismatch guard."""
-    import numpy as np
-    from pyspark.sql import Row
-
-    from us_equity_datalake_spark.equity.sentiment import (
-        NumpyBowClassifier,
-        export_bow_weights,
-        numpy_bow_model,
-        score_chunks,
-    )
-
-    path = str(tmp_path_factory.mktemp("weights") / "bow.npz")
-    vocab = ["profit", "growth", "record", "loss", "default", "bankruptcy"]
-    coef = [
-        [1.2, 1.0, 0.8, -0.5, -0.9, -1.4],   # positive
-        [-0.8, -0.6, -0.2, 1.1, 1.3, 1.7],   # negative
-        [0.0, 0.0, 0.0, 0.0, 0.0, 0.0],      # neutral
-    ]
-    export_bow_weights(path, vocab=vocab, coef=coef, intercept=[0.0, 0.0, 0.2],
-                       classes=["positive", "negative", "neutral"])
-
-    chunks = spark.createDataFrame([
-        Row(accn="a1", chunk="Record profit and growth this quarter; profit doubled."),
-        Row(accn="a2", chunk="Bankruptcy after default; a severe loss."),
-        Row(accn="a3", chunk="The meeting is on Tuesday."),  # no lexicon hits
-    ])
-    out = {r.accn: (r.label, r.score) for r in
-           score_chunks(chunks, model_factory=numpy_bow_model(path)).collect()}
-    assert out["a1"][0] == "positive" and out["a2"][0] == "negative"
-    assert out["a3"][0] == "neutral"          # intercept wins on zero features
-    assert all(0.0 < s <= 1.0 for _, s in out.values())
-    # direct model check: softmax confidence reflects evidence strength
-    m = NumpyBowClassifier(path)
-    strong, weak = m.predict(["bankruptcy default loss", "loss"])
-    assert strong[0] == weak[0] == "negative" and strong[1] > weak[1]
-    assert m.predict([]) == []
-
-    bad = str(tmp_path_factory.mktemp("weights2") / "bad.npz")
-    np.savez(bad, vocab=np.array(vocab), coef=np.zeros((2, 3)),
-             intercept=np.zeros(2), classes=np.array(["positive", "negative"]))
-    with pytest.raises(ValueError):
-        NumpyBowClassifier(bad)

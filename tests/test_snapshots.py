@@ -177,22 +177,6 @@ def test_optimize_compacts_without_breaking_time_travel(spark, tmp_path):
     assert _ids(snapshots.read_version(spark, path)) == list(range(100))
 
 
-def test_commit_checked_rejects_atomically(spark, tmp_path):
-    import pytest as _pytest
-
-    path = str(tmp_path / "t")
-    good = spark.range(0, 5).select(F.col("id"), (F.col("id") * 2.0).alias("v"))
-    cons = {"v_nonneg": F.col("v") >= 0, "id_notnull": F.col("id").isNotNull()}
-    assert snapshots.commit_checked(good, path, constraints=cons) == 1
-
-    bad = spark.range(5, 8).select(F.col("id"), F.lit(-1.0).alias("v"))
-    with _pytest.raises(snapshots.ConstraintViolation, match="v_nonneg"):
-        snapshots.commit_checked(bad, path, constraints=cons)
-    # atomic rejection: no manifest advanced, no stray files referenced
-    assert snapshots.latest_version(path) == 1
-    assert _ids(snapshots.read_version(spark, path)) == list(range(5))
-
-
 def test_incremental_rows_fast_path_and_rewrite_guard(spark, tmp_path):
     import pytest as _pytest
 

@@ -1,6 +1,5 @@
 """Universe-lifecycle state machine (I6, security_master.py:1198-1410):
-pure-core transition tests, the applyInPandas batch twin, and the
-applyInPandasWithState streaming form with state carried across micro-batches."""
+pure-core transition tests and the applyInPandasWithState streaming form with state carried across micro-batches."""
 
 import datetime as dt
 import os
@@ -53,7 +52,7 @@ def test_transitions_resume_from_state():
 
 
 # ---------------------------------------------------------------------------
-# Spark batch twin
+# streaming with cross-batch state
 # ---------------------------------------------------------------------------
 
 SNAP_SCHEMA = T.StructType(
@@ -72,25 +71,6 @@ def _snapshots():
     # BBB: listed, disappears, grace expires
     out += [("BBB", D(2024, 1, 1), True), ("BBB", D(2024, 1, 2), False), ("BBB", D(2024, 1, 20), False)]
     return out
-
-
-def test_universe_lifecycle_batch(spark):
-    snaps = spark.createDataFrame([Row(symbol=s, snap_date=d, present=p) for s, d, p in _snapshots()], SNAP_SCHEMA)
-    out = stateful.universe_lifecycle_batch(snaps, grace_days=14)
-    got = {(r.symbol, r.snap_date, r.event) for r in out.collect()}
-    assert got == {
-        ("AAA", D(2024, 1, 1), "listed"),
-        ("AAA", D(2024, 1, 2), "absent"),
-        ("AAA", D(2024, 1, 3), "relisted"),
-        ("BBB", D(2024, 1, 1), "listed"),
-        ("BBB", D(2024, 1, 2), "absent"),
-        ("BBB", D(2024, 1, 20), "delisted"),
-    }
-
-
-# ---------------------------------------------------------------------------
-# streaming with cross-batch state
-# ---------------------------------------------------------------------------
 
 
 def test_universe_lifecycle_streaming_state_across_batches(spark, tmp_path):
@@ -112,7 +92,7 @@ def test_universe_lifecycle_streaming_state_across_batches(spark, tmp_path):
     q = run_available_now(out, checkpoint=str(tmp_path / "ck"), output_mode="append", query_name="ulc")
     q.awaitTermination(120)
     got = {(r.symbol, r.snap_date, r.event) for r in spark.sql("SELECT * FROM ulc").collect()}
-    # same events as the batch twin — state (last_present/status) survived the
+    # state (last_present/status) survived the
     # micro-batch boundary between Jan 2 and the later snapshots
     assert got == {
         ("AAA", D(2024, 1, 1), "listed"),

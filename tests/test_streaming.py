@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import Row, functions as F, types as T
 
 from us_equity_datalake_spark.sources.registry import DEFAULT_SF_DIR
-from us_equity_datalake_spark.streaming.jobs import read_stream, run_available_now
+from us_equity_datalake_spark.streaming.jobs import run_available_now
 from us_equity_datalake_spark.streaming.windows import session_counts, streaming_dedup, tumbling_counts
 
 SCHEMA = T.StructType([
@@ -19,6 +19,12 @@ SCHEMA = T.StructType([
     T.StructField("event_type", T.StringType()),
     T.StructField("value", T.DoubleType()),
 ])
+
+
+def _read_stream(spark, path, schema):
+    return spark.readStream.schema(schema).parquet(path)
+
+
 SF_TINY = os.path.join(os.path.dirname(DEFAULT_SF_DIR), "sf0.001")  # the smallest generated sf
 
 
@@ -42,7 +48,7 @@ def _run_to_memory(spark, df, name, checkpoint, output_mode="append"):
 
 
 def test_streaming_tumbling_matches_batch(spark, event_dir, tmp_path):
-    stream = read_stream(spark, event_dir, SCHEMA)
+    stream = _read_stream(spark, event_dir, SCHEMA)
     out = _run_to_memory(
         spark, tumbling_counts(stream), "tumble_out", str(tmp_path / "ck1"), output_mode="complete"
     ).collect()
@@ -66,7 +72,7 @@ def test_stream_static_enrich_matches_batch(spark, event_dir, tmp_path):
     dim = spark.createDataFrame(
         [Row(user_id=0, segment="alpha"), Row(user_id=1, segment="beta")]
     )  # user_id == 2 is intentionally absent
-    stream = read_stream(spark, event_dir, SCHEMA)
+    stream = _read_stream(spark, event_dir, SCHEMA)
     got = _run_to_memory(
         spark,
         stream_static_enrich(stream, dim),
@@ -87,7 +93,7 @@ def test_stream_static_enrich_matches_batch(spark, event_dir, tmp_path):
 
 
 def test_streaming_sessions_match_batch_gaps(spark, event_dir, tmp_path):
-    stream = read_stream(spark, event_dir, SCHEMA)
+    stream = _read_stream(spark, event_dir, SCHEMA)
     out = _run_to_memory(spark, session_counts(stream, gap="30 minutes"), "sess_out", str(tmp_path / "ck2"), output_mode="complete").collect()
     # events are 7-minute spaced per stream but 21-minute spaced per user (3 users):
     # gap 30min -> one session per user containing all its events
@@ -103,7 +109,7 @@ def test_streaming_dedup_drops_repeated_keys(spark, tmp_path):
         T.StructField("value", T.DoubleType()),
     ])
     spark.createDataFrame(rows, schema).write.parquet(src)
-    stream = read_stream(spark, src, schema)
+    stream = _read_stream(spark, src, schema)
     out = _run_to_memory(
         spark, streaming_dedup(stream, keys=["accession_number"]), "dedup_out", str(tmp_path / "ck3")
     ).collect()
@@ -114,7 +120,7 @@ def test_foreach_batch_partition_overwrite_idempotent(spark, tmp_path):
     """I3 streaming form: micro-batches overwrite their month partitions;
     re-running the whole stream from a fresh checkpoint yields an identical
     table (idempotence), and a corrected re-land replaces only its partition."""
-    from us_equity_datalake_spark.streaming.jobs import partition_overwrite_sink
+    from us_equity_datalake_spark.sources.lake import overwrite_partition
 
     src = str(tmp_path / "src")
     sink_path = str(tmp_path / "lake")
@@ -129,10 +135,13 @@ def test_foreach_batch_partition_overwrite_idempotent(spark, tmp_path):
              Row(security_id=1, ts=base + dt.timedelta(days=31), close=11.0, month=2)]
     spark.createDataFrame(rows1, schema).write.parquet(src)
 
+    def sink(batch_df, epoch_id):
+        overwrite_partition(batch_df.sparkSession, batch_df, sink_path, partition_by=["month"],
+                            files_per_partition=None)
+
     def run(ck):
-        stream = read_stream(spark, src, schema)
-        q = run_available_now(stream, checkpoint=str(tmp_path / ck),
-                              foreach_batch=partition_overwrite_sink(sink_path, partition_by=["month"]))
+        stream = _read_stream(spark, src, schema)
+        q = run_available_now(stream, checkpoint=str(tmp_path / ck), foreach_batch=sink)
         q.awaitTermination(120)
 
     run("ck1")
@@ -177,7 +186,7 @@ def test_stream_static_pit_enrichment(spark, event_dir, tmp_path):
             "left",
         ).select(df.event_id, df.ts, df.user_id, d.security_id)
 
-    stream = read_stream(spark, event_dir, SCHEMA)
+    stream = _read_stream(spark, event_dir, SCHEMA)
     got = _run_to_memory(spark, enrich(stream), "pit_out", str(tmp_path / "ck_pit")).collect()
     want = enrich(spark.read.schema(SCHEMA).parquet(event_dir)).collect()
     key = lambda r: (r.event_id,)
@@ -206,8 +215,8 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     spark.createDataFrame(views, SCHEMA).write.parquet(vdir)
     spark.createDataFrame(clicks, clicks_schema).write.parquet(cdir)
 
-    vstream = read_stream(spark, vdir, SCHEMA).select("user_id", "ts")
-    cstream = read_stream(spark, cdir, clicks_schema)
+    vstream = _read_stream(spark, vdir, SCHEMA).select("user_id", "ts")
+    cstream = _read_stream(spark, cdir, clicks_schema)
     joined = stream_stream_interval_join(vstream, cstream)
     got = _run_to_memory(spark, joined, "ss_join_out", str(tmp_path / "ck_ss"))
 
@@ -359,7 +368,7 @@ def test_streaming_dedup_within_watermark_contract(spark, tmp_path):
 
     def run(batch):
         spark.createDataFrame(batch, SCHEMA).coalesce(1).write.mode("append").parquet(src)
-        stream = read_stream(spark, src, SCHEMA)
+        stream = _read_stream(spark, src, SCHEMA)
         q = (
             streaming_dedup(stream, keys=["event_id"], watermark_col="ts",
                             watermark="2 hours")
@@ -566,13 +575,13 @@ def test_run_available_now_returns_terminated_query_with_progress(spark, event_d
     """The runner awaits the query and returns it terminated, so callers
     read per-micro-batch progress; a parquet sink lands the rows."""
     sink = str(tmp_path / "sink")
-    q = run_available_now(read_stream(spark, event_dir, SCHEMA),
+    q = run_available_now(_read_stream(spark, event_dir, SCHEMA),
                           checkpoint=str(tmp_path / "ck"), path=sink)
     assert not q.isActive
     assert sum(p["numInputRows"] for p in q.recentProgress) == 40
     assert spark.read.parquet(sink).count() == 40
     with pytest.raises(ValueError):
-        run_available_now(read_stream(spark, event_dir, SCHEMA), checkpoint=str(tmp_path / "ck2"),
+        run_available_now(_read_stream(spark, event_dir, SCHEMA), checkpoint=str(tmp_path / "ck2"),
                           path=sink, foreach_batch=lambda df, i: None)
 
 

@@ -4,9 +4,11 @@
 Starts a FRESH session (fresh JVM) with the bench session confs, warms the
 JVM on sf0.01 for the named queries, then times each query isolated —
 noop-sink action, warm best-of-N (bench protocol) — and prints one JSON
-line.  Pointing ``--repo`` at a git worktree of an older commit gives the
-same-box, same-session-conditions A/B the VERDICT asks for (checkout, not
-recall).
+line with the session's ``cpus`` and the box's ``nproc``.  Pointing
+``--repo`` at a plain checkout (``git archive``) of an older commit gives the
+same-box, same-session-conditions A/B (checkout, not recall).  A query that
+fails is reported with its error instead of a time, and the tool then exits
+non-zero.
 
 Usage:
     python tools/ab_time.py [--repo DIR] [--sf DIR] [--runs N] q [q ...]
@@ -61,11 +63,16 @@ def main() -> None:
                 noop(qmap[name](spark, args.sf))
                 times.append(round(time.time() - t0, 3))
                 spark.catalog.clearCache()
+            out[name] = {"best": min(times), "times": times}
         except Exception as e:
             print(f"{name} failed: {e}", file=sys.stderr)
-        out[name] = {"best": min(times) if times else -1.0, "times": times}
-    print(json.dumps({"repo": repo, "sf": args.sf, "queries": out}))
+            out[name] = {"error": f"{type(e).__name__}: {e}"[:500], "times": times}
+    print(json.dumps({"repo": repo, "sf": args.sf,
+                      "cpus": spark.sparkContext.defaultParallelism, "nproc": os.cpu_count(),
+                      "queries": out}))
     spark.stop()
+    if any("error" in r for r in out.values()):
+        sys.exit(1)
 
 
 if __name__ == "__main__":

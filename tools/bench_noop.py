@@ -59,8 +59,9 @@ def main() -> None:
             spark.catalog.clearCache()
         out[name] = round(best, 3)
 
-    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
-    detail = json.load(open(detail_path)) if os.path.exists(detail_path) else {}
+    from bench import load_detail, merge_detail
+
+    detail = load_detail()
     noop_times = detail.get("queries", {}) if detail.get("action") == "noop" else {}
     ratios = {
         n: round(noop_times[n] / t, 2)
@@ -68,7 +69,7 @@ def main() -> None:
         if t > 0 and noop_times.get(n, 0) > 0
     }
     big = {n: r for n, r in sorted(ratios.items(), key=lambda kv: -kv[1]) if r >= 1.5}
-    detail["count_action"] = {
+    count_action = {
         "protocol": "df.count() — the r1-r5 legacy timed action; Catalyst "
         "prunes terminal projections a row count does not need.  ratio = "
         "headline noop / count from this file's queries map; rows >= 1.5x "
@@ -78,8 +79,8 @@ def main() -> None:
         "ratio_noop_vs_count": ratios,
         "over_1p5x": big,
     }
-    json.dump(detail, open(detail_path, "w"), indent=1)
-    print(json.dumps({"count_total": detail["count_action"]["total_sec"],
+    merge_detail({"count_action": count_action})
+    print(json.dumps({"count_total": count_action["total_sec"],
                       "noop_total": round(sum(t for t in noop_times.values() if t > 0), 3) if noop_times else None,
                       "n_over_1p5x": len(big)}))
     spark.stop()

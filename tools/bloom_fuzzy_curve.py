@@ -167,10 +167,9 @@ def main() -> None:
             "tail; recall stays 1.0 in the suffix+deletion union."
         ),
     }
-    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
-    detail = json.load(open(detail_path)) if os.path.exists(detail_path) else {}
-    detail["bloom_fuzzy_scale"] = out
-    json.dump(detail, open(detail_path, "w"), indent=1)
+    from bench import merge_detail
+
+    merge_detail({"bloom_fuzzy_scale": out})
     print(json.dumps(out, indent=1))
     spark.stop()
 

@@ -95,11 +95,9 @@ def main() -> None:
         "from a distinct-count estimate (HLL) of the join column, exactly "
         "like bloom bits/key",
     }
-    path = os.path.join(REPO, "BENCH_DETAIL.json")
-    detail = json.load(open(path)) if os.path.exists(path) else {}
-    detail["cms_scale"] = summary
-    with open(path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
+    from bench import merge_detail
+
+    merge_detail({"cms_scale": summary})
     print(json.dumps(summary, indent=1))
 
 

@@ -140,12 +140,9 @@ def main() -> None:
     shutil.rmtree(big_root, ignore_errors=True)
 
     spark.stop()
-    detail_path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "BENCH_DETAIL.json")
-    detail = json.load(open(detail_path)) if os.path.exists(detail_path) else {}
-    detail["dv_scale"] = out
-    with open(detail_path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
+    from bench import merge_detail
+
+    merge_detail({"dv_scale": out})
     print(json.dumps({"dv_scale": out}))
 
 

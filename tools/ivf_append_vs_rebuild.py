@@ -100,11 +100,9 @@ def main() -> None:
         "append_ratio_per_10x": round(out["sf1"]["append_s"] / out["sf0.1"]["append_s"], 2),
         "rebuild_ratio_per_10x": round(out["sf1"]["rebuild_s"] / out["sf0.1"]["rebuild_s"], 2),
     }
-    path = os.path.join(REPO, "BENCH_DETAIL.json")
-    detail = json.load(open(path)) if os.path.exists(path) else {}
-    detail["ivf_append_scale"] = summary
-    with open(path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
+    from bench import merge_detail
+
+    merge_detail({"ivf_append_scale": summary})
     print(json.dumps(summary, indent=1))
 
 

@@ -105,11 +105,15 @@ def _profile(args, evdir: str):
         et = ev.get("Event")
         if et == "SparkListenerJobStart":
             props = ev.get("Properties") or {}
+            stages = ev.get("Stage Infos", [])
+            # callSite.short is often absent from the job's properties; Spark
+            # names the result stage (the highest Stage ID) after it
+            result = max(stages, key=lambda s: s.get("Stage ID", -1), default={})
             jobs[ev["Job ID"]] = {
                 "desc": props.get("spark.job.description", ""),
-                "callsite": props.get("callSite.short", ""),
+                "callsite": props.get("callSite.short") or result.get("Stage Name", ""),
                 "t0": ev.get("Submission Time", 0),
-                "ntasks": sum(s.get("Number of Tasks", 0) for s in ev.get("Stage Infos", [])),
+                "ntasks": sum(s.get("Number of Tasks", 0) for s in stages),
             }
         elif et == "SparkListenerJobEnd":
             j = jobs.get(ev["Job ID"])

@@ -98,9 +98,10 @@ def main() -> None:
     assert out["day2_buckets_incremental"] <= 4, out       # batch-determined
     assert out["day2_sec_incremental"] < out["day2_sec_full"] / 3, out
 
-    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
-    detail = json.load(open(detail_path)) if os.path.exists(detail_path) else {}
-    maint = detail.setdefault("sf10_joins", {}).setdefault("maintenance_sf10", {})
+    from bench import load_detail, merge_detail
+
+    sf10_joins = load_detail().get("sf10_joins", {})
+    maint = sf10_joins.setdefault("maintenance_sf10", {})
     prev = maint.get("b512_quiet_day", {})
     out["note"] = (
         "10x-lake floor test (VERDICT r5 #6): IDENTICAL 4-symbol/80-row day-2 "
@@ -117,7 +118,7 @@ def main() -> None:
         out["full_growth_vs_3p2M_lake"] = round(
             out["day2_sec_full"] / prev["day2_sec_full"], 2)
     maint["b512_x10_lake"] = out
-    json.dump(detail, open(detail_path, "w"), indent=1)
+    merge_detail({"sf10_joins": sf10_joins})
     print(json.dumps({"b512_x10_lake": {k: v for k, v in out.items() if k != "note"}}))
     spark.stop()
 

@@ -335,15 +335,10 @@ def main() -> None:
             pass
 
     # --only runs MERGE into the committed section (don't clobber the rest)
-    detail_path0 = os.path.join(REPO, "BENCH_DETAIL.json")
-    if only and os.path.exists(detail_path0):
-        try:
-            prior = json.load(open(detail_path0)).get("sf1", {}).get("queries", {})
-            merged = dict(prior)
-            merged.update(out)
-            out = merged
-        except Exception:
-            pass
+    from bench import load_detail, merge_detail
+
+    if only:
+        out = {**load_detail().get("sf1", {}).get("queries", {}), **out}
     gated = {n: r for n, r in out.items() if n not in KNOWN_BOUND}
     over = {n: r["ratio"] for n, r in gated.items() if r["ratio"] and r["ratio"] > 15}
     summary = {
@@ -356,16 +351,7 @@ def main() -> None:
         "n_over_15x": len(over),
         "over_15x": over,
     }
-    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
-    detail = {}
-    if os.path.exists(detail_path):
-        try:
-            detail = json.load(open(detail_path))
-        except Exception:
-            pass
-    detail["sf1"] = summary
-    with open(detail_path, "w") as f:
-        json.dump(detail, f, indent=1)
+    merge_detail({"sf1": summary})
     print(json.dumps({"sf1_smoke": {"n": len(out), "n_gated": len(gated),
                                     "n_over_15x": len(over), "over_15x": over}}))
     spark.stop()

@@ -237,18 +237,18 @@ def main() -> None:
         except Exception:
             pass
 
+    from bench import load_detail, merge_detail
+
     if only:
         # merge mode: splice the measured rows into the committed record
-        detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
-        detail = json.load(open(detail_path))
-        detail["sf10_joins"]["queries"].update(out)
-        over = {n: r["ratio_10x"] for n, r in detail["sf10_joins"]["queries"].items()
+        joins = load_detail()["sf10_joins"]
+        joins["queries"].update(out)
+        over = {n: r["ratio_10x"] for n, r in joins["queries"].items()
                 if r.get("ratio_10x") and r["ratio_10x"] > 15}
-        detail["sf10_joins"]["n_gated"] = len(detail["sf10_joins"]["queries"])
-        detail["sf10_joins"]["n_over_15x"] = len(over)
-        detail["sf10_joins"]["over_15x"] = over
-        with open(detail_path, "w") as f:
-            json.dump(detail, f, indent=1)
+        joins["n_gated"] = len(joins["queries"])
+        joins["n_over_15x"] = len(over)
+        joins["over_15x"] = over
+        merge_detail({"sf10_joins": joins})
         print(json.dumps({"sf10_joins_only": {"n": len(out), "n_over_15x": len(over), "over_15x": over}}))
         spark.stop()
         return
@@ -288,16 +288,7 @@ def main() -> None:
         "n_over_15x": len(over),
         "over_15x": over,
     }
-    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
-    detail = {}
-    if os.path.exists(detail_path):
-        try:
-            detail = json.load(open(detail_path))
-        except Exception:
-            pass
-    detail["sf10_joins"] = summary
-    with open(detail_path, "w") as f:
-        json.dump(detail, f, indent=1)
+    merge_detail({"sf10_joins": summary})
     print(json.dumps({"sf10_joins": {"n": len(out), "n_over_15x": len(over), "over_15x": over,
                                      "maint_buckets_64": maint["b64"]["day2_buckets_incremental"],
                                      "speedup_64": maint["b64"]["pruning_speedup"],

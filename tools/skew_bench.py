@@ -254,10 +254,9 @@ def main() -> None:
         "the per-key partial rows themselves overwhelm one reducer "
         "(|keys| x n_salts combine rows are tiny here)."
     )
-    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
-    detail = json.load(open(detail_path)) if os.path.exists(detail_path) else {}
-    detail["skew_sf10"] = out
-    json.dump(detail, open(detail_path, "w"), indent=1)
+    from bench import merge_detail
+
+    merge_detail({"skew_sf10": out})
     print(json.dumps({k: v for k, v in out.items() if k not in ("note", "top3_keys")}))
     spark.stop()
 

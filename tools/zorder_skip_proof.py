@@ -129,10 +129,9 @@ def main():
         "z-range; the one-dimension sort prunes only its own column; the "
         "hash layout reads everything."
     )
-    detail_path = os.path.join(REPO, "BENCH_DETAIL.json")
-    detail = json.load(open(detail_path)) if os.path.exists(detail_path) else {}
-    detail["zorder_skip"] = out
-    json.dump(detail, open(detail_path, "w"), indent=1)
+    from bench import merge_detail
+
+    merge_detail({"zorder_skip": out})
     print(json.dumps(out))
     spark.stop()
 

@@ -1,11 +1,12 @@
 """Console entry points (reference update/cli.py, consolidate/cli.py,
 storage/cli.py — the operator-facing surface).
 
-Three subcommands over the library:
+Subcommands over the library, among them:
 
     python -m us_equity_datalake_spark.cli update   --lake ... --date ... [inputs]
     python -m us_equity_datalake_spark.cli compact  --lake ... --table ... --predicate ...
     python -m us_equity_datalake_spark.cli backfill --lake ... --from ... --to ... [inputs]
+    python -m us_equity_datalake_spark.cli ticks    --lake ... --symbol ... (--start ... --end ... | --as-of ...)
 
 Inputs are parquet paths already landed by the ingest edge (this CLI is pure
 compute + lake writes, like equity.daily_job).  Backfill loops
@@ -19,6 +20,7 @@ from __future__ import annotations
 import argparse
 import datetime as dt
 import json
+import os
 import sys
 
 MAX_BACKFILL_DAYS = 30
@@ -63,6 +65,20 @@ def _build_parser() -> argparse.ArgumentParser:
     cy.add_argument("--history", required=True, help="history table path relative to the lake root")
     cy.add_argument("--year", required=True, type=int, help="year to consolidate (e.g., 2025)")
     cy.add_argument("--force", action="store_true", help="overwrite a year already in history")
+
+    tk = sub.add_parser(
+        "ticks", help="daily ticks of a symbol across symbol changes (hot + history)"
+    )
+    tk.add_argument("--lake", required=True)
+    tk.add_argument("--symbol", required=True)
+    when = tk.add_mutually_exclusive_group(required=True)
+    when.add_argument("--start", help="YYYY-MM-DD; with --end: the calendar-aligned range")
+    when.add_argument("--as-of", dest="as_of",
+                      help="YYYY-MM-DD: whole history of the security trading as SYMBOL then")
+    tk.add_argument("--end", help="YYYY-MM-DD (inclusive end of --start)")
+    tk.add_argument("--history", default=os.path.join("raw", "ticks", "history"),
+                    help="consolidated history path relative to the lake root "
+                         "(default raw/ticks/history)")
 
     # snapshot-table admin surface (sources/snapshots.py) — the Delta-style
     # operational verbs an operator runs against a versioned table
@@ -223,6 +239,25 @@ def _run_update(spark, args, target_date: str) -> dict:
     )
 
 
+def _run_ticks(spark, args) -> None:
+    """The reference's TicksClient reads: one JSON line per daily row."""
+    from us_equity_datalake_spark.equity import ticks
+    from us_equity_datalake_spark.equity.daily_job import LakePaths
+
+    lake = LakePaths(args.lake)
+    bars = ticks.read_hot_cold(spark, lake.ticks_daily, os.path.join(args.lake, args.history))
+    master = spark.read.parquet(lake.security_master)
+    if args.as_of:
+        out = ticks.read_daily_history(spark, bars, master, symbol=args.symbol, as_of=args.as_of)
+    else:
+        out = ticks.read_daily_ticks(
+            spark, bars, master, symbol=args.symbol, start=args.start, end=args.end,
+            calendar=ticks.trading_calendar_spine(spark, args.start, args.end),
+        )
+    for line in out.toJSON().toLocalIterator():
+        print(line)
+
+
 def _parse_assignments(spec: str) -> dict:
     """``col=SQL-expr`` pairs (expr kept as its SQL string), split on
     TOP-LEVEL commas (commas inside parens/quotes belong to the expr)."""
@@ -345,7 +380,10 @@ def _run_table_cmd(spark, args) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
-    args = _build_parser().parse_args(argv)
+    parser = _build_parser()
+    args = parser.parse_args(argv)
+    if args.cmd == "ticks" and (args.start is None) != (args.end is None):
+        parser.error("ticks: --start and --end go together")
     from us_equity_datalake_spark.session import get_spark
 
     spark = get_spark(f"cli-{args.cmd}")
@@ -363,9 +401,9 @@ def main(argv: list[str] | None = None) -> int:
             for day in days:
                 report = _run_update(spark, args, day)
                 print(json.dumps(report, default=str))
+        elif args.cmd == "ticks":
+            _run_ticks(spark, args)
         elif args.cmd == "compact":
-            import os
-
             from us_equity_datalake_spark.sources.lake import compact_partition
 
             compact_partition(
@@ -377,8 +415,6 @@ def main(argv: list[str] | None = None) -> int:
             )
             print(json.dumps({"compacted": args.table, "predicate": args.predicate}))
         elif args.cmd == "consolidate":
-            import os
-
             from us_equity_datalake_spark.sources.lake import consolidate_year
 
             try:

@@ -3,8 +3,9 @@
 Reference: master/security_master.py — the system's central dimension.
 Construction (reference :353-638): raw CRSP-style name history → CIK
 enrichment → priority dedup → period rollup → change detection → running-ID
-assignment.  Resolution (reference :640-806): PIT interval lookup (J1) with
-fuzzy auto-resolve fallback (J2) — both delegated to ``operators.pit``.
+assignment.  Resolution (reference :640-806) is ``operators.pit``'s interval
+lookup (J1) and fuzzy auto-resolve fallback (J2) over the master's
+(security_id, symbol, start_date, end_date) columns.
 
 Scale notes: the master is dimension-sized (~50k rows).  Construction uses
 one global ordered window (W5) — fine at dimension scale, documented as such;
@@ -15,7 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from us_equity_datalake_spark.operators import pit
 from us_equity_datalake_spark.operators.dedup import dedup_keep_first
 
 ID_BASE = 1000
@@ -83,8 +83,7 @@ def build_security_master(name_history: DataFrame) -> DataFrame:
             F.array_sort(F.collect_set(F.coalesce(F.col("cik"), F.lit("__NULL_CIK__")))).alias("ciks"),
         )
     )
-    # global ordered window — dimension-scale only (documented tradeoff;
-    # operators.windows.assign_running_ids_distributed is the fact-scale twin)
+    # global ordered window — dimension-scale only (documented tradeoff)
     w = Window.orderBy("permno", "start_date")
     flagged = (
         rolled.withColumn("__prev_permno", F.lag("permno").over(w))
@@ -284,21 +283,6 @@ def update_universe(
     out_cols = master.columns
     return (
         updated.unionByName(continuations.select(*out_cols)).unionByName(ipos.select(*out_cols))
-    )
-
-
-def resolve_pit(facts: DataFrame, master: DataFrame, *, symbol_col: str = "symbol", date_col: str = "date") -> DataFrame:
-    """J1: exact point-in-time resolution of (symbol, date) facts."""
-    dim = master.select("security_id", F.col("symbol").alias(symbol_col), "start_date", "end_date")
-    return pit.pit_lookup(facts, dim, key=symbol_col, fact_date=date_col)
-
-
-def resolve_auto(queries: DataFrame, master: DataFrame, *, symbol_col: str = "symbol", date_col: str = "date") -> DataFrame:
-    """J2: fuzzy fallback — nearest validity interval among all securities
-    that ever used the symbol (security_master.py:640-729)."""
-    dim = master.select("security_id", F.col("symbol").alias(symbol_col), "start_date", "end_date")
-    return pit.auto_resolve(
-        queries, dim, key=symbol_col, query_date=date_col, tiebreak=["start_date", "security_id"]
     )
 
 

@@ -202,77 +202,6 @@ def finbert_model():
     return FinBertModel()
 
 
-class NumpyBowClassifier:
-    """REAL weights-file inference path, executable in-sandbox (the model twin
-    of the BMP/WAV/AVI decoders): a bag-of-words softmax classifier whose
-    weights live in an ``.npz`` artifact on disk — vocab (U strings), coef
-    (n_classes x V float64), intercept (n_classes), classes (U strings).
-
-    Exercises every piece of machinery the FinBERT path needs that
-    ``HashSentimentModel`` cannot: a weights artifact loaded ONCE per executor
-    (the :func:`score_chunks` singleton), vectorized batch scoring (one
-    matmul per batch), and argmax label + confidence output — with torch
-    replaced by numpy.  Same ``predict`` contract as the reference
-    SentimentModel ABC (models/base.py:33-72)."""
-
-    def __init__(self, weights_path: str):
-        import numpy as np
-
-        z = np.load(weights_path, allow_pickle=False)
-        self.vocab = {w: i for i, w in enumerate(z["vocab"].tolist())}
-        self.coef = z["coef"]
-        self.intercept = z["intercept"]
-        self.classes = list(z["classes"].tolist())
-        if self.coef.shape != (len(self.classes), len(self.vocab)):
-            raise ValueError(
-                f"weights artifact shape mismatch: coef {self.coef.shape} vs "
-                f"{len(self.classes)} classes x {len(self.vocab)} vocab"
-            )
-
-    def predict(self, texts: list[str]) -> list[tuple[str, float]]:
-        import numpy as np
-
-        if not texts:
-            return []
-        x = np.zeros((len(texts), len(self.vocab)))
-        for r, t in enumerate(texts):
-            for w in re.findall(r"[a-z0-9']+", (t or "").lower()):
-                j = self.vocab.get(w)
-                if j is not None:
-                    x[r, j] += 1.0
-        logits = x @ self.coef.T + self.intercept
-        e = np.exp(logits - logits.max(axis=1, keepdims=True))
-        p = e / e.sum(axis=1, keepdims=True)
-        best = p.argmax(axis=1)
-        return [(self.classes[b], round(float(p[i, b]), 4)) for i, b in enumerate(best)]
-
-
-def export_bow_weights(path: str, *, vocab: list[str], coef, intercept, classes: list[str]) -> str:
-    """Write the ``.npz`` weights artifact :class:`NumpyBowClassifier` loads —
-    the in-repo stand-in for a model checkpoint download."""
-    import numpy as np
-
-    np.savez(
-        path,
-        vocab=np.array(vocab),
-        coef=np.asarray(coef, dtype=np.float64),
-        intercept=np.asarray(intercept, dtype=np.float64),
-        classes=np.array(classes),
-    )
-    return path if path.endswith(".npz") else path + ".npz"
-
-
-def numpy_bow_model(weights_path: str):
-    """Factory for :func:`score_chunks`: each executor constructs the model
-    from the weights artifact once (singleton keyed by the artifact path)."""
-
-    def factory():
-        return NumpyBowClassifier(weights_path)
-
-    factory.__name__ = f"NumpyBowClassifier:{weights_path}"
-    return factory
-
-
 _MODEL_SINGLETON: dict[str, object] = {}
 
 
@@ -380,16 +309,6 @@ def readability_columns(text_col: Column) -> dict[str, Column]:
 # A10 — filing-level aggregation (derived/sentiment.py:180-299)
 # ---------------------------------------------------------------------------
 
-SENTIMENT_METRICS = [
-    "sentiment_score", "positive_ratio", "negative_ratio", "neutral_ratio",
-    "avg_positive_confidence", "avg_negative_confidence", "chunk_count",
-    "text_length", "sentiment_std", "sentiment_skew", "sentiment_range",
-    "extreme_negative_ratio", "confidence_std", "word_count",
-    "uncertainty_ratio", "litigious_ratio", "constraining_ratio",
-    "weak_modal_ratio", "strong_modal_ratio", "avg_sentence_length", "fog_index",
-]
-
-
 def aggregate_filing_sentiment(scored_chunks: DataFrame, filing_texts: DataFrame) -> DataFrame:
     """Chunk scores + full texts -> one wide row per filing with the 21
     metrics, matching the reference's rounding and 0.0 conventions."""
@@ -437,29 +356,6 @@ def aggregate_filing_sentiment(scored_chunks: DataFrame, filing_texts: DataFrame
         *[v.alias(k) for k, v in readability_columns(F.col("text")).items()],
     )
     return agg.join(text_feats, ["cik", "accession_number"], "inner")
-
-
-def melt_sentiment_long(wide: DataFrame) -> DataFrame:
-    """Wide filing metrics -> sentiment_long EAV rows (publishers.py:515)."""
-    from us_equity_datalake_spark.operators.reshape import unpivot_wide_to_long
-
-    cast = wide.select(
-        "cik",
-        F.col("filing_date").alias("as_of_date"),
-        F.col("filing_type"),
-        *[F.col(m).cast("double").alias(m) for m in SENTIMENT_METRICS if m in wide.columns],
-    )
-    long = unpivot_wide_to_long(
-        cast,
-        index=["cik", "as_of_date", "filing_type"],
-        value_cols=[m for m in SENTIMENT_METRICS if m in cast.columns],
-        key_name="metric",
-        value_name="value",
-        drop_null=False,
-    )
-    return long.withColumn("model_name", F.lit(MODEL_NAME)).withColumn(
-        "model_version", F.lit(MODEL_VERSION)
-    )
 
 
 # ---------------------------------------------------------------------------

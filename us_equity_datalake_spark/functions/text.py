@@ -1,9 +1,10 @@
 """Text-analysis column functions — all JVM-side (no Python UDFs).
 
 Covers the reference's text surface (tokenize/word-category counting,
-derived/word_lists.py:283-341; readability, derived/sentiment.py:120-172) plus
-the training-data-pipeline operators (language ID, quality scoring, token
-counting, shingling for near-dup detection).
+derived/word_lists.py:283-341; its readability formulas are
+``equity.sentiment.readability_columns``) plus the training-data-pipeline
+operators (language ID, quality scoring, token counting, shingling for
+near-dup detection).
 
 Every function here has a DuckDB-SQL twin used by the oracle; keep the two in
 lockstep (tokenization regex, empty-token filtering, shingle join character).
@@ -127,17 +128,6 @@ def quality_score(text_col: Column) -> Column:
     return F.round(0.4 * len_term + 0.3 * punct_term + 0.3 * sw_term, 6)
 
 
-def sentence_count(col: Column) -> Column:
-    """Sentence count via terminator runs (reference derived/sentiment.py:129-135)."""
-    s = F.size(F.filter(F.split(col, r"[.!?]+"), lambda t: F.trim(t) != ""))
-    return F.greatest(s, F.lit(1))
-
-
-def complex_word_count(toks: Column) -> Column:
-    """Words with >= 3 vowel groups ≈ 3+ syllables (reference sentiment.py:137-151)."""
-    return F.size(F.filter(toks, lambda t: F.size(F.filter(F.split(t, r"[^aeiou]+"), lambda v: v != "")) >= 3))
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing (training-data-pipeline redaction pass).  Patterns are kept
 # RE2-compatible (no backrefs/lookarounds) so the DuckDB oracle twin applies
@@ -168,12 +158,3 @@ def redact_pii(col: Column) -> Column:
     for kind, pat in PII_PATTERNS.items():
         out = F.regexp_replace(out, pat, f"[{kind.upper()}]")
     return out
-
-
-def fog_index(text_col: Column) -> Column:
-    """Gunning Fog = 0.4 * (words/sentence + 100 * complex/words)."""
-    toks = tokens(text_col)
-    words = F.size(toks).cast("double")
-    sents = sentence_count(text_col).cast("double")
-    cplx = complex_word_count(toks).cast("double")
-    return F.when(words > 0, F.round(0.4 * (words / sents + 100.0 * cplx / words), 6)).otherwise(F.lit(None))

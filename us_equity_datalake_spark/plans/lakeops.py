@@ -1224,7 +1224,7 @@ def lake_metadata_count_q(spark, sf_dir):
     """,
     doc="Expectation-gated commit with QUARANTINE (the DLT "
     "expect_or_quarantine pattern, the production alternative to "
-    "commit_checked's all-or-nothing reject): rows passing every "
+    "a table constraint's all-or-nothing reject): rows passing every "
     "constraint land in the table, failing rows land in a side quarantine "
     "table with a reasons column naming EVERY violated expectation "
     "(multi-violation rows carry the name-sorted comma join) — an "
@@ -2727,7 +2727,7 @@ def lake_txn_q(spark, sf_dir):
     finally:
         snapshots._publish_txn_table = orig
 
-    def facts_arm(name, df, version):
+    def facts_arm(name, version, df):
         return df.agg(
             F.count("*").cast("long").alias("n_rows"),
             dec_sum(F.col("o_totalprice")).alias("price_sum"),
@@ -2737,7 +2737,7 @@ def lake_txn_q(spark, sf_dir):
             "n_rows", "price_sum",
         )
 
-    def derived_arm(name, df, version):
+    def derived_arm(name, version, df):
         return df.agg(
             F.count("*").cast("long").alias("n_rows"),
             dec_sum(F.col("total_price"), 6).alias("price_sum"),
@@ -2747,18 +2747,14 @@ def lake_txn_q(spark, sf_dir):
             "n_rows", "price_sum",
         )
 
+    cut = snapshots.read_transaction_cut(spark, [facts_p, der_p])
     pre = (
-        facts_arm("pre_recover_facts_committed",
-                  snapshots.read_version_committed(spark, facts_p),
-                  snapshots.latest_committed_version(facts_p))
+        facts_arm("pre_recover_facts_committed", *cut[facts_p])
         .unionByName(facts_arm(
             "pre_recover_facts_latest_dirty",
-            snapshots.read_version(spark, facts_p),
-            snapshots.latest_version(facts_p)))
-        .unionByName(derived_arm(
-            "pre_recover_derived_committed",
-            snapshots.read_version_committed(spark, der_p),
-            snapshots.latest_committed_version(der_p)))
+            snapshots.latest_version(facts_p),
+            snapshots.read_version(spark, facts_p)))
+        .unionByName(derived_arm("pre_recover_derived_committed", *cut[der_p]))
     )
     # pin the pending-state reads before recovery mutates the LOG (bytes
     # are never deleted by a roll-forward): ONE collect into an Arrow
@@ -2770,15 +2766,9 @@ def lake_txn_q(spark, sf_dir):
     # force: the "crashed" writer is THIS live process (injected fault),
     # so the owner-liveness lease would rightly skip it otherwise
     snapshots.recover_transactions(spark, facts_p, force=True)
-    post = facts_arm(
-        "post_recover_facts_committed",
-        snapshots.read_version_committed(spark, facts_p),
-        snapshots.latest_committed_version(facts_p),
-    ).unionByName(derived_arm(
-        "post_recover_derived_committed",
-        snapshots.read_version_committed(spark, der_p),
-        snapshots.latest_committed_version(der_p),
-    ))
+    cut = snapshots.read_transaction_cut(spark, [facts_p, der_p])
+    post = facts_arm("post_recover_facts_committed", *cut[facts_p]).unionByName(
+        derived_arm("post_recover_derived_committed", *cut[der_p]))
     return pre.unionByName(post)
 
 

@@ -237,31 +237,3 @@ def consolidate_year(
 
     shutil.rmtree(hot_year_dir, ignore_errors=True)
     return {"rows": n, "status": "consolidated"}
-
-
-def small_file_report(
-    spark: SparkSession, path: str, *, target_bytes: int = 128 * 1024 * 1024
-) -> list[dict]:
-    """Compaction advisor (the policy side of I5): per partition directory,
-    file count / total bytes / average file size, flagging partitions whose
-    average file is under ``target_bytes`` (the classic small-file problem a
-    daily append workload accumulates).  Driver-side FS metadata walk — no
-    data is read; at S3 scale this is one LIST per partition."""
-    report = []
-    for dirpath, _, files in os.walk(path):
-        parts = [f for f in files if f.endswith(".parquet")]
-        if not parts:
-            continue
-        sizes = [os.path.getsize(os.path.join(dirpath, f)) for f in parts]
-        total = sum(sizes)
-        rel = os.path.relpath(dirpath, path)
-        report.append(
-            {
-                "partition": "" if rel == "." else rel,
-                "n_files": len(parts),
-                "total_bytes": total,
-                "avg_bytes": total // len(parts),
-                "needs_compaction": len(parts) > 1 and total // len(parts) < target_bytes,
-            }
-        )
-    return sorted(report, key=lambda r: r["partition"])

@@ -94,14 +94,3 @@ def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
         columns=[f.name for f in fields],
     )
     return spark.createDataFrame(pdf, schema=schema)
-
-
-def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, names: list[str] | None = None) -> list[str]:
-    """Expose the lake tables as temp views so users can drive the engine
-    through plain ``spark.sql(...)`` — the SQL twin of :func:`load_tables`
-    (the reference exposes Polars frames; the Spark-native equivalent is the
-    session catalog).  Returns the registered view names."""
-    tables = load_tables(spark, sf_dir, names)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return sorted(tables)

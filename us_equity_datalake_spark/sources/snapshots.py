@@ -3446,35 +3446,6 @@ class ConstraintViolation(ValueError):
     """A commit was rejected because rows violate a table constraint."""
 
 
-def commit_checked(
-    df: DataFrame,
-    path: str,
-    *,
-    constraints: "dict[str, object]",
-    mode: str = "append",
-    replace: "callable | None" = None,
-) -> int:
-    """commit() with Delta-style CHECK constraints: every constraint (name ->
-    boolean Column) must hold on EVERY incoming row or the commit is
-    rejected atomically — no files land, no manifest is published, the
-    table is untouched.  One validation pass over the incoming frame
-    (count per failed constraint, reported in the error)."""
-    from pyspark.sql import functions as F
-
-    checks = df.agg(
-        *[
-            F.sum(F.when(~F.coalesce(c, F.lit(False)), 1).otherwise(0)).alias(name)
-            for name, c in constraints.items()
-        ]
-    ).collect()[0]
-    failed = {name: int(checks[name]) for name in constraints if checks[name]}
-    if failed:
-        raise ConstraintViolation(
-            f"commit to {path} rejected: constraint violations {failed}"
-        )
-    return commit(df, path, mode=mode, replace=replace)
-
-
 def _write_commit_checked(
     df: DataFrame, commit_dir: str, col_map: dict, constraints: dict, path: str
 ) -> None:
@@ -3536,9 +3507,8 @@ def add_table_constraint(
     that version on, EVERY write path — append, merge, CoW rewrite,
     merge-on-read UPDATE post-images, streaming foreachBatch merges —
     validates against it inside :func:`commit` and rejects atomically on
-    any violating row.  Unlike :func:`commit_checked` (per-call
-    constraints), this is a durable table property that travels with the
-    log.  Returns the new version."""
+    any violating row.  The constraint is a durable table property that
+    travels with the log.  Returns the new version."""
     from pyspark.sql import functions as F
 
     v0 = latest_version(path)
@@ -3904,8 +3874,8 @@ def commit_quarantined(
     mode: str = "append",
 ) -> dict:
     """Expectation-gated commit with QUARANTINE (the Delta Live Tables
-    'expect_or_quarantine' pattern — the production alternative to
-    :func:`commit_checked`'s all-or-nothing reject): rows passing EVERY
+    'expect_or_quarantine' pattern — the production alternative to a table
+    constraint's all-or-nothing reject): rows passing EVERY
     constraint commit to the table; failing rows commit to a side
     quarantine table with a ``quarantine_reasons`` column naming every
     violated expectation (comma-joined, name-sorted), so a data-quality

@@ -6,14 +6,8 @@ checkpoint + exactly-once sink.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
-
-from us_equity_datalake_spark.sources.lake import overwrite_partition
-
-
-def read_stream(spark: SparkSession, path: str, schema, *, fmt: str = "parquet") -> DataFrame:
-    return spark.readStream.format(fmt).schema(schema).load(path)
 
 
 def run_available_now(
@@ -51,17 +45,3 @@ def run_available_now(
     q = writer.start()
     q.awaitTermination()
     return q
-
-
-def partition_overwrite_sink(path: str, *, partition_by: list[str]):
-    """foreachBatch sink implementing I3 (update/app.py:296-445: total refetch
-    of the hot slice, overwrite the partition — "no merge logic"): each
-    micro-batch dynamically overwrites exactly the partitions it carries.
-    Replays of a micro-batch rewrite the same partitions with the same rows —
-    idempotent, so checkpoint + this sink gives effective exactly-once."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        overwrite_partition(batch_df.sparkSession, batch_df, path,
-                            partition_by=partition_by, files_per_partition=None)
-
-    return sink

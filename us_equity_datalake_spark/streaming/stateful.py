@@ -78,10 +78,8 @@ def universe_lifecycle(
 ) -> DataFrame:
     """(symbol, snap_date: date, present: bool) stream → transition events.
 
-    Works identically on a streaming DataFrame (state persisted in the state
-    store across micro-batches) and on a batch DataFrame (single pass) —
-    ``applyInPandasWithState`` requires streaming; batch callers use
-    ``universe_lifecycle_batch``.
+    ``applyInPandasWithState`` requires a streaming DataFrame: the state
+    store carries each symbol's (last_present, status) across micro-batches.
     """
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
@@ -100,22 +98,6 @@ def universe_lifecycle(
     return snapshots.groupBy("symbol").applyInPandasWithState(
         fn, OUTPUT_SCHEMA, STATE_SCHEMA, "append", timeout
     )
-
-
-def universe_lifecycle_batch(snapshots: DataFrame, *, grace_days: int = 14) -> DataFrame:
-    """Batch twin of ``universe_lifecycle`` via ``applyInPandas`` (no state
-    store; the whole history per symbol is in one group)."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        symbol = pdf["symbol"].iloc[0]
-        events, _, _ = _transitions(pdf.sort_values("snap_date"), None, None, grace_days)
-        if not events:
-            return pd.DataFrame(columns=["symbol", "snap_date", "event"])
-        return pd.DataFrame(
-            [{"symbol": symbol, "snap_date": d, "event": ev} for d, ev in events]
-        )
-
-    return snapshots.groupBy("symbol").applyInPandas(fn, OUTPUT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
